@@ -214,18 +214,26 @@ final case class QBlock(
   * `/root/reference/lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:747-858`
   * — leaf slices scored in parallel, then reduced):
   *
-  *  1. term stats: Parquet scan of the sorted `terms` tables with an IN
-  *     pushdown (row-group pruning via min/max on `term` = the .tip trie
-  *     walk); tiny collect to the driver.
-  *  2. posting blocks for the query's terms only: Parquet scan with the same
-  *     pushdown — the moral equivalent of the .tip→.tim→.doc pointer chase.
+  *  1. term stats: binary search of each segment's term dictionary, held
+  *     on the driver (loaded once per segment, see [[SegmentReader]]) — the
+  *     on-heap terms index walk; no Spark job. A segment whose Bloom filter
+  *     rejects every term is not consulted.
+  *  2. posting blocks for the query's terms only, from the segments whose
+  *     dictionary holds them: Parquet scan with an IN pushdown on the sorted
+  *     `term` column (row-group pruning via min/max) — the moral equivalent
+  *     of the .tim→.doc pointer chase. Singleton terms skip the scan.
   *  3. per-(segment, bucket) groups score independently with block-max WAND
   *     ([[Wand]]); each emits its local top-k.
   *  4. global `ORDER BY score DESC, docId ASC LIMIT k`
   *     (Catalyst `TakeOrderedAndProject`) with the reference tie-break.
   *
+  * Steps 2–4 are the query's only Spark work: one shuffle, two jobs.
+  *
   * BM25 statistics are global across segments (docFreq/docCount summed over
   * the whole index), so scores are independent of segmentation.
+  *
+  * @param shared readers of an earlier searcher; those whose segment is
+  *   still here, with the same manifest, are reused instead of re-resolved
   */
 final class IndexSearcher(
     val spark: SparkSession,
@@ -234,10 +242,18 @@ final class IndexSearcher(
     val precision: Precision = Precision.FloatExact,
     k1: Double = 1.2d, // 1.2f when narrowed — widening 1.2f would NOT be 1.2d
     b: Double = 0.75d,
-    val similarity: Similarity = Similarity.Bm25
+    val similarity: Similarity = Similarity.Bm25,
+    shared: Seq[SegmentReader] = Nil
 ) extends Serializable {
 
   import spark.implicits._
+
+  /** Per-segment read state, in segment order (driver only). */
+  @transient private[search] val readers: Array[SegmentReader] = {
+    val prev = shared.iterator.map(r => r.manifest.dir -> r).toMap
+    segments.map(m => prev.get(m.dir).filter(_.manifest == m)
+      .getOrElse(new SegmentReader(spark, m))).toArray
+  }
 
   /** docBase per segment (cumulative maxDocId+1). */
   val bases: Array[Long] =
@@ -416,55 +432,33 @@ final class IndexSearcher(
 
   // ------------------------------------------------------------- stats
 
-  /** Per-segment term-dictionary Bloom filters (ref
-    * `codecs/bloom/BloomFilteringPostingsFormat.java`): loaded lazily once
-    * per searcher for segments built with `IndexConfig.bloomTerms`; `None`
-    * slots fall back to the plain pruned lookup. No false negatives, so
-    * skipping a "definitely absent" segment never changes results.
-    */
-  private lazy val blooms: Array[Option[graft.index.TermBloom]] =
-    segments.map(s =>
-      if (graft.index.TermBloom.exists(s.dir))
-        graft.index.TermBloom.read(spark, s.dir)
-      else None).toArray
-
-  /** Segments skipped by the bloom pre-test (observability for specs and
+  /** Segments skipped by the Bloom pre-test (observability for specs and
     * the bench skip-accounting row).
     */
   val bloomSkips = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** One pruned union-scan of the per-segment term dictionaries: rows keep
-    * their segment ordinal (needed by the singleton-doc fast path) and are
-    * aggregated on the driver (≤ |terms| × |segments| rows). Segments whose
-    * bloom filter rejects EVERY queried term are skipped before any scan —
-    * the reference's bloom-postings fast path: on an NRT tail of many small
-    * segments a primary-key-style probe launches one job for the segment
-    * that has the term instead of one per segment.
+  /** The dictionary rows of `terms` in every segment, tagged with the
+    * segment ordinal (needed by the singleton-doc fast path) and aggregated
+    * by the caller. Lookups are driver-side binary searches. A segment
+    * whose Bloom filter (ref
+    * `codecs/bloom/BloomFilteringPostingsFormat.java`, built with
+    * `IndexConfig.bloomTerms`) rejects EVERY term is skipped before its
+    * dictionary is loaded — on an NRT tail of many small segments a
+    * primary-key-style probe loads only the segments that may hold it.
     */
-  private def segTermRows(terms: Seq[String]): Seq[SegTermRow] = {
-    val perSeg = segments.zipWithIndex.map { case (s, i) =>
-      val maybe = blooms(i) match {
-        case Some(bf) => terms.filter(bf.mayContain)
-        case None     => terms
-      }
-      if (maybe.isEmpty && terms.nonEmpty) bloomSkips.incrementAndGet()
-      (s, i, maybe)
-    }.filter(_._3.nonEmpty)
-    if (terms.isEmpty || perSeg.isEmpty) Seq.empty
-    else perSeg.map { case (s, i, segTerms) =>
-      val raw = spark.read.parquet(s"${s.dir}/terms")
-      // schema evolution: pre-singleton segments read with the fast path off
-      val compat = Seq("singletonDocId" -> lit(-1L),
-          "singletonFreq" -> lit(0), "singletonNorm" -> lit(0))
-        .foldLeft(raw) { case (d, (c, dflt)) =>
-          if (d.columns.contains(c)) d else d.withColumn(c, dflt)
+  private def segTermRows(terms: Seq[String]): Seq[SegTermRow] =
+    if (terms.isEmpty) Seq.empty
+    else {
+      val distinct = terms.distinct
+      readers.indices.flatMap { i =>
+        val maybe = readers(i).bloom match {
+          case Some(bf) => distinct.filter(bf.mayContain)
+          case None     => distinct
         }
-      compat
-        .where($"term".isin(segTerms: _*))
-        .select(lit(i).as("seg"), $"term", $"docFreq", $"totalTermFreq",
-          $"singletonDocId", $"singletonFreq", $"singletonNorm")
-    }.reduce(_ unionByName _).as[SegTermRow].collect().toSeq
-  }
+        if (maybe.isEmpty) bloomSkips.incrementAndGet()
+        maybe.flatMap(readers(i).dict.lookup(i, _))
+      }
+    }
 
   private def aggStats(rows: Seq[SegTermRow]): Map[String, TermStat] =
     rows.groupBy(_.term).map { case (t, rs) =>
@@ -481,9 +475,7 @@ final class IndexSearcher(
     * disjunction (`ScoringRewrite`) capped at `max` terms.
     */
   def expandTerms(pred: org.apache.spark.sql.Column, max: Int = 1024): Seq[String] =
-    segments
-      .map(s => spark.read.parquet(s"${s.dir}/terms"))
-      .reduce(_ unionByName _)
+    termsDict
       .where(pred)
       .select($"term").distinct()
       .orderBy($"term").limit(max)
@@ -555,9 +547,7 @@ final class IndexSearcher(
       case Some(hi) => $"rterm" >= rp && $"rterm" < hi
       case None     => $"rterm".startsWith(rp)
     }
-    segments
-      .map(s => spark.read.parquet(s"${s.dir}/rterms"))
-      .reduce(_ unionByName _)
+    readers.map(_.rterms).reduce(_ unionByName _)
       .where(rangePred && verify)
       .select($"term").distinct()
       .orderBy($"term").limit(max)
@@ -630,11 +620,6 @@ final class IndexSearcher(
     */
   private def dictBlocks(dq: MultiTermDictQuery): Dataset[QBlock] = {
     val label = dq.key + "\u0001"
-    def postingsCompat(dir: String): org.apache.spark.sql.DataFrame = {
-      val raw = spark.read.parquet(s"$dir/postings")
-      if (raw.columns.contains("posPacked")) raw
-      else raw.withColumn("posPacked", lit(null).cast("binary"))
-    }
     def relabel(df: org.apache.spark.sql.DataFrame, i: Int): org.apache.spark.sql.DataFrame =
       df.select(
         concat(lit(label), $"term").as("term"), lit(i).as("seg"), $"bucket",
@@ -655,18 +640,16 @@ final class IndexSearcher(
           case Some(hi) => $"rterm" >= rp && $"rterm" < hi
           case None     => $"rterm".startsWith(rp)
         }
-        val slice = segments
-          .map(s => spark.read.parquet(s"${s.dir}/rterms"))
-          .reduce(_ unionByName _)
+        val slice = readers.map(_.rterms).reduce(_ unionByName _)
           .where(rangePred && $"term".rlike(re))
           .select($"term").distinct()
-        segments.zipWithIndex
-          .map { case (s, i) => relabel(postingsCompat(s.dir).join(slice, "term"), i) }
+        readers.indices
+          .map(i => relabel(readers(i).postings.join(slice, "term"), i))
           .reduce(_ unionByName _).as[QBlock]
       case None =>
         val pred = specPredicate(dq.spec)
-        segments.zipWithIndex
-          .map { case (s, i) => relabel(postingsCompat(s.dir).where(pred), i) }
+        readers.indices
+          .map(i => relabel(readers(i).postings.where(pred), i))
           .reduce(_ unionByName _).as[QBlock]
     }
   }
@@ -1015,29 +998,23 @@ final class IndexSearcher(
   // ------------------------------------------------------------ blocks
 
   /** Load posting blocks for `terms` across all segments, tagged with the
-    * segment ordinal. Filter pushdown on the sorted `term` column prunes row
-    * groups; segments whose bloom filter rejects every term contribute no
-    * scan at all (same no-false-negative argument as [[segTermRows]]).
+    * segment ordinal. Only segments whose dictionary holds a term scan for
+    * it; filter pushdown on the sorted `term` column prunes row groups.
     */
   def blocksFor(terms: Seq[String]): Dataset[QBlock] = {
     require(terms.nonEmpty, "no terms")
-    val perSeg = segments.zipWithIndex.flatMap { case (s, i) =>
-      val segTerms = blooms(i) match {
-        case Some(bf) => terms.filter(bf.mayContain)
-        case None     => terms
-      }
-      if (segTerms.isEmpty) { bloomSkips.incrementAndGet(); None }
-      else Some((s, i, segTerms))
-    }
-    if (perSeg.isEmpty) return spark.emptyDataset[QBlock]
-    perSeg
-      .map { case (s, i, segTerms) =>
-        val raw = spark.read.parquet(s"${s.dir}/postings")
-        val compat = // pre-positions segments read with a null column
-          if (raw.columns.contains("posPacked")) raw
-          else raw.withColumn("posPacked", lit(null).cast("binary"))
-        compat
-          .where($"term".isin(segTerms: _*))
+    blocksOf(segTermRows(terms))
+  }
+
+  /** Posting blocks of the given dictionary rows: one pruned scan per
+    * segment over that segment's terms.
+    */
+  private def blocksOf(rows: Seq[SegTermRow]): Dataset[QBlock] =
+    if (rows.isEmpty) spark.emptyDataset[QBlock]
+    else rows.groupBy(_.seg).toSeq.sortBy(_._1)
+      .map { case (i, rs) =>
+        readers(i).postings
+          .where($"term".isin(rs.map(_.term).distinct: _*))
           .select(
             $"term", lit(i).as("seg"), $"bucket", $"firstDocId", $"lastDocId",
             $"numDocs", $"docsPacked", $"freqsPacked", $"normsPacked", $"impacts",
@@ -1046,7 +1023,6 @@ final class IndexSearcher(
       }
       .reduce(_ unionByName _)
       .as[QBlock]
-  }
 
   /** Blocks for a query, with the singleton-doc fast path (ref
     * `Lucene103PostingsFormat.java:138-141`): terms whose global docFreq is
@@ -1054,7 +1030,7 @@ final class IndexSearcher(
     * the driver — the postings table is only scanned for the remaining
     * terms, and not at all when every query term is a hapax.
     */
-  private def queryBlocks(qTerms: Seq[String], rows: Seq[SegTermRow],
+  private def queryBlocks(rows: Seq[SegTermRow],
       positional: Boolean = false,
       dictQs: Seq[MultiTermDictQuery] = Nil): Dataset[QBlock] = {
     import graft.codec.{BlockCodec, Impacts}
@@ -1067,9 +1043,9 @@ final class IndexSearcher(
         case (t, rs) if rs.map(_.docFreq).sum == 1 && rs.exists(_.singletonDocId >= 0) =>
           t -> rs.find(_.singletonDocId >= 0).get
       }
-    val restTerms = qTerms.filter(t => !singles.contains(t) && rows.exists(_.term == t))
+    val restRows = rows.filterNot(r => singles.contains(r.term))
     val scanned: Option[Dataset[QBlock]] =
-      if (restTerms.isEmpty) None else Some(blocksFor(restTerms))
+      if (restRows.isEmpty) None else Some(blocksOf(restRows))
     val synthetic: Option[Dataset[QBlock]] =
       if (singles.isEmpty) None
       else {
@@ -1108,7 +1084,7 @@ final class IndexSearcher(
     val basesL = bases
     val q = query
     val tombs = tombstones
-    val candidates = queryBlocks(qTerms, rows, IndexSearcher.hasPhrase(query),
+    val candidates = queryBlocks(rows, IndexSearcher.hasPhrase(query),
         IndexSearcher.dictSpecs(query))
       .groupByKey(bk => (bk.seg, bk.bucket))
       .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
@@ -1142,7 +1118,7 @@ final class IndexSearcher(
     val basesL = bases
     val q = query
     val tombs = tombstones
-    queryBlocks(qTerms, rows, IndexSearcher.hasPhrase(query),
+    queryBlocks(rows, IndexSearcher.hasPhrase(query),
         IndexSearcher.dictSpecs(query))
       .groupByKey(bk => (bk.seg, bk.bucket))
       .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
@@ -1181,22 +1157,16 @@ final class IndexSearcher(
       .select($"docId",
         ($"score1" * lit(w1) + coalesce($"score2", lit(0.0)) * lit(w2)).as("score"))
 
-  /** Per-segment dictionary union with the persisted `len` column (written
-    * by `IndexBuilder.buildTermStats` since round 3) so the fuzzy/spell
-    * length band is a plain column predicate that reaches the Parquet scan
-    * as a PushedFilter. Pre-`len` segments compute it at read time — same
-    * results, no pushdown.
+  /** Union of the per-segment term dictionaries, with the `len` column
+    * (persisted by `IndexBuilder.buildTermStats`, computed for segments
+    * that predate it) the fuzzy/spell length band filters on.
     */
-  private def termsDictWithLen: org.apache.spark.sql.DataFrame =
-    segments.map { s =>
-      val raw = spark.read.parquet(s"${s.dir}/terms")
-      if (raw.columns.contains("len")) raw
-      else raw.withColumn("len", length($"term"))
-    }.reduce(_ unionByName _)
+  private def termsDict: org.apache.spark.sql.DataFrame =
+    readers.map(_.terms).reduce(_ unionByName _)
 
   /** Fuzzy expansion, bounded: a term within `maxEdits` of the pattern must
-    * have length within ±maxEdits — the persisted `len` column makes that
-    * band a PushedFilter (no full-dictionary decode). The edit distance is
+    * have length within ±maxEdits — the `len` column makes that band a
+    * plain predicate checked before any edit distance. The edit distance is
     * Damerau–Levenshtein by default (a transposition is ONE edit), matching
     * the reference's `FuzzyQuery` `transpositions=true` default (ref
     * `search/FuzzyQuery.java`, `util/automaton/LevenshteinAutomata`);
@@ -1215,7 +1185,7 @@ final class IndexSearcher(
     // alphabetically first — the reference's top-terms rewrite
     // (`search/TopTermsRewrite.java` priority queue keyed by docFreq, used
     // by FuzzyQuery's blended rewrite). Ties break on term for determinism.
-    termsDictWithLen
+    termsDict
       .where($"len".between(term.length - maxEdits, term.length + maxEdits) &&
         dist >= 0)
       .groupBy($"term").agg(sum($"docFreq").as("__df"))
@@ -1254,7 +1224,7 @@ final class IndexSearcher(
     * re-expression of `suggest/spell/DirectSpellChecker`: dictionary
     * candidates within `maxEdits` Damerau–Levenshtein edits (the reference
     * spell checker also counts a transposition as one edit), length-banded
-    * via the persisted `len` column (PushedFilter), ranked by
+    * via the `len` column, ranked by
     * (edit distance asc, docFreq desc, term asc).
     */
   /** @param morePopular only suggest terms strictly more frequent than the
@@ -1268,7 +1238,7 @@ final class IndexSearcher(
     val floor: Long =
       if (!morePopular) 0L
       else termStats(Seq(term)).get(term).map(_.docFreq).getOrElse(0L)
-    termsDictWithLen
+    termsDict
       .where($"len".between(term.length - maxEdits, term.length + maxEdits))
       .select($"term", $"docFreq", dist.as("dist"))
       .where($"dist" >= 0)
@@ -1295,7 +1265,7 @@ final class IndexSearcher(
   def spellCorrectJaro(term: String, n: Int = 5,
       accuracy: Double = 0.7): DataFrame = {
     val sim = graft.functions.JaroWinkler.jaroWinkler(lit(term), $"term")
-    termsDictWithLen
+    termsDict
       .select($"term", $"docFreq", round(sim, 6).as("similarity"))
       .where($"similarity" >= accuracy && $"term" =!= term)
       .groupBy($"term")
@@ -1392,7 +1362,7 @@ final class IndexSearcher(
       q: String, maxEdits: Int = 1, nonFuzzyPrefix: Int = 1,
       minFuzzyLength: Int = 3, n: Int = 10
   ): DataFrame = {
-    val base = termsDictWithLen.where($"term".startsWith(q.take(nonFuzzyPrefix)))
+    val base = termsDict.where($"term".startsWith(q.take(nonFuzzyPrefix)))
     val matched =
       if (q.length < minFuzzyLength) base.where($"term".startsWith(q))
       else {
@@ -1423,7 +1393,7 @@ final class IndexSearcher(
       prefix: String, weights: DataFrame, n: Int = 10,
       requireWeight: Boolean = false
   ): DataFrame = {
-    val dict = termsDictWithLen.where($"term".startsWith(prefix))
+    val dict = termsDict.where($"term".startsWith(prefix))
       .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
     val joined = dict.join(
       broadcast(weights.select($"term", $"weight")),
@@ -1448,7 +1418,7 @@ final class IndexSearcher(
       prefix: String, weights: DataFrame, contexts: Set[String], n: Int = 10
   ): DataFrame = {
     require(contexts.nonEmpty, "empty context set")
-    val dict = termsDictWithLen.where($"term".startsWith(prefix))
+    val dict = termsDict.where($"term".startsWith(prefix))
       .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
     val accepted = weights
       .where($"context".isin(contexts.toSeq: _*))
@@ -1469,7 +1439,7 @@ final class IndexSearcher(
     val basesL = bases
     val q = query
     val tombs = tombstones
-    queryBlocks(qTerms, segTermRows(qTerms), IndexSearcher.hasPhrase(query),
+    queryBlocks(segTermRows(qTerms), IndexSearcher.hasPhrase(query),
         IndexSearcher.dictSpecs(query))
       .groupByKey(bk => (bk.seg, bk.bucket))
       .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
@@ -1860,7 +1830,7 @@ final class IndexSearcher(
     import graft.codec.BlockCodec
     if (terms.isEmpty) return Map.empty
     val b = local >>> segments(seg).bucketShift
-    spark.read.parquet(s"${segments(seg).dir}/postings")
+    readers(seg).postings
       .where($"term".isin(terms: _*) && $"bucket" === b &&
         $"firstDocId" <= local && $"lastDocId" >= local)
       .select($"term", $"firstDocId", $"docsPacked", $"freqsPacked", $"normsPacked")
@@ -1888,10 +1858,8 @@ final class IndexSearcher(
   ): Map[String, Array[Int]] = {
     import graft.codec.BlockCodec
     if (terms.isEmpty) return Map.empty
-    val raw = spark.read.parquet(s"${segments(seg).dir}/postings")
-    if (!raw.columns.contains("posPacked")) return Map.empty
     val b = local >>> segments(seg).bucketShift
-    raw.where($"term".isin(terms: _*) && $"bucket" === b &&
+    readers(seg).postings.where($"term".isin(terms: _*) && $"bucket" === b &&
         $"firstDocId" <= local && $"lastDocId" >= local)
       .select($"term", $"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked", $"posPacked")
       .collect()
@@ -1930,7 +1898,7 @@ final class IndexSearcher(
       if (locals.isEmpty || !m.hasOffsets) Seq.empty
       else {
         val buckets = locals.map(_ >>> m.bucketShift).distinct.toSeq
-        spark.read.parquet(s"${m.dir}/postings")
+        readers(seg).postings
           .where($"term" === term && $"bucket".isin(buckets: _*) &&
             $"firstDocId" <= locals.max && $"lastDocId" >= locals.min)
           .select($"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked", $"offsPacked")
@@ -1980,7 +1948,7 @@ final class IndexSearcher(
       if (!m.hasPayloads) None
       else {
         val base = bases(seg)
-        Some(spark.read.parquet(s"${m.dir}/postings")
+        Some(readers(seg).postings
           .where($"term" === term)
           .select($"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked",
             $"paysPacked")
@@ -2030,7 +1998,7 @@ final class IndexSearcher(
     val tombs = tombstones
     val basesL = bases
     segments.zipWithIndex.map { case (m, seg) =>
-      spark.read.parquet(s"${m.dir}/postings")
+      readers(seg).postings
         .where($"term" === term)
         .select($"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked",
           $"paysPacked")
@@ -2178,7 +2146,7 @@ final class IndexSearcher(
     */
   def phoneticSuggest(term: String, n: Int = 5): DataFrame = {
     val code = graft.analysis.Phonetic.soundex _
-    termsDictWithLen
+    termsDict
       .where(!$"term".contains(graft.index.FieldKey.Sep.toString) &&
         code($"term") === code(lit(term)))
       .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
@@ -2194,7 +2162,8 @@ final class IndexSearcher(
     * (`create_weight` / `build_scorer` / `next_doc` / `score`); in the
     * Spark execution model those lifecycles live at JOB granularity, so the
     * profile times the same stages as whole jobs — rewrite (driver-only),
-    * dictionary stats (the pruned terms scan ≈ create_weight), scorer
+    * dictionary stats (the driver-side dictionary lookup ≈ create_weight;
+    * the first lookup in a segment also loads its dictionary), scorer
     * construction (SimScorer weights), block planning (candidate
     * enumeration ≈ build_scorer: how many posting blocks the scorers will
     * see), and the scoring job (next_doc + score + top-k merge, the
@@ -2211,7 +2180,7 @@ final class IndexSearcher(
     val ts = aggStats(rows)
     val (_, tScorers) = timed(scorerMap(query, ts))
     val ((nBlocks, nBuckets), tPlan) = timed {
-      val b = queryBlocks(qTerms, rows, IndexSearcher.hasPhrase(query),
+      val b = queryBlocks(rows, IndexSearcher.hasPhrase(query),
         IndexSearcher.dictSpecs(query))
         .select($"seg", $"bucket").groupBy($"seg", $"bucket").count()
         .agg(org.apache.spark.sql.functions.count(lit(1)), sum($"count")).head()
@@ -2221,8 +2190,9 @@ final class IndexSearcher(
     Seq(
       ProfileRow("rewrite", tRewrite, s"$query0 -> $query"),
       ProfileRow("term_stats", tStats,
-        s"${qTerms.size} terms, ${rows.size} dictionary rows, " +
-          s"docFreq sum ${ts.values.map(_.docFreq).sum}"),
+        s"${qTerms.size} terms, ${rows.size} rows from the driver-side " +
+          s"dictionaries of ${readers.length} segments (binary search, no job " +
+          s"once loaded), docFreq sum ${ts.values.map(_.docFreq).sum}"),
       ProfileRow("scorer_setup", tScorers, s"${ts.size} SimScorer weights"),
       ProfileRow("block_plan", tPlan,
         s"$nBlocks candidate posting blocks in $nBuckets (seg, bucket) groups"),
@@ -2516,7 +2486,7 @@ final class IndexSearcher(
   def docsTable: DataFrame =
     segments.zipWithIndex
       .map { case (s, i) =>
-        graft.index.DocValues.readDocs(spark, s.dir)
+        graft.index.DocValues.overlay(spark, readers(i).docs, s.dir)
           .withColumn("docId", $"docId" + lit(bases(i)))
       }
       .reduce(_ unionByName _)
@@ -2535,12 +2505,12 @@ final class IndexSearcher(
       val local = ids.collect { case d if d >= lo && d <= hi => d - lo }
       if (local.isEmpty) None
       else Some(graft.index.DocValues.overlay(spark,
-          spark.read.parquet(s"${s.dir}/docs").where($"docId".isin(local: _*)),
+          readers(i).docs.where($"docId".isin(local: _*)),
           s.dir)
         .withColumn("docId", $"docId" + lit(lo)))
     }
     if (parts.isEmpty)
-      spark.read.parquet(s"${segments.head.dir}/docs").where(lit(false))
+      readers.head.docs.where(lit(false))
     else parts.reduce(_ unionByName _)
   }
 
@@ -2564,13 +2534,13 @@ final class IndexSearcher(
       val lo = bases(i); val hi = lo + s.maxDocId
       val local = ids.collect { case d if d >= lo && d <= hi => d - lo }
       if (local.isEmpty) None
-      else Some(spark.read.parquet(s"${s.dir}/tvec")
+      else Some(readers(i).tvec
         .where($"docId".isin(local: _*))
         .withColumn("docId", $"docId" + lit(lo)))
     }
     val rows =
       if (parts.isEmpty)
-        spark.read.parquet(s"${segments.head.dir}/tvec").where(lit(false))
+        readers.head.tvec.where(lit(false))
       else parts.reduce(_ unionByName _)
     rows
       .select($"docId", explode(arrays_zip($"terms", $"freqs")).as("tv"))
@@ -2736,13 +2706,15 @@ object IndexSearcher {
       indexDir: String,
       analyzer: StandardAnalyzer = StandardAnalyzer.Default,
       precision: Precision = Precision.FloatExact,
-      similarity: Similarity = Similarity.Bm25
+      similarity: Similarity = Similarity.Bm25,
+      shared: Seq[SegmentReader] = Nil
   ): IndexSearcher = {
     // the live set (segments_N commit point) decides visibility; legacy
     // single-build layouts without one fall back to the directory listing
     val segs = graft.index.LiveSet.manifests(indexDir)
     require(segs.nonEmpty, s"no committed segments under $indexDir")
-    new IndexSearcher(spark, segs, analyzer, precision, similarity = similarity)
+    new IndexSearcher(spark, segs, analyzer, precision, similarity = similarity,
+      shared = shared)
   }
 }
 
@@ -2755,7 +2727,9 @@ object IndexSearcher {
   * `search/SearcherManager.java` + `index/DirectoryReader.openIfChanged`:
   * callers `acquire()` a stable searcher; `maybeRefresh()` swaps in a new
   * one only when the index's live-set generation has advanced (a cheap
-  * metadata read — no segment data touched on the no-change path).
+  * metadata read — no segment data touched on the no-change path). The
+  * new searcher keeps the [[SegmentReader]] of every segment still live,
+  * as `openIfChanged` keeps unchanged `SegmentReader`s.
   */
 final class SearcherManager(
     spark: SparkSession,
@@ -2766,12 +2740,16 @@ final class SearcherManager(
   private def currentGen: Long =
     graft.index.LiveSet.read(indexDir).map(_._1).getOrElse(-1L)
 
-  private def load(): (Long, IndexSearcher) = {
+  /** Open the current live set, reusing `prev`'s readers (relations,
+    * dictionary, Bloom filter); new segments and every segment's
+    * tombstones are read afresh.
+    */
+  private def load(prev: Seq[SegmentReader]): (Long, IndexSearcher) = {
     val g = currentGen
-    (g, IndexSearcher.open(spark, indexDir, analyzer, precision))
+    (g, IndexSearcher.open(spark, indexDir, analyzer, precision, shared = prev))
   }
 
-  @volatile private var cached: (Long, IndexSearcher) = load()
+  @volatile private var cached: (Long, IndexSearcher) = load(Nil)
 
   /** The current searcher (stable until the next successful refresh). */
   def acquire(): IndexSearcher = cached._2
@@ -2780,7 +2758,8 @@ final class SearcherManager(
     * opened; returns true when a new searcher was installed.
     */
   def maybeRefresh(): Boolean = synchronized {
-    if (currentGen != cached._1) { cached = load(); true } else false
+    if (currentGen != cached._1) { cached = load(cached._2.readers.toSeq); true }
+    else false
   }
 }
 

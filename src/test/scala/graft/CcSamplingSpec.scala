@@ -36,32 +36,12 @@ class CcSamplingSpec extends SparkTestBase {
     // check ("head at ...") must be a cheap scan over the checkpointed
     // labels (<= 2 jobs, no join/shuffle) — the old shape ran a
     // join + limit + count query per round
-    val descs = scala.collection.concurrent.TrieMap[Long, String]()
-    val jobsPerExec = scala.collection.concurrent.TrieMap[Long, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            descs.put(s.executionId, s.description): Unit
-          case _ => ()
-        }
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val eid = Option(j.properties.getProperty("spark.sql.execution.id"))
-          .map(_.toLong).getOrElse(-1L)
-        jobsPerExec.put(eid, jobsPerExec.getOrElse(eid, 0) + 1): Unit
-      }
-    }
     val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, log) = countJobs(
       Dedup.connectedComponents(pairs, "id_a", "id_b", maxIter = 20,
-        roundCounter = Some(rounds))
-      Thread.sleep(500) // let async listener events drain
-    } finally spark.sparkContext.removeSparkListener(listener)
+        roundCounter = Some(rounds)))
     assert(rounds.get() > 0, "round counter not reported")
-    val actions = descs.toSeq.map { case (id, d) =>
-      (d.takeWhile(_ != ' '), jobsPerExec.getOrElse(id, 0))
-    }
+    val actions = log.executions.map { case (d, n) => (d.takeWhile(_ != ' '), n) }
     // exactly TWO executions per round (checkpoint materialize + the fused
     // changed-count), none of the old per-round join/count executions …
     val heads = actions.filter(_._1 == "head")
