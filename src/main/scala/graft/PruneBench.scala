@@ -10,8 +10,8 @@ import graft.search.{IndexSearcher, Query}
   * the block-max req-opt path). Results are asserted identical before
   * timing — this measures the pruning win, not a behavior change.
   *
-  * Dynamic pruning only has something to skip when one scoring task owns a
-  * large posting volume: per-(segment, bucket) tasks over small buckets
+  * Dynamic pruning only has something to skip when one scorer owns a
+  * large posting volume: per-(segment, bucket) scorers over small buckets
   * decode in microseconds and the wall time is all job scheduling. The
   * `--build` mode constructs that regime on purpose — N synthetic pages in
   * ONE docID bucket (bucketShift 21), so the per-task scan is the dominant

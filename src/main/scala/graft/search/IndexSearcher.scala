@@ -1,11 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.StandardAnalyzer
 import graft.index.{Manifest, SegmentManifest}
 import graft.index.Schema.{CollectionStats, TermStat}
+import org.apache.spark.sql.graft.PartitionConcat
 
 /** Scoring precision mode: float-exact reproduces the reference's
   * `BM25Similarity` float semantics (rank-identity); double mode mirrors a
@@ -222,12 +223,16 @@ final case class QBlock(
   *     dictionary holds them: Parquet scan with an IN pushdown on the sorted
   *     `term` column (row-group pruning via min/max) — the moral equivalent
   *     of the .tim→.doc pointer chase. Singleton terms skip the scan.
-  *  3. per-(segment, bucket) groups score independently with block-max WAND
-  *     ([[Wand]]); each emits its local top-k.
+  *  3. each segment is one leaf slice: its blocks are coalesced into one
+  *     partition by construction (no exchange), and one task scores it with
+  *     block-max WAND ([[Wand]]) bucket by bucket, in docId order, into ONE
+  *     collector; it emits the segment's top-k.
   *  4. global `ORDER BY score DESC, docId ASC LIMIT k`
-  *     (Catalyst `TakeOrderedAndProject`) with the reference tie-break.
+  *     (Catalyst `TakeOrderedAndProject`) with the reference tie-break,
+  *     reducing only the per-slice top-k.
   *
-  * Steps 2–4 are the query's only Spark work: one shuffle, two jobs.
+  * Steps 2–4 are the query's only Spark work: one job, one task per
+  * segment, no shuffle.
   *
   * BM25 statistics are global across segments (docFreq/docCount summed over
   * the whole index), so scores are independent of segmentation.
@@ -606,25 +611,21 @@ final class IndexSearcher(
       graft.functions.EditDistance.damerauLe(lit(t), $"term", edits) >= 0
   }
 
-  /** Posting blocks for a COMPLETE multi-term dictionary query: the
-    * dictionary predicate ships into the postings scan itself (term-sorted
-    * Parquet → the range conjuncts land in PushedFilters), so every
-    * matching term's blocks return without any driver-side enumeration —
-    * the distributed analogue of the reference's per-segment bitset
-    * CONSTANT_SCORE rewrite (`search/MultiTermQueryConstantScoreWrapper.java`).
-    * A leading-wildcard pattern instead bounds a term slice on the reversed
-    * dictionary and SEMI-JOINS it against postings (Spark picks
+  /** Posting blocks of one segment for a COMPLETE multi-term dictionary
+    * query: the dictionary predicate ships into the postings scan itself
+    * (term-sorted Parquet → the range conjuncts land in PushedFilters), so
+    * every matching term's blocks return without any driver-side
+    * enumeration — the distributed analogue of the reference's per-segment
+    * bitset CONSTANT_SCORE rewrite
+    * (`search/MultiTermQueryConstantScoreWrapper.java`). A leading-wildcard
+    * pattern instead bounds a term slice on the segment's reversed
+    * dictionary and SEMI-JOINS it against its postings (Spark picks
     * broadcast/SMJ by slice size) — still no driver enumeration. Shipped
     * terms are namespaced under the node's sentinel key so the scorer build
     * collects exactly its own blocks.
     */
-  private def dictBlocks(dq: MultiTermDictQuery): Dataset[QBlock] = {
-    val label = dq.key + "\u0001"
-    def relabel(df: org.apache.spark.sql.DataFrame, i: Int): org.apache.spark.sql.DataFrame =
-      df.select(
-        concat(lit(label), $"term").as("term"), lit(i).as("seg"), $"bucket",
-        $"firstDocId", $"lastDocId", $"numDocs", $"docsPacked", $"freqsPacked",
-        $"normsPacked", $"impacts", $"posPacked")
+  private def dictBlocks(dq: MultiTermDictQuery, seg: Int): DataFrame = {
+    val r = readers(seg)
     val leadingWildcard = dq.spec match {
       case MultiTerm.Wildcard(pat) =>
         val (re, litPrefix, litSuffix) = IndexSearcher.wildcardParts(pat)
@@ -633,25 +634,18 @@ final class IndexSearcher(
         else None
       case _ => None
     }
-    leadingWildcard match {
+    val matched = leadingWildcard match {
       case Some((re, litSuffix)) =>
         val rp = litSuffix.reverse
         val rangePred = prefixUpper(rp) match {
           case Some(hi) => $"rterm" >= rp && $"rterm" < hi
           case None     => $"rterm".startsWith(rp)
         }
-        val slice = readers.map(_.rterms).reduce(_ unionByName _)
-          .where(rangePred && $"term".rlike(re))
-          .select($"term").distinct()
-        readers.indices
-          .map(i => relabel(readers(i).postings.join(slice, "term"), i))
-          .reduce(_ unionByName _).as[QBlock]
-      case None =>
-        val pred = specPredicate(dq.spec)
-        readers.indices
-          .map(i => relabel(readers(i).postings.where(pred), i))
-          .reduce(_ unionByName _).as[QBlock]
+        r.postings.join(
+          r.rterms.where(rangePred && $"term".rlike(re)).select($"term").distinct(), "term")
+      case None => r.postings.where(specPredicate(dq.spec))
     }
+    matched.select(blockCols(concat(lit(dq.key + "\u0001"), $"term"), seg): _*)
   }
 
   /** Scorers for every key a query needs: per-term BM25 scorers plus blended
@@ -997,79 +991,86 @@ final class IndexSearcher(
 
   // ------------------------------------------------------------ blocks
 
-  /** Load posting blocks for `terms` across all segments, tagged with the
-    * segment ordinal. Only segments whose dictionary holds a term scan for
-    * it; filter pushdown on the sorted `term` column prunes row groups.
+  /** Load posting blocks for `terms` across all segments, one segment per
+    * partition (see [[segmentBlocks]]). Only segments whose dictionary
+    * holds a term scan for it; filter pushdown on the sorted `term` column
+    * prunes row groups.
     */
   def blocksFor(terms: Seq[String]): Dataset[QBlock] = {
     require(terms.nonEmpty, "no terms")
-    blocksOf(segTermRows(terms))
+    segmentBlocks(segTermRows(terms), positional = true)
   }
 
-  /** Posting blocks of the given dictionary rows: one pruned scan per
-    * segment over that segment's terms.
-    */
-  private def blocksOf(rows: Seq[SegTermRow]): Dataset[QBlock] =
-    if (rows.isEmpty) spark.emptyDataset[QBlock]
-    else rows.groupBy(_.seg).toSeq.sortBy(_._1)
-      .map { case (i, rs) =>
-        readers(i).postings
-          .where($"term".isin(rs.map(_.term).distinct: _*))
-          .select(
-            $"term", lit(i).as("seg"), $"bucket", $"firstDocId", $"lastDocId",
-            $"numDocs", $"docsPacked", $"freqsPacked", $"normsPacked", $"impacts",
-            $"posPacked"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[QBlock]
+  /** The `QBlock` projection of segment `seg`'s postings rows. */
+  private def blockCols(term: Column, seg: Int): Seq[Column] =
+    Seq(term.as("term"), lit(seg).as("seg"), $"bucket", $"firstDocId", $"lastDocId",
+      $"numDocs", $"docsPacked", $"freqsPacked", $"normsPacked", $"impacts", $"posPacked")
 
-  /** Blocks for a query, with the singleton-doc fast path (ref
-    * `Lucene103PostingsFormat.java:138-141`): terms whose global docFreq is
-    * 1 synthesize their one-posting block from the term-dictionary row on
-    * the driver — the postings table is only scanned for the remaining
-    * terms, and not at all when every query term is a hapax.
+  /** A query's posting blocks, co-located by construction: per segment, the
+    * pruned postings scan, the synthesized singleton blocks and the
+    * multi-term [[dictBlocks]] rows are coalesced into ONE partition, and
+    * the segments' partitions are concatenated in segment order
+    * ([[PartitionConcat]], a narrow concat). Each partition thus holds one
+    * segment's blocks, the reference's leaf slice, and scoring needs no
+    * exchange.
+    *
+    * Singleton-doc fast path (ref `Lucene103PostingsFormat.java:138-141`):
+    * terms whose global docFreq is 1 synthesize their one-posting block
+    * from the term-dictionary row on the driver; the postings table is only
+    * scanned for the remaining terms. Positional reads skip it: the
+    * synthesized block carries no .pos payload, so a phrase over a hapax
+    * term would otherwise crash in the positions decode.
     */
-  private def queryBlocks(rows: Seq[SegTermRow],
-      positional: Boolean = false,
+  private def segmentBlocks(rows: Seq[SegTermRow], positional: Boolean,
       dictQs: Seq[MultiTermDictQuery] = Nil): Dataset[QBlock] = {
     import graft.codec.{BlockCodec, Impacts}
-    // positional queries must read the real blocks: the synthesized
-    // singleton block carries no .pos payload, so a phrase over a hapax
-    // term would otherwise crash in the positions decode
     val singles: Map[String, SegTermRow] =
       if (positional) Map.empty
       else rows.groupBy(_.term).collect {
         case (t, rs) if rs.map(_.docFreq).sum == 1 && rs.exists(_.singletonDocId >= 0) =>
           t -> rs.find(_.singletonDocId >= 0).get
       }
-    val restRows = rows.filterNot(r => singles.contains(r.term))
-    val scanned: Option[Dataset[QBlock]] =
-      if (restRows.isEmpty) None else Some(blocksOf(restRows))
-    val synthetic: Option[Dataset[QBlock]] =
-      if (singles.isEmpty) None
-      else {
-        val qbs = singles.values.map { r =>
-          val shift = segments(r.seg).bucketShift
-          val ids = Array(r.singletonDocId)
-          QBlock(r.term, r.seg, r.singletonDocId >>> shift,
-            r.singletonDocId, r.singletonDocId, 1,
-            BlockCodec.forEncode(BlockCodec.deltaEncode(ids, ids(0))),
-            BlockCodec.pforEncode(Array(r.singletonFreq.toLong)),
-            BlockCodec.forEncode(Array(r.singletonNorm.toLong)),
-            Impacts.encode(Impacts.skyline(Array((r.singletonFreq, r.singletonNorm)))))
-        }.toSeq
-        Some(spark.createDataset(qbs))
-      }
-    val named = (scanned, synthetic) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None)       => spark.emptyDataset[QBlock]
+    val scanned = rows.filterNot(r => singles.contains(r.term)).groupBy(_.seg)
+    val synthetic = singles.values.toSeq.groupBy(_.seg)
+    val slices = readers.indices.flatMap { i =>
+      val scan = scanned.get(i).map(rs => readers(i).postings
+        .where($"term".isin(rs.map(_.term).distinct: _*))
+        .select(blockCols($"term", i): _*))
+      val synth = synthetic.get(i).map(rs => spark.createDataset(rs.map { r =>
+        val ids = Array(r.singletonDocId)
+        QBlock(r.term, i, r.singletonDocId >>> segments(i).bucketShift,
+          r.singletonDocId, r.singletonDocId, 1,
+          BlockCodec.forEncode(BlockCodec.deltaEncode(ids, ids(0))),
+          BlockCodec.pforEncode(Array(r.singletonFreq.toLong)),
+          BlockCodec.forEncode(Array(r.singletonNorm.toLong)),
+          Impacts.encode(Impacts.skyline(Array((r.singletonFreq, r.singletonNorm)))))
+      }).toDF())
+      val parts = scan.toSeq ++ synth ++ dictQs.distinct.map(dictBlocks(_, i))
+      if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _).coalesce(1))
     }
-    // complete multi-term nodes ship their sentinel-namespaced blocks
-    // alongside — no driver enumeration (see dictBlocks)
-    dictQs.distinct.foldLeft(named)((acc, dq) => acc.unionByName(dictBlocks(dq)))
+    if (slices.isEmpty) spark.emptyDataset[QBlock] else PartitionConcat.concat(slices).as[QBlock]
+  }
+
+  /** Blocks of a rewritten query (phrases read the real positional blocks;
+    * complete multi-term nodes ship their sentinel-namespaced blocks).
+    */
+  private def queryBlocks(rows: Seq[SegTermRow], query: Query): Dataset[QBlock] =
+    segmentBlocks(rows, IndexSearcher.hasPhrase(query), IndexSearcher.dictSpecs(query))
+
+  /** Runs `slice` once per segment inside that segment's partition of
+    * `blocks` (see [[segmentBlocks]]), with the segment's docBase, its
+    * tombstones and its buckets in ascending docId order, each as term →
+    * blocks sorted by firstDocId. No block leaves its partition: the query
+    * runs as one job with no exchange.
+    */
+  private def perSegment[T: Encoder](blocks: Dataset[QBlock])(
+      slice: (Long, graft.index.Tombstones, Iterator[Map[String, Array[BlockView]]]) =>
+        Iterator[T]): Dataset[T] = {
+    val basesL = bases
+    val tombs = tombstones
+    blocks.mapPartitions(it => IndexSearcher.bySegment(it).flatMap { case (seg, buckets) =>
+      slice(basesL(seg), tombs.value(seg), buckets)
+    })
   }
 
   // ------------------------------------------------------------ search
@@ -1077,33 +1078,16 @@ final class IndexSearcher(
   /** Top-k by BM25, rank-identical tie-break (score desc, docId asc). */
   def topK(query0: Query, k: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
     val query = Query.rewrite(query0) // BooleanQuery#rewrite normalizations
-    val qTerms = query.terms.toSeq.sorted
-    val rows = segTermRows(qTerms)
-    val ts = aggStats(rows)
-    val scorers: Map[String, SimScorer] = scorerMap(query, ts)
-    val basesL = bases
-    val q = query
-    val tombs = tombstones
-    val candidates = queryBlocks(rows, IndexSearcher.hasPhrase(query),
-        IndexSearcher.dictSpecs(query))
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm: Map[String, Array[BlockView]] = it.toArray
-          .groupBy(_.term)
-          .map { case (t, arr) =>
-            t -> arr.sortBy(_.firstDocId).map(bv =>
-              BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-                bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-                bv.posPacked))
-          }
-        // liveDocs: tombstoned docs never take a top-k slot
-        val collector = new TopKCollector(k, tombs.value(seg))
-        Executor.search(q, byTerm, scorers, collector, pruning)
-        val base = basesL(seg)
-        collector.results.iterator.map { case (d, s) => ScoredDoc(d + base, s) }
-      }
-    candidates.orderBy($"score".desc, $"docId".asc).limit(k)
+    val rows = segTermRows(query.terms.toSeq.sorted)
+    val scorers = scorerMap(query, aggStats(rows))
+    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
+      // one collector per segment: buckets arrive in docId order, so a tie
+      // in a later bucket loses to an earlier doc, as within one bucket;
+      // liveDocs: tombstoned docs never take a top-k slot
+      val collector = new TopKCollector(k, dead)
+      buckets.foreach(Executor.search(query, _, scorers, collector, pruning))
+      collector.results.iterator.map { case (d, s) => ScoredDoc(d + base, s) }
+    }.orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
   /** Score every matching doc (no top-k cut) — feeds grouping/facet/rescore
@@ -1111,38 +1095,15 @@ final class IndexSearcher(
     */
   def scoreMatches(query0: Query): Dataset[ScoredDoc] = {
     val query = Query.rewrite(query0)
-    val qTerms = query.terms.toSeq.sorted
-    val rows = segTermRows(qTerms)
-    val ts = aggStats(rows)
-    val scorers: Map[String, SimScorer] = scorerMap(query, ts)
-    val basesL = bases
-    val q = query
-    val tombs = tombstones
-    queryBlocks(rows, IndexSearcher.hasPhrase(query),
-        IndexSearcher.dictSpecs(query))
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm = it.toArray.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(bv =>
-            BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-              bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-              bv.posPacked))
-        }
-        val base = basesL(seg)
-        val dead = tombs.value(seg)
-        Executor.build(q, byTerm, scorers) match {
-          case None => Iterator.empty
-          case Some(sc) =>
-            new Iterator[ScoredDoc] {
-              private var d = sc.nextDoc()
-              def hasNext: Boolean = d != DocScorer.NoMoreDocs
-              def next(): ScoredDoc = {
-                val r = ScoredDoc(d + base, sc.score); d = sc.nextDoc(); r
-              }
-            }.filter(s => !dead.contains(s.docId - base))
-        }
+    val rows = segTermRows(query.terms.toSeq.sorted)
+    val scorers = scorerMap(query, aggStats(rows))
+    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
+      buckets.flatMap(Executor.build(query, _, scorers)).flatMap { sc =>
+        // the score is read while the scorer sits on the doc
+        Iterator.continually(sc.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
+          .collect { case d if !dead.contains(d) => ScoredDoc(d + base, sc.score) }
       }
+    }
   }
 
   /** Second-pass rescoring (ref `search/QueryRescorer.java`): re-rank a
@@ -1434,28 +1395,10 @@ final class IndexSearcher(
     */
   def matching(query0: Query): Dataset[Long] = {
     val query = Query.rewrite(query0)
-    val qTerms = query.terms.toSeq.sorted
-    val scorers: Map[String, SimScorer] = qTerms.map(t => t -> new ConstScorer(1.0)).toMap
-    val basesL = bases
-    val q = query
-    val tombs = tombstones
-    queryBlocks(segTermRows(qTerms), IndexSearcher.hasPhrase(query),
-        IndexSearcher.dictSpecs(query))
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm = it.toArray.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(bv =>
-            BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-              bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-              bv.posPacked))
-        }
-        val base = basesL(seg)
-        val dead = tombs.value(seg)
-        Executor.matchIds(q, byTerm)
-          .filter(d => !dead.contains(d))
-          .map(_ + base)
-      }.toDF("docId").as[Long]
+    val rows = segTermRows(query.terms.toSeq.sorted)
+    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
+      buckets.flatMap(Executor.matchIds(query, _)).filter(d => !dead.contains(d)).map(_ + base)
+    }.toDF("docId").as[Long]
   }
 
   /** Exact-phrase frequencies — two-phase matching, the re-expression of
@@ -1487,61 +1430,8 @@ final class IndexSearcher(
     * term i's positions (binary search over the sorted per-doc position
     * arrays decoded lazily from the block's .pos payload).
     */
-  def phraseFreqsIndexed(terms: Seq[String]): Dataset[(Long, Int)] = {
-    require(terms.nonEmpty, "empty phrase")
-    require(segments.forall(_.hasPositions), "index was built without positions")
-    val phrase = terms.toArray
-    val unique = terms.distinct
-    val basesL = bases
-    val tombs = tombstones
-    blocksFor(unique)
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm = it.toArray.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(bv =>
-            BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-              bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-              bv.posPacked))
-        }
-        if (unique.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val scorerOf =
-            unique.map(t => t -> new TermScorer(byTerm(t), new ConstScorer(1.0))).toMap
-          val all = scorerOf.values.toArray
-          val base = basesL(seg)
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-          val lead = all.minBy(_.cost)
-          var d = lead.nextDoc()
-          while (d != DocScorer.NoMoreDocs) {
-            var aligned = true
-            var i = 0
-            while (i < all.length && aligned) {
-              val s = all(i)
-              if (s ne lead) {
-                val sd = if (s.docId < d) s.advance(d) else s.docId
-                if (sd != d) {
-                  aligned = false
-                  d = if (sd == DocScorer.NoMoreDocs) DocScorer.NoMoreDocs
-                      else lead.advance(sd)
-                }
-              }
-              i += 1
-            }
-            if (aligned && d != DocScorer.NoMoreDocs) {
-              val live = !tombs.value(seg).contains(d)
-              if (live) {
-                val slotPos: Array[Array[Int]] = phrase.map(t => scorerOf(t).positions)
-                val f = IndexSearcher.countExact(slotPos)
-                if (f > 0) out += ((d + base, f))
-              }
-              d = lead.nextDoc()
-            }
-          }
-          out.iterator
-        }
-      }
-  }
+  def phraseFreqsIndexed(terms: Seq[String]): Dataset[(Long, Int)] =
+    phraseCounts(terms, IndexSearcher.countExact)
 
   /** Sloppy-phrase frequencies at proximity `slop` (ref
     * `search/SloppyPhraseMatcher.java` — our window semantics are the
@@ -1552,61 +1442,33 @@ final class IndexSearcher(
     * candidate docs, then the per-doc sorted position arrays are counted
     * with a bounded recursive walk (positions decode lazily per block).
     */
-  def phraseFreqsSloppy(terms: Seq[String], slop: Int): Dataset[(Long, Int)] = {
+  def phraseFreqsSloppy(terms: Seq[String], slop: Int): Dataset[(Long, Int)] =
+    if (slop == 0) phraseFreqsIndexed(terms)
+    else phraseCounts(terms, IndexSearcher.countSloppy(_, slop))
+
+  /** (docId, count(positions)) for live docs holding every phrase term with
+    * a non-zero count; `count` gets each phrase slot's sorted positions.
+    */
+  private def phraseCounts(terms: Seq[String],
+      count: Array[Array[Int]] => Int): Dataset[(Long, Int)] = {
     require(terms.nonEmpty, "empty phrase")
     require(segments.forall(_.hasPositions), "index was built without positions")
-    if (slop == 0) return phraseFreqsIndexed(terms)
     val phrase = terms.toArray
     val unique = terms.distinct
-    val basesL = bases
-    val tombs = tombstones
-    val slopL = slop
-    blocksFor(unique)
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm = it.toArray.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(bv =>
-            BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-              bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-              bv.posPacked))
-        }
+    perSegment(blocksFor(unique)) { (base, dead, buckets) =>
+      buckets.flatMap { byTerm =>
         if (unique.exists(t => !byTerm.contains(t))) Iterator.empty
         else {
           val scorerOf =
             unique.map(t => t -> new TermScorer(byTerm(t), new ConstScorer(1.0))).toMap
-          val all = scorerOf.values.toArray
-          val base = basesL(seg)
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-          val lead = all.minBy(_.cost)
-          var d = lead.nextDoc()
-          while (d != DocScorer.NoMoreDocs) {
-            var aligned = true
-            var i = 0
-            while (i < all.length && aligned) {
-              val s = all(i)
-              if (s ne lead) {
-                val sd = if (s.docId < d) s.advance(d) else s.docId
-                if (sd != d) {
-                  aligned = false
-                  d = if (sd == DocScorer.NoMoreDocs) DocScorer.NoMoreDocs
-                      else lead.advance(sd)
-                }
-              }
-              i += 1
-            }
-            if (aligned && d != DocScorer.NoMoreDocs) {
-              if (!tombs.value(seg).contains(d)) {
-                val slotPos: Array[Array[Int]] = phrase.map(t => scorerOf(t).positions)
-                val f = IndexSearcher.countSloppy(slotPos, slopL)
-                if (f > 0) out += ((d + base, f))
-              }
-              d = lead.nextDoc()
-            }
-          }
-          out.iterator
+          val conj = new ConjunctionScorer(scorerOf.values.toArray, Array.empty)
+          Iterator.continually(conj.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
+            .filter(d => !dead.contains(d))
+            .map(d => (d + base, count(phrase.map(t => scorerOf(t).positions))))
+            .filter(_._2 > 0)
         }
       }
+    }
   }
 
   /** Sloppy verification against stored text (duel path for
@@ -1663,91 +1525,46 @@ final class IndexSearcher(
     require(segments.forall(_.hasPositions), "index was built without positions")
     val unique = src.terms.distinct
     val required = src.required.distinct
-    val basesL = bases
-    val tombs = tombstones
-    val srcL = src
-    blocksFor(unique)
-      .groupByKey(bk => (bk.seg, bk.bucket))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[QBlock]) =>
-        val seg = key._1
-        val byTerm = it.toArray.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(bv =>
-            BlockView(bv.firstDocId, bv.lastDocId, bv.numDocs,
-              bv.docsPacked, bv.freqsPacked, bv.normsPacked, bv.impacts,
-              bv.posPacked))
-        }
+    perSegment(blocksFor(unique)) { (base, dead, buckets) =>
+      buckets.flatMap { byTerm =>
         if (required.exists(t => !byTerm.contains(t)) ||
             unique.forall(t => !byTerm.contains(t))) Iterator.empty
         else {
           val scorerOf = unique.filter(byTerm.contains)
             .map(t => t -> new TermScorer(byTerm(t), new ConstScorer(1.0))).toMap
-          val base = basesL(seg)
-          val dead = tombs.value(seg)
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
-          val emptyPos = Array.emptyIntArray
-          def emit(d: Long): Unit =
-            if (!dead.contains(d)) {
-              val posOf: String => Array[Int] = t => scorerOf.get(t) match {
-                case Some(s) if s.docId == d => s.positions
-                case _ => emptyPos
-              }
-              val ivs = Intervals.eval(srcL, posOf)
-              if (ivs.nonEmpty) {
-                var minW = Int.MaxValue
-                var i = 0
-                while (i < ivs.length) {
-                  val w = Intervals.endOf(ivs(i)) - Intervals.startOf(ivs(i)) + 1
-                  if (w < minW) minW = w
-                  i += 1
-                }
-                out += ((d + base, ivs.length, minW))
-              }
+          // (docId, nIntervals, minWidth) of doc d, all scorers at or past d
+          def hit(d: Long): Option[(Long, Int, Int)] = {
+            val posOf: String => Array[Int] = t => scorerOf.get(t) match {
+              case Some(s) if s.docId == d => s.positions
+              case _ => Array.emptyIntArray
             }
-          if (required.nonEmpty) {
-            val req = required.map(scorerOf).toArray
-            val opt = scorerOf.filterNot { case (t, _) => required.contains(t) }
-              .values.toArray
-            val lead = req.minBy(_.cost)
-            var d = lead.nextDoc()
-            while (d != DocScorer.NoMoreDocs) {
-              var aligned = true
-              var i = 0
-              while (i < req.length && aligned) {
-                val s = req(i)
-                if (s ne lead) {
-                  val sd = if (s.docId < d) s.advance(d) else s.docId
-                  if (sd != d) {
-                    aligned = false
-                    d = if (sd == DocScorer.NoMoreDocs) DocScorer.NoMoreDocs
-                        else lead.advance(sd)
-                  }
-                }
-                i += 1
-              }
-              if (aligned && d != DocScorer.NoMoreDocs) {
-                var j = 0
-                while (j < opt.length) {
-                  if (opt(j).docId < d) opt(j).advance(d)
-                  j += 1
-                }
-                emit(d)
-                d = lead.nextDoc()
-              }
-            }
-          } else {
-            // pure disjunction: sweep the union of the present terms' docs
-            val all = scorerOf.values.toArray
-            all.foreach(_.nextDoc())
-            var d = all.iterator.map(_.docId).min
-            while (d != DocScorer.NoMoreDocs) {
-              emit(d)
-              all.foreach(s => if (s.docId == d) s.nextDoc())
-              d = all.iterator.map(_.docId).min
-            }
+            val ivs = Intervals.eval(src, posOf)
+            if (ivs.isEmpty) None
+            else Some((d + base, ivs.length,
+              ivs.iterator.map(iv => Intervals.endOf(iv) - Intervals.startOf(iv) + 1).min))
           }
-          out.iterator
+          val docs: Iterator[Long] =
+            if (required.nonEmpty) {
+              val conj = new ConjunctionScorer(required.map(scorerOf).toArray, Array.empty)
+              val opt = scorerOf.filterNot { case (t, _) => required.contains(t) }.values
+              Iterator.continually(conj.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
+                .map { d => opt.foreach(s => if (s.docId < d) s.advance(d)); d }
+            } else {
+              // pure disjunction: sweep the union of the present terms' docs,
+              // moving off the previous doc only when the next one is pulled
+              val all = scorerOf.values.toArray
+              all.foreach(_.nextDoc())
+              var prev = -1L
+              Iterator.continually {
+                all.foreach(s => if (s.docId == prev) s.nextDoc())
+                prev = all.iterator.map(_.docId).min
+                prev
+              }.takeWhile(_ != DocScorer.NoMoreDocs)
+            }
+          docs.filter(d => !dead.contains(d)).flatMap(hit)
         }
       }
+    }
   }
 
   /** Interval matches intersected with a boolean query's match set — spans
@@ -2179,12 +1996,12 @@ final class IndexSearcher(
     val (rows, tStats) = timed(segTermRows(qTerms))
     val ts = aggStats(rows)
     val (_, tScorers) = timed(scorerMap(query, ts))
-    val ((nBlocks, nBuckets), tPlan) = timed {
-      val b = queryBlocks(rows, IndexSearcher.hasPhrase(query),
-        IndexSearcher.dictSpecs(query))
-        .select($"seg", $"bucket").groupBy($"seg", $"bucket").count()
-        .agg(org.apache.spark.sql.functions.count(lit(1)), sum($"count")).head()
-      (b.getLong(1), b.getLong(0))
+    val ((nBlocks, nBuckets, nSlices), tPlan) = timed {
+      val b = queryBlocks(rows, query)
+        .groupBy($"seg", $"bucket").count()
+        .agg(org.apache.spark.sql.functions.count(lit(1)), sum($"count"),
+          countDistinct($"seg")).head()
+      (b.getLong(1), b.getLong(0), b.getLong(2))
     }
     val (hits, tScore) = timed(topK(query, k, pruning).collect())
     Seq(
@@ -2195,9 +2012,11 @@ final class IndexSearcher(
           s"once loaded), docFreq sum ${ts.values.map(_.docFreq).sum}"),
       ProfileRow("scorer_setup", tScorers, s"${ts.size} SimScorer weights"),
       ProfileRow("block_plan", tPlan,
-        s"$nBlocks candidate posting blocks in $nBuckets (seg, bucket) groups"),
+        s"$nBlocks candidate posting blocks in $nBuckets buckets of $nSlices " +
+          "segment slices (one partition each)"),
       ProfileRow("score_collect", tScore,
-        s"topK(k=$k, pruning=$pruning) job end-to-end (re-plans internally): " +
+        s"topK(k=$k, pruning=$pruning) end-to-end (re-plans internally): one job, " +
+          s"one task and one collector per segment slice, no exchange; " +
           s"${hits.length} hits, best=${hits.headOption.map(_.score).getOrElse(0.0)}"))
   }
 
@@ -2561,6 +2380,21 @@ final class IndexSearcher(
 
 object IndexSearcher {
 
+  /** A partition's blocks as (segment, its buckets in ascending docId order,
+    * each as term → blocks sorted by firstDocId) — the scorer input of
+    * `IndexSearcher.perSegment`.
+    */
+  private def bySegment(
+      blocks: Iterator[QBlock]): Iterator[(Int, Iterator[Map[String, Array[BlockView]]])] =
+    blocks.toArray.groupBy(_.seg).toSeq.sortBy(_._1).iterator.map { case (seg, bs) =>
+      seg -> bs.groupBy(_.bucket).toSeq.sortBy(_._1).iterator.map { case (_, inBucket) =>
+        inBucket.groupBy(_.term).map { case (t, arr) =>
+          t -> arr.sortBy(_.firstDocId).map(b => BlockView(b.firstDocId, b.lastDocId,
+            b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
+        }
+      }
+    }
+
   /** Count ordered sloppy-phrase matches: strictly increasing tuples
     * `p_0 < … < p_{n-1}` with `p_i ∈ slotPos(i)` and span
     * `p_{n-1} - p_0 <= (n-1) + slop`. Sorted inputs; bounded recursion —
@@ -2718,7 +2552,7 @@ object IndexSearcher {
   }
 }
 
-/** Builds the scorer tree for a query over one (segment, bucket) group and
+/** Builds the scorer tree for a query over one bucket of a segment and
   * runs the matching strategy — the analogue of
   * `search/BooleanScorerSupplier.java:187-247` picking WAND vs conjunction by
   * clause shape.

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.codec.{BlockCodec, Impacts}
 
-/** A scorer over one (segment, bucket) slice: a pull-based doc-at-a-time
+/** A scorer over one bucket of a segment: a pull-based doc-at-a-time
   * iterator with score + block-max upper-bound surface — the re-expression of
   * the reference's `Scorer`/`DocIdSetIterator`/`ImpactsEnum` contract
   * (`/root/reference/lucene/core/src/java/org/apache/lucene/search/DocIdSetIterator.java`,

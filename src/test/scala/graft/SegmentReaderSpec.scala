@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.Corpus
@@ -8,7 +10,7 @@ import graft.index.{FeatureIndexer, IndexBuilder, IndexConfig, LiveSet, Manifest
 import graft.search.{FeatureFunction, FeatureQuery, IndexSearcher, Query, SearcherManager, SegmentReader}
 
 /** Per-segment read state: a warm searcher runs no Spark job for term
-  * stats and at most two (the scoring shuffle) per top-k query, and
+  * stats and exactly one, with no exchange, per top-k query, and
   * segments written before the singleton and positions columns existed
   * still answer identically; a term whose rows were appended in two
   * batches reads as one dictionary entry; an NRT refresh reloads only
@@ -35,7 +37,7 @@ class SegmentReaderSpec extends SparkTestBase {
   private val queries = Seq("court", "court AND law", "court OR law", "(court OR law) AND state")
 
   for ((label, segs) <- Seq("1 segment" -> (() => oneSeg), "3 segments" -> (() => threeSegs)))
-    test(s"warm searcher, $label: termStats runs no job, topK at most two") {
+    test(s"warm searcher, $label: termStats runs no job, topK one and no exchange") {
       val se = new IndexSearcher(spark, segs())
       val parsed = queries.map(se.parse)
       parsed.foreach(q => se.topK(q, 10).collect()) // warm: dictionaries load
@@ -46,7 +48,14 @@ class SegmentReaderSpec extends SparkTestBase {
       queries.zip(parsed).foreach { case (s, q) =>
         val (hits, log) = countJobs(se.topK(q, 10).collect())
         assert(hits.nonEmpty, s"vacuous job count for '$s'")
-        assert(log.jobs <= 2, s"topK('$s') ran ${log.jobs} jobs: ${log.executions}")
+        assert(log.jobs == 1, s"topK('$s') ran ${log.jobs} jobs: ${log.executions}")
+        val plan = se.topK(q, 10).queryExecution.executedPlan
+        assert(!plan.isInstanceOf[AdaptiveSparkPlanExec] &&
+          plan.find(_.isInstanceOf[Exchange]).isEmpty, s"exchange in topK('$s'):\n$plan")
+        val (ids, mLog) = countJobs(se.matching(q).collect())
+        assert(ids.nonEmpty && mLog.jobs <= 1, s"matching('$s') ran ${mLog.executions}")
+        val (all, sLog) = countJobs(se.scoreMatches(q).collect())
+        assert(all.nonEmpty && sLog.jobs <= 1, s"scoreMatches('$s') ran ${sLog.executions}")
       }
     }
 
