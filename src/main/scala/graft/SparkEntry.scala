@@ -2,12 +2,15 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuilder, IndexConfig, Manifest}
+import graft.analysis.StandardAnalyzer
+import graft.index.{IndexBuilder, IndexConfig, Manifest, SegmentManifest}
 import graft.pipeline.{Bpe, Dedup, Multimodal, Quantize, Similarity, TextOps}
 import graft.search._
+// scoring models; graft.pipeline.Similarity holds the vector-similarity ops
+import graft.search.{Similarity => Sim}
 import graft.streaming.Streaming
 
 /** Driver contract: one `queries` entry per implemented operator
@@ -22,86 +25,236 @@ object SparkEntry {
   private val K1 = 1.2d
   private val B = 0.75d
 
-  // ------------------------------------------------------- index cache
-
-  private val searchers = TrieMap[String, IndexSearcher]()
+  // ------------------------------------------------------- index registry
 
   private def indexDirFor(sfDir: String): java.nio.file.Path =
     java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-idx-v6", // vN = segment format/config rev (v6: reversed-term dictionary)
       java.lang.Integer.toHexString(sfDir.hashCode))
 
-  private val fieldSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Two-field (title/body) index over `documents`: title = first 8 tokens,
-    * body = the rest — the multi-field engine path (per-field norms + stats).
+  /** A corpus variant of `documents`: its segment directory under the
+    * sfDir's index root, how its segments are built there (given the
+    * session, the sfDir and that directory), and the analyzer its queries
+    * parse with.
     */
-  def fieldSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    fieldSearchers.getOrElseUpdate(sfDir, {
+  final class Variant private (
+      private[SparkEntry] val seg: String,
+      private[SparkEntry] val build: (SparkSession, String, String) => Seq[SegmentManifest],
+      private[SparkEntry] val analyzer: StandardAnalyzer = StandardAnalyzer.Default
+  )
+
+  object Variant {
+
+    /** The base index: positions on, so phrase, span and highlight entries
+      * share it.
+      */
+    val Plain = new Variant("seg0", single(Cfg.copy(storePositions = true)))
+
+    /** Two fields (title/body): title = first 8 tokens, body = the rest —
+      * the multi-field engine path (per-field norms + stats).
+      */
+    val Fields = new Variant("segf", (spark, sfDir, dir) => {
       import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-        .map { case (url, text) =>
-          val toks = text.split(" ")
-          (url, Seq("title" -> toks.take(8).mkString(" "),
-            "body" -> toks.drop(8).mkString(" ")))
-        }
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, storePositions = true)
-      IndexBuilder.buildSegmentFields(pages, s"$dir/segf", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segf").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
+      val fielded = pages(spark, sfDir).map { case (url, text) =>
+        val toks = text.split(" ")
+        (url, Seq("title" -> toks.take(8).mkString(" "),
+          "body" -> toks.drop(8).mkString(" ")))
+      }
+      IndexBuilder.buildSegmentFields(fielded, dir, Cfg.copy(storePositions = true))
+      committed(dir)
     })
 
-  private val tvSearchers = TrieMap[String, IndexSearcher]()
+    /** [[Plain]] plus stored term vectors (IndexConfig.storeTermVectors) —
+      * identical collection stats, so vector-path MLT scores equal the
+      * re-analysis path's.
+      */
+    val Tv = new Variant("segtv",
+      single(Cfg.copy(storePositions = true, storeTermVectors = true)))
 
-  /** Same corpus/config as [[searcherFor]] plus stored term vectors
-    * (IndexConfig.storeTermVectors) — identical collection stats, so
-    * vector-path MLT scores equal the re-analysis path's.
-    */
-  def tvSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    tvSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, storePositions = true, storeTermVectors = true)
-      IndexBuilder.buildSegment(pages, s"$dir/segtv", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segtv").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
+    /** Three bloom-enabled segments over contiguous doc_id thirds — the
+      * NRT-tail shape the reference aims its bloom postings layer at
+      * (`codecs/bloom/BloomFilteringPostingsFormat.java`): every
+      * term-stats/postings probe consults each segment's bloom sidecar and
+      * skips segments that definitely lack the term. docIDs stay the global
+      * url rank and collection stats sum across segments, so scores equal
+      * the single-segment searcher's — the oracle is the plain BM25 SQL.
+      * Segment directories are `segbl0`..`segbl2`.
+      */
+    val Bloom = new Variant("segbl", (spark, sfDir, dir) => {
+      val n = docsDf(spark, sfDir).count()
+      val cuts = Seq(0L, n / 3, 2 * n / 3, n)
+      (0 until 3).map { i =>
+        val third = col("doc_id") >= cuts(i) && col("doc_id") < cuts(i + 1)
+        IndexBuilder.buildSegment(pages(spark, sfDir, where = third),
+          s"$dir$i", Cfg.copy(bloomTerms = true))
+      }
     })
 
-  /** Drop the cached index for `sfDir` (benchmarks call this so a timed
-    * build is a real build, never a manifest resume from a prior process).
+    /** Positions AND character offsets in the postings (ref
+      * `index/IndexOptions.java` DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS)
+      * — the offset-based highlighter's source.
+      */
+    val Offs = new Variant("segoffs",
+      single(Cfg.copy(storePositions = true, storeOffsets = true)))
+
+    /** An in-place numeric doc-values update applied (ref
+      * `index/IndexWriter.java#updateNumericDocValue`): the stored `length`
+      * of every doc_id % 10 == 0 doc is patched to length+1000 WITHOUT
+      * reindexing — a fixed-generation sparse patch overlaid at read time
+      * ([[graft.index.DocValues]]). Fixed gen 1 + deterministic patch
+      * content make the update idempotent across cached-index reruns.
+      */
+    val Dv = new Variant("segdv", single(Cfg, after = (spark, _, dir) => {
+      val patch = spark.read.parquet(s"$dir/docs")
+        .where(substring(col("url"), 4, 12).cast("bigint") % 10 === 0)
+        .select(col("docId"), (col("length") + 1000L).as("value"))
+      graft.index.DocValues.update(spark, dir, "length", patch, gen = Some(1)): Unit
+    }))
+
+    /** Index-time synonym rules (ref
+      * `analysis/synonym/SynonymGraphFilter.java`): the multi-word variant
+      * "data stream" injects `datastream` and the single token "vector"
+      * injects `embedding`, both as position-increment-0 overlap tokens — a
+      * query for the canonical term finds docs containing only the variant.
+      */
+    val Syn = new Variant("segsyn", single(Cfg.copy(
+      synonyms = Seq(List("data", "stream") -> "datastream",
+        List("vector") -> "embedding"))))
+
+    /** Payloads (ref the analysis payloads package): every doc gets one
+      * injected `data|<doc_id%7+1>` delimited-payload token appended; the
+      * natural `data` occurrences carry the default payload 1.
+      */
+    val Pay = new Variant("segpay",
+      single(Cfg.copy(storePositions = true, storePayloads = true),
+        text = concat(col("text"), lit(" data|"),
+          ((col("doc_id") % 7) + 1).cast("string"))))
+
+    /** Two-field web index: body text + an `anchor` field holding the
+      * anchor-text tokens of the doc's INLINKS from the [[webEdges]] graph
+      * (token = "data" for even sources, "query" for odd — body vocabulary,
+      * so BM25F genuinely blends the fields). The anchor corpus feeding a
+      * combined-field ranker is the classic web-search loop (body + anchor
+      * signal).
+      */
+    val Web = new Variant("segweb", (spark, sfDir, dir) => {
+      import spark.implicits._
+      val docs = docsDf(spark, sfDir).select($"doc_id", $"text")
+      val (_, edges) = webEdges(docs.select($"doc_id"))
+      val anchors = edges
+        .select($"dst", when($"src" % 2 === 0, lit("data"))
+          .otherwise(lit("query")).as("tok"))
+        .groupBy($"dst")
+        .agg(array_join(array_sort(collect_list($"tok")), " ").as("anchor"))
+      val fielded = docs
+        .join(anchors, docs("doc_id") === anchors("dst"), "left")
+        .select(urlOf($"doc_id"), $"text", coalesce($"anchor", lit("")).as("anchor"))
+        .as[(String, String, String)]
+        .map { case (u, t, a) => (u, Seq("body" -> t, "anchor" -> a)) }
+      IndexBuilder.buildSegmentFields(fielded, dir, Cfg)
+      committed(dir)
+    })
+
+    /** A static `pagerank` feature (value = n_chars mod 400 + 1 — integers
+      * ≤ 512 are exactly 17-bit-encodable, so the index round-trips the
+      * oracle's arithmetic losslessly) appended as feature postings (ref
+      * `document/FeatureField.java`). batchId makes the append a no-op when
+      * a cached segment from a prior process already carries this batch.
+      */
+    val Feat = new Variant("segfeat", single(Cfg, after = (spark, sfDir, dir) => {
+      val features = docsDf(spark, sfDir)
+        .select(urlOf(col("doc_id")), lit("pagerank").as("feature"),
+          (pmod(col("n_chars"), lit(400)) + 1).cast("float").as("value"))
+      graft.index.FeatureIndexer.addFeatures(spark, dir, features,
+        batchId = Some("pagerank-v1")): Unit
+    }))
+
+    /** The mixed-script derivation ([[cjkTextOf]]) with CJK bigram analysis
+      * (ref `analysis/cjk/CJKBigramFilter.java`): Han/Katakana/Hangul runs
+      * index as overlapping character bigrams; query analysis uses the same
+      * chain, so `数据库` searches as the bigram conjunction 数据+据库.
+      */
+    val Cjk = new Variant("segcjk",
+      single(Cfg.copy(cjkBigrams = true), text = cjkTextOf(col("doc_id"))),
+      new StandardAnalyzer(cjkBigrams = true))
+
+    /** A deterministically pluralized derivation ('query' → 'queries';
+      * every 3rd token '-s', every 3rd+1 '-es'), built AND queried through
+      * the `minimal` stemming filter
+      * (ref `analysis/common/.../en/EnglishMinimalStemFilter.java`):
+      * morphological variants conflate to one posting on both paths, so
+      * `queries` finds docs that only contain `querys`/`query`.
+      */
+    val Stem = new Variant("segstem",
+      single(Cfg.copy(termFilter = "minimal"),
+        text = array_join(transform(split(col("text"), " "), (w, i) =>
+          when(w === "query", lit("queries"))
+            .when(i % 3 === 1, concat(w, lit("s")))
+            .when(i % 3 === 2, concat(w, lit("es")))
+            .otherwise(w)), " ")),
+      new StandardAnalyzer(filter = graft.analysis.EnglishMinimalStemmer))
+  }
+
+  /** The build config every variant starts from. */
+  private val Cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
+    numDocPartitions = 4)
+
+  /** urls are zero-padded doc_ids, so docID rank order == doc_id order. */
+  private def urlOf(id: Column): Column = format_string("doc%012d", id).as("url")
+
+  /** `documents` rows matching `where` as (url, text) pages. */
+  private def pages(
+      spark: SparkSession, sfDir: String,
+      text: Column = col("text"), where: Column = lit(true)
+  ): Dataset[(String, String)] = {
+    import spark.implicits._
+    docsDf(spark, sfDir).where(where)
+      .select(urlOf($"doc_id"), text.as("text")).as[(String, String)]
+  }
+
+  /** The committed manifest at `dir`, re-read after any post-build patch. */
+  private def committed(dir: String): Seq[SegmentManifest] = Seq(Manifest.read(dir).get)
+
+  /** A one-segment variant: the pages with `text`, built with `cfg`;
+    * `after` runs on the committed segment (given session, sfDir and the
+    * segment directory) before its manifest is read.
+    */
+  private def single(
+      cfg: IndexConfig, text: Column = col("text"),
+      after: (SparkSession, String, String) => Unit = (_, _, _) => ()
+  ): (SparkSession, String, String) => Seq[SegmentManifest] = (spark, sfDir, dir) => {
+    IndexBuilder.buildSegment(pages(spark, sfDir, text), dir, cfg)
+    after(spark, sfDir, dir)
+    committed(dir)
+  }
+
+  /** Every open searcher, keyed by (sfDir, variant, scoring model). */
+  private val searchers = TrieMap[(String, Variant, Sim), IndexSearcher]()
+
+  /** The searcher over `variant`'s index of `sfDir`'s `documents`, built
+    * once per sfDir. A non-BM25 `sim` is a view over the BM25 searcher of
+    * the same variant (ref `IndexSearcher#setSimilarity`): it shares that
+    * searcher's segment readers, so no dictionary is loaded again.
+    */
+  def searcherFor(
+      spark: SparkSession, sfDir: String,
+      variant: Variant = Variant.Plain, sim: Sim = Sim.Bm25
+  ): IndexSearcher =
+    searchers.getOrElseUpdate((sfDir, variant, sim),
+      if (sim != Sim.Bm25) searcherFor(spark, sfDir, variant).withSimilarity(sim)
+      else {
+        val dir = java.nio.file.Files.createDirectories(indexDirFor(sfDir))
+          .resolve(variant.seg).toString
+        new IndexSearcher(spark, variant.build(spark, sfDir, dir), variant.analyzer,
+          precision = Precision.DoubleOracle, k1 = K1, b = B)
+      })
+
+  /** Drop every cached searcher of `sfDir` and delete its indexes
+    * (benchmarks call this so a timed build is a real build, never a
+    * manifest resume from a prior process).
     */
   def clearIndexCache(sfDir: String): Unit = {
-    searchers.remove(sfDir)
-    tvSearchers.remove(sfDir)
-    fieldSearchers.remove(sfDir)
-    webAnchorSearchers.remove(sfDir)
-    bloomSearchers.remove(sfDir)
-    classicSearchers.remove(sfDir)
-    stemSearchers.remove(sfDir)
-    cjkSearchers.remove(sfDir)
-    featureSearchers.remove(sfDir)
-    lmSearchers.remove(sfDir)
-    jmSearchers.remove(sfDir)
-    dfrSearchers.remove(sfDir)
-    ibSearchers.remove(sfDir)
-    dfiSearchers.remove(sfDir)
-    axSearchers.remove(sfDir)
-    pfSearchers.remove(sfDir)
-    multiSearchers.remove(sfDir)
-    synSearchers.remove(sfDir)
-    offsSearchers.remove(sfDir)
+    searchers.keys.filter(_._1 == sfDir).foreach(searchers.remove)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
@@ -110,26 +263,7 @@ object SparkEntry {
     if (d.exists()) rm(d)
   }
 
-  /** Build (once per sfDir) an index over the `documents` table. urls are
-    * zero-padded doc_ids so docID rank order == doc_id order.
-    */
-  def searcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    searchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, storePositions = true)
-      IndexBuilder.buildSegment(pages, s"$dir/seg0", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/seg0").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private def docIdOf(url: org.apache.spark.sql.Column) =
+  private def docIdOf(url: Column) =
     substring(url, 4, 12).cast("bigint").as("doc_id")
 
   /** Synthetic link multigraph for the web-graph entries, pure doc_id
@@ -166,7 +300,7 @@ object SparkEntry {
     * the %3 topic link carries rel="nofollow") and one unterminated link,
     * all pure functions of doc_id.
     */
-  private def anchorHtmlOf(id: org.apache.spark.sql.Column) =
+  private def anchorHtmlOf(id: Column) =
     concat(
       lit("<html><body><p>intro</p><a href=\"HTTPS://Site"),
       ((id + 1) % 7).cast("string"),
@@ -185,7 +319,7 @@ object SparkEntry {
     * domains, 7 site labels, optional www/tracking-param variants — all
     * pure functions of doc_id so the DuckDB oracle rebuilds them exactly.
     */
-  private def webUrlOf(id: org.apache.spark.sql.Column) =
+  private def webUrlOf(id: Column) =
     concat(
       lit("https://"),
       when(id % 4 === 0, lit("www.")).otherwise(lit("")),
@@ -196,10 +330,6 @@ object SparkEntry {
       lit("/p/"), (id % 100).cast("string"),
       when(id % 5 === 0, lit("?utm_source=x&a=1")).otherwise(lit("")))
 
-  /** Engine top-k → (doc_id, score) with 6-dp rounding; selection order is
-    * (rounded score desc, doc_id asc) on BOTH sides so rounding ties cut
-    * identically.
-    */
   /** Top-k hits with VERIFIED rounding-tie slack: the oracle compares
     * 6-dp-rounded scores, so the engine must fetch enough raw hits that no
     * uncollected doc could round into the top k. Sufficiency check: the
@@ -227,352 +357,27 @@ object SparkEntry {
     throw new IllegalStateException(s"tie slack insufficient at $slack for $q")
   }
 
-  private def ftTopK(spark: SparkSession, sfDir: String, queryStr: String, k: Int): DataFrame = {
-    val s = searcherFor(spark, sfDir)
-    import spark.implicits._
-    val q = s.parse(queryStr)
-    // collect the verified-slack hit list, then point-lookup stored fields
-    // (isin pushdown on the docId-sorted docs table) instead of a full
-    // docs-table scan + join per query
-    s.fetchDocs(topKVerified(s, q, k))
-      .select(docIdOf($"url"), round($"score", 6).as("score"))
-      .orderBy($"score".desc, $"doc_id".asc)
+  /** Engine top-k → (doc_id, score) with 6-dp rounding; selection order is
+    * (rounded score desc, doc_id asc) on BOTH sides so rounding ties cut
+    * identically. Stored fields come by point lookup (isin pushdown on the
+    * docId-sorted docs table), not a docs-table scan + join per query.
+    */
+  private def topKDf(se: IndexSearcher, q: Query, k: Int): DataFrame =
+    se.fetchDocs(topKVerified(se, q, k))
+      .select(docIdOf(col("url")), round(col("score"), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
+
+  private def ftTopK(spark: SparkSession, sfDir: String, queryStr: String, k: Int): DataFrame = {
+    val se = searcherFor(spark, sfDir)
+    topKDf(se, se.parse(queryStr), k)
   }
-
-  private val bloomSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Three bloom-enabled segments over `documents` split into contiguous
-    * doc_id thirds — the NRT-tail shape the reference aims its bloom
-    * postings layer at (`codecs/bloom/BloomFilteringPostingsFormat.java`):
-    * every term-stats/postings probe consults each segment's bloom sidecar
-    * and skips segments that definitely lack the term. docIDs stay the
-    * global url rank (contiguous url ranges + cumulative bases) and
-    * collection stats sum across segments, so scores are identical to the
-    * single-segment searcher's — the oracle is the plain BM25 SQL.
-    */
-  private def bloomSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    bloomSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir)).toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val n = docs.count()
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, bloomTerms = true)
-      val manifests = Seq((0L, n / 3, "segbl0"), (n / 3, 2 * n / 3, "segbl1"),
-        (2 * n / 3, n, "segbl2")).map { case (lo, hi, name) =>
-        val pages = docs.where($"doc_id" >= lo && $"doc_id" < hi)
-          .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-          .as[(String, String)]
-        IndexBuilder.buildSegment(pages, s"$dir/$name", cfg)
-      }
-      new IndexSearcher(spark, manifests, precision = Precision.DoubleOracle,
-        k1 = K1, b = B)
-    })
-
-  private val classicSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments as [[searcherFor]], scored with ClassicSimilarity
-    * (TF-IDF) — the pluggable-similarity engine path
-    * (ref `IndexSearcher#setSimilarity`).
-    */
-  private def classicSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    classicSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.Classic)
-    })
-
-  private val lmSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments as [[searcherFor]], scored with the Dirichlet-smoothed
-    * language model (ref `similarities/LMDirichletSimilarity.java`).
-    */
-  private def lmSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    lmSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.LmDirichlet(2000.0))
-    })
-
-  private val jmSearchers = TrieMap[String, IndexSearcher]()
-
-  private def jmSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    jmSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.LmJelinekMercer(0.1))
-    })
-
-  private val offsSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Index over `documents` with positions AND character offsets in the
-    * postings (ref `index/IndexOptions.java`
-    * DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS) — the offset-based
-    * highlighter's source.
-    */
-  private def offsSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    offsSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, storePositions = true, storeOffsets = true)
-      IndexBuilder.buildSegment(pages, s"$dir/segoffs", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segoffs").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val dvSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Segment with an in-place numeric doc-values update applied (ref
-    * `index/IndexWriter.java#updateNumericDocValue`): the stored `length`
-    * of every doc_id % 10 == 0 doc is patched to length+1000 WITHOUT
-    * reindexing — a fixed-generation sparse patch overlaid at read time
-    * ([[graft.index.DocValues]]). Fixed gen 1 + deterministic patch content
-    * make the update idempotent across cached-index reruns.
-    */
-  private def dvSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    dvSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4)
-      IndexBuilder.buildSegment(pages, s"$dir/segdv", cfg)
-      val patch = spark.read.parquet(s"$dir/segdv/docs")
-        .where(substring($"url", 4, 12).cast("bigint") % 10 === 0)
-        .select($"docId", ($"length" + 1000L).as("value"))
-      graft.index.DocValues.update(spark, s"$dir/segdv", "length", patch,
-        gen = Some(1))
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segdv").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val synSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Index over `documents` with index-time synonym rules (ref
-    * `analysis/synonym/SynonymGraphFilter.java`): the multi-word variant
-    * "data stream" injects `datastream` and the single token "vector"
-    * injects `embedding`, both as position-increment-0 overlap tokens — a
-    * query for the canonical term finds docs containing only the variant.
-    */
-  private def synSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    synSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4,
-        synonyms = Seq(List("data", "stream") -> "datastream",
-          List("vector") -> "embedding"))
-      IndexBuilder.buildSegment(pages, s"$dir/segsyn", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segsyn").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val paySearchers = TrieMap[String, IndexSearcher]()
-
-  /** Payload-variant index (ref the analysis payloads package): every doc gets one
-    * injected `data|<doc_id%7+1>` delimited-payload token appended; the
-    * natural `data` occurrences carry the default payload 1.
-    */
-  private def paySearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    paySearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"),
-          concat($"text", lit(" data|"), (($"doc_id" % 7) + 1).cast("string"))
-            .as("text"))
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, storePositions = true, storePayloads = true)
-      IndexBuilder.buildSegment(pages, s"$dir/segpay", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segpay").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val dfrSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments, scored with DFR InL2 (ref `similarities/DFRSimilarity
-    * .java` — I(n) basic model, L after-effect, H2 normalization, c = 1).
-    */
-  private def dfrSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    dfrSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.Dfr())
-    })
-
-  private val ibSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments, scored with the information-based model (ref
-    * `similarities/IBSimilarity.java` — log-logistic distribution,
-    * document-frequency λ, H1 normalization).
-    */
-  private def ibSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    ibSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.Ib())
-    })
-
-  private val axSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments, scored with the F2EXP axiomatic model (ref
-    * `similarities/AxiomaticF2EXP.java` — tfln growth, exponential idf).
-    */
-  private def axSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    axSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.Axiomatic())
-    })
-
-  private val webAnchorSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Two-field web index: body text + an `anchor` field holding the
-    * anchor-text tokens of the doc's INLINKS from the [[webEdges]] graph
-    * (token = "data" for even sources, "query" for odd — body vocabulary,
-    * so BM25F genuinely blends the fields). The anchor corpus feeding a
-    * combined-field ranker is the classic web-search loop (body + anchor
-    * signal).
-    */
-  private def webAnchorSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    webAnchorSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir)).toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select($"doc_id", $"text")
-      val (_, edges) = webEdges(docs.select($"doc_id"))
-      val anchors = edges
-        .select($"dst", when($"src" % 2 === 0, lit("data"))
-          .otherwise(lit("query")).as("tok"))
-        .groupBy($"dst")
-        .agg(array_join(array_sort(collect_list($"tok")), " ").as("anchor"))
-      val pages = docs
-        .join(anchors, docs("doc_id") === anchors("dst"), "left")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text",
-          coalesce($"anchor", lit("")).as("anchor"))
-        .as[(String, String, String)]
-        .map { case (u, t, a) => (u, Seq("body" -> t, "anchor" -> a)) }
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4)
-      IndexBuilder.buildSegmentFields(pages, s"$dir/segweb", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segweb").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val sweetSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Entry hyperparameters for SweetSpot: plateau [8,40] terms, classic
-    * steepness 0.5, tf floor base 0.5 below freq 2 — exercises both tf
-    * branches and both sides of the plateau on the corpus.
-    */
-  private def sweetSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    sweetSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.SweetSpot(
-          lnMin = 8, lnMax = 40, steepness = 0.5, tfBase = 0.5, tfMin = 2.0))
-    })
-
-  private val multiSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments, scored by the sum of BM25 and ClassicSimilarity (ref
-    * `MultiSimilarity.java`).
-    */
-  private def multiSimSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    multiSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B,
-        similarity = graft.search.Similarity.Multi(
-          Seq(graft.search.Similarity.Bm25, graft.search.Similarity.Classic)))
-    })
-
-  private val pfSearchers = TrieMap[String, IndexSearcher]()
-
-  /** The multi-field segments scored per field (ref
-    * `PerFieldSimilarityWrapper.java`): title = ClassicSimilarity, every
-    * other field = BM25.
-    */
-  private def perFieldSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    pfSearchers.getOrElseUpdate(sfDir, {
-      val base = fieldSearcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B,
-        similarity = graft.search.Similarity.PerField(
-          Map("title" -> graft.search.Similarity.Classic)))
-    })
-
-  private val dfiSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Same segments, scored with divergence from independence (ref
-    * `similarities/DFISimilarity.java`, standardized measure).
-    */
-  private def dfiSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    dfiSearchers.getOrElseUpdate(sfDir, {
-      val base = searcherFor(spark, sfDir)
-      new IndexSearcher(spark, base.segments, precision = Precision.DoubleOracle,
-        k1 = K1, b = B, similarity = graft.search.Similarity.Dfi())
-    })
-
-  private val featureSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Index over `documents` carrying a static `pagerank` feature (value =
-    * n_chars mod 400 + 1 — integers ≤ 512 are exactly 17-bit-encodable, so
-    * the index round-trips the oracle's arithmetic losslessly) appended as
-    * feature postings (ref `document/FeatureField.java`).
-    */
-  private def featureSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    featureSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text")
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4)
-      IndexBuilder.buildSegment(pages, s"$dir/segfeat", cfg)
-      // batchId makes the append a no-op when a cached segment from a
-      // prior process already carries this feature batch
-      val features = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"),
-          lit("pagerank").as("feature"),
-          (pmod($"n_chars", lit(400)) + 1).cast("float").as("value"))
-      graft.index.FeatureIndexer.addFeatures(spark, s"$dir/segfeat", features,
-        batchId = Some("pagerank-v1"))
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segfeat").get),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val cjkSearchers = TrieMap[String, IndexSearcher]()
 
   /** Deterministic mixed-script page text for the CJK entry: Latin + Han +
     * Katakana + Hangul words, all pure functions of doc_id so the DuckDB
     * oracle rebuilds the exact byte stream.
     */
-  private def cjkTextOf(id: org.apache.spark.sql.Column) =
+  private def cjkTextOf(id: Column) =
     concat(
       lit("web "),
       when(id % 3 === 0, lit("数据库"))
@@ -581,62 +386,6 @@ object SparkEntry {
       when(id % 4 === 0, lit("データ")).otherwise(lit("検索")),
       when(id % 5 === 0, lit(" 한국어")).otherwise(lit("")),
       when(id % 7 === 0, lit(" index")).otherwise(lit("")))
-
-  /** Index over the mixed-script derivation with CJK bigram analysis
-    * (ref `analysis/cjk/CJKBigramFilter.java`): Han/Katakana/Hangul runs
-    * index as overlapping character bigrams; query analysis uses the same
-    * chain, so `数据库` searches as the bigram conjunction 数据+据库.
-    */
-  private def cjkSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    cjkSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"),
-          cjkTextOf($"doc_id").as("text"))
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, cjkBigrams = true)
-      IndexBuilder.buildSegment(pages, s"$dir/segcjk", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segcjk").get),
-        analyzer = new graft.analysis.StandardAnalyzer(cjkBigrams = true),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
-
-  private val stemSearchers = TrieMap[String, IndexSearcher]()
-
-  /** Index over a deterministically pluralized derivation of `documents`
-    * ('query' → 'queries'; every 3rd token '-s', every 3rd+1 '-es'), built
-    * AND queried through the `minimal` stemming filter
-    * (ref `analysis/common/.../en/EnglishMinimalStemFilter.java`):
-    * morphological variants conflate to one posting on both paths, so
-    * `queries` finds docs that only contain `querys`/`query`.
-    */
-  private def stemSearcherFor(spark: SparkSession, sfDir: String): IndexSearcher =
-    stemSearchers.getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createDirectories(indexDirFor(sfDir))
-        .toString
-      val derived = transform(split($"text", " "), (w, i) =>
-        when(w === "query", lit("queries"))
-          .when(i % 3 === 1, concat(w, lit("s")))
-          .when(i % 3 === 2, concat(w, lit("es")))
-          .otherwise(w))
-      val pages = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(format_string("doc%012d", $"doc_id").as("url"),
-          array_join(derived, " ").as("text"))
-        .as[(String, String)]
-      val cfg = IndexConfig(bucketShift = 8, numPostingPartitions = 8,
-        numDocPartitions = 4, termFilter = "minimal")
-      IndexBuilder.buildSegment(pages, s"$dir/segstem", cfg)
-      new IndexSearcher(spark, Seq(Manifest.read(s"$dir/segstem").get),
-        analyzer = new graft.analysis.StandardAnalyzer(
-          filter = graft.analysis.EnglishMinimalStemmer),
-        precision = Precision.DoubleOracle, k1 = K1, b = B)
-    })
 
   private def ftMatch(spark: SparkSession, sfDir: String, q: Query): DataFrame = {
     val s = searcherFor(spark, sfDir)
@@ -661,12 +410,11 @@ object SparkEntry {
   /** Stored text keyed by the searcher's docIds (url ↔ doc_id bridge). */
   private def textByDocId(
       s: SparkSession, d: String
-  ): org.apache.spark.sql.Dataset[(Long, String)] = {
+  ): Dataset[(Long, String)] = {
     val se = searcherFor(s, d)
     import s.implicits._
     se.docsTable.select($"docId", $"url")
-      .join(docsDf(s, d)
-        .select(format_string("doc%012d", $"doc_id").as("url"), $"text"), "url")
+      .join(pages(s, d), "url")
       .select($"docId", $"text").as[(Long, String)]
   }
 
@@ -684,42 +432,28 @@ object SparkEntry {
     "ft_bloom_topk" -> ((s, d) => {
       // 3-segment bloom-enabled searcher: results must equal the plain BM25
       // oracle (bloom has no false negatives, segments sum to one corpus)
-      val se = bloomSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Bloom)
       val q = se.parse("filter OR query")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_and_topk" -> ((s, d) => ftTopK(s, d, "data AND query", 10)),
     "ft_or_topk" -> ((s, d) => ftTopK(s, d, "data OR query OR stream", 10)),
     "ft_nested_topk" -> ((s, d) => ftTopK(s, d, "(data OR query) AND table", 10)),
     "ft_tfidf_topk" -> ((s, d) => {
-      val se = classicSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, sim = Sim.Classic)
       val q = se.parse("data OR query OR stream")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_filter_topk" -> ((s, d) => {
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = BoolQuery(Seq(
         TermQuery("data") -> Occur.Should, TermQuery("query") -> Occur.Should,
         TermQuery("table") -> Occur.Filter))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_synonym_topk" -> ((s, d) => {
       val se = searcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, SynonymQuery(Seq("data", "stream")), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, SynonymQuery(Seq("data", "stream")), 10)
     }),
     "ft_fuzzy_like" -> ((s, d) => {
       // FuzzyLikeThisQuery (ref lucene/sandbox sandbox/queries/
@@ -728,92 +462,69 @@ object SparkEntry {
       // pseudo-term — the SynonymQuery blend (summed tf, group df = max
       // member df) — summed across token groups
       val se = searcherFor(s, d)
-      import s.implicits._
       val groups = Seq("quer", "strem")
         .map(t => se.expandFuzzy(t, maxEdits = 1))
         .filter(_.nonEmpty)
       val q = BoolQuery(groups.map(g =>
         (SynonymQuery(g): Query) -> (Occur.Should: Occur)))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_field_topk" -> ((s, d) => {
       // field-scoped BM25: per-field docCount/avgdl/norms (title = first 8
       // tokens, body = rest); cross-field disjunction sums per-field scores
-      val se = fieldSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, se.parse("title:data OR body:query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, Variant.Fields)
+      topKDf(se, se.parse("title:data OR body:query"), 10)
     }),
     "ft_multisim_topk" -> ((s, d) => {
       // MultiSimilarity (ref MultiSimilarity.java): per-term score = BM25 +
       // ClassicSimilarity, double-accumulated
-      val se = multiSimSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.Multi(Seq(Sim.Bm25, Sim.Classic)))
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_perfield_topk" -> ((s, d) => {
       // per-field similarity (ref PerFieldSimilarityWrapper): the title
       // clause scores under ClassicSimilarity (tf-idf), the body clause
       // under BM25 — one boolean query, two scoring models, clause-summed
-      val se = perFieldSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, se.parse("title:data OR body:query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, Variant.Fields,
+        Sim.PerField(Map("title" -> Sim.Classic)))
+      topKDf(se, se.parse("title:data OR body:query"), 10)
     }),
     "ft_feature_rank" -> ((s, d) => {
       // FeatureField static ranking signal: BM25(data) + a saturation
       // transform of the doc's pagerank feature, composed as SHOULD clauses
       // (ref document/FeatureField.java newSaturationQuery usage)
-      val se = featureSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Feat)
       val q = BoolQuery(Seq(
         TermQuery("data") -> (Occur.Should: Occur),
         FeatureQuery("pagerank", FeatureFunction.Saturation(500.0), 0.8) ->
           (Occur.Should: Occur)))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_lm_topk" -> ((s, d) => {
       // Dirichlet-smoothed language model ranking (ref
       // LMDirichletSimilarity): per-term score = max(0, ln(1 + tf/(mu*p))
       // + ln(mu/(dl+mu))), p = (ttf+1)/(sttf+1), mu = 2000
-      val se = lmSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.LmDirichlet(2000.0))
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_lmjm_topk" -> ((s, d) => {
       // Jelinek-Mercer language model (ref LMJelinekMercerSimilarity):
       // per-term score = ln(1 + ((1-lambda)*tf/dl)/(lambda*p)), lambda 0.1
-      val se = jmSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.LmJelinekMercer(0.1))
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_synonym_index" -> ((s, d) => {
       // index-time synonym graphs (ref SynonymGraphFilter): querying the
       // canonical terms finds docs containing only the variants — tf counts
       // injections, norms don't (discountOverlaps), sttf does
-      val se = synSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("datastream", "embedding"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, Variant.Syn)
+      topKDf(se, Query.or("datastream", "embedding"), 10)
     }),
     "ft_payload_topk" -> ((s, d) => {
       // payload-score ranking (ref queries/payloads/PayloadScoreQuery.java,
       // PayloadFunction Sum): docs ranked by the sum of 'data' payloads —
       // the injected |N token plus default-1 natural occurrences
-      val se = paySearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Pay)
       import s.implicits._
       val hits = se.payloadScoreTopK("data", "sum", 10).collect()
         .map(r => graft.search.ScoredDoc(r.getLong(0), r.getDouble(1)))
@@ -826,7 +537,7 @@ object SparkEntry {
       // SpanPayloadCheckQuery.java): 'data' occurrences count only where
       // the stored payload equals 1 — the natural occurrences (default
       // payload) plus the injected token on doc_id%7==0 docs
-      val se = paySearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Pay)
       import s.implicits._
       se.payloadCheckFreqs("data", 1)
         .toDF("docId", "check_freq")
@@ -875,18 +586,15 @@ object SparkEntry {
       // dynamic-stopword query (ref queries/CommonTermsQuery.java): terms
       // in > 50% of docs demote to scoring-only; a rare term is required
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = se.commonTermsQuery(Seq("dup", "data", "query"), maxTermFrequency = 0.5)
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_dv_update" -> ((s, d) => {
       // in-place numeric doc-values update (ref
       // IndexWriter#updateNumericDocValue): stored `length` patched to
       // +1000 for doc_id % 10 == 0 without reindexing; the field sort over
       // the patched segment reflects the updated values
-      val se = dvSearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Dv)
       import s.implicits._
       se.matching(se.parse("data AND query")).toDF("docId")
         .join(se.docsTable.select($"docId", $"url", $"length"), "docId")
@@ -914,40 +622,28 @@ object SparkEntry {
       // divergence from randomness, the classic InL2 combination (ref
       // DFRSimilarity): per-term score = log2((N+1)/(n+0.5)) *
       // (1 - 1/(1 + tfn)), tfn = tf * log2(1 + avgdl/dl)
-      val se = dfrSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.Dfr())
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_ib_topk" -> ((s, d) => {
       // information-based model, LL-D-H1 (ref IBSimilarity): per-term
       // score = -ln(lambda/(tfn+lambda)), lambda = (n+1)/(N+1),
       // tfn = tf * avgdl/dl
-      val se = ibSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.Ib())
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_dfi_topk" -> ((s, d) => {
       // divergence from independence (ref DFISimilarity, standardized
       // measure): expected = (F+1)*dl/(sttf+1); score = log2(1 +
       // (tf-expected)/sqrt(expected)) when tf > expected, else 0
-      val se = dfiSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.Dfi())
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_axiomatic_topk" -> ((s, d) => {
       // axiomatic F2EXP (ref AxiomaticF2EXP): per-term score =
       // freq/(freq + s + s*dl/avgdl) * ((N+1)/df)^k, s=0.25, k=0.35
-      val se = axSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.Axiomatic())
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_sweetspot_topk" -> ((s, d) => {
       // sweet-spot classic TF-IDF (ref misc/SweetSpotSimilarity): plateau
@@ -955,11 +651,9 @@ object SparkEntry {
       // [8,40], short docs penalized too — NOT antitone in the norm, so
       // the block-max bound uses the plateau value) and baseline tf
       // (freq<=2 -> 0.5, else sqrt(freq+0.25-2))
-      val se = sweetSearcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(topKVerified(se, Query.or("data", "query"), 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      val se = searcherFor(s, d, sim = Sim.SweetSpot(
+        lnMin = 8, lnMax = 40, steepness = 0.5, tfBase = 0.5, tfMin = 2.0))
+      topKDf(se, Query.or("data", "query"), 10)
     }),
     "ft_wordbreak" -> ((s, d) => {
       // word-break suggestions for a run-together term (ref
@@ -982,7 +676,7 @@ object SparkEntry {
       // sort by static feature value desc (ref FeatureField.newFeatureSort):
       // the linear feature scorer at weight 1 IS the decoded value, so the
       // sort is a scoreMatches + ORDER BY — no docs-table column needed
-      val se = featureSearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Feat)
       import s.implicits._
       val q = FeatureQuery("pagerank", FeatureFunction.Linear, 1.0)
       se.scoreMatches(q).toDF("docId", "pagerank")
@@ -995,12 +689,9 @@ object SparkEntry {
       // a synthetic combined field — pseudo df = max over fields, weighted
       // avgdl, freq = sum weight*tf, additive re-encoded norms (ref
       // search/CombinedFieldQuery.java + MultiNormsLeafSimScorer.java)
-      val se = fieldSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Fields)
       val q = CombinedFieldQuery("data", Seq("title" -> 2.0, "body" -> 1.0))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_boost_topk" -> ((s, d) =>
       // per-clause boost: weight = boost * idf (ref search/BoostQuery.java)
@@ -1008,11 +699,8 @@ object SparkEntry {
     "ft_dismax_topk" -> ((s, d) => {
       // dismax: best clause + 0.3 x the rest (ref DisjunctionMaxQuery)
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = DisMaxQuery(Seq("data", "query", "stream").map(TermQuery(_)), 0.3)
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_constscore" -> ((s, d) => {
       // constant-score wrapper: every match scores 2.5 (ref ConstantScoreQuery)
@@ -1039,12 +727,9 @@ object SparkEntry {
     "ft_msm_topk" -> ((s, d) => {
       // minimumShouldMatch=2 of three SHOULD clauses (ref BooleanQuery msm)
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = BoolQuery(Seq("data", "query", "stream").map(t =>
         TermQuery(t) -> (Occur.Should: Occur)), minimumShouldMatch = 2)
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_fuzzy_match" -> ((s, d) => {
       val se = searcherFor(s, d)
@@ -1168,47 +853,31 @@ object SparkEntry {
       // AND a prefix atom rewritten against the dictionary to constant
       // score (the MultiTermQuery CONSTANT_SCORE rewrite)
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = se.parseFull("\"data query\"~1 AND tab*")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_simple_parse" -> ((s, d) => {
       // end-user simple syntax (ref queryparser/simple/SimpleQueryParser):
       // '+' AND binds tighter than '|' OR, '-' raises MUST_NOT into the
       // enclosing boolean — (data AND query) OR stream, excluding dup-docs
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = se.parseSimple("data + query | stream -dup")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_field_phrase" -> ((s, d) => {
       // field-scoped phrase over the two-field index: per-field positions
       // (restart per field) + per-field stats/norms drive the PhraseScorer
-      val se = fieldSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Fields)
       val q = se.parse("body:\"data query\"")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_multiphrase_topk" -> ((s, d) => {
       // MultiPhraseQuery: 'data' followed by (query | stream) — per-slot
       // term alternation scored over merged slot positions (ref
       // search/MultiPhraseQuery.java union postings)
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = MultiPhraseQuery(Seq(0 -> Seq("data"), 1 -> Seq("query", "stream")))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_surround" -> ((s, d) => {
       // surround query language (ref queryparser/surround): infix AND/NOT
@@ -1225,24 +894,17 @@ object SparkEntry {
       // a 3-slot MultiPhraseQuery with the s*-prefix and 1-edit dictionary
       // expansions as slot alternations
       val se = searcherFor(s, d)
-      import s.implicits._
       val q = se.parseComplexPhrase("data s* quary~1")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_interval_topk" -> ((s, d) => {
       // SCORED interval query (ref queries/intervals/IntervalQuery):
       // saturation of the sloppy interval frequency, f/(f+1) with
       // f = sum 1/max(len-minExtent+1, 1) over minimal intervals
       val se = searcherFor(s, d)
-      import s.implicits._
       import graft.search.Intervals.{MaxWidth, Term, Unordered}
       val q = IntervalQuery(MaxWidth(Unordered(Seq(Term("data"), Term("query"))), 8))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_automaton_topk" -> ((s, d) => {
       // TermAutomatonQuery (ref sandbox/search/TermAutomatonQuery.java):
@@ -1251,7 +913,6 @@ object SparkEntry {
       // ANY → position gap, union Or-minimized) and scored as an
       // IntervalQuery
       val se = searcherFor(s, d)
-      import s.implicits._
       val ta = new graft.search.TermAutomaton
       val s1 = ta.createState(); val s2 = ta.createState(); val s3 = ta.createState()
       ta.addTransition(0, s1, "data")
@@ -1260,10 +921,7 @@ object SparkEntry {
       ta.addTransition(s2, s3, "stream")
       ta.setAccept(s3)
       val q = IntervalQuery(ta.toIntervals())
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_near_topk" -> ((s, d) => {
       // interval query: unordered near(data, query) within a width-8 window
@@ -1368,8 +1026,7 @@ object SparkEntry {
     "ft_termstats" -> ((s, d) => {
       val se = searcherFor(s, d)
       import s.implicits._
-      se.segments.map(m => s.read.parquet(s"${m.dir}/terms"))
-        .reduce(_ unionByName _)
+      se.termsDict
         .groupBy($"term")
         .agg(sum($"docFreq").as("doc_freq"), sum($"totalTermFreq").as("total_term_freq"))
         .orderBy($"doc_freq".desc, $"term".asc)
@@ -1457,7 +1114,7 @@ object SparkEntry {
       // pushed point lookup per term — and snippet extraction touches only
       // O(snippet) chars around the span; the stored text is never
       // re-tokenized. Output identical to ft_highlight's re-analysis path.
-      val se = offsSearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Offs)
       import s.implicits._
       val hits = se.matchingCached(TermQuery("data")).toDF("docId")
         .join(se.docsTable.select($"docId", $"url"), "docId")
@@ -1560,8 +1217,7 @@ object SparkEntry {
       // (ref lucene/suggest FST lookups -> sorted-dictionary prefix scan)
       val se = searcherFor(s, d)
       import s.implicits._
-      se.segments.map(m => s.read.parquet(s"${m.dir}/terms"))
-        .reduce(_ unionByName _)
+      se.termsDict
         .where($"term".startsWith("st"))
         .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
         .orderBy($"doc_freq".desc, $"term".asc)
@@ -1955,12 +1611,9 @@ object SparkEntry {
       // anchor-boosted web search: BM25F over body (weight 1) + inlink
       // anchor text (weight 2) from the link graph — the anchor corpus
       // feeding the ranker, the classic web-search signal loop
-      val se = webAnchorSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Web)
       val q = CombinedFieldQuery("data", Seq("anchor" -> 2.0, "body" -> 1.0))
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "web_pagerank" -> ((s, d) => {
       // link-graph PageRank (5 iterations, d=0.85): synthetic multigraph
@@ -2417,13 +2070,9 @@ object SparkEntry {
     "ft_stem_topk" -> ((s, d) => {
       // stemmed-analyzer engine path: build + query through the minimal
       // stemmer; 'queries OR tables' matches the conflated postings
-      val se = stemSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Stem)
       val q = se.parse("queries OR tables")
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_cjk_topk" -> ((s, d) => {
       // CJK bigram analysis chain end-to-end (ref CJKBigramFilter): the
@@ -2431,14 +2080,10 @@ object SparkEntry {
       // bigrams; the query string analyzes through the SAME chain, so
       // "数据库 web" scores as the bigram disjunction 数据+据库+web with
       // full BM25 (double-oracle precision)
-      val se = cjkSearcherFor(s, d)
-      import s.implicits._
+      val se = searcherFor(s, d, Variant.Cjk)
       val qTerms = se.analyzer.tokens("数据库 web").map(_.term)
       val q = Query.or(qTerms: _*)
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc)
-        .limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_nb_classify" -> ((s, d) => {
       // Naive Bayes classification (ref SimpleNaiveBayesClassifier): train
@@ -2550,9 +2195,7 @@ object SparkEntry {
       val srcText = docsDf(s, d).where($"doc_id" === 0)
         .select($"text").as[String].head()
       val q = se.moreLikeThis(srcText, maxTerms = 5)
-      se.fetchDocs(topKVerified(se, q, 10))
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
+      topKDf(se, q, 10)
     }),
     "ft_mlt_like" -> ((s, d) => {
       // df-gated MoreLikeThis (ref queries/mlt/MoreLikeThis.java): doc 0's
@@ -2576,7 +2219,7 @@ object SparkEntry {
       // Lucene90TermVectorsFormat): docId-isin point lookup of the
       // persisted (terms, freqs) arrays; the oracle recomputes the same
       // frequency map from the corpus text
-      val se = tvSearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Tv)
       import s.implicits._
       val ids = se.docsTable
         .where(substring($"url", 4, 12).cast("bigint") < 10)
@@ -2590,7 +2233,7 @@ object SparkEntry {
       // MoreLikeThis fed by the STORED TERM VECTOR (the reference's
       // primary retrieveTerms arm) — no stored-text fetch, no re-analysis;
       // must equal ft_mlt_like's table, and shares its oracle SQL verbatim
-      val se = tvSearcherFor(s, d)
+      val se = searcherFor(s, d, Variant.Tv)
       import s.implicits._
       val srcId = se.docsTable
         .where(substring($"url", 4, 12).cast("bigint") === 0)

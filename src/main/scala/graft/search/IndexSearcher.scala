@@ -260,6 +260,13 @@ final class IndexSearcher(
       .getOrElse(new SegmentReader(spark, m))).toArray
   }
 
+  /** These segments under another scoring model (ref
+    * `IndexSearcher#setSimilarity`): the same analyzer, precision, k1 and
+    * b, and this searcher's readers, so nothing is resolved or loaded again.
+    */
+  def withSimilarity(sim: Similarity): IndexSearcher =
+    new IndexSearcher(spark, segments, analyzer, precision, k1, b, sim, shared = readers.toSeq)
+
   /** docBase per segment (cumulative maxDocId+1). */
   val bases: Array[Long] =
     segments.map(_.maxDocId + 1).scanLeft(0L)(_ + _).init.toArray
@@ -1122,7 +1129,7 @@ final class IndexSearcher(
     * (persisted by `IndexBuilder.buildTermStats`, computed for segments
     * that predate it) the fuzzy/spell length band filters on.
     */
-  private def termsDict: org.apache.spark.sql.DataFrame =
+  def termsDict: org.apache.spark.sql.DataFrame =
     readers.map(_.terms).reduce(_ unionByName _)
 
   /** Fuzzy expansion, bounded: a term within `maxEdits` of the pattern must
@@ -2552,11 +2559,6 @@ object IndexSearcher {
   }
 }
 
-/** Builds the scorer tree for a query over one bucket of a segment and
-  * runs the matching strategy — the analogue of
-  * `search/BooleanScorerSupplier.java:187-247` picking WAND vs conjunction by
-  * clause shape.
-  */
 /** NRT reader management — the re-expression of the reference's
   * `search/SearcherManager.java` + `index/DirectoryReader.openIfChanged`:
   * callers `acquire()` a stable searcher; `maybeRefresh()` swaps in a new
@@ -2597,6 +2599,11 @@ final class SearcherManager(
   }
 }
 
+/** Builds the scorer tree for a query over one bucket of a segment and
+  * runs the matching strategy — the analogue of
+  * `search/BooleanScorerSupplier.java:187-247` picking WAND vs conjunction by
+  * clause shape.
+  */
 object Executor {
 
   /** Scorer-map key for a (term-or-synonym, boost) pair: an unboosted clause

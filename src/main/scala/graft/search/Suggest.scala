@@ -28,9 +28,7 @@ object InfixSuggester {
     val metaPath = java.nio.file.Paths.get(outDir, "infix_meta.json")
     if (java.nio.file.Files.exists(metaPath)) return
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val terms = se.segments
-      .map(s => spark.read.parquet(s"${s.dir}/terms"))
-      .reduce(_ unionByName _)
+    val terms = se.termsDict
       .groupBy(col("term")).agg(sum(col("docFreq")).as("doc_freq"))
     val par = math.max(1, spark.sparkContext.defaultParallelism / 4)
     terms
