@@ -323,10 +323,12 @@ object Demo {
         }
         println("=== topK plan ===")
         searcher.topK(q, 10).explain("formatted")
-        println("=== stats lookup plan ===")
-        import org.apache.spark.sql.functions.{col => c}
-        spark.read.parquet(s"$dir/seg0/terms")
-          .where(c("term").isin(q.terms.toSeq: _*)).explain("formatted")
+        println("=== term stats (resident dictionary lookups) ===")
+        val stats = searcher.termStats(q.terms.toSeq)
+        q.terms.toSeq.sorted.foreach { t =>
+          println(stats.get(t).fold(s"$t\tnot in the dictionary")(st =>
+            s"$t\tdocFreq=${st.docFreq}\ttotalTermFreq=${st.totalTermFreq}"))
+        }
       case "profile" :: dir :: rest if rest.nonEmpty =>
         val searcher = IndexSearcher.open(spark, dir)
         val q = searcher.parse(rest.mkString(" "))

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Dumps the formatted physical plans of the engine's load-bearing scans to
   * PLANS.md — the audit trail that the pushdowns the design depends on
-  * (dictionary IN/range pruning, stored-fields point lookups, block-scan
-  * term pruning) actually reach the Parquet readers.
+  * (stored-fields point lookups, block-scan term and term-range pruning)
+  * actually reach the Parquet readers. The term dictionary has no plan: it
+  * is read once per segment and then answers on the driver.
   *
   * Usage: runMain graft.Plans [sfDir] [outMd]
   */
@@ -33,11 +34,6 @@ object Plans {
         .linesIterator.takeWhile(l => !l.startsWith("===== Subqueries")).mkString("\n")
 
     val sections = Seq(
-      ("Term-dictionary stats lookup (the .tip/.tim pointer chase)",
-        "`term IN (...)` reaches the Parquet scan of the range-sorted dictionary — " +
-          "row-group min/max pruning plays the trie walk.",
-        fmt(spark.read.parquet(s"$segDir/terms")
-          .where($"term".isin("data", "query", "stream")))),
       ("Posting-block scan for one query's terms",
         "Only the query's terms' blocks are read; the sorted `term` column prunes " +
           "row groups, `bucket` carries the head-term salt.",
@@ -45,48 +41,19 @@ object Plans {
           .where($"term".isin("data", "query"))
           .select($"term", $"bucket", $"firstDocId", $"numDocs"))),
       ("Complete multi-term rewrite (postings range semi-scan, no enumeration)",
-        "Past the expansion cap, a prefix/range/wildcard atom ships its " +
-          "dictionary predicate INTO the postings scan (GreaterThanOrEqual/" +
-          "LessThan on the sorted `term` in PushedFilters) — every matching " +
-          "term's blocks return with no driver-side term list and no " +
-          "In(term, ...) filter, the reference's CONSTANT_SCORE bitset " +
-          "rewrite shape (`MultiTermQueryConstantScoreWrapper`).",
+        "Past the expansion cap, a prefix or range atom ships its term " +
+          "range INTO the postings scan (GreaterThanOrEqual/LessThan on the " +
+          "sorted `term` in PushedFilters) — every matching term's blocks " +
+          "return with no term list and no In(term, ...) filter, the " +
+          "reference's CONSTANT_SCORE bitset rewrite shape " +
+          "(`MultiTermQueryConstantScoreWrapper`). Other patterns read the " +
+          "terms the segment's resident dictionary matches.",
         fmt(se.matching(graft.search.MultiTermDictQuery(
           graft.search.MultiTerm.Prefix("st"))).toDF())),
       ("Stored-fields point lookup (top-k fetch)",
         "A <= k+slack hit list point-looks-up `docId IN (...)` on the docId-sorted " +
           "docs table instead of scanning + joining the whole corpus per query.",
         fmt(se.docsForIds(Seq(1L, 5L, 9L)))),
-      ("Bounded regex expansion",
-        "The mandatory literal prefix becomes a range predicate " +
-          "(GreaterThanOrEqual/LessThan in PushedFilters); `rlike` verifies only " +
-          "inside the bounded slice.",
-        fmt(spark.read.parquet(s"$segDir/terms")
-          .where(se.regexPredicate("^st[a-z]*m$")))),
-      ("Grouped-alternation regex expansion (automaton common prefix)",
-        "RegexPrefix factors the shared prefix out of grouped alternations " +
-          "— `^(stream|strong)$` bounds the dictionary scan to [str, sts) " +
-          "instead of a full scan (the reference's " +
-          "Operations.getCommonPrefix shape).",
-        fmt(spark.read.parquet(s"$segDir/terms")
-          .where(se.regexPredicate("^(stream|strong)$")))),
-      ("Leading-wildcard expansion (reversed-term dictionary)",
-        "A prefix-free pattern (`*am`) becomes a PREFIX range on the " +
-          "rterm-sorted reversed dictionary (GreaterThanOrEqual/LessThan " +
-          "on rterm in PushedFilters) — the reference's AutomatonTermsEnum " +
-          "subtree pruning, re-expressed as a second vocabulary-sized " +
-          "sorted table; the wildcard regex verifies only inside the slice.",
-        fmt(spark.read.parquet(s"$segDir/rterms")
-          .where($"rterm" >= "ma" && $"rterm" < "mb" && $"term".rlike("^.*am$")))),
-      ("Fuzzy/spell length-banded dictionary scan",
-        "The persisted `len` column turns the fuzzy length band " +
-          "|len(term) - len(q)| <= maxEdits into PushedFilters " +
-          "(GreaterThanOrEqual/LessThanOrEqual on len) — the Damerau " +
-          "verification only runs inside the banded slice instead of " +
-          "decoding the whole dictionary.",
-        fmt(spark.read.parquet(s"$segDir/terms")
-          .where($"len".between(lit(2), lit(6)) &&
-            graft.functions.EditDistance.damerauLe(lit("quer"), $"term", 2) >= 0))),
       ("Feature posting lookup (FeatureField static ranking signal)",
         "A FeatureQuery reads exactly its feature term's posting blocks — " +
           "the same sorted-term pushdown as text terms (EqualTo on term in " +

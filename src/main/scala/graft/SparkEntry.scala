@@ -809,13 +809,11 @@ object SparkEntry {
       else ftMatch(s, d, BoolQuery(terms.map(t => TermQuery(t) -> (Occur.Should: Occur))))
     }),
     "ft_wildcard_lead" -> ((s, d) => {
-      // leading wildcard (*am) through the reversed-term dictionary: the
-      // reversed suffix 'ma' is a prefix RANGE on the rterm-sorted table
-      // (PushedFilter), never a full dictionary walk (ref
-      // index/AutomatonTermsEnum.java subtree pruning)
+      // leading wildcard (*am): no literal prefix bounds the dictionary
+      // walk, so every term is checked against the pattern (ref
+      // index/AutomatonTermsEnum.java with no common prefix)
       val se = searcherFor(s, d)
       import s.implicits._
-      require(se.hasReversedTerms, "segment lacks the rterms table")
       val terms = se.expandWildcard("*am", max = 4096)
       if (terms.isEmpty) Seq.empty[Long].toDF("doc_id")
       else ftMatch(s, d, BoolQuery(terms.map(t => TermQuery(t) -> (Occur.Should: Occur))))
@@ -1026,11 +1024,9 @@ object SparkEntry {
     "ft_termstats" -> ((s, d) => {
       val se = searcherFor(s, d)
       import s.implicits._
-      se.termsDict
-        .groupBy($"term")
-        .agg(sum($"docFreq").as("doc_freq"), sum($"totalTermFreq").as("total_term_freq"))
-        .orderBy($"doc_freq".desc, $"term".asc)
-        .limit(20)
+      IndexSearcher.byDocFreq(se.dictTerms()).take(20)
+        .map(t => (t.term, t.docFreq, t.totalTermFreq))
+        .toDF("term", "doc_freq", "total_term_freq")
     }),
     "ft_norms" -> ((s, d) => {
       val se = searcherFor(s, d)
@@ -1214,14 +1210,11 @@ object SparkEntry {
     }),
     "ft_suggest" -> ((s, d) => {
       // suggest module re-expression: prefix autocomplete ranked by docFreq
-      // (ref lucene/suggest FST lookups -> sorted-dictionary prefix scan)
+      // (ref lucene/suggest FST lookups -> sorted-dictionary prefix walk)
       val se = searcherFor(s, d)
       import s.implicits._
-      se.termsDict
-        .where($"term".startsWith("st"))
-        .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
-        .orderBy($"doc_freq".desc, $"term".asc)
-        .limit(10)
+      IndexSearcher.byDocFreq(se.specTerms(MultiTerm.Prefix("st"))).take(10)
+        .map(t => (t.term, t.docFreq)).toDF("term", "doc_freq")
     }),
     "ft_suggest_weighted" -> ((s, d) => {
       // weighted completion suggest (ref suggest/analyzing/

@@ -716,14 +716,6 @@ object IndexBuilder {
 
   /** Term dictionary from block metadata (128× smaller than raw tokens;
     * partial aggregation makes the head-term agg skew-safe).
-    *
-    * Persists a `len` column (codepoint length of the term) so the
-    * fuzzy/spell length band `|len(t) - len(q)| <= maxEdits` is a plain
-    * column predicate that reaches the Parquet scan as a PushedFilter —
-    * `length($"term")` computed at read time cannot. The dictionary stays
-    * term-sorted (term point/range pruning dominates); at extreme
-    * dictionary scale a (len, term)-sorted replica would strengthen the
-    * fuzzy row-group pruning further.
     */
   def buildTermStats(blocks: Dataset[PostingBlock]): DataFrame = {
     val spark = blocks.sparkSession
@@ -739,17 +731,14 @@ object IndexBuilder {
           .cast("int").as("singletonFreq"),
         when(sum($"numDocs") === 1, min($"minNorm")).otherwise(0)
           .cast("int").as("singletonNorm"))
-      .withColumn("len", length($"term"))
   }
 
   /** Reversed-term dictionary: (rterm = reverse(term), term), range-sorted
-    * by `rterm` — the Spark-native stand-in for the reference's automaton
-    * subtree pruning on leading wildcards
-    * (`/root/reference/lucene/core/src/java/org/apache/lucene/index/AutomatonTermsEnum.java`,
-    * cf. the `ReversedWildcardFilter` pattern in Solr): `*ing` / `?ild`
-    * become PREFIX ranges on `rterm`, so the scan is bounded by Parquet
-    * min/max pruning instead of walking the whole dictionary. Vocabulary-
-    * sized (one row per distinct term) — negligible against postings.
+    * by `rterm`. No query path reads it any more — leading wildcards walk
+    * the resident term dictionary ([[graft.search.TermDict]]). It is still
+    * written because the traced build benchmark
+    * (`perfbench/src/perfbench/Layers.scala`) ends its term-stats phase at
+    * `rterms/_SUCCESS`; it goes once that marker moves to `terms/_SUCCESS`.
     */
   def writeReversedTerms(spark: SparkSession, dir: String, parts: Int): Unit = {
     import spark.implicits._

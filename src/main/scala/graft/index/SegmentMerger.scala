@@ -98,18 +98,10 @@ object SegmentMerger {
         // postings: remap columns, re-bucket (exact because bases are
         // bucket-aligned), then compact fragmented tails per (term, bucket)
         val shift = cfg.bucketShift
+        // the reader's explicit schema reads a column an older layout
+        // lacks (posPacked, offsPacked, paysPacked) as null
         val blocks = manifests.zip(bases).map { case (m, base) =>
-          val raw = spark.read.parquet(s"${m.dir}/postings")
-          val compat0 = // pre-positions segments merge with a null column
-            if (raw.columns.contains("posPacked")) raw
-            else raw.withColumn("posPacked", lit(null).cast("binary"))
-          val compat1 = // pre-offsets segments likewise
-            if (compat0.columns.contains("offsPacked")) compat0
-            else compat0.withColumn("offsPacked", lit(null).cast("binary"))
-          val compat = // pre-payloads segments likewise
-            if (compat1.columns.contains("paysPacked")) compat1
-            else compat1.withColumn("paysPacked", lit(null).cast("binary"))
-          compat
+          new graft.search.SegmentReader(spark, m).postings
             .withColumn("firstDocId", $"firstDocId" + lit(base))
             .withColumn("lastDocId", $"lastDocId" + lit(base))
             .withColumn("bucket", shiftright($"firstDocId", shift))

@@ -348,18 +348,11 @@ final class IndexSearcher(
       if (terms.length > maxExpansions) ConstScoreQuery(MultiTermDictQuery(spec), 1.0)
       else ConstScoreQuery(scoringOr(terms), 1.0)
     val f: MultiTerm => Query = {
-      case s @ MultiTerm.Prefix(p) =>
-        constOr(s, expandPrefix(p, maxExpansions + 1))
-      case s @ MultiTerm.Wildcard(pat) =>
-        constOr(s, expandWildcard(pat, maxExpansions + 1))
       case MultiTerm.Fuzzy(t, edits) =>
         // scoring rewrite: caps by docFreq (TopTermsRewrite), never silently
         // alphabetical — see expandFuzzy
         scoringOr(expandFuzzy(t, maxEdits = edits, max = maxExpansions))
-      case s @ MultiTerm.Range(lo, hi, incLo, incHi) =>
-        val loPred = if (incLo) $"term" >= lo else $"term" > lo
-        val hiPred = if (incHi) $"term" <= hi else $"term" < hi
-        constOr(s, expandTerms(loPred && hiPred, maxExpansions + 1))
+      case spec => constOr(spec, expandTerms(spec, maxExpansions + 1))
     }
     f
   }
@@ -477,182 +470,111 @@ final class IndexSearcher(
       t -> TermStat(t, rs.map(_.docFreq).sum, rs.map(_.totalTermFreq).sum)
     }
 
-  /** Global term stats for the given terms (sorted-Parquet point lookups). */
+  /** Global term stats for the given terms (driver-side binary searches of
+    * the resident dictionaries).
+    */
   def termStats(terms: Seq[String]): Map[String, TermStat] =
     aggStats(segTermRows(terms))
 
-  /** Multi-term expansion against the sorted term dictionary (the automaton
-    * intersection of `search/PrefixQuery`/`TermRangeQuery`/`AutomatonQuery`
-    * re-expressed as a pushed-down dictionary scan). Matches feed a
-    * disjunction (`ScoringRewrite`) capped at `max` terms.
+  /** Every dictionary term `t` with `lo <= t < hi` (no upper bound when
+    * `hi` is None) that passes `keep`, in term order, with docFreq and
+    * totalTermFreq summed over the segments — the one read path of the
+    * term dictionary. Each segment's resident [[TermDict]] is walked from
+    * `lo`; once the dictionaries are loaded this runs no Spark job.
     */
-  def expandTerms(pred: org.apache.spark.sql.Column, max: Int = 1024): Seq[String] =
-    termsDict
-      .where(pred)
-      .select($"term").distinct()
-      .orderBy($"term").limit(max)
-      .as[String].collect().toSeq
+  def dictTerms(lo: String = "", hi: Option[String] = None,
+      keep: String => Boolean = _ => true): Seq[TermStat] = {
+    val perSeg = readers.map(_.dict.walk(lo, hi, keep).toSeq)
+    if (perSeg.size == 1) perSeg.head
+    else perSeg.flatten.groupBy(_.term).iterator.map { case (t, rs) =>
+      TermStat(t, rs.map(_.docFreq).sum, rs.map(_.totalTermFreq).sum)
+    }.toSeq.sortBy(_.term)
+  }
+
+  /** The dictionary terms a multi-term spec matches: the range walk its
+    * literal prefix bounds, verified by [[MultiTerm.matcher]] — the
+    * reference's `AutomatonTermsEnum`, which seeks to the automaton's
+    * common prefix and walks the whole dictionary when there is none.
+    */
+  def specTerms(spec: MultiTerm): Seq[TermStat] = {
+    val (lo, hi) = IndexSearcher.specRange(spec)
+    dictTerms(lo, hi, MultiTerm.matcher(spec))
+  }
+
+  /** Multi-term expansion against the sorted term dictionary (the automaton
+    * intersection of `search/PrefixQuery`/`TermRangeQuery`/`AutomatonQuery`):
+    * the first `max` matching terms in term order. Matches feed a
+    * disjunction (`ScoringRewrite`).
+    */
+  def expandTerms(spec: MultiTerm, max: Int = 1024): Seq[String] =
+    specTerms(spec).iterator.map(_.term).take(max).toSeq
 
   def expandPrefix(prefix: String, max: Int = 1024): Seq[String] =
-    expandTerms($"term".startsWith(prefix), max)
+    expandTerms(MultiTerm.Prefix(prefix), max)
 
   def expandRange(lo: String, hi: String, max: Int = 1024): Seq[String] =
-    expandTerms($"term" >= lo && $"term" < hi, max)
+    expandTerms(MultiTerm.Range(lo, hi, includeLo = true, includeHi = false), max)
 
   /** Smallest string strictly greater than every string with prefix `p`
     * (None when every char is Char.MaxValue — then no finite upper bound).
     */
   private def prefixUpper(p: String): Option[String] = IndexSearcher.prefixUpper(p)
 
-  /** Mandatory literal prefix of an anchored regex (the cheap core of the
-    * reference's automaton "common prefix" — ref
-    * `util/automaton/Operations.getCommonPrefix` used by
-    * `index/AutomatonTermsEnum` to seek the dictionary): literal chars after
-    * `^` up to the first metachar, excluding a literal that a following
-    * quantifier could make optional.
+  /** Regex expansion bounded by the pattern's mandatory literal prefix
+    * ([[RegexPrefix.of]], the cheap core of the reference's
+    * `Operations.getCommonPrefix` that `AutomatonTermsEnum` seeks with):
+    * the walk covers `[prefix, prefix+)` and the regex verifies each term
+    * there (`find`, Spark's `rlike` semantics). Unanchored or prefix-free
+    * patterns walk the whole dictionary — the reference's behavior for
+    * automata with no common prefix.
     */
-  private[search] def literalPrefixOfRegex(re: String): String =
-    RegexPrefix.of(re)
-
-  /** Regex expansion bounded by the pattern's mandatory literal prefix: the
-    * range predicate `[prefix, prefix+)` reaches the Parquet scan
-    * (PushedFilters on the range-sorted dictionary = row-group pruning, the
-    * .tip seek analogue); `rlike` only verifies within the bounded slice.
-    * Unanchored or prefix-free patterns degrade to the full dictionary scan
-    * — exactly the reference's behavior for automata with no common prefix.
-    */
-  /** The bounded predicate [[expandRegex]] scans with (public so plans can
-    * be audited: the range conjuncts land in the Parquet PushedFilters).
-    */
-  def regexPredicate(re: String): org.apache.spark.sql.Column = {
-    val p = literalPrefixOfRegex(re)
-    val base = $"term".rlike(re)
-    if (p.isEmpty) base
-    else prefixUpper(p) match {
-      case Some(hi) => $"term" >= p && $"term" < hi && base
-      case None     => $"term".startsWith(p) && base
-    }
-  }
-
-  def expandRegex(re: String, max: Int = 1024): Seq[String] =
-    expandTerms(regexPredicate(re), max)
-
-  /** True when every segment carries the build-time reversed-term
-    * dictionary (`rterms`); legacy segments without it fall back to the
-    * full-dictionary scan.
-    */
-  lazy val hasReversedTerms: Boolean = segments.forall(s =>
-    java.nio.file.Files.exists(java.nio.file.Paths.get(s"${s.dir}/rterms")))
-
-  /** Leading-wildcard expansion through the reversed dictionary — the
-    * Spark-native analogue of the reference's automaton subtree pruning
-    * (`index/AutomatonTermsEnum.java` walks only viable dictionary
-    * subtrees): the pattern's literal SUFFIX, reversed, is a prefix range
-    * on the rterm-sorted table (Parquet min/max PushedFilter), and the full
-    * pattern verifies only within that bounded slice.
-    */
-  def expandReversed(
-      litSuffix: String, verify: org.apache.spark.sql.Column, max: Int = 1024
-  ): Seq[String] = {
-    val rp = litSuffix.reverse
-    val rangePred = prefixUpper(rp) match {
-      case Some(hi) => $"rterm" >= rp && $"rterm" < hi
-      case None     => $"rterm".startsWith(rp)
-    }
-    readers.map(_.rterms).reduce(_ unionByName _)
-      .where(rangePred && verify)
-      .select($"term").distinct()
-      .orderBy($"term").limit(max)
-      .as[String].collect().toSeq
+  def expandRegex(re: String, max: Int = 1024): Seq[String] = {
+    val p = RegexPrefix.of(re)
+    val pattern = java.util.regex.Pattern.compile(re)
+    dictTerms(p, prefixUpper(p), t => pattern.matcher(t).find()).iterator
+      .map(_.term).take(max).toSeq
   }
 
   /** Wildcard pattern (`*` = any run, `?` = one char), compiled to an
     * anchored regex over the dictionary (ref `search/WildcardQuery.java:38`
     * `toAutomaton`); the literal prefix before the first wildcard bounds
-    * the scan. Every non-alphanumeric literal is backslash-escaped
-    * (including backslash itself). Prefix-free patterns with a literal
-    * SUFFIX (`*ing`, `?ild`) route through [[expandReversed]]; only
-    * patterns with neither a literal prefix nor suffix (`*a*`) pay the
-    * full dictionary scan — mirroring the reference, whose automaton walk
-    * also degrades to a full-subtree visit there.
+    * the walk. Every non-alphanumeric literal is backslash-escaped
+    * (including backslash itself). A pattern with no literal prefix
+    * (`*ing`, `*a*`) walks the whole dictionary, as the reference's
+    * automaton walk does.
     */
-  def expandWildcard(pattern: String, max: Int = 1024): Seq[String] = {
-    val (re, litPrefix, litSuffix) = IndexSearcher.wildcardParts(pattern)
-    val base = $"term".rlike(re)
-    if (litPrefix.nonEmpty) {
-      val pred = prefixUpper(litPrefix) match {
-        case Some(hi) => $"term" >= litPrefix && $"term" < hi && base
-        case None     => $"term".startsWith(litPrefix) && base
-      }
-      expandTerms(pred, max)
-    } else if (litSuffix.nonEmpty && hasReversedTerms)
-      expandReversed(litSuffix, base, max)
-    else expandTerms(base, max)
-  }
-
-  /** Dictionary predicate of a multi-term spec over a `term` column —
-    * range-bounded wherever the spec admits a sorted-dictionary bound, so
-    * the range conjuncts reach Parquet PushedFilters on term-sorted tables
-    * (the .tip-seek analogue); only the residual verifier (`rlike`, edit
-    * distance) evaluates inside the bounded slice.
-    */
-  private def specPredicate(spec: MultiTerm): org.apache.spark.sql.Column = spec match {
-    case MultiTerm.Prefix(p) =>
-      prefixUpper(p) match {
-        case Some(hi) => $"term" >= p && $"term" < hi
-        case None     => $"term".startsWith(p)
-      }
-    case MultiTerm.Range(lo, hi, il, ih) =>
-      (if (il) $"term" >= lo else $"term" > lo) &&
-        (if (ih) $"term" <= hi else $"term" < hi)
-    case MultiTerm.Wildcard(pat) =>
-      val (re, litPrefix, _) = IndexSearcher.wildcardParts(pat)
-      val base = $"term".rlike(re)
-      if (litPrefix.isEmpty) base
-      else prefixUpper(litPrefix) match {
-        case Some(hi) => $"term" >= litPrefix && $"term" < hi && base
-        case None     => $"term".startsWith(litPrefix) && base
-      }
-    case MultiTerm.Fuzzy(t, e) =>
-      val edits = math.min(math.max(e, 0), 2)
-      graft.functions.EditDistance.damerauLe(lit(t), $"term", edits) >= 0
-  }
+  def expandWildcard(pattern: String, max: Int = 1024): Seq[String] =
+    expandTerms(MultiTerm.Wildcard(pattern), max)
 
   /** Posting blocks of one segment for a COMPLETE multi-term dictionary
-    * query: the dictionary predicate ships into the postings scan itself
-    * (term-sorted Parquet → the range conjuncts land in PushedFilters), so
-    * every matching term's blocks return without any driver-side
-    * enumeration — the distributed analogue of the reference's per-segment
-    * bitset CONSTANT_SCORE rewrite
-    * (`search/MultiTermQueryConstantScoreWrapper.java`). A leading-wildcard
-    * pattern instead bounds a term slice on the segment's reversed
-    * dictionary and SEMI-JOINS it against its postings (Spark picks
-    * broadcast/SMJ by slice size) — still no driver enumeration. Shipped
-    * terms are namespaced under the node's sentinel key so the scorer build
+    * query, with no expansion cap — the distributed analogue of the
+    * reference's per-segment bitset CONSTANT_SCORE rewrite
+    * (`search/MultiTermQueryConstantScoreWrapper.java`). A prefix or range
+    * ships its term range into the postings scan itself (term-sorted
+    * Parquet → the range conjuncts land in PushedFilters), so no term list
+    * is built at all; any other spec resolves its terms from this
+    * segment's resident dictionary and reads their postings by `term IN`.
+    * A segment with no matching term contributes nothing. Shipped terms
+    * are namespaced under the node's sentinel key so the scorer build
     * collects exactly its own blocks.
     */
-  private def dictBlocks(dq: MultiTermDictQuery, seg: Int): DataFrame = {
+  private def dictBlocks(dq: MultiTermDictQuery, seg: Int): Option[DataFrame] = {
     val r = readers(seg)
-    val leadingWildcard = dq.spec match {
-      case MultiTerm.Wildcard(pat) =>
-        val (re, litPrefix, litSuffix) = IndexSearcher.wildcardParts(pat)
-        if (litPrefix.isEmpty && litSuffix.nonEmpty && hasReversedTerms)
-          Some((re, litSuffix))
-        else None
-      case _ => None
+    val matched = dq.spec match {
+      case MultiTerm.Prefix(p) =>
+        Some(r.postings.where(prefixUpper(p) match {
+          case Some(hi) => $"term" >= p && $"term" < hi
+          case None     => $"term".startsWith(p)
+        }))
+      case MultiTerm.Range(lo, hi, il, ih) =>
+        Some(r.postings.where((if (il) $"term" >= lo else $"term" > lo) &&
+          (if (ih) $"term" <= hi else $"term" < hi)))
+      case spec =>
+        val (lo, hi) = IndexSearcher.specRange(spec)
+        val terms = r.dict.walk(lo, hi, MultiTerm.matcher(spec)).map(_.term).toSeq
+        if (terms.isEmpty) None else Some(r.postings.where($"term".isin(terms: _*)))
     }
-    val matched = leadingWildcard match {
-      case Some((re, litSuffix)) =>
-        val rp = litSuffix.reverse
-        val rangePred = prefixUpper(rp) match {
-          case Some(hi) => $"rterm" >= rp && $"rterm" < hi
-          case None     => $"rterm".startsWith(rp)
-        }
-        r.postings.join(
-          r.rterms.where(rangePred && $"term".rlike(re)).select($"term").distinct(), "term")
-      case None => r.postings.where(specPredicate(dq.spec))
-    }
-    matched.select(blockCols(concat(lit(dq.key + "\u0001"), $"term"), seg): _*)
+    matched.map(_.select(blockCols(concat(lit(dq.key + "\u0001"), $"term"), seg): _*))
   }
 
   /** Scorers for every key a query needs: per-term BM25 scorers plus blended
@@ -1052,7 +974,7 @@ final class IndexSearcher(
           BlockCodec.forEncode(Array(r.singletonNorm.toLong)),
           Impacts.encode(Impacts.skyline(Array((r.singletonFreq, r.singletonNorm)))))
       }).toDF())
-      val parts = scan.toSeq ++ synth ++ dictQs.distinct.map(dictBlocks(_, i))
+      val parts = scan.toSeq ++ synth ++ dictQs.distinct.flatMap(dictBlocks(_, i))
       if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _).coalesce(1))
     }
     if (slices.isEmpty) spark.emptyDataset[QBlock] else PartitionConcat.concat(slices).as[QBlock]
@@ -1125,40 +1047,32 @@ final class IndexSearcher(
       .select($"docId",
         ($"score1" * lit(w1) + coalesce($"score2", lit(0.0)) * lit(w2)).as("score"))
 
-  /** Union of the per-segment term dictionaries, with the `len` column
-    * (persisted by `IndexBuilder.buildTermStats`, computed for segments
-    * that predate it) the fuzzy/spell length band filters on.
-    */
-  def termsDict: org.apache.spark.sql.DataFrame =
-    readers.map(_.terms).reduce(_ unionByName _)
-
-  /** Fuzzy expansion, bounded: a term within `maxEdits` of the pattern must
-    * have length within ±maxEdits — the `len` column makes that band a
-    * plain predicate checked before any edit distance. The edit distance is
-    * Damerau–Levenshtein by default (a transposition is ONE edit), matching
-    * the reference's `FuzzyQuery` `transpositions=true` default (ref
-    * `search/FuzzyQuery.java`, `util/automaton/LevenshteinAutomata`);
-    * `transpositions=false` falls back to plain Levenshtein. No sorted-range
-    * bound exists for fuzzy (an edit at position 0 admits any first char),
-    * same as the reference's automaton, which also walks all viable
-    * subtrees.
+  /** Fuzzy expansion: the dictionary terms within `maxEdits` of `term`.
+    * The edit distance is Damerau–Levenshtein by default (a transposition
+    * is ONE edit), matching the reference's `FuzzyQuery`
+    * `transpositions=true` default (ref `search/FuzzyQuery.java`,
+    * `util/automaton/LevenshteinAutomata`); `transpositions=false` falls
+    * back to plain Levenshtein. No sorted-range bound exists for fuzzy (an
+    * edit at position 0 admits any first char), so the walk covers the
+    * whole dictionary, as the reference's automaton walks all viable
+    * subtrees; the distance check rejects a length gap above `maxEdits`
+    * before any DP.
     */
   def expandFuzzy(
       term: String, maxEdits: Int = 2, max: Int = 1024,
       transpositions: Boolean = true): Seq[String] = {
-    val dist =
-      if (transpositions) graft.functions.EditDistance.damerauLe(lit(term), $"term", maxEdits)
-      else levenshtein(lit(term), $"term", maxEdits)
+    val within: String => Boolean =
+      if (transpositions) t => graft.functions.EditDistance.damerauWithin(term, t, maxEdits) >= 0
+      else {
+        val a = org.apache.spark.unsafe.types.UTF8String.fromString(term)
+        t => a.levenshteinDistance(
+          org.apache.spark.unsafe.types.UTF8String.fromString(t), maxEdits) >= 0
+      }
     // past the cap, keep the HIGHEST-docFreq candidates, not the
     // alphabetically first — the reference's top-terms rewrite
     // (`search/TopTermsRewrite.java` priority queue keyed by docFreq, used
     // by FuzzyQuery's blended rewrite). Ties break on term for determinism.
-    termsDict
-      .where($"len".between(term.length - maxEdits, term.length + maxEdits) &&
-        dist >= 0)
-      .groupBy($"term").agg(sum($"docFreq").as("__df"))
-      .orderBy($"__df".desc, $"term".asc).limit(max)
-      .select($"term").as[String].collect().toSeq.sorted
+    IndexSearcher.byDocFreq(dictTerms(keep = within)).take(max).map(_.term).sorted
   }
 
   /** MoreLikeThis query from a source document's text (ref
@@ -1166,7 +1080,7 @@ final class IndexSearcher(
     * analyze the text, rank its terms by tf × idf (6-dp rounded so an
     * independent double-math oracle selects identically), and build a
     * disjunction of the top `maxTerms` informative terms. Term stats come
-    * from pruned dictionary point lookups — no corpus scan.
+    * from resident dictionary lookups — no corpus scan, no Spark job.
     */
   def moreLikeThis(text: String, maxTerms: Int = 10): Query = {
     val (tf, _) = analyzer.termFreqs(text)
@@ -1180,8 +1094,7 @@ final class IndexSearcher(
     val ranked = terms.flatMap { t =>
       ts.get(t).filter(_.docFreq > 0).map { st =>
         val w = tf.get(t) * Bm25.idfD(st.docFreq, stats.docCount)
-        val rounded = BigDecimal(w).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (t, rounded)
+        (t, IndexSearcher.round6(w))
       }
     }.sortBy { case (t, w) => (-w, t) }.take(maxTerms).map(_._1)
     require(ranked.nonEmpty, "no indexable terms in MLT source text")
@@ -1191,30 +1104,26 @@ final class IndexSearcher(
   /** Spelling corrections for a (possibly misspelled) term — the
     * re-expression of `suggest/spell/DirectSpellChecker`: dictionary
     * candidates within `maxEdits` Damerau–Levenshtein edits (the reference
-    * spell checker also counts a transposition as one edit), length-banded
-    * via the `len` column, ranked by
-    * (edit distance asc, docFreq desc, term asc).
-    */
-  /** @param morePopular only suggest terms strictly more frequent than the
+    * spell checker also counts a transposition as one edit), ranked by
+    * (edit distance asc, docFreq desc, term asc). Computed on the driver
+    * from the resident dictionaries; the result is a local relation of
+    * the ranked rows.
+    *
+    * @param morePopular only suggest terms strictly more frequent than the
     *   misspelling itself (ref `suggest/spell/SuggestMode.java`
     *   SUGGEST_MORE_POPULAR — the mode for "did you mean" over terms that
     *   DO exist but rarely); the default suggests for any input.
     */
   def spellCorrect(term: String, maxEdits: Int = 2, n: Int = 5,
       morePopular: Boolean = false): DataFrame = {
-    val dist = graft.functions.EditDistance.damerauLe(lit(term), $"term", maxEdits)
+    def dist(t: String): Int = graft.functions.EditDistance.damerauWithin(term, t, maxEdits)
     val floor: Long =
       if (!morePopular) 0L
       else termStats(Seq(term)).get(term).map(_.docFreq).getOrElse(0L)
-    termsDict
-      .where($"len".between(term.length - maxEdits, term.length + maxEdits))
-      .select($"term", $"docFreq", dist.as("dist"))
-      .where($"dist" >= 0)
-      .groupBy($"term").agg(sum($"docFreq").as("doc_freq"), min($"dist").as("dist"))
-      .where($"doc_freq" > floor)
-      .select($"term", $"dist".cast("bigint").as("distance"), $"doc_freq")
-      .orderBy($"distance".asc, $"doc_freq".desc, $"term".asc)
-      .limit(n)
+    dictTerms(keep = dist(_) >= 0).filter(_.docFreq > floor)
+      .map(s => (s.term, dist(s.term).toLong, s.docFreq))
+      .sortBy { case (t, d, df) => (d, -df, t) }.take(n)
+      .toDF("term", "distance", "doc_freq")
   }
 
   /** Spell candidates ranked by Jaro–Winkler similarity — the reference
@@ -1223,24 +1132,22 @@ final class IndexSearcher(
     * `suggest/spell/SpellChecker.java#setStringDistance`; `accuracy` is
     * the checker's `setAccuracy` floor, default 0.7). Candidates rank
     * (similarity desc, docFreq desc, term asc); similarity rounds to 6 dp
-    * BEFORE the floor so engine and oracle agree on boundary candidates.
+    * (HALF_UP) BEFORE the floor so engine and oracle agree on boundary
+    * candidates.
     *
     * No length band: unlike edit distance, JW ≥ 0.7 does not bound
-    * |len Δ| (e.g. jw("ab", "abcdefgh") = 0.81), so the scan is the full
-    * vocabulary-sized dictionary — the reference's n-gram candidate
+    * |len Δ| (e.g. jw("ab", "abcdefgh") = 0.81), so the walk covers the
+    * whole vocabulary-sized dictionary — the reference's n-gram candidate
     * pre-selection is the optimization path at huge vocabularies.
     */
   def spellCorrectJaro(term: String, n: Int = 5,
       accuracy: Double = 0.7): DataFrame = {
-    val sim = graft.functions.JaroWinkler.jaroWinkler(lit(term), $"term")
-    termsDict
-      .select($"term", $"docFreq", round(sim, 6).as("similarity"))
-      .where($"similarity" >= accuracy && $"term" =!= term)
-      .groupBy($"term")
-      .agg(sum($"docFreq").as("doc_freq"), max($"similarity").as("similarity"))
-      .select($"term", $"similarity", $"doc_freq")
-      .orderBy($"similarity".desc, $"doc_freq".desc, $"term".asc)
-      .limit(n)
+    def sim(t: String): Double = IndexSearcher.round6(
+      graft.functions.JaroWinkler.similarity(term, t))
+    dictTerms(keep = t => t != term && sim(t) >= accuracy)
+      .map(s => (s.term, sim(s.term), s.docFreq))
+      .sortBy { case (t, jw, df) => (-jw, -df, t) }.take(n)
+      .toDF("term", "similarity", "doc_freq")
   }
 
   /** Word-break suggestions — the re-expression of
@@ -1248,9 +1155,9 @@ final class IndexSearcher(
     * `suggestWordBreaks`: segment a run-together term into dictionary
     * words, up to `maxChanges` break points, each part at least
     * `minBreakLength` chars and with docFreq ≥ `minSuggestionFrequency`.
-    * All O(len²) substrings resolve in ONE pruned `term IN (...)`
-    * dictionary scan; segmentation enumeration is a driver-side DP over
-    * the ≤ len² hits (metadata-sized, like the reference's in-memory
+    * All O(len²) substrings resolve by [[termStats]] lookups in the
+    * resident dictionaries; segmentation enumeration is a driver-side DP
+    * over the ≤ len² hits (metadata-sized, like the reference's in-memory
     * recursion). Ranked fewest-changes-first, then summed docFreq — the
     * `NUM_CHANGES_THEN_MAX_FREQUENCY` sort.
     */
@@ -1287,8 +1194,8 @@ final class IndexSearcher(
   /** The combination direction of the same checker
     * (`WordBreakSpellChecker#suggestWordCombinations`): adjacent query
     * terms whose concatenation is a dictionary word, runs of up to
-    * `maxChanges`+1 terms and `maxCombineWordLength` chars. One pruned
-    * `term IN` dictionary scan over the O(|terms|·maxChanges) candidates;
+    * `maxChanges`+1 terms and `maxCombineWordLength` chars. The
+    * O(|terms|·maxChanges) candidates resolve by [[termStats]] lookups;
     * ranked fewest-combinations-first, then docFreq.
     */
   def wordCombinations(terms: Seq[String], maxChanges: Int = 2,
@@ -1321,49 +1228,42 @@ final class IndexSearcher(
     * match is exact-prefix). A term completes the query iff some prefix of
     * it is within maxEdits of the query; only prefix lengths within
     * maxEdits of |q| can qualify (length difference lower-bounds edit
-    * distance), so the predicate is a fixed 2·maxEdits+1-way OR of the
-    * codegen'd `damerau_le` over substrings. The exact nonFuzzyPrefix
-    * becomes a dictionary range PushedFilter (the automaton-FST
-    * intersection's scan bound). Ranked by summed docFreq.
+    * distance). The exact nonFuzzyPrefix bounds the dictionary walk (the
+    * automaton-FST intersection's bound). Ranked by summed docFreq.
     */
   def fuzzySuggest(
       q: String, maxEdits: Int = 1, nonFuzzyPrefix: Int = 1,
       minFuzzyLength: Int = 3, n: Int = 10
   ): DataFrame = {
-    val base = termsDict.where($"term".startsWith(q.take(nonFuzzyPrefix)))
-    val matched =
-      if (q.length < minFuzzyLength) base.where($"term".startsWith(q))
-      else {
-        val anyPrefixWithin = ((q.length - maxEdits) to (q.length + maxEdits))
-          .filter(_ >= 1)
-          .map(k => graft.functions.EditDistance
-            .damerauLe(lit(q), substring($"term", 1, k), maxEdits) >= 0)
-          .reduce(_ || _)
-        base.where(anyPrefixWithin)
-      }
-    matched
-      .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
-      .orderBy($"doc_freq".desc, $"term".asc)
-      .limit(n)
+    val lens = ((q.length - maxEdits) to (q.length + maxEdits)).filter(_ >= 1)
+    val completes: String => Boolean =
+      if (q.length < minFuzzyLength) _.startsWith(q)
+      else t => lens.exists(k =>
+        graft.functions.EditDistance.damerauWithin(q, t.take(k), maxEdits) >= 0)
+    val p = q.take(nonFuzzyPrefix)
+    IndexSearcher.byDocFreq(dictTerms(p, prefixUpper(p), completes)).take(n)
+      .map(s => (s.term, s.docFreq)).toDF("term", "doc_freq")
   }
+
+  /** A prefix's dictionary slice as a local (term, doc_freq) relation. */
+  private def prefixSlice(prefix: String): DataFrame =
+    specTerms(MultiTerm.Prefix(prefix)).map(s => (s.term, s.docFreq)).toDF("term", "doc_freq")
 
   /** Weighted completion suggest — the re-expression of
     * `lucene/suggest/src/java/org/apache/lucene/search/suggest/analyzing/AnalyzingSuggester.java`:
     * the reference ranks completions by a per-entry weight carried in the
     * FST outputs, not by corpus docFreq. Here the curated `weights` table
-    * (term, weight) broadcast-joins the dictionary prefix range (the prefix
-    * is a sorted-terms PushedFilter); rank = weight desc, docFreq desc
-    * tiebreak, term asc. Terms absent from the weight table rank at weight 0
-    * (the reference omits unweighted entries from the FST — pass
+    * (term, weight) broadcast-joins the prefix's dictionary slice (a local
+    * relation from the resident dictionaries); rank = weight desc, docFreq
+    * desc tiebreak, term asc. Terms absent from the weight table rank at
+    * weight 0 (the reference omits unweighted entries from the FST — pass
     * `requireWeight=true` for that semantics).
     */
   def suggestWeighted(
       prefix: String, weights: DataFrame, n: Int = 10,
       requireWeight: Boolean = false
   ): DataFrame = {
-    val dict = termsDict.where($"term".startsWith(prefix))
-      .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
-    val joined = dict.join(
+    val joined = prefixSlice(prefix).join(
       broadcast(weights.select($"term", $"weight")),
       Seq("term"), if (requireWeight) "inner" else "left")
     joined
@@ -1380,18 +1280,16 @@ final class IndexSearcher(
     * (weight desc, docFreq desc, term asc) as [[suggestWeighted]]. An
     * entry listed under several contexts keeps its best accepted weight
     * (the reference scores each context arc independently; max wins).
-    * Same shape: pruned prefix dictionary scan + one broadcast join.
+    * Same shape: the local prefix slice + one broadcast join.
     */
   def suggestWithContexts(
       prefix: String, weights: DataFrame, contexts: Set[String], n: Int = 10
   ): DataFrame = {
     require(contexts.nonEmpty, "empty context set")
-    val dict = termsDict.where($"term".startsWith(prefix))
-      .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
     val accepted = weights
       .where($"context".isin(contexts.toSeq: _*))
       .groupBy($"term").agg(max($"weight").as("weight"))
-    dict.join(broadcast(accepted), Seq("term"))
+    prefixSlice(prefix).join(broadcast(accepted), Seq("term"))
       .select($"term", $"weight".cast("bigint").as("weight"), $"doc_freq")
       .orderBy($"weight".desc, $"doc_freq".desc, $"term".asc)
       .limit(n)
@@ -1960,22 +1858,22 @@ final class IndexSearcher(
   /** Phonetic suggestions — the re-expression of the reference's phonetic
     * analysis matching (`analysis/phonetic/PhoneticFilter.java` +
     * commons-codec Soundex): dictionary terms whose American Soundex code
-    * equals the input's, ranked by docFreq. The code is a pure codegen'd
-    * column chain ([[graft.analysis.Phonetic.soundex]]) evaluated in the
-    * dictionary scan — the vocabulary is metadata-sized relative to the
-    * corpus, the same cost class as the word-break scans (the reference
-    * instead indexes codes at analysis time; with a phonetic-code column
-    * persisted at build this would become a PushedFilter — not done, the
-    * dictionary scan is already sub-millisecond per segment).
+    * equals the input's, ranked by docFreq desc, term asc. Soundex keeps
+    * the first letter, so only the terms whose upper-cased first letter is
+    * the input's are candidates; they form a local relation on which the
+    * code is the same column chain the DuckDB oracle runs
+    * ([[graft.analysis.Phonetic.soundex]]). A filter over a local relation
+    * is evaluated by the optimizer, so the call runs no Spark job. (The
+    * reference instead indexes codes at analysis time.)
     */
   def phoneticSuggest(term: String, n: Int = 5): DataFrame = {
     val code = graft.analysis.Phonetic.soundex _
-    termsDict
-      .where(!$"term".contains(graft.index.FieldKey.Sep.toString) &&
-        code($"term") === code(lit(term)))
-      .groupBy($"term").agg(sum($"docFreq").as("doc_freq"))
-      .orderBy($"doc_freq".desc, $"term".asc)
-      .limit(n)
+    val first = IndexSearcher.upperFirst(term)
+    val candidates = dictTerms(keep = t =>
+      !t.contains(graft.index.FieldKey.Sep) && IndexSearcher.upperFirst(t) == first)
+    val hits = candidates.map(s => (s.term, s.docFreq)).toDF("term", "doc_freq")
+      .where(code($"term") === code(lit(term))).as[(String, Long)].collect()
+    hits.sortBy { case (t, df) => (-df, t) }.take(n).toSeq.toDF("term", "doc_freq")
   }
 
   /** Query profiler — the re-expression of the reference's
@@ -2457,15 +2355,6 @@ object IndexSearcher {
     case _                   => false
   }
 
-  /** Every [[MultiTermDictQuery]] node in the tree (complete multi-term
-    * rewrites whose blocks ship under sentinel namespaces — see
-    * `dictBlocks`).
-    */
-  /** Wildcard pattern (`*` any run, `?` one char) compiled to an anchored
-    * regex plus its literal prefix/suffix (the automaton common
-    * prefix/suffix of ref `search/WildcardQuery.java:38` toAutomaton):
-    * `(regex, literalPrefix, literalSuffix)`.
-    */
   /** Smallest string strictly greater than every string with prefix `p`
     * (None when every char is Char.MaxValue — no finite upper bound).
     */
@@ -2475,18 +2364,52 @@ object IndexSearcher {
     if (i < 0) None else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
   }
 
-  private[graft] def wildcardParts(pattern: String): (String, String, String) = {
+  /** Wildcard pattern (`*` any run, `?` one char) compiled to an anchored
+    * regex plus its literal prefix (the automaton common prefix of ref
+    * `search/WildcardQuery.java:38` toAutomaton): `(regex, literalPrefix)`.
+    */
+  private[graft] def wildcardParts(pattern: String): (String, String) = {
     val re = "^" + pattern.flatMap {
       case '*' => ".*"
       case '?' => "."
       case c if c.isLetterOrDigit => c.toString
       case c => "\\" + c
     } + "$"
-    val litPrefix = pattern.takeWhile(c => c != '*' && c != '?')
-    val litSuffix = pattern.reverse.takeWhile(c => c != '*' && c != '?').reverse
-    (re, litPrefix, litSuffix)
+    (re, pattern.takeWhile(c => c != '*' && c != '?'))
   }
 
+  /** The dictionary range `[lo, hi)` (no upper bound when `hi` is None)
+    * holding every term `spec` can match: its literal prefix's range, the
+    * inclusive span of a term range (`hi + '\u0000'` is the successor of
+    * `hi`), or the whole dictionary for fuzzy and prefix-free wildcards.
+    */
+  private[search] def specRange(spec: MultiTerm): (String, Option[String]) = spec match {
+    case MultiTerm.Prefix(p)          => (p, prefixUpper(p))
+    case MultiTerm.Range(lo, hi, _, _) => (lo, Some(hi + '\u0000'))
+    case MultiTerm.Wildcard(pat)      => val p = wildcardParts(pat)._2; (p, prefixUpper(p))
+    case MultiTerm.Fuzzy(_, _)        => ("", None)
+  }
+
+  /** Dictionary rows ranked docFreq desc, term asc. */
+  private[graft] def byDocFreq(rows: Seq[TermStat]): Seq[TermStat] =
+    rows.sortBy(s => (-s.docFreq, s.term))
+
+  /** `x` rounded to 6 decimals, HALF_UP — Spark's `round(x, 6)`. */
+  private[search] def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The first code point of `s` upper-cased (Soundex's kept letter). */
+  private[search] def upperFirst(s: String): String =
+    if (s.isEmpty) ""
+    else {
+      val u = s.substring(0, s.offsetByCodePoints(0, 1)).toUpperCase(java.util.Locale.ROOT)
+      u.substring(0, u.offsetByCodePoints(0, 1))
+    }
+
+  /** Every [[MultiTermDictQuery]] node in the tree (complete multi-term
+    * rewrites whose blocks ship under sentinel namespaces — see
+    * `dictBlocks`).
+    */
   private[search] def dictSpecs(q: Query): Seq[MultiTermDictQuery] = q match {
     case dq: MultiTermDictQuery => Seq(dq)
     case BoostQuery(q2, _)      => dictSpecs(q2)

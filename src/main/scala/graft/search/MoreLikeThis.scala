@@ -36,10 +36,10 @@ final case class MltParams(
   * (score desc, term asc), which the DuckDB oracle replicates.
   *
   * Scale shape: tf comes from ONE driver-side analysis of one document (the
-  * same cost the reference pays), and the df lookups are one sorted-Parquet
-  * point-lookup batch over the term dictionary ([[IndexSearcher.termStats]]
-  * — min/max-pruned, never a dictionary scan); the generated query then runs
-  * the ordinary distributed WAND path.
+  * same cost the reference pays), and the df lookups are binary searches of
+  * the driver-resident term dictionary ([[IndexSearcher.termStats]], no
+  * Spark job); the generated query then runs the ordinary distributed WAND
+  * path.
   */
 object MoreLikeThis {
 

@@ -206,11 +206,11 @@ final case class BoolQuery(
   * (`search/MultiTermQuery.java` DOC_VALUES/CONSTANT_SCORE modes,
   * `search/MultiTermQueryConstantScoreWrapper.java`): matches every doc
   * containing ANY dictionary term matching `spec`, with NO expansion cap.
-  * The matching terms never pass through the driver — execution ships the
-  * dictionary predicate into the postings scan itself (a pushed-down range
-  * on the term-sorted Parquet) and unions the matching postings per
-  * segment, the distributed analogue of the reference's per-segment
-  * DocIdSet build. Scores are constant (1 × boost); wrap in
+  * Execution unions the matching postings per segment, the distributed
+  * analogue of the reference's per-segment DocIdSet build: a prefix or
+  * range ships its term range into the postings scan (a pushed-down range
+  * on the term-sorted Parquet); any other spec reads the terms its
+  * segment's resident dictionary matches. Scores are constant (1 × boost); wrap in
   * [[ConstScoreQuery]] to pick the constant. The parser's rewriter only
   * reaches for this node past the expansion cap (small expansions keep the
   * enumerated constant-score OR, which preserves the hapax fast path).
@@ -244,21 +244,23 @@ object MultiTerm {
   final case class Range(lo: String, hi: String,
       includeLo: Boolean, includeHi: Boolean) extends MultiTerm
 
-  /** Pure term-level evaluation of a spec — the driver/executor-side
-    * semantics behind the dictionary predicates (percolation's broadcast
-    * evaluator uses this; the index paths push the equivalent predicate
-    * into Parquet scans instead).
+  /** Term-level evaluation of a spec, compiled once — the one definition
+    * of what a spec matches: the searcher verifies its dictionary walks
+    * with it, and percolation's broadcast evaluator calls [[matches]].
     */
-  def matches(spec: MultiTerm, term: String): Boolean = spec match {
-    case Prefix(p)       => term.startsWith(p)
+  def matcher(spec: MultiTerm): String => Boolean = spec match {
+    case Prefix(p)       => _.startsWith(p)
     case Range(lo, hi, il, ih) =>
-      (if (il) term >= lo else term > lo) && (if (ih) term <= hi else term < hi)
+      t => (if (il) t >= lo else t > lo) && (if (ih) t <= hi else t < hi)
     case Wildcard(pat)   =>
-      term.matches(IndexSearcher.wildcardParts(pat)._1.drop(1).dropRight(1))
+      val re = java.util.regex.Pattern.compile(IndexSearcher.wildcardParts(pat)._1)
+      term => re.matcher(term).find()
     case Fuzzy(t, e) =>
-      graft.functions.EditDistance
-        .damerauWithin(t, term, math.min(math.max(e, 0), 2)) >= 0
+      val edits = math.min(math.max(e, 0), 2)
+      term => graft.functions.EditDistance.damerauWithin(t, term, edits) >= 0
   }
+
+  def matches(spec: MultiTerm, term: String): Boolean = matcher(spec)(term)
 }
 
 object Query {

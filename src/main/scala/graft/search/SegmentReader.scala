@@ -1,7 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, length, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 
 import graft.index.{SegmentManifest, TermBloom}
@@ -17,8 +17,10 @@ import graft.index.Schema.{DocEntry, PostingBlock, TermStat}
   *    schema-inference job per query, and no per-call test for columns an
   *    older layout lacks (a missing column reads as null; the old-layout
   *    defaults are applied here, once);
-  *  - the term dictionary is collected to the driver on its first lookup
-  *    (one job per segment) and then answers term stats by binary search.
+  *  - the term dictionary is collected to the driver on its first use
+  *    (one job per segment); every dictionary read after that — term
+  *    stats, multi-term expansion, spelling and suggest — is a binary
+  *    search or a sorted range walk of [[TermDict]], with no Spark job.
   *
   * A relation lists its files when it is resolved: files appended to the
   * segment later (`FeatureIndexer.addFeatures`) are seen by readers made
@@ -31,25 +33,10 @@ final class SegmentReader(spark: SparkSession, val manifest: SegmentManifest) {
   private def table(name: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"${manifest.dir}/$name")
 
-  /** The `terms` table as [[TermStat]] rows plus the persisted `len`.
-    * Pre-singleton segments read with the singleton fast path off;
-    * pre-`len` segments compute the length at read time.
-    */
-  lazy val terms: DataFrame =
-    table("terms", TermsSchema).select(
-      col("term"), col("docFreq"), col("totalTermFreq"),
-      coalesce(col("singletonDocId"), lit(-1L)).as("singletonDocId"),
-      coalesce(col("singletonFreq"), lit(0)).as("singletonFreq"),
-      coalesce(col("singletonNorm"), lit(0)).as("singletonNorm"),
-      coalesce(col("len"), length(col("term"))).as("len"))
-
   /** The `postings` table; optional payload columns (`posPacked`,
     * `offsPacked`, `paysPacked`) are null where the layout lacks them.
     */
   lazy val postings: DataFrame = table("postings", Encoders.product[PostingBlock].schema)
-
-  /** The reversed dictionary (rterm, term); only for segments that have one. */
-  lazy val rterms: DataFrame = table("rterms", RTermsSchema)
 
   /** The stored-fields row store, before any doc-values overlay. */
   lazy val docs: DataFrame = table("docs", Encoders.product[DocEntry].schema)
@@ -61,18 +48,22 @@ final class SegmentReader(spark: SparkSession, val manifest: SegmentManifest) {
   lazy val bloom: Option[TermBloom] =
     if (TermBloom.exists(manifest.dir)) TermBloom.read(spark, manifest.dir) else None
 
-  /** The term dictionary on the driver, loaded on first use. */
+  /** The term dictionary on the driver, loaded on first use — the only
+    * read of the `terms` table. Pre-singleton segments read with the
+    * singleton fast path off; a column a later layout dropped (`len`) is
+    * not read.
+    */
   lazy val dict: TermDict = {
     import spark.implicits._
-    TermDict.load(terms.drop("len").as[TermStat])
+    TermDict.load(table("terms", Encoders.product[TermStat].schema).select(
+      col("term"), col("docFreq"), col("totalTermFreq"),
+      coalesce(col("singletonDocId"), lit(-1L)).as("singletonDocId"),
+      coalesce(col("singletonFreq"), lit(0)).as("singletonFreq"),
+      coalesce(col("singletonNorm"), lit(0)).as("singletonNorm")).as[TermStat])
   }
 }
 
 object SegmentReader {
-  private val TermsSchema: StructType =
-    Encoders.product[TermStat].schema.add("len", IntegerType)
-  private val RTermsSchema: StructType =
-    new StructType().add("rterm", StringType).add("term", StringType)
   private val TvecSchema: StructType = new StructType()
     .add("docId", LongType)
     .add("terms", ArrayType(StringType))
@@ -92,12 +83,28 @@ final class TermDict private (
     singletonFreq: Array[Int],
     singletonNorm: Array[Int]) {
 
+  private def search(term: String): Int =
+    java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+
   /** `term`'s dictionary row tagged with segment ordinal `seg`. */
   def lookup(seg: Int, term: String): Option[SegTermRow] = {
-    val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+    val i = search(term)
     if (i < 0) None
     else Some(SegTermRow(seg, term, docFreq(i), totalTermFreq(i),
       singletonDocId(i), singletonFreq(i), singletonNorm(i)))
+  }
+
+  /** The terms `t` with `lo <= t < hi` (no upper bound when `hi` is None)
+    * that pass `keep`, in term order, with their docFreq and totalTermFreq
+    * — a seek to `lo`, then a sequential walk (the reference's
+    * `TermsEnum.seekCeil` + `next`, which `AutomatonTermsEnum` drives).
+    */
+  def walk(lo: String, hi: Option[String], keep: String => Boolean): Iterator[TermStat] = {
+    val i = search(lo)
+    Iterator.range(if (i >= 0) i else -i - 1, terms.length)
+      .takeWhile(j => hi.forall(terms(j) < _))
+      .filter(j => keep(terms(j)))
+      .map(j => TermStat(terms(j), docFreq(j), totalTermFreq(j)))
   }
 }
 

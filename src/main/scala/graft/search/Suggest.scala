@@ -28,8 +28,9 @@ object InfixSuggester {
     val metaPath = java.nio.file.Paths.get(outDir, "infix_meta.json")
     if (java.nio.file.Files.exists(metaPath)) return
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val terms = se.termsDict
-      .groupBy(col("term")).agg(sum(col("docFreq")).as("doc_freq"))
+    import spark.implicits._
+    val terms = spark.sparkContext.parallelize(se.dictTerms().map(t => (t.term, t.docFreq)))
+      .toDF("term", "doc_freq")
     val par = math.max(1, spark.sparkContext.defaultParallelism / 4)
     terms
       .where(length(col("term")) >= 2)

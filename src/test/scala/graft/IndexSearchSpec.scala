@@ -29,6 +29,13 @@ class IndexSearchSpec extends SparkTestBase {
   private lazy val searcher: IndexSearcher =
     new IndexSearcher(spark, Seq(Manifest.read(segDir).get))
 
+  /** Every term of the segment's dictionary table, sorted — the brute
+    * side of the expansion duels.
+    */
+  private lazy val dictionary: Seq[String] =
+    spark.read.parquet(s"$segDir/terms").select("term").collect()
+      .map(_.getString(0)).distinct.sorted.toSeq
+
   private val queryStrings = Seq(
     "the",                        // head stopword-like term
     "court",                      // mid head word
@@ -443,49 +450,32 @@ class IndexSearchSpec extends SparkTestBase {
     // to [court, couru) and silently dropped the second branch
     val both = searcher.expandRegex("^court$|^law$")
     assert(both.contains("court") && both.contains("law"), s"got $both")
-    // alternation inside parens does not disable a preceding literal prefix
-    val plan = spark.read.parquet(s"$segDir/terms")
-      .where(searcher.regexPredicate("^st[a-z]*m$"))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("GreaterThanOrEqual(term,st"), "prefix pushdown regressed")
-    // a GROUPED alternation's shared prefix is factored and pushed down
-    // (the automaton common-prefix shape): ^(stream|strong) bounds [str, sts)
-    val factored = spark.read.parquet(s"$segDir/terms")
-      .where(searcher.regexPredicate("^(stream|strong)$"))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(factored.contains("GreaterThanOrEqual(term,str") &&
-      factored.contains("LessThan(term,sts"),
-      s"grouped-alternation prefix not pushed down:\n$factored")
-    val grouped = searcher.expandRegex("^(stream|strong)$")
-    val bruteGrouped = searcher.expandTerms(
-      org.apache.spark.sql.functions.col("term").rlike("^(stream|strong)$"))
-    assert(grouped == bruteGrouped, s"bounded $grouped != brute $bruteGrouped")
+    // alternation inside parens does not disable a preceding literal
+    // prefix, and a GROUPED alternation's shared prefix is factored (the
+    // automaton common-prefix shape): ^(stream|strong) bounds [str, sts)
+    assert(RegexPrefix.of("^st[a-z]*m$") == "st")
+    assert(RegexPrefix.of("^(stream|strong)$") == "str")
+    // each bounded walk keeps exactly the terms a brute filter of the
+    // whole dictionary keeps
+    for (re <- Seq("^court$|^law$", "^s[a-z]*e$", "^(state|site)$", "^co[a-z]*t$")) {
+      val p = java.util.regex.Pattern.compile(re)
+      val brute = dictionary.filter(p.matcher(_).find())
+      assert(brute.nonEmpty, s"vacuous regex check for $re")
+      assert(searcher.expandRegex(re, Int.MaxValue) == brute,
+        s"$re: bounded ${searcher.expandRegex(re)} != brute $brute")
+    }
   }
 
-  test("leading wildcard routes through the reversed dictionary") {
-    assert(searcher.hasReversedTerms, "build did not write rterms")
-    // expansion identical to the brute full-dictionary scan
+  test("leading wildcard walks the whole dictionary: same terms as a brute filter") {
     for (pat <- Seq("*aw", "?ourt", "*urt", "*t")) {
       val re = "^" + pat.flatMap {
         case '*' => ".*"; case '?' => "."; case c => c.toString
       } + "$"
-      val viaReversed = searcher.expandWildcard(pat)
-      val brute = searcher.expandTerms(
-        org.apache.spark.sql.functions.col("term").rlike(re))
-      assert(viaReversed == brute, s"$pat: reversed $viaReversed != brute $brute")
-      assert(viaReversed.nonEmpty, s"vacuous leading-wildcard check for $pat")
+      val got = searcher.expandWildcard(pat, Int.MaxValue)
+      val brute = dictionary.filter(_.matches(re))
+      assert(got == brute, s"$pat: walk $got != brute $brute")
+      assert(got.nonEmpty, s"vacuous leading-wildcard check for $pat")
     }
-    // the reversed-prefix range reaches the rterms Parquet scan
-    val plan = spark.read.parquet(s"$segDir/rterms")
-      .where(org.apache.spark.sql.functions.col("rterm") >= "wa" &&
-        org.apache.spark.sql.functions.col("rterm") < "wb")
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("GreaterThanOrEqual(rterm,wa") &&
-      plan.contains("LessThan(rterm,wb"),
-      s"reversed-prefix pushdown regressed:\n$plan")
   }
 
   test("explain: boosted SynonymQuery root equals the search score") {
@@ -612,26 +602,32 @@ class IndexSearchSpec extends SparkTestBase {
     val docsPlan = planOf(searcher.docsForIds(Seq(3L, 17L, 42L)))
     assert(docsPlan.contains("PushedFilters") && docsPlan.contains("In(docId"),
       s"docs point lookup not pushed down:\n$docsPlan")
-    // regex expansion: the literal-prefix range bounds the dictionary scan
-    val termsPlan = planOf(
-      spark.read.parquet(s"$segDir/terms")
-        .where(searcher.regexPredicate("^st[a-z]*m$")))
-    assert(termsPlan.contains("GreaterThanOrEqual(term,st") &&
-      termsPlan.contains("LessThan(term,su"),
-      s"regex range not pushed down:\n$termsPlan")
-    // term stats lookup: IN pushdown on the sorted dictionary
-    import org.apache.spark.sql.functions.{col => c, lit => l}
-    val statsPlan = planOf(
-      spark.read.parquet(s"$segDir/terms").where(c("term").isin("court", "law")))
-    assert(statsPlan.contains("In(term"), s"stats IN not pushed down:\n$statsPlan")
-    // fuzzy/spell length band: the persisted `len` column is a PushedFilter
-    val fuzzyPlan = planOf(
-      spark.read.parquet(s"$segDir/terms")
-        .where(c("len").between(2, 6) &&
-          graft.functions.EditDistance.damerauLe(l("quer"), c("term"), 2) >= 0))
-    assert(fuzzyPlan.contains("GreaterThanOrEqual(len,2") &&
-      fuzzyPlan.contains("LessThanOrEqual(len,6"),
-      s"fuzzy len band not pushed down:\n$fuzzyPlan")
+    // a complete prefix rewrite ships its term range into the postings scan
+    val dictPlan = planOf(searcher.matching(MultiTermDictQuery(MultiTerm.Prefix("st"))).toDF())
+    assert(dictPlan.contains("GreaterThanOrEqual(term,st") &&
+      dictPlan.contains("LessThan(term,su"), s"prefix range not pushed down:\n$dictPlan")
+    // dictionary reads walk the resident dictionaries: every spec expands
+    // to the terms a brute filter of the whole dictionary keeps
+    val specs = Seq(MultiTerm.Prefix("st"), MultiTerm.Range("qa", "ri", true, false),
+      MultiTerm.Range("court", "law", false, true), MultiTerm.Wildcard("s?te*"),
+      MultiTerm.Wildcard("*aw"), MultiTerm.Fuzzy("cort", 2))
+    for (spec <- specs) {
+      val brute = dictionary.filter(MultiTerm.matches(spec, _))
+      assert(brute.nonEmpty, s"vacuous expansion check for $spec")
+      assert(searcher.expandTerms(spec, Int.MaxValue) == brute, s"$spec expansion")
+    }
+    // the fuzzy walk keeps every term within the edit distance, whatever
+    // its length
+    assert(searcher.expandFuzzy("cort", maxEdits = 2, max = Int.MaxValue) ==
+      dictionary.filter(graft.functions.EditDistance.damerauWithin("cort", _, 2) >= 0))
+    // term stats equal the dictionary table's rows
+    import org.apache.spark.sql.functions.col
+    val statRows = spark.read.parquet(s"$segDir/terms").where(col("term").isin("court", "law"))
+      .select("term", "docFreq", "totalTermFreq").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(statRows.size == 2 && searcher.termStats(Seq("court", "law")).map {
+      case (t, st) => t -> ((st.docFreq, st.totalTermFreq))
+    } == statRows)
   }
 
   test("rescore combines first and second pass scores") {

@@ -71,8 +71,7 @@ class MultiTermDictSpec extends SparkTestBase {
     assert(ids(capped) == expect && ids(full) == expect)
   }
 
-  test("leading wildcard past the cap routes via the reversed dictionary") {
-    assume(searcher.hasReversedTerms)
+  test("leading wildcard past the cap: complete rewrite == uncapped enumeration") {
     // *7: pre0007, pre0017, ... (140 terms) plus fz7 and tail-free — cap 20
     val capped = searcher.parseFull("*7", maxExpansions = 20)
     val full = searcher.parseFull("*7", maxExpansions = 10000)
@@ -103,6 +102,24 @@ class MultiTermDictSpec extends SparkTestBase {
     val expect = (0L until NDocs.toLong)
       .filter(i => i % 2 == 0 || i % 3 == 0 || i % 4 == 0).toSet
     assert(ids(q) == expect)
+  }
+
+  test("fuzzy dict node past the cap == the enumerated OR") {
+    // pre0000~2 matches every pre#### term with at most two non-zero
+    // digits (hundreds of terms, far past a cap of 100); the dict node
+    // reads them from the resident dictionary with no cap at all
+    val terms = searcher.expandFuzzy("pre0000", maxEdits = 2, max = 10000)
+    assert(terms.size > 100, s"expected a large expansion, got ${terms.size}")
+    val dict = ConstScoreQuery(MultiTermDictQuery(MultiTerm.Fuzzy("pre0000", 2)), 1.0)
+    val enumerated = ConstScoreQuery(Query.or(terms: _*), 1.0)
+    val expect = (0L until NDocs.toLong).filter(i => f"$i%04d".count(_ != '0') <= 2).toSet
+    assert(ids(dict) == expect)
+    assert(ids(dict) == ids(enumerated))
+    val k1 = searcher.topK(dict, 10).collect().map(s => (s.docId, s.score)).toSeq
+    val k2 = searcher.topK(enumerated, 10).collect().map(s => (s.docId, s.score)).toSeq
+    assert(k1 == k2)
+    // a spec no dictionary term matches contributes no blocks
+    assert(ids(MultiTermDictQuery(MultiTerm.Fuzzy("zzzzzz", 1))).isEmpty)
   }
 
   test("dict node composes: MUST_NOT and FILTER slots") {

@@ -6,11 +6,12 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.Corpus
-import graft.index.{FeatureIndexer, IndexBuilder, IndexConfig, LiveSet, Manifest, SegmentManifest}
-import graft.search.{FeatureFunction, FeatureQuery, IndexSearcher, Query, SearcherManager, SegmentReader}
+import graft.index.{FeatureIndexer, IndexBuilder, IndexConfig, LiveSet, Manifest, SegmentManifest, SegmentMerger}
+import graft.search.{FeatureFunction, FeatureQuery, IndexSearcher, Query, SearcherManager}
 
-/** Per-segment read state: a warm searcher runs no Spark job for term
-  * stats and exactly one, with no exchange, per top-k query, and
+/** Per-segment read state: a warm searcher runs no Spark job for any
+  * dictionary read (term stats, expansion, spelling, suggest) and exactly
+  * one, with no exchange, per top-k query, and
   * segments written before the singleton and positions columns existed
   * still answer identically; a term whose rows were appended in two
   * batches reads as one dictionary entry; an NRT refresh reloads only
@@ -59,6 +60,37 @@ class SegmentReaderSpec extends SparkTestBase {
       }
     }
 
+  test("warm searchers, 1 and 3 segments: every dictionary read runs no job, both agree") {
+    import org.apache.spark.sql.Row
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row] = df.collect().toSeq
+    val calls: Seq[(String, IndexSearcher => Any)] = Seq(
+      "expandPrefix" -> (_.expandPrefix("qu")),
+      "expandRange" -> (_.expandRange("qa", "ri")),
+      "expandFuzzy" -> (_.expandFuzzy("cort", maxEdits = 2)),
+      "expandRegex" -> (_.expandRegex("^s[a-z]*e$")),
+      "expandWildcard s?te*" -> (_.expandWildcard("s?te*")),
+      "expandWildcard *aw" -> (_.expandWildcard("*aw")),
+      "spellCorrect" -> (se => rows(se.spellCorrect("parl", maxEdits = 2))),
+      "spellCorrectJaro" -> (se => rows(se.spellCorrectJaro("qurey", accuracy = 0.55))),
+      "fuzzySuggest" -> (se => rows(se.fuzzySuggest("sca"))),
+      "phoneticSuggest" -> (se => rows(se.phoneticSuggest("cort"))),
+      "parseFull tab* AND court" -> (_.parseFull("tab* AND court")),
+      "parseFull *am OR qu* OR quer~1" -> (_.parseFull("*am OR qu* OR quer~1")))
+    val searchers = Seq(new IndexSearcher(spark, oneSeg), new IndexSearcher(spark, threeSegs))
+    val results = searchers.map { se =>
+      calls.map { case (name, call) =>
+        call(se) // warm: the first read loads the segments' dictionaries
+        val (r, log) = countJobs(call(se))
+        assert(log.jobs == 0, s"$name ran ${log.jobs} jobs: ${log.executions}")
+        r
+      }
+    }
+    calls.map(_._1).zip(results.head.zip(results(1))).foreach { case (name, (one, three)) =>
+      assert(one == three, s"$name: 1 segment $one != 3 segments $three")
+      assert(one != Nil, s"vacuous check for $name")
+    }
+  }
+
   test("old layout: no singleton or len columns, no posPacked — same top-10") {
     val seg = oneSeg.head
     val old = s"${tmpDir("oldlayout")}/seg"
@@ -75,9 +107,10 @@ class SegmentReaderSpec extends SparkTestBase {
     rewrite("postings", "posPacked")
     assert(!spark.read.parquet(s"$old/terms").columns.contains("singletonDocId") &&
       !spark.read.parquet(s"$old/postings").columns.contains("posPacked"))
+    Manifest.commit(old, Manifest.read(old).get.copy(dir = old))
 
     val fresh = new IndexSearcher(spark, oneSeg)
-    val legacy = new IndexSearcher(spark, Seq(Manifest.read(old).get.copy(dir = old)))
+    val legacy = new IndexSearcher(spark, Seq(Manifest.read(old).get))
     // hapax terms take the singleton fast path on the fresh segment only
     val hapax = spark.read.parquet(s"${seg.dir}/terms").where(col("docFreq") === 1)
       .orderBy("term").select("term").limit(2).collect().map(_.getString(0)).toSeq
@@ -91,13 +124,23 @@ class SegmentReaderSpec extends SparkTestBase {
     }
     assert(legacy.termStats(hapax) == fresh.termStats(hapax))
     assert(legacy.expandFuzzy("cort", 1) == fresh.expandFuzzy("cort", 1))
-    // the defaults' projection keeps term ranges pushed to the Parquet scan
-    for (m <- Seq(seg, Manifest.read(old).get.copy(dir = old))) {
-      val plan = new SegmentReader(spark, m).terms
-        .where(col("term") >= "st" && col("term") < "su")
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("GreaterThanOrEqual(term,st") && plan.contains("LessThan(term,su"),
-        s"term range not pushed down:\n$plan")
+    // both layouts walk a term range like a brute filter of their terms table
+    for ((label, se, dir) <- Seq(("fresh", fresh, seg.dir), ("old", legacy, old))) {
+      val brute = spark.read.parquet(s"$dir/terms").select("term").collect()
+        .map(_.getString(0)).filter(t => t >= "st" && t < "su").sorted.toSeq
+      assert(brute.nonEmpty, "vacuous range check")
+      assert(se.expandRange("st", "su", Int.MaxValue) == brute, s"$label layout range walk")
+    }
+    // the merger reads an old-layout input through the reader's schema:
+    // merged with a fresh segment, it ranks like two fresh inputs merged
+    val other = build(s"${tmpDir("oldlayout-other")}/seg", NDocs, NDocs + 200L)
+    def mergedWith(first: String): IndexSearcher = new IndexSearcher(spark, Seq(
+      SegmentMerger.merge(spark, Seq(first, other.dir), s"${tmpDir("oldlayout-merge")}/seg", cfg)))
+    val (mergedOld, mergedFresh) = (mergedWith(old), mergedWith(seg.dir))
+    qs.foreach { q =>
+      val want = mergedFresh.topK(q, 10).collect().toSeq
+      assert(want.nonEmpty, s"vacuous merge check for $q")
+      assert(mergedOld.topK(q, 10).collect().toSeq == want, s"merged old layout differs for $q")
     }
   }
 
