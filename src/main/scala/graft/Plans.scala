@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Dumps the formatted physical plans of the engine's load-bearing scans to
   * PLANS.md — the audit trail that the pushdowns the design depends on
-  * (stored-fields point lookups, block-scan term and term-range pruning)
-  * actually reach the Parquet readers. The term dictionary has no plan: it
-  * is read once per segment and then answers on the driver.
+  * (stored-fields point lookups, posting point scans) actually reach the
+  * Parquet readers. Queries have no plan: a segment's postings load once
+  * as resident slices with its dictionary, and a query is an RDD job over
+  * the slices.
   *
   * Usage: runMain graft.Plans [sfDir] [outMd]
   */
@@ -34,34 +35,24 @@ object Plans {
         .linesIterator.takeWhile(l => !l.startsWith("===== Subqueries")).mkString("\n")
 
     val sections = Seq(
-      ("Posting-block scan for one query's terms",
-        "Only the query's terms' blocks are read; the sorted `term` column prunes " +
-          "row groups, `bucket` carries the head-term salt.",
+      ("Posting point scan (explain)",
+        "The per-doc reads that stay on Parquet — explain's freq/norm and " +
+          "position lookups — read only the query's terms' blocks; the sorted " +
+          "`term` column prunes row groups, `bucket` carries the head-term salt.",
         fmt(spark.read.parquet(s"$segDir/postings")
           .where($"term".isin("data", "query"))
           .select($"term", $"bucket", $"firstDocId", $"numDocs"))),
-      ("Complete multi-term rewrite (postings range semi-scan, no enumeration)",
-        "Past the expansion cap, a prefix or range atom ships its term " +
-          "range INTO the postings scan (GreaterThanOrEqual/LessThan on the " +
-          "sorted `term` in PushedFilters) — every matching term's blocks " +
-          "return with no term list and no In(term, ...) filter, the " +
-          "reference's CONSTANT_SCORE bitset rewrite shape " +
-          "(`MultiTermQueryConstantScoreWrapper`). Other patterns read the " +
-          "terms the segment's resident dictionary matches.",
-        fmt(se.matching(graft.search.MultiTermDictQuery(
-          graft.search.MultiTerm.Prefix("st"))).toDF())),
       ("Stored-fields point lookup (top-k fetch)",
         "A <= k+slack hit list point-looks-up `docId IN (...)` on the docId-sorted " +
           "docs table instead of scanning + joining the whole corpus per query.",
         fmt(se.docsForIds(Seq(1L, 5L, 9L)))),
-      ("Feature posting lookup (FeatureField static ranking signal)",
-        "A FeatureQuery reads exactly its feature term's posting blocks — " +
-          "the same sorted-term pushdown as text terms (EqualTo on term in " +
-          "PushedFilters); a static ranking signal costs one extra pushed " +
-          "point-scan, never a docs-table join.",
+      ("Single-term posting scan (offsets, payloads)",
+        "Offset (highlight) and payload reads scan exactly one term's " +
+          "posting blocks with the sorted-term pushdown (EqualTo on term in " +
+          "PushedFilters) — the payload and offset streams are not resident.",
         fmt(spark.read.parquet(s"$segDir/postings")
-          .where($"term" === graft.index.FeatureIndexer.featureTerm("pagerank"))
-          .select($"term", $"bucket", $"firstDocId", $"numDocs"))),
+          .where($"term" === "data")
+          .select($"term", $"firstDocId", $"numDocs", $"paysPacked"))),
       ("Scalar-quantized ANN ranking (1-byte codes, no global sort)",
         "The quantize→dequantize→cosine pipeline stays a narrow projected " +
           "scan feeding `TakeOrderedAndProject` (per-partition heaps) — " +

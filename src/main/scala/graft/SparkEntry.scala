@@ -249,12 +249,12 @@ object SparkEntry {
           precision = Precision.DoubleOracle, k1 = K1, b = B)
       })
 
-  /** Drop every cached searcher of `sfDir` and delete its indexes
-    * (benchmarks call this so a timed build is a real build, never a
-    * manifest resume from a prior process).
+  /** Drop every cached searcher of `sfDir`, unpersist their resident
+    * slices and delete its indexes (benchmarks call this so a timed build
+    * is a real build, never a manifest resume from a prior process).
     */
   def clearIndexCache(sfDir: String): Unit = {
-    searchers.keys.filter(_._1 == sfDir).foreach(searchers.remove)
+    searchers.keys.filter(_._1 == sfDir).foreach(searchers.remove(_).foreach(_.release()))
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit

@@ -130,24 +130,15 @@ object Schema {
       paysPacked: Array[Byte] = null
   )
 
-  /** Term-dictionary row (the block-tree/.tim re-expression: range-partitioned
-    * sorted Parquet; Parquet row-group min/max stats on `term` are the .tip
-    * trie equivalent — a point/range lookup prunes to one row group).
-    *
-    * Singleton-doc optimization (ref `Lucene103PostingsFormat.java:138-141`,
-    * `Lucene103PostingsWriter.java:564`): a term with docFreq == 1 inlines
-    * its only posting (docId, freq, norm) here, so the read path never
-    * touches the postings table for it — at web scale most of the
-    * dictionary is hapax terms. `singletonDocId == -1` means not singleton.
+  /** One term's dictionary stats — the `terms` table row (range-partitioned
+    * sorted Parquet, the block-tree/.tim re-expression) and the row every
+    * dictionary read returns. Searchers build their dictionary from the
+    * postings themselves ([[graft.search.TermDict]]); the table's
+    * `singleton*` columns (a hapax term's inline posting, ref
+    * `Lucene103PostingsWriter.java:564`) are written by the build and read
+    * by no query path.
     */
-  final case class TermStat(
-      term: String,
-      docFreq: Long,
-      totalTermFreq: Long,
-      singletonDocId: Long = -1L,
-      singletonFreq: Int = 0,
-      singletonNorm: Int = 0
-  )
+  final case class TermStat(term: String, docFreq: Long, totalTermFreq: Long)
 
   /** Collection statistics for BM25
     * (ref `search/similarities/BM25Similarity.java:101-108`).

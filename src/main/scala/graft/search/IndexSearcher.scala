@@ -1,12 +1,16 @@
 package graft.search
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD, UnionRDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.analysis.StandardAnalyzer
-import graft.index.{Manifest, SegmentManifest}
+import graft.index.{Manifest, SegmentManifest, Tombstones}
 import graft.index.Schema.{CollectionStats, TermStat}
-import org.apache.spark.sql.graft.PartitionConcat
 
 /** Scoring precision mode: float-exact reproduces the reference's
   * `BM25Similarity` float semantics (rank-identity); double mode mirrors a
@@ -182,19 +186,21 @@ final case class ScoredDoc(docId: Long, score: Double)
 final case class ProfileRow(stage: String, seconds: Double, detail: String)
 
 /** One term-dictionary row tagged with its segment ordinal (driver-side
-  * aggregation input; carries the singleton-doc inline posting).
+  * aggregation input), with the first and last of the segment's slices that
+  * hold the term's blocks.
   */
 final case class SegTermRow(
     seg: Int,
     term: String,
     docFreq: Long,
     totalTermFreq: Long,
-    singletonDocId: Long,
-    singletonFreq: Int,
-    singletonNorm: Int
+    firstSlice: Int,
+    lastSlice: Int
 )
 
-/** Block row shape shipped to the scoring executors. */
+/** One posting block of a query, tagged with its segment and bucket
+  * ([[IndexSearcher.blocksFor]]).
+  */
 final case class QBlock(
     term: String,
     seg: Int,
@@ -216,23 +222,24 @@ final case class QBlock(
   * — leaf slices scored in parallel, then reduced):
   *
   *  1. term stats: binary search of each segment's term dictionary, held
-  *     on the driver (loaded once per segment, see [[SegmentReader]]) — the
-  *     on-heap terms index walk; no Spark job. A segment whose Bloom filter
-  *     rejects every term is not consulted.
-  *  2. posting blocks for the query's terms only, from the segments whose
-  *     dictionary holds them: Parquet scan with an IN pushdown on the sorted
-  *     `term` column (row-group pruning via min/max) — the moral equivalent
-  *     of the .tim→.doc pointer chase. Singleton terms skip the scan.
-  *  3. each segment is one leaf slice: its blocks are coalesced into one
-  *     partition by construction (no exchange), and one task scores it with
-  *     block-max WAND ([[Wand]]) bucket by bucket, in docId order, into ONE
-  *     collector; it emits the segment's top-k.
-  *  4. global `ORDER BY score DESC, docId ASC LIMIT k`
-  *     (Catalyst `TakeOrderedAndProject`) with the reference tie-break,
-  *     reducing only the per-slice top-k.
+  *     on the driver (loaded once per segment with its slices, see
+  *     [[SegmentReader]]) — the on-heap terms index walk; no Spark job. A
+  *     segment whose Bloom filter rejects every term is not consulted (nor
+  *     loaded).
+  *  2. the slices to score: a segment's postings are resident [[Slice]]s,
+  *     each a bucket range (Lucene's intra-segment doc-range slice), and
+  *     the dictionary names the slices that hold each term.
+  *  3. one RDD job over those slices (`SparkContext.runJob`, no SQL plan,
+  *     no Parquet scan): each task seeks the query's terms in its slice,
+  *     copies out their blocks, and scores them with block-max WAND
+  *     ([[Wand]]) bucket by bucket, in docId order, into ONE collector; it
+  *     returns the slice's top-k.
+  *  4. the driver merges the per-slice top-k with the reference tie-break
+  *     (score desc, docId asc) into a local Dataset.
   *
-  * Steps 2–4 are the query's only Spark work: one job, one task per
-  * segment, no shuffle.
+  * Step 3 is the query's only Spark work: one job, one task per slice, no
+  * shuffle. The job is a [[Slice.Pass]], so Spark's closure cleaner never
+  * runs on the query path.
   *
   * BM25 statistics are global across segments (docFreq/docCount summed over
   * the whole index), so scores are independent of segmentation.
@@ -248,7 +255,8 @@ final class IndexSearcher(
     k1: Double = 1.2d, // 1.2f when narrowed — widening 1.2f would NOT be 1.2d
     b: Double = 0.75d,
     val similarity: Similarity = Similarity.Bm25,
-    shared: Seq[SegmentReader] = Nil
+    shared: Seq[SegmentReader] = Nil,
+    sharedTombstones: Option[Broadcast[Array[Tombstones]]] = None
 ) extends Serializable {
 
   import spark.implicits._
@@ -262,10 +270,15 @@ final class IndexSearcher(
 
   /** These segments under another scoring model (ref
     * `IndexSearcher#setSimilarity`): the same analyzer, precision, k1 and
-    * b, and this searcher's readers, so nothing is resolved or loaded again.
+    * b, and this searcher's readers and tombstones, so nothing is resolved
+    * or loaded again.
     */
   def withSimilarity(sim: Similarity): IndexSearcher =
-    new IndexSearcher(spark, segments, analyzer, precision, k1, b, sim, shared = readers.toSeq)
+    new IndexSearcher(spark, segments, analyzer, precision, k1, b, sim, shared = readers.toSeq,
+      sharedTombstones = Some(tombstones))
+
+  /** Unpersist the resident slices of every segment of this searcher. */
+  def release(): Unit = readers.foreach(_.release())
 
   /** docBase per segment (cumulative maxDocId+1). */
   val bases: Array[Long] =
@@ -297,10 +310,10 @@ final class IndexSearcher(
     * sorted array below) and shipped to executors as a Spark broadcast —
     * one copy per executor, not serialized into every query closure.
     */
-  private val tombstones: org.apache.spark.broadcast.Broadcast[Array[graft.index.Tombstones]] =
+  private val tombstones: Broadcast[Array[Tombstones]] = sharedTombstones.getOrElse(
     spark.sparkContext.broadcast(
       segments.map(s =>
-        graft.index.Deletes.readTombstones(spark, s.dir, s.maxDocId)).toArray)
+        graft.index.Deletes.readTombstones(spark, s.dir, s.maxDocId)).toArray))
 
   /** True when any segment carries un-merged deletes. */
   def hasDeletes: Boolean = tombstones.value.exists(!_.isEmpty)
@@ -339,11 +352,11 @@ final class IndexSearcher(
     def scoringOr(terms: Seq[String]): Query =
       BoolQuery(terms.map(t => TermQuery(t) -> (Occur.Should: Occur)))
     // Constant-score atoms expand with max+1 probing: a result within the
-    // cap keeps the enumerated OR (hapax fast path, filter-cache-friendly
-    // keys); overflow means enumeration would silently truncate — switch to
-    // the COMPLETE dictionary rewrite, which ships the predicate into the
-    // postings scan with no term list at all (the reference's CONSTANT_SCORE
-    // bitset rewrite never enumerates either, `search/MultiTermQuery.java`).
+    // cap keeps the enumerated OR (filter-cache-friendly keys); overflow
+    // means enumeration would silently truncate — switch to the COMPLETE
+    // dictionary rewrite, which ships the spec to every slice with no term
+    // list at all (the reference's CONSTANT_SCORE bitset rewrite never
+    // enumerates either, `search/MultiTermQuery.java`).
     def constOr(spec: MultiTerm, terms: Seq[String]): Query =
       if (terms.length > maxExpansions) ConstScoreQuery(MultiTermDictQuery(spec), 1.0)
       else ConstScoreQuery(scoringOr(terms), 1.0)
@@ -443,13 +456,12 @@ final class IndexSearcher(
   val bloomSkips = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The dictionary rows of `terms` in every segment, tagged with the
-    * segment ordinal (needed by the singleton-doc fast path) and aggregated
-    * by the caller. Lookups are driver-side binary searches. A segment
-    * whose Bloom filter (ref
-    * `codecs/bloom/BloomFilteringPostingsFormat.java`, built with
-    * `IndexConfig.bloomTerms`) rejects EVERY term is skipped before its
-    * dictionary is loaded — on an NRT tail of many small segments a
-    * primary-key-style probe loads only the segments that may hold it.
+    * segment ordinal and the slices holding the term, and aggregated by the
+    * caller. Lookups are driver-side binary searches. A segment whose Bloom
+    * filter (ref `codecs/bloom/BloomFilteringPostingsFormat.java`, built
+    * with `IndexConfig.bloomTerms`) rejects EVERY term is skipped before it
+    * loads — on an NRT tail of many small segments a primary-key-style
+    * probe loads only the segments that may hold it.
     */
   private def segTermRows(terms: Seq[String]): Seq[SegTermRow] =
     if (terms.isEmpty) Seq.empty
@@ -545,37 +557,6 @@ final class IndexSearcher(
     */
   def expandWildcard(pattern: String, max: Int = 1024): Seq[String] =
     expandTerms(MultiTerm.Wildcard(pattern), max)
-
-  /** Posting blocks of one segment for a COMPLETE multi-term dictionary
-    * query, with no expansion cap — the distributed analogue of the
-    * reference's per-segment bitset CONSTANT_SCORE rewrite
-    * (`search/MultiTermQueryConstantScoreWrapper.java`). A prefix or range
-    * ships its term range into the postings scan itself (term-sorted
-    * Parquet → the range conjuncts land in PushedFilters), so no term list
-    * is built at all; any other spec resolves its terms from this
-    * segment's resident dictionary and reads their postings by `term IN`.
-    * A segment with no matching term contributes nothing. Shipped terms
-    * are namespaced under the node's sentinel key so the scorer build
-    * collects exactly its own blocks.
-    */
-  private def dictBlocks(dq: MultiTermDictQuery, seg: Int): Option[DataFrame] = {
-    val r = readers(seg)
-    val matched = dq.spec match {
-      case MultiTerm.Prefix(p) =>
-        Some(r.postings.where(prefixUpper(p) match {
-          case Some(hi) => $"term" >= p && $"term" < hi
-          case None     => $"term".startsWith(p)
-        }))
-      case MultiTerm.Range(lo, hi, il, ih) =>
-        Some(r.postings.where((if (il) $"term" >= lo else $"term" > lo) &&
-          (if (ih) $"term" <= hi else $"term" < hi)))
-      case spec =>
-        val (lo, hi) = IndexSearcher.specRange(spec)
-        val terms = r.dict.walk(lo, hi, MultiTerm.matcher(spec)).map(_.term).toSeq
-        if (terms.isEmpty) None else Some(r.postings.where($"term".isin(terms: _*)))
-    }
-    matched.map(_.select(blockCols(concat(lit(dq.key + "\u0001"), $"term"), seg): _*))
-  }
 
   /** Scorers for every key a query needs: per-term BM25 scorers plus blended
     * pseudo-term scorers for synonym nodes (docFreq = max over members,
@@ -920,103 +901,96 @@ final class IndexSearcher(
 
   // ------------------------------------------------------------ blocks
 
-  /** Load posting blocks for `terms` across all segments, one segment per
-    * partition (see [[segmentBlocks]]). Only segments whose dictionary
-    * holds a term scan for it; filter pushdown on the sorted `term` column
-    * prunes row groups.
+  /** The resident slices that may hold blocks of `rows`' terms (each row
+    * names the slice range of its term in its segment), or of a complete
+    * multi-term node in `dictQs` (every slice), as ONE RDD: partition `p`
+    * is one slice of segment `segOf(p)`, in segment then slice order.
+    */
+  private def querySlices(rows: Seq[SegTermRow],
+      dictQs: Seq[MultiTermDictQuery]): (RDD[Slice], Array[Int]) = {
+    val wanted: Map[Int, Set[Int]] =
+      if (dictQs.nonEmpty)
+        readers.indices.map(i => i -> (0 until readers(i).slices.getNumPartitions).toSet).toMap
+      else rows.groupBy(_.seg).map { case (seg, rs) =>
+        seg -> rs.iterator.flatMap(r => r.firstSlice to r.lastSlice).toSet
+      }
+    val segs = wanted.keys.toSeq.sorted
+    if (segs.isEmpty) return (spark.sparkContext.emptyRDD[Slice], Array.emptyIntArray)
+    val rdds = segs.map(readers(_).slices)
+    val starts = rdds.scanLeft(0)(_ + _.getNumPartitions)
+    val keep = segs.indices.flatMap(j => wanted(segs(j)).toSeq.sorted.map(starts(j) + _)).toSet
+    val union = if (rdds.size == 1) rdds.head else new UnionRDD(spark.sparkContext, rdds)
+    val segOf = keep.toSeq.sorted.map(p => segs(starts.lastIndexWhere(_ <= p))).toArray
+    (if (keep.size == starts.last) union else PartitionPruningRDD.create(union, keep), segOf)
+  }
+
+  /** Runs `slice` once per resident slice that may hold the query's blocks
+    * (see [[querySlices]]), with the slice's segment docBase, its
+    * tombstones and its buckets in ascending docId order, each as key →
+    * blocks sorted by firstDocId (a complete multi-term node's blocks are
+    * keyed under its sentinel namespace, see [[MultiTermDictQuery.key]]).
+    * No block leaves its slice's task: the pass needs no exchange.
+    */
+  private def perSlice[T: ClassTag](rows: Seq[SegTermRow], dictQs: Seq[MultiTermDictQuery] = Nil)(
+      slice: (Long, Tombstones, Iterator[Map[String, Array[BlockView]]]) => Iterator[T]): Slice.Pass[T] = {
+    val (rdd, segOf) = querySlices(rows, dictQs)
+    val terms = rows.map(_.term).distinct.toArray
+    val specs = dictQs.distinct.map(dq => (dq.key + "\u0001", dq.spec)).toArray
+    val shifts = segments.map(_.bucketShift).toArray
+    val basesL = bases
+    val tombs = tombstones
+    new Slice.Pass(rdd, (p, s) => {
+      val seg = segOf(p)
+      slice(basesL(seg), tombs.value(seg), s.buckets(s.keys(terms, specs), shifts(seg)).map(_._2))
+    })
+  }
+
+  /** The posting blocks of `terms` in every segment, read from the resident
+    * slices in one RDD job and returned as a local Dataset, each tagged with
+    * its segment and bucket.
     */
   def blocksFor(terms: Seq[String]): Dataset[QBlock] = {
     require(terms.nonEmpty, "no terms")
-    segmentBlocks(segTermRows(terms), positional = true)
-  }
-
-  /** The `QBlock` projection of segment `seg`'s postings rows. */
-  private def blockCols(term: Column, seg: Int): Seq[Column] =
-    Seq(term.as("term"), lit(seg).as("seg"), $"bucket", $"firstDocId", $"lastDocId",
-      $"numDocs", $"docsPacked", $"freqsPacked", $"normsPacked", $"impacts", $"posPacked")
-
-  /** A query's posting blocks, co-located by construction: per segment, the
-    * pruned postings scan, the synthesized singleton blocks and the
-    * multi-term [[dictBlocks]] rows are coalesced into ONE partition, and
-    * the segments' partitions are concatenated in segment order
-    * ([[PartitionConcat]], a narrow concat). Each partition thus holds one
-    * segment's blocks, the reference's leaf slice, and scoring needs no
-    * exchange.
-    *
-    * Singleton-doc fast path (ref `Lucene103PostingsFormat.java:138-141`):
-    * terms whose global docFreq is 1 synthesize their one-posting block
-    * from the term-dictionary row on the driver; the postings table is only
-    * scanned for the remaining terms. Positional reads skip it: the
-    * synthesized block carries no .pos payload, so a phrase over a hapax
-    * term would otherwise crash in the positions decode.
-    */
-  private def segmentBlocks(rows: Seq[SegTermRow], positional: Boolean,
-      dictQs: Seq[MultiTermDictQuery] = Nil): Dataset[QBlock] = {
-    import graft.codec.{BlockCodec, Impacts}
-    val singles: Map[String, SegTermRow] =
-      if (positional) Map.empty
-      else rows.groupBy(_.term).collect {
-        case (t, rs) if rs.map(_.docFreq).sum == 1 && rs.exists(_.singletonDocId >= 0) =>
-          t -> rs.find(_.singletonDocId >= 0).get
+    val (rdd, segOf) = querySlices(segTermRows(terms), Nil)
+    val keys = terms.distinct.toArray
+    val shifts = segments.map(_.bucketShift).toArray
+    val blocks = new Slice.Pass(rdd, (p, s) => {
+      val seg = segOf(p)
+      s.buckets(s.keys(keys, Array.empty), shifts(seg)).flatMap { case (bucket, byTerm) =>
+        byTerm.iterator.flatMap { case (t, bs) =>
+          bs.iterator.map(b => QBlock(t, seg, bucket, b.firstDocId, b.lastDocId, b.numDocs,
+            b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
+        }
       }
-    val scanned = rows.filterNot(r => singles.contains(r.term)).groupBy(_.seg)
-    val synthetic = singles.values.toSeq.groupBy(_.seg)
-    val slices = readers.indices.flatMap { i =>
-      val scan = scanned.get(i).map(rs => readers(i).postings
-        .where($"term".isin(rs.map(_.term).distinct: _*))
-        .select(blockCols($"term", i): _*))
-      val synth = synthetic.get(i).map(rs => spark.createDataset(rs.map { r =>
-        val ids = Array(r.singletonDocId)
-        QBlock(r.term, i, r.singletonDocId >>> segments(i).bucketShift,
-          r.singletonDocId, r.singletonDocId, 1,
-          BlockCodec.forEncode(BlockCodec.deltaEncode(ids, ids(0))),
-          BlockCodec.pforEncode(Array(r.singletonFreq.toLong)),
-          BlockCodec.forEncode(Array(r.singletonNorm.toLong)),
-          Impacts.encode(Impacts.skyline(Array((r.singletonFreq, r.singletonNorm)))))
-      }).toDF())
-      val parts = scan.toSeq ++ synth ++ dictQs.distinct.flatMap(dictBlocks(_, i))
-      if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _).coalesce(1))
-    }
-    if (slices.isEmpty) spark.emptyDataset[QBlock] else PartitionConcat.concat(slices).as[QBlock]
-  }
-
-  /** Blocks of a rewritten query (phrases read the real positional blocks;
-    * complete multi-term nodes ship their sentinel-namespaced blocks).
-    */
-  private def queryBlocks(rows: Seq[SegTermRow], query: Query): Dataset[QBlock] =
-    segmentBlocks(rows, IndexSearcher.hasPhrase(query), IndexSearcher.dictSpecs(query))
-
-  /** Runs `slice` once per segment inside that segment's partition of
-    * `blocks` (see [[segmentBlocks]]), with the segment's docBase, its
-    * tombstones and its buckets in ascending docId order, each as term →
-    * blocks sorted by firstDocId. No block leaves its partition: the query
-    * runs as one job with no exchange.
-    */
-  private def perSegment[T: Encoder](blocks: Dataset[QBlock])(
-      slice: (Long, graft.index.Tombstones, Iterator[Map[String, Array[BlockView]]]) =>
-        Iterator[T]): Dataset[T] = {
-    val basesL = bases
-    val tombs = tombstones
-    blocks.mapPartitions(it => IndexSearcher.bySegment(it).flatMap { case (seg, buckets) =>
-      slice(basesL(seg), tombs.value(seg), buckets)
-    })
+    }).collectParts().flatten
+    spark.createDataset(blocks.toSeq)(IndexSearcher.QBlockEncoder)
   }
 
   // ------------------------------------------------------------ search
 
-  /** Top-k by BM25, rank-identical tie-break (score desc, docId asc). */
-  def topK(query0: Query, k: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
-    val query = Query.rewrite(query0) // BooleanQuery#rewrite normalizations
-    val rows = segTermRows(query.terms.toSeq.sorted)
-    val scorers = scorerMap(query, aggStats(rows))
-    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
-      // one collector per segment: buckets arrive in docId order, so a tie
+  /** Each slice's top-k of `query`: one RDD job, one task per slice. */
+  private def sliceTopK(query: Query, rows: Seq[SegTermRow], scorers: Map[String, SimScorer],
+      k: Int, pruning: Boolean): Array[Array[ScoredDoc]] = {
+    val slices = perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
+      // one collector per slice: buckets arrive in docId order, so a tie
       // in a later bucket loses to an earlier doc, as within one bucket;
       // liveDocs: tombstoned docs never take a top-k slot
       val collector = new TopKCollector(k, dead)
       buckets.foreach(Executor.search(query, _, scorers, collector, pruning))
       collector.results.iterator.map { case (d, s) => ScoredDoc(d + base, s) }
-    }.orderBy($"score".desc, $"docId".asc).limit(k)
+    }
+    slices.collectParts()
+  }
+
+  /** Top-k by BM25, rank-identical tie-break (score desc, docId asc). The
+    * scoring runs when this is called; the result is a local Dataset.
+    */
+  def topK(query0: Query, k: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
+    val query = Query.rewrite(query0) // BooleanQuery#rewrite normalizations
+    val rows = segTermRows(query.terms.toSeq.sorted)
+    val scorers = scorerMap(query, aggStats(rows))
+    val hits = IndexSearcher.mergeTopK(sliceTopK(query, rows, scorers, k, pruning), k)
+    spark.createDataset(hits.toSeq)(IndexSearcher.ScoredDocEncoder)
   }
 
   /** Score every matching doc (no top-k cut) — feeds grouping/facet/rescore
@@ -1026,13 +1000,13 @@ final class IndexSearcher(
     val query = Query.rewrite(query0)
     val rows = segTermRows(query.terms.toSeq.sorted)
     val scorers = scorerMap(query, aggStats(rows))
-    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
+    spark.createDataset(perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
       buckets.flatMap(Executor.build(query, _, scorers)).flatMap { sc =>
         // the score is read while the scorer sits on the doc
         Iterator.continually(sc.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
           .collect { case d if !dead.contains(d) => ScoredDoc(d + base, sc.score) }
       }
-    }
+    })(IndexSearcher.ScoredDocEncoder)
   }
 
   /** Second-pass rescoring (ref `search/QueryRescorer.java`): re-rank a
@@ -1301,9 +1275,9 @@ final class IndexSearcher(
   def matching(query0: Query): Dataset[Long] = {
     val query = Query.rewrite(query0)
     val rows = segTermRows(query.terms.toSeq.sorted)
-    perSegment(queryBlocks(rows, query)) { (base, dead, buckets) =>
+    perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
       buckets.flatMap(Executor.matchIds(query, _)).filter(d => !dead.contains(d)).map(_ + base)
-    }.toDF("docId").as[Long]
+    }.toDS().toDF("docId").as[Long]
   }
 
   /** Exact-phrase frequencies — two-phase matching, the re-expression of
@@ -1360,7 +1334,7 @@ final class IndexSearcher(
     require(segments.forall(_.hasPositions), "index was built without positions")
     val phrase = terms.toArray
     val unique = terms.distinct
-    perSegment(blocksFor(unique)) { (base, dead, buckets) =>
+    perSlice(segTermRows(unique)) { (base, dead, buckets) =>
       buckets.flatMap { byTerm =>
         if (unique.exists(t => !byTerm.contains(t))) Iterator.empty
         else {
@@ -1373,7 +1347,7 @@ final class IndexSearcher(
             .filter(_._2 > 0)
         }
       }
-    }
+    }.toDS()
   }
 
   /** Sloppy verification against stored text (duel path for
@@ -1430,7 +1404,7 @@ final class IndexSearcher(
     require(segments.forall(_.hasPositions), "index was built without positions")
     val unique = src.terms.distinct
     val required = src.required.distinct
-    perSegment(blocksFor(unique)) { (base, dead, buckets) =>
+    perSlice(segTermRows(unique)) { (base, dead, buckets) =>
       buckets.flatMap { byTerm =>
         if (required.exists(t => !byTerm.contains(t)) ||
             unique.forall(t => !byTerm.contains(t))) Iterator.empty
@@ -1469,7 +1443,7 @@ final class IndexSearcher(
           docs.filter(d => !dead.contains(d)).flatMap(hit)
         }
       }
-    }
+    }.toDS()
   }
 
   /** Interval matches intersected with a boolean query's match set — spans
@@ -1756,7 +1730,7 @@ final class IndexSearcher(
     * `spans/SpanPositionRangeQuery.java`: a term occurrence counts only
     * when its span lies inside `[start, end)` in the reference's span
     * coordinates (span start = position ≥ `start`, span end = position + 1
-    * ≤ `end`). ONE pushed postings scan for the term; positions decode
+    * ≤ `end`). One pass over the slices holding the term; positions decode
     * lazily per block and the per-doc position array is sorted, so the
     * in-range count is one lower-bound scan plus a prefix scan. Returns
     * the full (docId, in-range freq) match set; tombstoned docs never
@@ -1765,29 +1739,27 @@ final class IndexSearcher(
   def spanRangeFreqs(term: String, start: Int, end: Int): Dataset[(Long, Int)] = {
     import graft.codec.BlockCodec
     require(segments.forall(_.hasPositions), "index was built without positions")
-    val tombs = tombstones
-    val basesL = bases
-    blocksFor(Seq(term)).flatMap { b =>
-      if (b.posPacked == null) Iterator.empty
-      else {
-        val dead = tombs.value(b.seg)
-        val base = basesL(b.seg)
-        val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
-        val fs = BlockCodec.pforDecode(b.freqsPacked)
-        val poss = graft.codec.Positions.decode(b.posPacked, fs, b.numDocs)
-        Iterator.range(0, b.numDocs).flatMap { i =>
-          if (dead.contains(ids(i))) None
-          else {
-            val ps = poss(i)
-            var lo = 0
-            while (lo < ps.length && ps(lo) < start) lo += 1
-            var c = lo
-            while (c < ps.length && ps(c) + 1 <= end) c += 1
-            if (c > lo) Some((ids(i) + base, c - lo)) else None
+    perSlice(segTermRows(Seq(term))) { (base, dead, buckets) =>
+      buckets.flatMap(_.getOrElse(term, Array.empty[BlockView])).flatMap { b =>
+        if (b.posPacked == null) Iterator.empty
+        else {
+          val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
+          val fs = BlockCodec.pforDecode(b.freqsPacked)
+          val poss = graft.codec.Positions.decode(b.posPacked, fs, b.numDocs)
+          Iterator.range(0, b.numDocs).flatMap { i =>
+            if (dead.contains(ids(i))) None
+            else {
+              val ps = poss(i)
+              var lo = 0
+              while (lo < ps.length && ps(lo) < start) lo += 1
+              var c = lo
+              while (c < ps.length && ps(c) + 1 <= end) c += 1
+              if (c > lo) Some((ids(i) + base, c - lo)) else None
+            }
           }
         }
       }
-    }
+    }.toDS()
   }
 
   /** Covering query — the re-expression of the reference's sandbox
@@ -1795,7 +1767,7 @@ final class IndexSearcher(
     * a doc matches when at least `minMatch`-of-its-row clauses match, where
     * the minimum is a PER-DOC value (the reference's `LongValuesSource`),
     * and scores as the sum of the matching clauses. Execution shape: one
-    * scored match set per clause (each a pushed postings scan), ONE union +
+    * scored match set per clause (each a pass over the resident slices), ONE union +
     * hash aggregation for (Σscore, nmatch), then a docId-equi join against
     * the stored-fields table for the per-doc minimum — every step
     * distributed, one shuffle for the agg and one for the join.
@@ -1883,14 +1855,13 @@ final class IndexSearcher(
     * The reference wraps Weight/Scorer call sites with timers
     * (`create_weight` / `build_scorer` / `next_doc` / `score`); in the
     * Spark execution model those lifecycles live at JOB granularity, so the
-    * profile times the same stages as whole jobs — rewrite (driver-only),
-    * dictionary stats (the driver-side dictionary lookup ≈ create_weight;
-    * the first lookup in a segment also loads its dictionary), scorer
-    * construction (SimScorer weights), block planning (candidate
-    * enumeration ≈ build_scorer: how many posting blocks the scorers will
-    * see), and the scoring job (next_doc + score + top-k merge, the
-    * [[topK]] action itself). Counts ride along so timings stay
-    * interpretable. Diagnostic path only — [[topK]] itself is untouched.
+    * profile times the steps [[topK]] itself runs, one by one — rewrite
+    * (driver-only), dictionary stats (the driver-side dictionary lookup ≈
+    * create_weight; the first lookup in a segment also loads it), scorer
+    * construction (SimScorer weights), the slice job (block copy-out +
+    * next_doc + score + per-slice top-k, one task per slice) and the driver
+    * merge of the per-slice top-k. Counts ride along so timings stay
+    * interpretable.
     */
   def profile(query0: Query, k: Int = 10, pruning: Boolean = true): Seq[ProfileRow] = {
     def timed[A](f: => A): (A, Double) = {
@@ -1900,15 +1871,9 @@ final class IndexSearcher(
     val qTerms = query.terms.toSeq.sorted
     val (rows, tStats) = timed(segTermRows(qTerms))
     val ts = aggStats(rows)
-    val (_, tScorers) = timed(scorerMap(query, ts))
-    val ((nBlocks, nBuckets, nSlices), tPlan) = timed {
-      val b = queryBlocks(rows, query)
-        .groupBy($"seg", $"bucket").count()
-        .agg(org.apache.spark.sql.functions.count(lit(1)), sum($"count"),
-          countDistinct($"seg")).head()
-      (b.getLong(1), b.getLong(0), b.getLong(2))
-    }
-    val (hits, tScore) = timed(topK(query, k, pruning).collect())
+    val (scorers, tScorers) = timed(scorerMap(query, ts))
+    val (parts, tJob) = timed(sliceTopK(query, rows, scorers, k, pruning))
+    val (hits, tMerge) = timed(IndexSearcher.mergeTopK(parts, k))
     Seq(
       ProfileRow("rewrite", tRewrite, s"$query0 -> $query"),
       ProfileRow("term_stats", tStats,
@@ -1916,13 +1881,12 @@ final class IndexSearcher(
           s"dictionaries of ${readers.length} segments (binary search, no job " +
           s"once loaded), docFreq sum ${ts.values.map(_.docFreq).sum}"),
       ProfileRow("scorer_setup", tScorers, s"${ts.size} SimScorer weights"),
-      ProfileRow("block_plan", tPlan,
-        s"$nBlocks candidate posting blocks in $nBuckets buckets of $nSlices " +
-          "segment slices (one partition each)"),
-      ProfileRow("score_collect", tScore,
-        s"topK(k=$k, pruning=$pruning) end-to-end (re-plans internally): one job, " +
-          s"one task and one collector per segment slice, no exchange; " +
-          s"${hits.length} hits, best=${hits.headOption.map(_.score).getOrElse(0.0)}"))
+      ProfileRow("slice_job", tJob,
+        s"one RDD job over ${parts.length} resident slices (one task and one " +
+          s"collector each, no exchange), ${parts.map(_.length).sum} per-slice hits"),
+      ProfileRow("merge", tMerge,
+        s"driver merge to top-$k (pruning=$pruning): ${hits.length} hits, " +
+          s"best=${hits.headOption.map(_.score).getOrElse(0.0)}"))
   }
 
   /** Score breakdown for one (query, doc) — the re-expression of the
@@ -2103,8 +2067,8 @@ final class IndexSearcher(
           s"ConstantScore(${cs.score * boost})", details = Seq(inner))
       case dq: MultiTermDictQuery =>
         // the matching term set is unbounded by design — membership is one
-        // pruned postings-range job for this single doc (explain is a
-        // per-doc diagnostic path)
+        // slice job for this single doc (explain is a per-doc diagnostic
+        // path)
         if (matching(dq).filter(_ == docId).isEmpty)
           Explanation.noMatch(s"no dictionary term of ${dq.key} occurs in doc $docId")
         else Explanation(boost, s"multiTermDict(${dq.key})")
@@ -2285,20 +2249,23 @@ final class IndexSearcher(
 
 object IndexSearcher {
 
-  /** A partition's blocks as (segment, its buckets in ascending docId order,
-    * each as term → blocks sorted by firstDocId) — the scorer input of
-    * `IndexSearcher.perSegment`.
+  // derived once, and resolved to expressions once: deriving a product
+  // encoder costs reflection, and `createDataset` turns a bare product
+  // encoder into an `ExpressionEncoder` again on every call
+  private[search] val ScoredDocEncoder: Encoder[ScoredDoc] = ExpressionEncoder[ScoredDoc]()
+  private[search] val QBlockEncoder: Encoder[QBlock] = ExpressionEncoder[QBlock]()
+
+  /** The top `k` of the per-slice top-k lists, score desc then docId asc
+    * (the collector's tie rule: the earlier doc wins), with Spark SQL's
+    * double ordering (`ORDER BY score DESC, docId ASC`).
     */
-  private def bySegment(
-      blocks: Iterator[QBlock]): Iterator[(Int, Iterator[Map[String, Array[BlockView]]])] =
-    blocks.toArray.groupBy(_.seg).toSeq.sortBy(_._1).iterator.map { case (seg, bs) =>
-      seg -> bs.groupBy(_.bucket).toSeq.sortBy(_._1).iterator.map { case (_, inBucket) =>
-        inBucket.groupBy(_.term).map { case (t, arr) =>
-          t -> arr.sortBy(_.firstDocId).map(b => BlockView(b.firstDocId, b.lastDocId,
-            b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
-        }
-      }
-    }
+  private[search] def mergeTopK(parts: Array[Array[ScoredDoc]], k: Int): Array[ScoredDoc] =
+    parts.flatten.sorted(HitOrder).take(k)
+
+  private val HitOrder: Ordering[ScoredDoc] = (x, y) => {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(y.score, x.score)
+    if (c != 0) c else java.lang.Long.compare(x.docId, y.docId)
+  }
 
   /** Count ordered sloppy-phrase matches: strictly increasing tuples
     * `p_0 < … < p_{n-1}` with `p_i ∈ slotPos(i)` and span
@@ -2500,8 +2467,8 @@ final class SearcherManager(
     graft.index.LiveSet.read(indexDir).map(_._1).getOrElse(-1L)
 
   /** Open the current live set, reusing `prev`'s readers (relations,
-    * dictionary, Bloom filter); new segments and every segment's
-    * tombstones are read afresh.
+    * resident slices and dictionary, Bloom filter); new segments and every
+    * segment's tombstones are read afresh.
     */
   private def load(prev: Seq[SegmentReader]): (Long, IndexSearcher) = {
     val g = currentGen
@@ -2517,8 +2484,14 @@ final class SearcherManager(
     * opened; returns true when a new searcher was installed.
     */
   def maybeRefresh(): Boolean = synchronized {
-    if (currentGen != cached._1) { cached = load(cached._2.readers.toSeq); true }
-    else false
+    if (currentGen != cached._1) {
+      val prev = cached._2.readers
+      cached = load(prev.toSeq)
+      // readers not carried over (a merged-away or re-manifested segment)
+      // release their resident slices
+      prev.filterNot(r => cached._2.readers.exists(_ eq r)).foreach(_.release())
+      true
+    } else false
   }
 }
 

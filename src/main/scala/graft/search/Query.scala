@@ -206,14 +206,13 @@ final case class BoolQuery(
   * (`search/MultiTermQuery.java` DOC_VALUES/CONSTANT_SCORE modes,
   * `search/MultiTermQueryConstantScoreWrapper.java`): matches every doc
   * containing ANY dictionary term matching `spec`, with NO expansion cap.
-  * Execution unions the matching postings per segment, the distributed
-  * analogue of the reference's per-segment DocIdSet build: a prefix or
-  * range ships its term range into the postings scan (a pushed-down range
-  * on the term-sorted Parquet); any other spec reads the terms its
-  * segment's resident dictionary matches. Scores are constant (1 × boost); wrap in
+  * Execution unions the matching postings per resident slice, the
+  * distributed analogue of the reference's per-segment DocIdSet build: the
+  * spec ships to every slice, which walks its own sorted terms from the
+  * spec's range start. Scores are constant (1 × boost); wrap in
   * [[ConstScoreQuery]] to pick the constant. The parser's rewriter only
   * reaches for this node past the expansion cap (small expansions keep the
-  * enumerated constant-score OR, which preserves the hapax fast path).
+  * enumerated constant-score OR).
   */
 final case class MultiTermDictQuery(spec: MultiTerm) extends Query {
   def terms: Set[String] = Set.empty

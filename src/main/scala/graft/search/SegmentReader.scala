@@ -1,26 +1,29 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 
 import graft.index.{SegmentManifest, TermBloom}
 import graft.index.Schema.{DocEntry, PostingBlock, TermStat}
 
-/** One committed segment's read state, resolved once and shared by every
+/** One committed segment's read state, opened once and shared by every
   * searcher that still sees the segment — the analogue of the reference's
   * `SegmentReader`, which `DirectoryReader.openIfChanged` carries over to
   * the refreshed reader (`index/StandardDirectoryReader.java`).
   *
   * A committed segment's files do not change, so:
   *  - each table is a Parquet relation read with an explicit schema: no
-  *    schema-inference job per query, and no per-call test for columns an
-  *    older layout lacks (a missing column reads as null; the old-layout
-  *    defaults are applied here, once);
-  *  - the term dictionary is collected to the driver on its first use
-  *    (one job per segment); every dictionary read after that — term
-  *    stats, multi-term expansion, spelling and suggest — is a binary
-  *    search or a sorted range walk of [[TermDict]], with no Spark job.
+  *    schema-inference job, and no per-call test for columns an older
+  *    layout lacks (a missing column reads as null);
+  *  - on its first dictionary or postings use the segment loads, in ONE
+  *    Spark job, as resident [[Slice]]s persisted on the executors, and the
+  *    same job returns the term stats of the driver's [[TermDict]]. Every
+  *    dictionary read after that — term stats, multi-term expansion,
+  *    spelling and suggest — is a binary search or a sorted range walk of
+  *    the [[TermDict]], with no Spark job, and every postings read of a
+  *    query is one RDD pass over the slices, with no Parquet scan. Offset,
+  *    payload and explain reads stay point scans of [[postings]].
   *
   * A relation lists its files when it is resolved: files appended to the
   * segment later (`FeatureIndexer.addFeatures`) are seen by readers made
@@ -48,18 +51,24 @@ final class SegmentReader(spark: SparkSession, val manifest: SegmentManifest) {
   lazy val bloom: Option[TermBloom] =
     if (TermBloom.exists(manifest.dir)) TermBloom.read(spark, manifest.dir) else None
 
-  /** The term dictionary on the driver, loaded on first use — the only
-    * read of the `terms` table. Pre-singleton segments read with the
-    * singleton fast path off; a column a later layout dropped (`len`) is
-    * not read.
+  private var resident: (RDD[Slice], TermDict) = _
+
+  private def loaded: (RDD[Slice], TermDict) = synchronized {
+    if (resident == null) resident = Slice.load(spark, manifest, postings)
+    resident
+  }
+
+  /** The resident slices, one per partition, loaded on first use. */
+  def slices: RDD[Slice] = loaded._1
+
+  /** The term dictionary on the driver, loaded with the slices. */
+  def dict: TermDict = loaded._2
+
+  /** Unpersist the slices, if loaded. A searcher still holding this reader
+    * keeps answering: its slices recompute from Parquet by lineage.
     */
-  lazy val dict: TermDict = {
-    import spark.implicits._
-    TermDict.load(table("terms", Encoders.product[TermStat].schema).select(
-      col("term"), col("docFreq"), col("totalTermFreq"),
-      coalesce(col("singletonDocId"), lit(-1L)).as("singletonDocId"),
-      coalesce(col("singletonFreq"), lit(0)).as("singletonFreq"),
-      coalesce(col("singletonNorm"), lit(0)).as("singletonNorm")).as[TermStat])
+  def release(): Unit = synchronized {
+    if (resident != null) resident._1.unpersist(blocking = false)
   }
 }
 
@@ -74,14 +83,16 @@ object SegmentReader {
   * their stats in parallel primitive arrays (no per-term row objects),
   * searched by binary search — the reference keeps a terms index on heap
   * for the same lookup (`codecs/lucene90/blocktree/FieldReader.java`).
+  * Built from the resident slices' stats, so the `terms` table is not read;
+  * for a segment of several slices it also records the first and last
+  * slice that hold each term's blocks.
   */
 final class TermDict private (
     terms: Array[String],
     docFreq: Array[Long],
     totalTermFreq: Array[Long],
-    singletonDocId: Array[Long],
-    singletonFreq: Array[Int],
-    singletonNorm: Array[Int]) {
+    firstSlice: Array[Int], // null: the segment is one slice
+    lastSlice: Array[Int]) {
 
   private def search(term: String): Int =
     java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
@@ -90,8 +101,8 @@ final class TermDict private (
   def lookup(seg: Int, term: String): Option[SegTermRow] = {
     val i = search(term)
     if (i < 0) None
-    else Some(SegTermRow(seg, term, docFreq(i), totalTermFreq(i),
-      singletonDocId(i), singletonFreq(i), singletonNorm(i)))
+    else if (firstSlice == null) Some(SegTermRow(seg, term, docFreq(i), totalTermFreq(i), 0, 0))
+    else Some(SegTermRow(seg, term, docFreq(i), totalTermFreq(i), firstSlice(i), lastSlice(i)))
   }
 
   /** The terms `t` with `lo <= t < hi` (no upper bound when `hi` is None)
@@ -110,22 +121,26 @@ final class TermDict private (
 
 object TermDict {
 
-  /** Collect a segment's dictionary (one job). Rows of one term — files
-    * appended by `FeatureIndexer` can repeat a feature term — merge: the
-    * stats add up and the merged term is no singleton.
+  /** The dictionary of a segment from its slices' (terms, docFreq,
+    * totalTermFreq), in slice order. A term held by several slices sums
+    * its stats over them.
     */
-  def load(rows: Dataset[TermStat]): TermDict = {
-    val sorted = rows.collect().sortBy(_.term)
-    val merged = scala.collection.mutable.ArrayBuffer[TermStat]()
-    sorted.foreach { r =>
-      if (merged.nonEmpty && merged.last.term == r.term) {
-        val p = merged.last
-        merged(merged.length - 1) = TermStat(r.term, p.docFreq + r.docFreq,
-          p.totalTermFreq + r.totalTermFreq)
-      } else merged += r
+  private[search] def apply(slices: Array[(Array[String], Array[Long], Array[Long])]): TermDict =
+    if (slices.length == 1) {
+      val (t, df, ttf) = slices(0)
+      new TermDict(t, df, ttf, null, null)
+    } else {
+      val rows = slices.iterator.zipWithIndex.flatMap { case ((t, df, ttf), s) =>
+        t.indices.iterator.map(i => (t(i), s, df(i), ttf(i)))
+      }.toArray.sortBy(r => (r._1, r._2))
+      val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long, Int, Int)]()
+      rows.foreach { case (t, s, d, f) =>
+        if (out.nonEmpty && out.last._1 == t) {
+          val p = out.last
+          out(out.length - 1) = (t, p._2 + d, p._3 + f, p._4, s)
+        } else out += ((t, d, f, s, s))
+      }
+      new TermDict(out.map(_._1).toArray, out.map(_._2).toArray, out.map(_._3).toArray,
+        out.map(_._4).toArray, out.map(_._5).toArray)
     }
-    new TermDict(merged.map(_.term).toArray, merged.map(_.docFreq).toArray,
-      merged.map(_.totalTermFreq).toArray, merged.map(_.singletonDocId).toArray,
-      merged.map(_.singletonFreq).toArray, merged.map(_.singletonNorm).toArray)
-  }
 }

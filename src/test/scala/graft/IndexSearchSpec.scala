@@ -56,15 +56,15 @@ class IndexSearchSpec extends SparkTestBase {
     val q = searcher.parse("court AND law")
     val prof = searcher.profile(q, 10)
     assert(prof.map(_.stage) == Seq("rewrite", "term_stats", "scorer_setup",
-      "block_plan", "score_collect"))
+      "slice_job", "merge"))
     assert(prof.forall(_.seconds >= 0.0))
-    // the plan stage's block count covers both terms' postings
-    val planDetail = prof.find(_.stage == "block_plan").get.detail
-    assert(planDetail.matches("\\d+ candidate posting blocks in \\d+ .*") &&
-      !planDetail.startsWith("0 "), planDetail)
-    // score_collect reports the same hits topK returns
+    // the slice job scores at least one slice and returns its hits
+    val jobDetail = prof.find(_.stage == "slice_job").get.detail
+    assert(jobDetail.matches("one RDD job over [1-9]\\d* resident slices .*, [1-9]\\d* per-slice hits"),
+      jobDetail)
+    // the merge reports the same hits topK returns
     val hits = searcher.topK(q, 10).collect()
-    val scoreDetail = prof.find(_.stage == "score_collect").get.detail
+    val scoreDetail = prof.find(_.stage == "merge").get.detail
     assert(scoreDetail.contains(s"${hits.length} hits"))
     assert(scoreDetail.contains(s"best=${hits.head.score}"))
   }
@@ -602,10 +602,10 @@ class IndexSearchSpec extends SparkTestBase {
     val docsPlan = planOf(searcher.docsForIds(Seq(3L, 17L, 42L)))
     assert(docsPlan.contains("PushedFilters") && docsPlan.contains("In(docId"),
       s"docs point lookup not pushed down:\n$docsPlan")
-    // a complete prefix rewrite ships its term range into the postings scan
-    val dictPlan = planOf(searcher.matching(MultiTermDictQuery(MultiTerm.Prefix("st"))).toDF())
-    assert(dictPlan.contains("GreaterThanOrEqual(term,st") &&
-      dictPlan.contains("LessThan(term,su"), s"prefix range not pushed down:\n$dictPlan")
+    // a complete prefix rewrite matches the docs of every term it expands to
+    assert(searcher.matching(MultiTermDictQuery(MultiTerm.Prefix("st"))).collect().toSet ==
+      searcher.matching(BoolQuery(searcher.expandPrefix("st", Int.MaxValue)
+        .map(t => TermQuery(t) -> (Occur.Should: Occur)))).collect().toSet)
     // dictionary reads walk the resident dictionaries: every spec expands
     // to the terms a brute filter of the whole dictionary keeps
     val specs = Seq(MultiTerm.Prefix("st"), MultiTerm.Range("qa", "ri", true, false),
@@ -655,7 +655,6 @@ class IndexSearchSpec extends SparkTestBase {
     for (h <- hapaxes) {
       val ts = searcher.termStats(Seq(h))
       assert(ts(h).docFreq == 1L)
-      // term dictionary row carries the inline posting
       val q = Query.parse(h)
       val got = searcher.topK(q, 5).collect().map(s => (s.docId, s.score)).toSeq
       assert(got == oracle.topK(q, 5), s"hapax $h")

@@ -135,16 +135,24 @@ class MultiTermDictSpec extends SparkTestBase {
     assert(searcher.count(ConstScoreQuery(dict, 1.0)) == 1000L)
   }
 
-  test("dict postings scan pushes the range to Parquet (no enumeration)") {
-    // the semi-join plan: the dictionary range lands in the postings scan's
-    // PushedFilters — no In(term, [...]) list, no driver term collection
-    val plan = searcher.matching(MultiTermDictQuery(MultiTerm.Prefix("pre0")))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("GreaterThanOrEqual(term,pre0") &&
-      plan.contains("LessThan(term,pre1"),
-      s"expected pushed term-range conjuncts in:\n$plan")
-    assert(!plan.contains("In(term"),
-      "complete rewrite must not enumerate terms into an In() filter")
+  test("dict node walks slice terms: sliced == one slice == enumerated OR") {
+    // the complete rewrite ships no term list: each resident slice walks
+    // its own sorted terms from the spec's range start
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    val sliced = new IndexSearcher(small, Seq(Manifest.read(segDir).get))
+    for (spec <- Seq(MultiTerm.Prefix("pre0"), MultiTerm.Range("pre0100", "pre0400", true, false),
+        MultiTerm.Wildcard("pre1?0*"))) {
+      val dq = MultiTermDictQuery(spec)
+      val enumerated = BoolQuery(searcher.expandTerms(spec, Int.MaxValue)
+        .map(t => TermQuery(t) -> (Occur.Should: Occur)))
+      val want = ids(enumerated)
+      assert(want.size > 10, s"vacuous check for $spec")
+      assert(ids(dq) == want, s"one slice: $spec")
+      assert(sliced.matching(dq).collect().toSet == want, s"several slices: $spec")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.values
+      .exists(r => r.name == s"slices $segDir" && r.getNumPartitions > 1), "one slice only")
   }
 
   test("explain reports dict membership") {

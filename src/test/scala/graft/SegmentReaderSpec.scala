@@ -6,16 +6,19 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.Corpus
-import graft.index.{FeatureIndexer, IndexBuilder, IndexConfig, LiveSet, Manifest, SegmentManifest, SegmentMerger}
-import graft.search.{FeatureFunction, FeatureQuery, IndexSearcher, Query, SearcherManager}
+import graft.index.{Deletes, FeatureIndexer, IndexBuilder, IndexConfig, IndexSplitter, LiveSet, Manifest,
+  SegmentManifest, SegmentMerger}
+import graft.search.{FeatureFunction, FeatureQuery, IndexSearcher, Query, SearcherManager, Similarity}
 
-/** Per-segment read state: a warm searcher runs no Spark job for any
-  * dictionary read (term stats, expansion, spelling, suggest) and exactly
-  * one, with no exchange, per top-k query, and
-  * segments written before the singleton and positions columns existed
-  * still answer identically; a term whose rows were appended in two
-  * batches reads as one dictionary entry; an NRT refresh reloads only
-  * the new segments.
+/** Per-segment read state: a segment loads its resident slices and its
+  * dictionary in one job on first use; after that a searcher runs no Spark
+  * job for any dictionary read (term stats, expansion, spelling, suggest)
+  * and exactly one RDD job, with no SQL execution, per top-k query. The
+  * dictionary built from the slices equals the `terms` table for every
+  * writer of a segment; segments written before the singleton and
+  * positions columns existed still answer identically; a term whose rows
+  * were appended in two batches reads as one dictionary entry; an NRT
+  * refresh loads only the new segments and releases the dropped ones.
   */
 class SegmentReaderSpec extends SparkTestBase {
 
@@ -23,10 +26,10 @@ class SegmentReaderSpec extends SparkTestBase {
   private val NDocs = 600L
 
   /** Docs `from until until` of the synthetic corpus as a segment at `dir`. */
-  private def build(dir: String, from: Long, until: Long): SegmentManifest = {
+  private def build(dir: String, from: Long, until: Long, c: IndexConfig = cfg): SegmentManifest = {
     import spark.implicits._
     val pages = (from until until).map(Corpus.page(_)).map(p => (p.url, p.text))
-    IndexBuilder.buildSegment(spark.createDataset(pages), dir, cfg)
+    IndexBuilder.buildSegment(spark.createDataset(pages), dir, c)
   }
 
   private lazy val oneSeg: Seq[SegmentManifest] = Seq(build(s"${tmpDir("jobs1")}/seg", 0L, NDocs))
@@ -47,10 +50,13 @@ class SegmentReaderSpec extends SparkTestBase {
       assert(ts.keySet == terms.toSet, s"missing stats: ${terms.filterNot(ts.contains)}")
       assert(statsLog.jobs == 0, s"termStats ran ${statsLog.jobs} jobs")
       queries.zip(parsed).foreach { case (s, q) =>
-        val (hits, log) = countJobs(se.topK(q, 10).collect())
+        val (ds, log) = countJobs(se.topK(q, 10))
+        assert(log.jobs == 1 && log.executions.isEmpty,
+          s"topK('$s') ran ${log.jobs} jobs: ${log.executions}")
+        val (hits, cLog) = countJobs(ds.collect())
         assert(hits.nonEmpty, s"vacuous job count for '$s'")
-        assert(log.jobs == 1, s"topK('$s') ran ${log.jobs} jobs: ${log.executions}")
-        val plan = se.topK(q, 10).queryExecution.executedPlan
+        assert(cLog.jobs == 0, s"collecting topK('$s') ran ${cLog.jobs} jobs")
+        val plan = ds.queryExecution.executedPlan
         assert(!plan.isInstanceOf[AdaptiveSparkPlanExec] &&
           plan.find(_.isInstanceOf[Exchange]).isEmpty, s"exchange in topK('$s'):\n$plan")
         val (ids, mLog) = countJobs(se.matching(q).collect())
@@ -59,6 +65,17 @@ class SegmentReaderSpec extends SparkTestBase {
         assert(all.nonEmpty && sLog.jobs <= 1, s"scoreMatches('$s') ran ${sLog.executions}")
       }
     }
+
+  test("cold searcher: the first query runs the load job and the query job, then stats run none") {
+    val se = new IndexSearcher(spark, Seq(build(s"${tmpDir("cold")}/seg", 0L, NDocs)))
+    val q = se.parse("court OR law")
+    val (hits, log) = countJobs(se.topK(q, 10).collect())
+    assert(hits.nonEmpty && log.jobs == 2 && log.executions.forall(_._2 == 0),
+      s"cold topK ran ${log.jobs} jobs: ${log.executions}")
+    val (ts, statsLog) = countJobs(se.termStats(Seq("court", "law", "state")))
+    assert(ts.size == 3 && statsLog.jobs == 0, s"warm termStats ran ${statsLog.jobs} jobs")
+    assert(hits.toSeq == new IndexSearcher(spark, oneSeg).topK(q, 10).collect().toSeq)
+  }
 
   test("warm searchers, 1 and 3 segments: every dictionary read runs no job, both agree") {
     import org.apache.spark.sql.Row
@@ -111,7 +128,7 @@ class SegmentReaderSpec extends SparkTestBase {
 
     val fresh = new IndexSearcher(spark, oneSeg)
     val legacy = new IndexSearcher(spark, Seq(Manifest.read(old).get))
-    // hapax terms take the singleton fast path on the fresh segment only
+    // hapax terms: a one-posting block on both layouts
     val hapax = spark.read.parquet(s"${seg.dir}/terms").where(col("docFreq") === 1)
       .orderBy("term").select("term").limit(2).collect().map(_.getString(0)).toSeq
     assert(hapax.size == 2, "corpus has no hapax terms")
@@ -178,5 +195,88 @@ class SegmentReaderSpec extends SparkTestBase {
     val (ts, log) = countJobs(mgr.acquire().termStats(terms))
     assert(log.jobs == 1, s"expected one job (s1's dictionary), saw ${log.executions}")
     assert(ts == IndexSearcher.open(spark, root).termStats(terms))
+  }
+
+  test("the dictionary from the slices == the terms table: builder, merger, splitter, appends, old layout") {
+    import org.apache.spark.sql.functions.sum
+    // 16-doc buckets, and slices of ~8 KB of postings: several per segment
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+    val c = cfg.copy(bucketShift = 4)
+    val built = build(s"${tmpDir("dict-built")}/seg", 0L, 400L, c)
+    val other = build(s"${tmpDir("dict-other")}/seg", 400L, NDocs, c)
+    val merged = SegmentMerger.merge(spark, Seq(built.dir, other.dir), s"${tmpDir("dict-merged")}/seg", c)
+    val parts = IndexSplitter.split(spark, merged.dir,
+      Seq(s"${tmpDir("dict-split0")}/seg", s"${tmpDir("dict-split1")}/seg"), c)
+    val appended = build(s"${tmpDir("dict-appended")}/seg", 0L, 200L, c)
+    import spark.implicits._
+    def feats(ids: Seq[Long]) = ids.map(Corpus.page(_)).map(p =>
+      (p.url, "rank", (p.url.hashCode & 0xff) + 1f)).toDF("url", "feature", "value")
+    FeatureIndexer.addFeatures(spark, appended.dir, feats(0L until 120L))
+    FeatureIndexer.addFeatures(spark, appended.dir, feats(120L until 200L))
+    val old = s"${tmpDir("dict-old")}/seg"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(other.dir), new java.io.File(old))
+    val tmp = s"$old/terms.tmp"
+    spark.read.parquet(s"$old/terms").drop("singletonDocId", "singletonFreq", "singletonNorm", "len")
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$old/terms"))
+    assert(new java.io.File(tmp).renameTo(new java.io.File(s"$old/terms")))
+    Manifest.commit(old, Manifest.read(old).get.copy(dir = old))
+    val segs = Seq("builder" -> built.dir, "merger" -> merged.dir, "splitter 0" -> parts(0).dir,
+      "splitter 1" -> parts(1).dir, "two appends" -> appended.dir, "old layout" -> old)
+    for ((label, dir) <- segs) {
+      val brute = spark.read.parquet(s"$dir/terms").groupBy("term")
+        .agg(sum("docFreq"), sum("totalTermFreq")).as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(brute.size > 100, s"vacuous dictionary check for $label")
+      val searchers = Seq(spark -> "one slice", small -> "several slices").map {
+        case (session, slicing) =>
+          val se = new IndexSearcher(session, Seq(Manifest.read(dir).get))
+          val got = se.dictTerms().map(t => (t.term, t.docFreq, t.totalTermFreq))
+          assert(got == brute, s"$label, $slicing: dictionary differs from the terms table")
+          se
+      }
+      val sliceCount = spark.sparkContext.getPersistentRDDs.values
+        .filter(r => r.name == s"slices $dir").map(_.getNumPartitions).toSeq.sorted
+      assert(sliceCount.head == 1 && sliceCount.last > 1, s"$label: slices per load $sliceCount")
+      searchers.foreach(_.release())
+    }
+  }
+
+  test("refresh releases the slices of dropped readers: never more resident than live") {
+    val root = tmpDir("release")
+    def resident: Int = spark.sparkContext.getPersistentRDDs.values
+      .filter(r => r.name != null && r.name.startsWith(s"slices $root/")).map(_.getNumPartitions).sum
+    val q = Query.or("court", "law")
+    var next = 0L
+    def add(name: String): Unit = {
+      build(s"$root/$name", next, next + 100L)
+      next += 100L
+      LiveSet.add(root, Seq(name))
+    }
+    add("s0")
+    val mgr = new SearcherManager(spark, root)
+    for (i <- 1 to 6) {
+      add(s"s$i")
+      if (i % 3 == 0) {
+        val live = LiveSet.read(root).get._2
+        SegmentMerger.merge(spark, live.map(n => s"$root/$n"), s"$root/m$i", cfg)
+        LiveSet.swap(root, live, Seq(s"m$i"))
+      }
+      assert(mgr.maybeRefresh())
+      assert(mgr.acquire().topK(q, 10).collect().nonEmpty)
+      val live = LiveSet.manifests(root).size
+      assert(resident > 0 && resident <= live, s"step $i: $resident slices resident, $live live segments")
+    }
+  }
+
+  test("a similarity view over a segment with deletes runs no job") {
+    val seg = build(s"${tmpDir("view-deletes")}/seg", 0L, 200L)
+    import spark.implicits._
+    Deletes.add(spark, seg.dir, Seq(3L, 5L, 8L).map(java.lang.Long.valueOf).toDS())
+    val base = new IndexSearcher(spark, Seq(Manifest.read(seg.dir).get))
+    assert(base.hasDeletes)
+    val (view, log) = countJobs(base.withSimilarity(Similarity.Classic))
+    assert(log.jobs == 0, s"the Classic view ran ${log.jobs} jobs: ${log.executions}")
+    assert(view.hasDeletes)
   }
 }

@@ -5,16 +5,24 @@ import graft.corpus.{Corpus, Page}
 import graft.index.{Deletes, IndexBuilder, IndexConfig, SegmentManifest}
 import graft.search.{IndexSearcher, Intervals, PhraseQuery, Query}
 
-/** A segment is the unit of query parallelism: every partition of a query's
-  * blocks holds one segment, and each segment scores bucket by bucket, in
-  * docId order, into one collector. With many buckets per segment and
-  * tombstones in one segment, the pruned top-10 equals the exhaustive one,
-  * the brute-force oracle and a one-segment index of the same docs; match
-  * sets, scored matches, phrase counts and interval hits equal the
-  * one-segment index's.
+/** A resident slice is the unit of query parallelism: each segment loads as
+  * several bucket-range slices (a session with a small
+  * `spark.sql.files.maxPartitionBytes`), and each slice scores bucket by
+  * bucket, in docId order, into one collector. With several slices per
+  * segment and tombstones in one segment, the pruned top-10 equals the
+  * exhaustive one, the brute-force oracle and a one-segment, one-slice
+  * index of the same docs; match sets, scored matches, phrase counts and
+  * interval hits equal the one-slice index's.
   */
 class SegmentSliceSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Slices of ~8 KB of postings: several per segment. */
+  private lazy val sliced = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+    s
+  }
 
   private val cfg = IndexConfig(bucketShift = 4, numPostingPartitions = 4,
     numDocPartitions = 2, storePositions = true)
@@ -34,7 +42,7 @@ class SegmentSliceSpec extends SparkTestBase {
     val one = build("slice-one", pages)
     Deletes.add(spark, segs(1).dir, deleted.toSeq.map(d => java.lang.Long.valueOf(d - PerSeg)).toDS())
     Deletes.add(spark, one.dir, deleted.toSeq.map(java.lang.Long.valueOf).toDS())
-    (new IndexSearcher(spark, segs), new IndexSearcher(spark, Seq(one)))
+    (new IndexSearcher(sliced, segs), new IndexSearcher(spark, Seq(one)))
   }
 
   private lazy val oracle = new BruteForceOracle(pages, StandardAnalyzer.Default)
@@ -47,11 +55,31 @@ class SegmentSliceSpec extends SparkTestBase {
   private def hits(ds: org.apache.spark.sql.Dataset[graft.search.ScoredDoc]): Seq[(Long, Double)] =
     ds.collect().toSeq.map(h => (h.docId, h.score))
 
-  test("every partition holds one segment's blocks, many buckets each") {
-    val parts = multi.blocksFor(Seq("the", "court")).rdd
-      .mapPartitions(it => Iterator(it.map(b => (b.seg, b.bucket)).toSeq)).collect().toSeq
-    assert(parts.map(_.map(_._1).toSet) == Seq(Set(0), Set(1), Set(2)))
-    parts.foreach(p => assert(p.map(_._2).distinct.size >= 4, s"few buckets: $p"))
+  /** Each segment's resident slice count, by segment directory. */
+  private def slicesOf(se: IndexSearcher): Seq[Int] = se.segments.map { m =>
+    spark.sparkContext.getPersistentRDDs.values.filter(_.name == s"slices ${m.dir}")
+      .map(_.getNumPartitions).toSeq match { case Seq(n) => n; case ns => sys.error(s"$ns") }
+  }
+
+  test("every segment loads as several bucket-range slices holding its exact blocks") {
+    val terms = Seq("the", "court")
+    val got = multi.blocksFor(terms).collect().toSeq
+    assert(single.blocksFor(terms).collect().length > got.length / 2)
+    assert(slicesOf(multi).forall(_ >= 3), s"slices per segment: ${slicesOf(multi)}")
+    assert(slicesOf(single) == Seq(1))
+    def row(term: String, seg: Int, bucket: Long, first: Long, last: Long, n: Int,
+        streams: Seq[Array[Byte]]) = (term, seg, bucket, first, last, n, streams.map(Option(_).map(_.toSeq)))
+    val want = multi.segments.zipWithIndex.flatMap { case (m, seg) =>
+      spark.read.parquet(s"${m.dir}/postings").where($"term".isin(terms: _*)).collect().toSeq.map { r =>
+        row(r.getAs[String]("term"), seg, r.getAs[Long]("bucket"), r.getAs[Long]("firstDocId"),
+          r.getAs[Long]("lastDocId"), r.getAs[Int]("numDocs"), Seq("docsPacked", "freqsPacked",
+            "normsPacked", "impacts", "posPacked").map(r.getAs[Array[Byte]]))
+      }
+    }
+    assert(want.map(r => (r._2, r._3)).distinct.size >= 20, "few buckets: the slicing check is vacuous")
+    assert(got.map(b => row(b.term, b.seg, b.bucket, b.firstDocId, b.lastDocId, b.numDocs,
+      Seq(b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))).sortBy(r => (r._1, r._2, r._4)) ==
+      want.sortBy(r => (r._1, r._2, r._4)))
   }
 
   test("top-10: pruned == exhaustive == oracle == one segment, tombstones honoured") {
@@ -109,7 +137,7 @@ class SegmentSliceSpec extends SparkTestBase {
   }
 
   test("a query term absent from some segments still scores one slice per segment") {
-    // a hapax takes the synthesized singleton block; it lives in one segment
+    // a hapax lives in one slice of one segment
     import scala.jdk.CollectionConverters._
     val hapax = oracle.docTf.iterator.flatMap(_._1.keySet.asScala)
       .find(t => oracle.docFreq(t) == 1).get
