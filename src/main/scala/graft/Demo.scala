@@ -58,7 +58,7 @@ object Demo {
         val searcher = IndexSearcher.open(spark, dir)
         val terms = rest.map(t => searcher.parse(t).terms.head)
         val t0 = System.nanoTime()
-        val hits = searcher.phraseFreqsIndexed(terms)
+        val hits = searcher.phraseFreqs(terms)
           .toDF("docId", "freq")
           .join(searcher.docsTable.select($"docId", $"url"), "docId")
           .orderBy($"freq".desc, $"docId".asc).limit(10).collect()

@@ -407,17 +407,6 @@ object SparkEntry {
   private def bpeModelFor(spark: SparkSession, sfDir: String): Bpe.BpeModel =
     bpeModels.getOrElseUpdate(sfDir, Bpe.train(docsDf(spark, sfDir), "text", 8))
 
-  /** Stored text keyed by the searcher's docIds (url ↔ doc_id bridge). */
-  private def textByDocId(
-      s: SparkSession, d: String
-  ): Dataset[(Long, String)] = {
-    val se = searcherFor(s, d)
-    import s.implicits._
-    se.docsTable.select($"docId", $"url")
-      .join(pages(s, d), "url")
-      .select($"docId", $"text").as[(Long, String)]
-  }
-
   // ------------------------------------------------------- flagship
 
   /** Flagship: end-to-end index + BM25 WAND top-10 on sf0.001. */
@@ -821,25 +810,20 @@ object SparkEntry {
     "ft_phrase_match" -> ((s, d) => {
       val se = searcherFor(s, d)
       import s.implicits._
-      se.phraseFreqs(Seq("data", "query"), textByDocId(s, d))
+      se.phraseFreqs(Seq("data", "query"))
         .toDF("docId", "phrase_freq")
         .join(se.docsTable.select($"docId", $"url"), "docId")
         .select(docIdOf($"url"), $"phrase_freq".cast("bigint").as("phrase_freq"))
         .orderBy($"doc_id")
     }),
-    "ft_phrase_topk" -> ((s, d) => {
-      val se = searcherFor(s, d)
-      import s.implicits._
-      se.fetchDocs(se.phraseTopK(Seq("data", "query"), textByDocId(s, d), 60).collect())
-        .select(docIdOf($"url"), round($"score", 6).as("score"))
-        .orderBy($"score".desc, $"doc_id".asc).limit(10)
-    }),
+    "ft_phrase_topk" -> ((s, d) =>
+      topKDf(searcherFor(s, d), PhraseQuery(Seq("data", "query")), 10)),
     "ft_phrase_slop" -> ((s, d) => {
       // sloppy phrase at slop=2 (ref search/SloppyPhraseMatcher.java —
-      // ordered-window variant; see IndexSearcher.phraseFreqsSloppy)
+      // ordered-window variant; see PhraseScorer)
       val se = searcherFor(s, d)
       import s.implicits._
-      se.phraseFreqsSloppy(Seq("data", "query"), slop = 2)
+      se.phraseFreqs(Seq("data", "query"), slop = 2)
         .toDF("docId", "sloppy_freq")
         .join(se.docsTable.select($"docId", $"url"), "docId")
         .select(docIdOf($"url"), $"sloppy_freq".cast("bigint").as("sloppy_freq"))

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -463,81 +463,27 @@ object IndexBuilder {
     val spark = docTokens.sparkSession
     import spark.implicits._
     val shift = cfg.bucketShift
-    // narrow explode: (term, bucket, docId, freq, norm[, positions])
-    val tokens =
-      if (cfg.multiField && cfg.storePositions)
-        docTokens
-          .select($"docId",
-            explode(arrays_zip($"terms", $"freqs", $"termNorms", $"positions")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"tf.termNorms".as("norm"),
-            $"tf.positions".as("pos")
-          )
-      else if (cfg.multiField)
-        // per-term field norms (FieldKey-encoded terms): the norm column
-        // comes from the zipped termNorms array instead of the doc scalar
-        docTokens
-          .select($"docId",
-            explode(arrays_zip($"terms", $"freqs", $"termNorms")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"tf.termNorms".as("norm")
-          )
-      else if (cfg.storePositions && cfg.storeOffsets)
-        docTokens
-          .select($"docId", $"norm",
-            explode(arrays_zip($"terms", $"freqs", $"positions", $"offsets")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"norm",
-            $"tf.positions".as("pos"),
-            $"tf.offsets".as("offs")
-          )
-      else if (cfg.storePositions && cfg.storePayloads)
-        docTokens
-          .select($"docId", $"norm",
-            explode(arrays_zip($"terms", $"freqs", $"positions", $"payloads")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"norm",
-            $"tf.positions".as("pos"),
-            $"tf.payloads".as("pays")
-          )
-      else if (cfg.storePositions)
-        docTokens
-          .select($"docId", $"norm",
-            explode(arrays_zip($"terms", $"freqs", $"positions")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"norm",
-            $"tf.positions".as("pos")
-          )
-      else
-        docTokens
-          .select($"docId", $"norm", explode(arrays_zip($"terms", $"freqs")).as("tf"))
-          .select(
-            $"tf.terms".as("term"),
-            shiftright($"docId", shift).as("bucket"),
-            $"docId",
-            $"tf.freqs".as("freq"),
-            $"norm"
-          )
+    // narrow explode: (term, bucket, docId, freq, norm[, pos][, offs|pays]),
+    // the column order `blockBuilder` reads by ordinal. A multi-field build
+    // zips the per-term field norms (FieldKey-encoded terms) instead of
+    // taking the doc's scalar norm, and keeps no offsets or payloads.
+    val zipped = Seq("terms", "freqs") ++
+      (if (cfg.multiField) Seq("termNorms") else Nil) ++
+      (if (cfg.storePositions) Seq("positions") else Nil) ++
+      (if (cfg.multiField || !cfg.storePositions) Nil
+       else if (cfg.storeOffsets) Seq("offsets")
+       else if (cfg.storePayloads) Seq("payloads")
+       else Nil)
+    val asName = Map("terms" -> "term", "freqs" -> "freq", "termNorms" -> "norm",
+      "positions" -> "pos", "offsets" -> "offs", "payloads" -> "pays")
+    def tf(c: String): Column = col(s"tf.$c").as(asName(c))
+    val (docCols, norm, rest) =
+      if (cfg.multiField) (Seq($"docId"), tf("termNorms"), zipped.drop(3))
+      else (Seq($"docId", $"norm"), $"norm", zipped.drop(2))
+    val tokens = docTokens
+      .select(docCols :+ explode(arrays_zip(zipped.map(col): _*)).as("tf"): _*)
+      .select(Seq(tf("terms"), shiftright($"docId", shift).as("bucket"), $"docId",
+        tf("freqs"), norm) ++ rest.map(tf): _*)
     // HASH-shuffle the raw token stream: repartitionByRange would pay a full
     // extra pass over all (term, doc) rows just to sample range boundaries
     // (RangePartitioner reservoir-samples every partition). Hash placement
@@ -722,15 +668,7 @@ object IndexBuilder {
     import spark.implicits._
     blocks
       .groupBy($"term")
-      .agg(sum($"numDocs").as("docFreq"), sum($"freqSum").as("totalTermFreq"),
-        // singleton-doc inline (ref Lucene103PostingsWriter.java:564): the
-        // one-posting term's (docId, freq, norm) are already block metadata
-        when(sum($"numDocs") === 1, min($"firstDocId")).otherwise(-1L)
-          .as("singletonDocId"),
-        when(sum($"numDocs") === 1, max($"maxFreq")).otherwise(0)
-          .cast("int").as("singletonFreq"),
-        when(sum($"numDocs") === 1, min($"minNorm")).otherwise(0)
-          .cast("int").as("singletonNorm"))
+      .agg(sum($"numDocs").as("docFreq"), sum($"freqSum").as("totalTermFreq"))
   }
 
   /** Reversed-term dictionary: (rterm = reverse(term), term), range-sorted

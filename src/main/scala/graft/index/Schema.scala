@@ -133,10 +133,7 @@ object Schema {
   /** One term's dictionary stats — the `terms` table row (range-partitioned
     * sorted Parquet, the block-tree/.tim re-expression) and the row every
     * dictionary read returns. Searchers build their dictionary from the
-    * postings themselves ([[graft.search.TermDict]]); the table's
-    * `singleton*` columns (a hapax term's inline posting, ref
-    * `Lucene103PostingsWriter.java:564`) are written by the build and read
-    * by no query path.
+    * postings themselves ([[graft.search.TermDict]]).
     */
   final case class TermStat(term: String, docFreq: Long, totalTermFreq: Long)
 

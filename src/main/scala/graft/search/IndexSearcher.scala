@@ -336,11 +336,21 @@ final class IndexSearcher(
     * `FuzzyQuery.java` uses). Expansion is capped at `maxExpansions`
     * (`IndexSearcher.maxClauseCount` spirit, default 1024).
     */
-  def parseFull(s: String, maxExpansions: Int = 1024): Query = {
-    val q = Query.parse(s, analyzeOne, dictRewriter(maxExpansions))
-    if (IndexSearcher.hasPhrase(q))
-      require(segments.forall(_.hasPositions),
-        "phrase syntax needs an index built with storePositions")
+  def parseFull(s: String, maxExpansions: Int = 1024): Query =
+    positional(Query.parse(s, analyzeOne, dictRewriter(maxExpansions)))
+
+  /** The one positions check: phrase, multiphrase, interval and span
+    * matching read indexed positions only (ref `PhraseWeight`, which throws
+    * on a field indexed without them), so a segment built without
+    * `storePositions` fails here, on the driver, before any job.
+    */
+  private def requirePositions(): Unit =
+    require(segments.forall(_.hasPositions),
+      "phrase, interval and span queries need an index built with storePositions")
+
+  /** `q`, after [[requirePositions]] when it holds a positional node. */
+  private def positional(q: Query): Query = {
+    if (IndexSearcher.hasPhrase(q)) requirePositions()
     q
   }
 
@@ -375,27 +385,15 @@ final class IndexSearcher(
     * throws on malformed input.
     */
   def parseSimple(s: String, defaultAnd: Boolean = false,
-      maxExpansions: Int = 1024): Query = {
-    val q = SimpleParser.parse(s, analyzeOne, dictRewriter(maxExpansions),
-      defaultAnd)
-    if (IndexSearcher.hasPhrase(q))
-      require(segments.forall(_.hasPositions),
-        "phrase syntax needs an index built with storePositions")
-    q
-  }
+      maxExpansions: Int = 1024): Query =
+    positional(SimpleParser.parse(s, analyzeOne, dictRewriter(maxExpansions), defaultAnd))
 
   /** Surround proximity syntax onto the intervals algebra — the
     * reference's `queryparser/surround` pairing; see [[SurroundParser]].
     * Distance operators need a positional index.
     */
-  def parseSurround(s: String, maxExpansions: Int = 1024): Query = {
-    val q = SurroundParser.parse(s, analyzeOne,
-      pat => expandWildcard(pat, maxExpansions))
-    if (IndexSearcher.hasPhrase(q))
-      require(segments.forall(_.hasPositions),
-        "surround distance operators need an index built with storePositions")
-    q
-  }
+  def parseSurround(s: String, maxExpansions: Int = 1024): Query =
+    positional(SurroundParser.parse(s, analyzeOne, pat => expandWildcard(pat, maxExpansions)))
 
   /** Phrase with embedded multi-term atoms — the reference's
     * `queryparser/complexPhrase/ComplexPhraseQueryParser.java`: inside the
@@ -411,8 +409,7 @@ final class IndexSearcher(
     */
   def parseComplexPhrase(phrase: String, slop: Int = 0,
       maxExpansions: Int = 1024): Query = {
-    require(segments.forall(_.hasPositions),
-      "complex phrase needs an index built with storePositions")
+    requirePositions()
     val FuzzyRe = "^(.*?)~([0-9]?)$".r
     var pos = 0
     val slots = Seq.newBuilder[(Int, Seq[String])]
@@ -571,10 +568,8 @@ final class IndexSearcher(
         val stats = sq.synonyms.flatMap(ts.get)
         val df = if (stats.isEmpty) 0L else stats.map(_.docFreq).max
         val ttf = stats.map(_.totalTermFreq).sum // SynonymQuery ttf = sum
-        val field = graft.index.FieldKey.fieldOf(sq.synonyms.head)
-        Map(Executor.skey(sq.key, boost) ->
-          simScorerX(Similarity.forField(similarity, field), df, ttf,
-            statsFor(field), boost))
+        Map(Executor.skey(sq.key, boost) -> fieldSim(
+          graft.index.FieldKey.fieldOf(sq.synonyms.head), Seq(TermStat(sq.key, df, ttf)), boost))
       case cf: CombinedFieldQuery =>
         Map(Executor.skey(cf.key, boost) -> combinedFieldSim(cf, ts, boost))
       case fq: FeatureQuery =>
@@ -595,24 +590,26 @@ final class IndexSearcher(
     walk(query, 1.0)
   }
 
-  /** Phrase weight: tf = phraseFreq, idf = Σ per-term idf (the reference's
-    * multi-term stats blend, `BM25Similarity.java:160-169` — same
-    * construction as [[phraseTopK]]); missing terms make the phrase
-    * unmatchable.
+  /** Phrase weight: tf = phraseFreq, weighed over the stats of every
+    * phrase position's term (the reference's `PhraseWeight` term-stats
+    * array, see [[simScorerX]]); missing terms make the phrase unmatchable.
     */
   private def phraseSim(pq: PhraseQuery, ts: Map[String, TermStat], boost: Double): SimScorer =
     if (pq.phraseTerms.exists(t => !ts.contains(t))) new ConstScorer(0.0)
-    else sumIdfSim(pq.phraseTerms, ts, boost)
+    else fieldSim(graft.index.FieldKey.fieldOf(pq.phraseTerms.head), pq.phraseTerms.map(ts), boost)
 
-  /** MultiPhrase weight: idf summed over every EXISTING term of every slot
-    * (the reference's `MultiPhraseWeight` term-stats union); a slot with no
+  /** MultiPhrase weight over every EXISTING term of every slot (the
+    * reference's `MultiPhraseWeight` term-stats union); a slot with no
     * existing term makes the query unmatchable.
     */
   private def multiPhraseSim(
       mq: MultiPhraseQuery, ts: Map[String, TermStat], boost: Double): SimScorer = {
     val perSlot = mq.slots.map { case (_, slotTs) => slotTs.filter(ts.contains) }
     if (perSlot.exists(_.isEmpty)) new ConstScorer(0.0)
-    else sumIdfSim(perSlot.flatten.distinct, ts, boost)
+    else {
+      val terms = perSlot.flatten.distinct
+      fieldSim(graft.index.FieldKey.fieldOf(terms.head), terms.map(ts), boost)
+    }
   }
 
   /** BM25F pseudo-term weight (ref `CombinedFieldQuery.CombinedFieldWeight`):
@@ -639,7 +636,8 @@ final class IndexSearcher(
     cf.fieldTerms.foreach { case (t, w) =>
       ttf = (ttf + w * ts.get(t).map(_.totalTermFreq).getOrElse(0L)).toLong
     }
-    simScorer(df, math.max(1L, ttf), CollectionStats(docCount, sttf), boost)
+    simScorerX(Similarity.forField(similarity, graft.index.FieldKey.DefaultField),
+      Seq(TermStat(cf.key, df, math.max(1L, ttf))), CollectionStats(docCount, sttf), boost)
   }
 
   /** Multi-field query parsing (ref
@@ -710,77 +708,6 @@ final class IndexSearcher(
     }
   }
 
-  /** Σ-idf weight over `terms` (all present in `ts`) for the active
-    * (similarity, precision) mode — the multi-term stats construction shared
-    * by phrase and multiphrase weights.
-    */
-  private def sumIdfSim(terms: Seq[String], ts: Map[String, TermStat], boost: Double): SimScorer =
-    sumIdfSimX(
-      Similarity.forField(similarity, graft.index.FieldKey.fieldOf(terms.head)),
-      terms, ts, boost)
-
-  private def sumIdfSimX(
-      sim: Similarity, terms: Seq[String], ts: Map[String, TermStat], boost: Double): SimScorer = {
-    val st = statsFor(graft.index.FieldKey.fieldOf(terms.head))
-    sim match {
-      case Similarity.Bm25 => precision match {
-        case Precision.FloatExact =>
-          val idf = terms.map(t => Bm25.idf(ts(t).docFreq, st.docCount).toDouble).sum
-          new Bm25FloatScorer(k1.toFloat, b.toFloat,
-            (boost * idf).toFloat, Bm25.avgFieldLength(st))
-        case Precision.DoubleOracle =>
-          val idf = terms.map(t => Bm25.idfD(ts(t).docFreq, st.docCount)).sum
-          new Bm25DoubleScorer(k1, b, boost * idf, Bm25.avgFieldLengthD(st))
-      }
-      case Similarity.Classic => precision match {
-        case Precision.FloatExact =>
-          val idf = terms.map(t => TfIdf.idf(ts(t).docFreq, st.docCount).toDouble).sum
-          new TfIdfFloatScorer((boost * idf).toFloat)
-        case Precision.DoubleOracle =>
-          new TfIdfDoubleScorer(
-            boost * terms.map(t => TfIdf.idfD(ts(t).docFreq, st.docCount)).sum)
-      }
-      case Similarity.Bool => new ConstScorer(boost)
-      case Similarity.LmDirichlet(mu) =>
-        // pseudo-term collection probability from the summed ttf (the
-        // SynonymQuery stats blend applied to the phrase's terms)
-        val ttf = terms.map(t => ts(t).totalTermFreq).sum
-        new LmDirichletScorer(mu, boost, (ttf + 1d) / (st.sumTotalTermFreq + 1d),
-          precision == Precision.FloatExact)
-      case Similarity.LmJelinekMercer(lambda) =>
-        val ttf = terms.map(t => ts(t).totalTermFreq).sum
-        new LmJelinekMercerScorer(lambda, boost, (ttf + 1d) / (st.sumTotalTermFreq + 1d),
-          precision == Precision.FloatExact)
-      case s @ (_: Similarity.Dfr | _: Similarity.Ib) =>
-        // pseudo-term stats blend: df = max per-term df (the SynonymQuery
-        // blend), ttf summed (like the LM cases above)
-        dfrIbScorer(s, terms.map(t => ts(t).docFreq).max,
-          terms.map(t => ts(t).totalTermFreq).sum, st, boost)
-      case Similarity.Dfi(m) =>
-        new DfiScorer(IndexSearcher.dfiMeasureOrd(m),
-          terms.map(t => ts(t).totalTermFreq).sum, st.sumTotalTermFreq,
-          boost, precision == Precision.FloatExact)
-      case ax: Similarity.Axiomatic =>
-        AxiomaticScorer(ax, terms.map(t => ts(t).docFreq).max, st.docCount,
-          st.sumTotalTermFreq, boost, precision == Precision.FloatExact)
-      case Similarity.RawTf =>
-        new RawTfScorer(boost, precision == Precision.FloatExact)
-      case Similarity.SweetSpot(lnMin, lnMax, steep, tfBase, tfMin) =>
-        // classic idf sum (the TFIDF frame SweetSpot extends)
-        new SweetSpotScorer(
-          boost * terms.map(t => TfIdf.idfD(ts(t).docFreq, st.docCount)).sum,
-          lnMin, lnMax, steep, tfBase, tfMin,
-          precision == Precision.FloatExact)
-      case Similarity.Multi(subs) =>
-        new SumSimScorer(subs.map(sumIdfSimX(_, terms, ts, boost)),
-          precision == Precision.FloatExact)
-      case pf: Similarity.PerField => // callers resolve; safe fallback
-        sumIdfSimX(
-          Similarity.forField(pf, graft.index.FieldKey.fieldOf(terms.head)),
-          terms, ts, boost)
-    }
-  }
-
   /** DFR / IB scorer from (pseudo-)term stats — A / after-effect / λ are
     * pure functions of (df, ttf, N), precomputed here; the normalization
     * runs per (freq, norm) inside the scorer.
@@ -832,71 +759,70 @@ final class IndexSearcher(
   }
 
   private def scorerFor(term: String, ts: Map[String, TermStat], boost: Double): SimScorer =
-    ts.get(term) match {
-      case None => new ConstScorer(0.0)
-      case Some(t) =>
-        val field = graft.index.FieldKey.fieldOf(term)
-        simScorerX(Similarity.forField(similarity, field),
-          t.docFreq, t.totalTermFreq, statsFor(field), boost)
-    }
+    fieldSim(graft.index.FieldKey.fieldOf(term), ts.get(term).toSeq, boost)
 
-  /** Per-term scorer for the active (similarity, precision) mode; the boost
-    * folds into the weight (ref `Similarity#scorer(boost, ...)`). The
-    * 4-arg form scores under the index-default field's model; callers with
-    * a field in hand pre-resolve PerField via [[Similarity.forField]].
+  /** [[simScorerX]] under `field`'s model and collection stats. */
+  private def fieldSim(field: String, ts: Seq[TermStat], boost: Double): SimScorer =
+    simScorerX(Similarity.forField(similarity, field), ts, statsFor(field), boost)
+
+  /** The one similarity dispatch (ref `Similarity#scorer(boost,
+    * collectionStats, termStats...)`): the scorer of one term, or of the
+    * several terms a phrase weighs as one, for the active precision, with
+    * the boost folded into the weight. Each model reduces the term stats
+    * as the reference does:
+    *  - BM25, Classic and SweetSpot: Σ idf. In float-exact mode the float
+    *    idfs sum in double and narrow to float BEFORE the float boost
+    *    multiplies (`BM25Similarity`/`TFIDFSimilarity#idfExplain(
+    *    CollectionStatistics, TermStatistics[])`, then `boost * idf`);
+    *  - DFR, IB and Axiomatic: max docFreq and Σ totalTermFreq (the
+    *    SynonymQuery blend);
+    *  - LM and DFI: Σ totalTermFreq.
+    * No stats, or an absent term (docFreq 0), scores nothing.
     */
-  private def simScorer(df: Long, ttf: Long, st: CollectionStats, boost: Double): SimScorer =
-    simScorerX(Similarity.forField(similarity, graft.index.FieldKey.DefaultField),
-      df, ttf, st, boost)
-
   private def simScorerX(
-      sim: Similarity, df: Long, ttf: Long, st: CollectionStats, boost: Double): SimScorer =
-    if (df == 0) new ConstScorer(0.0)
-    else sim match {
-      case Similarity.Bm25 => precision match {
-        case Precision.FloatExact =>
-          new Bm25FloatScorer(k1.toFloat, b.toFloat,
-            boost.toFloat * Bm25.idf(df, st.docCount), Bm25.avgFieldLength(st))
-        case Precision.DoubleOracle =>
-          new Bm25DoubleScorer(k1, b,
-            boost * Bm25.idfD(df, st.docCount), Bm25.avgFieldLengthD(st))
+      sim: Similarity, ts: Seq[TermStat], st: CollectionStats, boost: Double): SimScorer =
+    if (ts.isEmpty || ts.exists(_.docFreq == 0)) new ConstScorer(0.0)
+    else {
+      val floatExact = precision == Precision.FloatExact
+      def sumIdf(idf: (Long, Long) => Double): Double =
+        ts.iterator.map(t => idf(t.docFreq, st.docCount)).sum
+      def df: Long = ts.iterator.map(_.docFreq).max
+      def ttf: Long = ts.iterator.map(_.totalTermFreq).sum
+      sim match {
+        case Similarity.Bm25 =>
+          if (floatExact)
+            new Bm25FloatScorer(k1.toFloat, b.toFloat,
+              boost.toFloat * sumIdf(Bm25.idf(_, _).toDouble).toFloat, Bm25.avgFieldLength(st))
+          else
+            new Bm25DoubleScorer(k1, b, boost * sumIdf(Bm25.idfD), Bm25.avgFieldLengthD(st))
+        case Similarity.Classic =>
+          if (floatExact)
+            new TfIdfFloatScorer(boost.toFloat * sumIdf(TfIdf.idf(_, _).toDouble).toFloat)
+          else new TfIdfDoubleScorer(boost * sumIdf(TfIdf.idfD))
+        case Similarity.Bool => new ConstScorer(boost)
+        case Similarity.LmDirichlet(mu) =>
+          // p(t|C) = (ttf+1)/(sttf+1), the DefaultCollectionModel
+          new LmDirichletScorer(mu, boost, (ttf + 1d) / (st.sumTotalTermFreq + 1d), floatExact)
+        case Similarity.LmJelinekMercer(lambda) =>
+          new LmJelinekMercerScorer(lambda, boost, (ttf + 1d) / (st.sumTotalTermFreq + 1d),
+            floatExact)
+        case s @ (_: Similarity.Dfr | _: Similarity.Ib) => dfrIbScorer(s, df, ttf, st, boost)
+        case Similarity.Dfi(m) =>
+          new DfiScorer(IndexSearcher.dfiMeasureOrd(m), ttf, st.sumTotalTermFreq, boost,
+            floatExact)
+        case ax: Similarity.Axiomatic =>
+          AxiomaticScorer(ax, df, st.docCount, st.sumTotalTermFreq, boost, floatExact)
+        case Similarity.RawTf => new RawTfScorer(boost, floatExact)
+        case Similarity.SweetSpot(lnMin, lnMax, steep, tfBase, tfMin) =>
+          // classic idf (the TFIDF frame SweetSpot extends)
+          new SweetSpotScorer(boost * sumIdf(TfIdf.idfD), lnMin, lnMax, steep, tfBase, tfMin,
+            floatExact)
+        case Similarity.Multi(subs) =>
+          new SumSimScorer(subs.map(simScorerX(_, ts, st, boost)), floatExact)
+        case pf: Similarity.PerField => // callers resolve; safe fallback
+          simScorerX(Similarity.forField(pf, graft.index.FieldKey.fieldOf(ts.head.term)),
+            ts, st, boost)
       }
-      case Similarity.Classic => precision match {
-        case Precision.FloatExact =>
-          new TfIdfFloatScorer(boost.toFloat * TfIdf.idf(df, st.docCount))
-        case Precision.DoubleOracle =>
-          new TfIdfDoubleScorer(boost * TfIdf.idfD(df, st.docCount))
-      }
-      case Similarity.Bool => new ConstScorer(boost)
-      case Similarity.LmDirichlet(mu) =>
-        // p(t|C) = (ttf+1)/(sttf+1), the DefaultCollectionModel
-        new LmDirichletScorer(mu, boost,
-          (ttf + 1d) / (st.sumTotalTermFreq + 1d),
-          precision == Precision.FloatExact)
-      case Similarity.LmJelinekMercer(lambda) =>
-        new LmJelinekMercerScorer(lambda, boost,
-          (ttf + 1d) / (st.sumTotalTermFreq + 1d),
-          precision == Precision.FloatExact)
-      case s: Similarity.Dfr => dfrIbScorer(s, df, ttf, st, boost)
-      case s: Similarity.Ib  => dfrIbScorer(s, df, ttf, st, boost)
-      case Similarity.Dfi(m) =>
-        new DfiScorer(IndexSearcher.dfiMeasureOrd(m), ttf, st.sumTotalTermFreq,
-          boost, precision == Precision.FloatExact)
-      case ax: Similarity.Axiomatic =>
-        AxiomaticScorer(ax, df, st.docCount, st.sumTotalTermFreq, boost,
-          precision == Precision.FloatExact)
-      case Similarity.RawTf =>
-        new RawTfScorer(boost, precision == Precision.FloatExact)
-      case Similarity.SweetSpot(lnMin, lnMax, steep, tfBase, tfMin) =>
-        new SweetSpotScorer(boost * TfIdf.idfD(df, st.docCount),
-          lnMin, lnMax, steep, tfBase, tfMin,
-          precision == Precision.FloatExact)
-      case Similarity.Multi(subs) =>
-        new SumSimScorer(subs.map(simScorerX(_, df, ttf, st, boost)),
-          precision == Precision.FloatExact)
-      case pf: Similarity.PerField => // callers resolve; default-field fallback
-        simScorerX(Similarity.forField(pf, graft.index.FieldKey.DefaultField),
-          df, ttf, st, boost)
     }
 
   // ------------------------------------------------------------ blocks
@@ -986,7 +912,7 @@ final class IndexSearcher(
     * scoring runs when this is called; the result is a local Dataset.
     */
   def topK(query0: Query, k: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
-    val query = Query.rewrite(query0) // BooleanQuery#rewrite normalizations
+    val query = positional(Query.rewrite(query0)) // BooleanQuery#rewrite normalizations
     val rows = segTermRows(query.terms.toSeq.sorted)
     val scorers = scorerMap(query, aggStats(rows))
     val hits = IndexSearcher.mergeTopK(sliceTopK(query, rows, scorers, k, pruning), k)
@@ -997,14 +923,12 @@ final class IndexSearcher(
     * paths that need the full scored match set.
     */
   def scoreMatches(query0: Query): Dataset[ScoredDoc] = {
-    val query = Query.rewrite(query0)
+    val query = positional(Query.rewrite(query0))
     val rows = segTermRows(query.terms.toSeq.sorted)
     val scorers = scorerMap(query, aggStats(rows))
     spark.createDataset(perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
       buckets.flatMap(Executor.build(query, _, scorers)).flatMap { sc =>
-        // the score is read while the scorer sits on the doc
-        Iterator.continually(sc.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
-          .collect { case d if !dead.contains(d) => ScoredDoc(d + base, sc.score) }
+        IndexSearcher.live(sc, dead).map(d => ScoredDoc(d + base, sc.score))
       }
     })(IndexSearcher.ScoredDocEncoder)
   }
@@ -1273,126 +1197,35 @@ final class IndexSearcher(
     * facets, grouping, and joins.
     */
   def matching(query0: Query): Dataset[Long] = {
-    val query = Query.rewrite(query0)
+    val query = positional(Query.rewrite(query0))
     val rows = segTermRows(query.terms.toSeq.sorted)
     perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
       buckets.flatMap(Executor.matchIds(query, _)).filter(d => !dead.contains(d)).map(_ + base)
     }.toDS().toDF("docId").as[Long]
   }
 
-  /** Exact-phrase frequencies — two-phase matching, the re-expression of
-    * `search/PhraseQuery.java:71` + `search/ExactPhraseMatcher.java:39`:
-    * phase 1 approximates with the conjunction of all phrase terms over the
-    * positional-free index (cheap, prunes to docs containing every term);
-    * phase 2 verifies adjacency exactly by re-analyzing the stored text of
-    * the candidates (the stored-fields table is the row store, so this is a
-    * candidate-sized join + narrow flatMap, not a corpus scan).
-    *
-    * Position semantics match the reference: tokens carry analyzer positions
-    * (stopword gaps preserved), and a phrase hit requires positions
-    * `p, p+1, …, p+len-1`.
-    *
-    * @param textByDocId stored text keyed by this searcher's docIds
-    * @return (docId, phraseFreq) for docs with ≥1 phrase occurrence
+  /** Phrase frequencies: (docId, phraseFreq) for every live doc where the
+    * phrase occurs — exact adjacency at `slop = 0`, ordered windows of
+    * span ≤ (n-1)+slop otherwise (see [[PhraseScorer]], the matcher
+    * [[topK]] runs; ref `ExactPhraseMatcher`/`SloppyPhraseMatcher`). Reads
+    * indexed positions only.
     */
-  def phraseFreqs(
-      terms: Seq[String],
-      textByDocId: Dataset[(Long, String)]
-  ): Dataset[(Long, Int)] =
-    if (segments.forall(_.hasPositions)) phraseFreqsIndexed(terms)
-    else phraseFreqsStored(terms, textByDocId)
-
-  /** Native positional phrase matching over indexed positions (the
-    * `ExactPhraseMatcher` re-expression, `search/ExactPhraseMatcher.java:39`):
-    * leapfrog conjunction of the phrase terms' posting iterators; on every
-    * aligned doc, count positions p of the first term with `p+i` present in
-    * term i's positions (binary search over the sorted per-doc position
-    * arrays decoded lazily from the block's .pos payload).
-    */
-  def phraseFreqsIndexed(terms: Seq[String]): Dataset[(Long, Int)] =
-    phraseCounts(terms, IndexSearcher.countExact)
-
-  /** Sloppy-phrase frequencies at proximity `slop` (ref
-    * `search/SloppyPhraseMatcher.java` — our window semantics are the
-    * ordered variant: a match is a strictly increasing position tuple
-    * `p_0 < … < p_{n-1}` with term i at `p_i` and span
-    * `p_{n-1} - p_0 <= (n-1) + slop`; slop = 0 degenerates to the exact
-    * phrase). Runs over the positional index: leapfrog conjunction aligns
-    * candidate docs, then the per-doc sorted position arrays are counted
-    * with a bounded recursive walk (positions decode lazily per block).
-    */
-  def phraseFreqsSloppy(terms: Seq[String], slop: Int): Dataset[(Long, Int)] =
-    if (slop == 0) phraseFreqsIndexed(terms)
-    else phraseCounts(terms, IndexSearcher.countSloppy(_, slop))
-
-  /** (docId, count(positions)) for live docs holding every phrase term with
-    * a non-zero count; `count` gets each phrase slot's sorted positions.
-    */
-  private def phraseCounts(terms: Seq[String],
-      count: Array[Array[Int]] => Int): Dataset[(Long, Int)] = {
-    require(terms.nonEmpty, "empty phrase")
-    require(segments.forall(_.hasPositions), "index was built without positions")
-    val phrase = terms.toArray
-    val unique = terms.distinct
-    perSlice(segTermRows(unique)) { (base, dead, buckets) =>
-      buckets.flatMap { byTerm =>
-        if (unique.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val scorerOf =
-            unique.map(t => t -> new TermScorer(byTerm(t), new ConstScorer(1.0))).toMap
-          val conj = new ConjunctionScorer(scorerOf.values.toArray, Array.empty)
-          Iterator.continually(conj.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
-            .filter(d => !dead.contains(d))
-            .map(d => (d + base, count(phrase.map(t => scorerOf(t).positions))))
-            .filter(_._2 > 0)
-        }
+  def phraseFreqs(terms: Seq[String], slop: Int = 0): Dataset[(Long, Int)] = {
+    requirePositions()
+    val pq = PhraseQuery(terms, slop)
+    val one = new ConstScorer(1.0)
+    perSlice(segTermRows(pq.phraseTerms.distinct)) { (base, dead, buckets) =>
+      buckets.flatMap(Executor.phraseScorer(pq, _, one)).flatMap { sc =>
+        IndexSearcher.live(sc, dead).map(d => (d + base, sc.freq))
       }
     }.toDS()
   }
 
-  /** Sloppy verification against stored text (duel path for
-    * [[phraseFreqsSloppy]]): re-analyze candidates and count the same
-    * window tuples over analyzer positions.
-    */
-  def phraseFreqsSloppyStored(
-      terms: Seq[String], slop: Int,
-      textByDocId: Dataset[(Long, String)]
-  ): Dataset[(Long, Int)] = {
-    require(terms.nonEmpty, "empty phrase")
-    val cand = matching(
-      BoolQuery(terms.map(t => TermQuery(t) -> (Occur.Must: Occur))))
-    val an = analyzer
-    val phrase = terms.toArray
-    val slopL = slop
-    textByDocId.toDF("docId", "text")
-      .join(cand.toDF("docId"), "docId")
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = an.tokens(text)
-          val byTerm = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-          toks.foreach { t =>
-            var b = byTerm.get(t.term)
-            if (b == null) { b = scala.collection.mutable.ArrayBuffer[Int](); byTerm.put(t.term, b) }
-            b += t.position
-          }
-          if (phrase.exists(t => byTerm.get(t) == null)) None
-          else {
-            val slotPos = phrase.map(t => byTerm.get(t).toArray)
-            val f = IndexSearcher.countSloppy(slotPos, slopL)
-            if (f > 0) Some((id, f)) else None
-          }
-        }
-      }
-  }
-
-  /** Interval (span) query evaluation over the positional index — the
-    * distributed re-expression of the reference's intervals module (ref
-    * `lucene/queries/src/java/org/apache/lucene/queries/intervals/IntervalsSource.java`):
-    * candidate docs align via the leapfrog conjunction of the source's
-    * required terms (or a disjunctive sweep when the source is a pure OR),
-    * then each doc's decoded position lists feed the minimal-interval
-    * combiners locally.
+  /** Interval (span) matches over the positional index — the distributed
+    * re-expression of the reference's intervals module (ref
+    * `lucene/queries/src/java/org/apache/lucene/queries/intervals/IntervalsSource.java`),
+    * read from the [[IntervalDocScorer]] that a scored [[IntervalQuery]]
+    * runs, on each doc it matches.
     *
     * @return (docId, nIntervals, minWidth): the count of minimal matching
     *         intervals and the narrowest match width — `minWidth` is the
@@ -1401,46 +1234,14 @@ final class IndexSearcher(
     *         SQL oracle can reproduce it).
     */
   def intervalHits(src: Intervals.Source): Dataset[(Long, Int, Int)] = {
-    require(segments.forall(_.hasPositions), "index was built without positions")
-    val unique = src.terms.distinct
-    val required = src.required.distinct
-    perSlice(segTermRows(unique)) { (base, dead, buckets) =>
-      buckets.flatMap { byTerm =>
-        if (required.exists(t => !byTerm.contains(t)) ||
-            unique.forall(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val scorerOf = unique.filter(byTerm.contains)
-            .map(t => t -> new TermScorer(byTerm(t), new ConstScorer(1.0))).toMap
-          // (docId, nIntervals, minWidth) of doc d, all scorers at or past d
-          def hit(d: Long): Option[(Long, Int, Int)] = {
-            val posOf: String => Array[Int] = t => scorerOf.get(t) match {
-              case Some(s) if s.docId == d => s.positions
-              case _ => Array.emptyIntArray
-            }
-            val ivs = Intervals.eval(src, posOf)
-            if (ivs.isEmpty) None
-            else Some((d + base, ivs.length,
-              ivs.iterator.map(iv => Intervals.endOf(iv) - Intervals.startOf(iv) + 1).min))
-          }
-          val docs: Iterator[Long] =
-            if (required.nonEmpty) {
-              val conj = new ConjunctionScorer(required.map(scorerOf).toArray, Array.empty)
-              val opt = scorerOf.filterNot { case (t, _) => required.contains(t) }.values
-              Iterator.continually(conj.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
-                .map { d => opt.foreach(s => if (s.docId < d) s.advance(d)); d }
-            } else {
-              // pure disjunction: sweep the union of the present terms' docs,
-              // moving off the previous doc only when the next one is pulled
-              val all = scorerOf.values.toArray
-              all.foreach(_.nextDoc())
-              var prev = -1L
-              Iterator.continually {
-                all.foreach(s => if (s.docId == prev) s.nextDoc())
-                prev = all.iterator.map(_.docId).min
-                prev
-              }.takeWhile(_ != DocScorer.NoMoreDocs)
-            }
-          docs.filter(d => !dead.contains(d)).flatMap(hit)
+    requirePositions()
+    val iq = IntervalQuery(src)
+    perSlice(segTermRows(src.terms.distinct)) { (base, dead, buckets) =>
+      buckets.flatMap(Executor.intervalScorer(iq, _, 1.0)).flatMap { sc =>
+        IndexSearcher.live(sc, dead).map { d =>
+          val ivs = sc.intervals
+          (d + base, ivs.length,
+            ivs.iterator.map(iv => Intervals.endOf(iv) - Intervals.startOf(iv) + 1).min)
         }
       }
     }.toDS()
@@ -1455,64 +1256,6 @@ final class IndexSearcher(
     intervalHits(src).toDF("docId", "n", "minWidth")
       .join(matching(filter).toDF("docId"), "docId")
       .as[(Long, Int, Int)]
-
-  /** Two-phase fallback for indexes without positions: conjunction over the
-    * index, then adjacency verification against stored text.
-    */
-  def phraseFreqsStored(
-      terms: Seq[String],
-      textByDocId: Dataset[(Long, String)]
-  ): Dataset[(Long, Int)] = {
-    require(terms.nonEmpty, "empty phrase")
-    val cand = matching(
-      BoolQuery(terms.map(t => TermQuery(t) -> (Occur.Must: Occur))))
-    val an = analyzer
-    val phrase = terms.toArray
-    textByDocId.toDF("docId", "text")
-      .join(cand.toDF("docId"), "docId")
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = an.tokens(text)
-          val byPos = new java.util.HashMap[Int, String](toks.size * 2)
-          toks.foreach(t => byPos.put(t.position, t.term))
-          var freq = 0
-          toks.foreach { t =>
-            if (t.term == phrase(0)) {
-              var ok = true
-              var i = 1
-              while (ok && i < phrase.length) {
-                if (byPos.get(t.position + i) != phrase(i)) ok = false
-                i += 1
-              }
-              if (ok) freq += 1
-            }
-          }
-          if (freq > 0) Some((id, freq)) else None
-        }
-      }
-  }
-
-  /** BM25 top-k for an exact phrase: tf = phraseFreq, weight = Σ term idf
-    * (the reference sums per-term idfs for multi-term stats,
-    * `search/similarities/BM25Similarity.java:160-169`), norm as usual.
-    */
-  def phraseTopK(
-      terms: Seq[String],
-      textByDocId: Dataset[(Long, String)],
-      k: Int
-  ): Dataset[ScoredDoc] = {
-    val ts = termStats(terms)
-    val scorer: SimScorer =
-      if (terms.exists(t => !ts.contains(t))) new ConstScorer(0.0)
-      else sumIdfSim(terms, ts, 1.0) // same multi-term stats blend per model
-    phraseFreqs(terms, textByDocId).toDF("docId", "freq")
-      .join(docsTable.select($"docId", $"norm"), "docId")
-      .as[(Long, Int, Int)]
-      .map { case (id, freq, norm) => ScoredDoc(id, scorer.score(freq, norm)) }
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-  }
 
   // ------------------------------------------------------------ explain
 
@@ -1547,7 +1290,7 @@ final class IndexSearcher(
   /** Per-term positions of one (segment, local docId) — the positional
     * analogue of [[freqNormAt]] (same ≤1-block-per-term point lookup, plus
     * the .pos payload decode). Terms absent from the doc are absent from
-    * the map; empty when the segment lacks positions.
+    * the map. [[explain]] checks for positions before it gets here.
     */
   private def positionsAt(
       terms: Seq[String], seg: Int, local: Long
@@ -1738,7 +1481,7 @@ final class IndexSearcher(
     */
   def spanRangeFreqs(term: String, start: Int, end: Int): Dataset[(Long, Int)] = {
     import graft.codec.BlockCodec
-    require(segments.forall(_.hasPositions), "index was built without positions")
+    requirePositions()
     perSlice(segTermRows(Seq(term))) { (base, dead, buckets) =>
       buckets.flatMap(_.getOrElse(term, Array.empty[BlockView])).flatMap { b =>
         if (b.posPacked == null) Iterator.empty
@@ -1867,7 +1610,7 @@ final class IndexSearcher(
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
-    val (query, tRewrite) = timed(Query.rewrite(query0))
+    val (query, tRewrite) = timed(positional(Query.rewrite(query0)))
     val qTerms = query.terms.toSeq.sorted
     val (rows, tStats) = timed(segTermRows(qTerms))
     val ts = aggStats(rows)
@@ -1895,6 +1638,7 @@ final class IndexSearcher(
     * doc (same SimScorer objects), with idf/tf/norm inputs spelled out.
     */
   def explain(query: Query, docId: Long): Explanation = {
+    positional(query)
     val seg = {
       var i = bases.length - 1
       while (i > 0 && bases(i) > docId) i -= 1
@@ -1986,7 +1730,7 @@ final class IndexSearcher(
           val slotPos = pq.phraseTerms.map(pos(_)).toArray
           val f =
             if (pq.slop > 0) IndexSearcher.countSloppy(slotPos, pq.slop)
-            else IndexSearcher.countExact(slotPos)
+            else IndexSearcher.countExactOffsets(slotPos, slotPos.indices.toArray)
           if (f == 0)
             Explanation.noMatch(s"phrase \"${pq.phraseTerms.mkString(" ")}\"~${pq.slop} does not occur in doc $docId")
           else {
@@ -2259,6 +2003,13 @@ object IndexSearcher {
     * (the collector's tie rule: the earlier doc wins), with Spark SQL's
     * double ordering (`ORDER BY score DESC, docId ASC`).
     */
+  /** The live docs `sc` matches, in docId order; the scorer sits on each
+    * doc while the caller reads it (score, phrase freq, intervals).
+    */
+  private[search] def live(sc: DocScorer, dead: Tombstones): Iterator[Long] =
+    Iterator.continually(sc.nextDoc()).takeWhile(_ != DocScorer.NoMoreDocs)
+      .filter(d => !dead.contains(d))
+
   private[search] def mergeTopK(parts: Array[Array[ScoredDoc]], k: Int): Array[ScoredDoc] =
     parts.flatten.sorted(HitOrder).take(k)
 
@@ -2304,13 +2055,15 @@ object IndexSearcher {
     total
   }
 
-  /** Any positional (phrase / multiphrase) node anywhere in the tree? */
   private[search] def dfiMeasureOrd(m: Similarity.DfiMeasure): Int = m match {
     case Similarity.DfiMeasure.Standardized => 0
     case Similarity.DfiMeasure.Saturated    => 1
     case Similarity.DfiMeasure.ChiSquared   => 2
   }
 
+  /** Any positional (phrase / multiphrase / interval) node anywhere in
+    * the tree?
+    */
   def hasPhrase(q: Query): Boolean = q match {
     case _: PhraseQuery      => true
     case _: MultiPhraseQuery => true
@@ -2386,29 +2139,10 @@ object IndexSearcher {
     case _                      => Seq.empty
   }
 
-  /** Count exact-phrase matches: positions p of slot 0 with `p + k` present
-    * in slot k's sorted positions for every k (the `ExactPhraseMatcher`
-    * counting loop).
-    */
-  private[graft] def countExact(slotPos: Array[Array[Int]]): Int = {
-    val p0 = slotPos(0)
-    var f = 0
-    var j = 0
-    while (j < p0.length) {
-      var ok = true
-      var k = 1
-      while (ok && k < slotPos.length) {
-        if (java.util.Arrays.binarySearch(slotPos(k), p0(j) + k) < 0) ok = false
-        k += 1
-      }
-      if (ok) f += 1
-      j += 1
-    }
-    f
-  }
-
-  /** [[countExact]] generalized to explicit slot offsets (MultiPhraseQuery
-    * gaps): slot k must occur at `p + offsets(k) - offsets(0)`.
+  /** Count exact-phrase matches (the `ExactPhraseMatcher` counting loop):
+    * positions p of slot 0 with slot k at `p + offsets(k) - offsets(0)` in
+    * its sorted positions for every k — offsets `0..n-1` for a phrase, the
+    * slot offsets (with their gaps) for a MultiPhraseQuery.
     */
   private[graft] def countExactOffsets(
       slotPos: Array[Array[Int]], offsets: Array[Int]): Int = {
@@ -2537,24 +2271,8 @@ object Executor {
       // value — the plain TermScorer with a FeatureSimScorer gives exact
       // scores AND sound impact bounds (monotone decode)
       blocks.get(fq.term).map(bs => new TermScorer(bs, scorers(skey(fq.key, boost))))
-    case pq: PhraseQuery =>
-      val uniqueTerms = pq.phraseTerms.distinct
-      if (uniqueTerms.exists(t => !blocks.contains(t))) None
-      else {
-        val sim = scorers(skey(pq.key, boost))
-        val byT = uniqueTerms.map(t => t -> new TermScorer(blocks(t), sim)).toMap
-        Some(new PhraseScorer(pq.phraseTerms.map(byT).toArray,
-          uniqueTerms.map(byT).toArray, pq.slop, sim))
-      }
-    case iq: IntervalQuery =>
-      val unique = iq.source.terms.distinct.filter(blocks.contains)
-      val required = iq.source.required.distinct
-      if (required.exists(t => !blocks.contains(t)) || unique.isEmpty) None
-      else {
-        val byT = unique.map(t => t -> new TermScorer(blocks(t), new ConstScorer(1.0))).toMap
-        Some(new IntervalDocScorer(byT, required.map(byT).toArray,
-          iq.source, Intervals.minExtent(iq.source), iq.pivot, boost))
-      }
+    case pq: PhraseQuery => phraseScorer(pq, blocks, scorers(skey(pq.key, boost)))
+    case iq: IntervalQuery => intervalScorer(iq, blocks, boost)
     case mq: MultiPhraseQuery =>
       val perSlot = mq.slots.map { case (_, slotTs) => slotTs.distinct.filter(blocks.contains) }
       if (perSlot.exists(_.isEmpty)) None
@@ -2630,6 +2348,38 @@ object Executor {
         case (Some(c), Some(e)) => Some(new ReqExclScorer(c, e))
         case (c, _)             => c
       }
+  }
+
+  /** The phrase matcher over one bucket; None when a phrase term has no
+    * block there. [[IndexSearcher.phraseFreqs]] reads its `freq`.
+    */
+  def phraseScorer(
+      pq: PhraseQuery, blocks: Map[String, Array[BlockView]], sim: SimScorer
+  ): Option[PhraseScorer] = {
+    val uniqueTerms = pq.phraseTerms.distinct
+    if (uniqueTerms.exists(t => !blocks.contains(t))) None
+    else {
+      val byT = uniqueTerms.map(t => t -> new TermScorer(blocks(t), sim)).toMap
+      Some(new PhraseScorer(pq.phraseTerms.map(byT).toArray,
+        uniqueTerms.map(byT).toArray, pq.slop, sim))
+    }
+  }
+
+  /** The interval matcher over one bucket; None when a required term has
+    * no block there, or no term has. [[IndexSearcher.intervalHits]] reads
+    * its `intervals`.
+    */
+  def intervalScorer(
+      iq: IntervalQuery, blocks: Map[String, Array[BlockView]], boost: Double
+  ): Option[IntervalDocScorer] = {
+    val unique = iq.source.terms.distinct.filter(blocks.contains)
+    val required = iq.source.required.distinct
+    if (required.exists(t => !blocks.contains(t)) || unique.isEmpty) None
+    else {
+      val byT = unique.map(t => t -> new TermScorer(blocks(t), new ConstScorer(1.0))).toMap
+      Some(new IntervalDocScorer(byT, required.map(byT).toArray,
+        iq.source, Intervals.minExtent(iq.source), iq.pivot, boost))
+    }
   }
 
   private def orScorer(children: Seq[DocScorer]): Option[DocScorer] =

@@ -334,8 +334,12 @@ final class PhraseScorer(
     sim.score(unique.map(_.globalMaxFreq).min, unique.map(_.globalMinNorm).min)
 
   private val lead = unique.minBy(_.cost)
+  private val offsets = Array.range(0, slots.length)
 
   def docId: Long = cur
+
+  /** Phrase occurrences in the current doc. */
+  def freq: Int = curFreq
 
   /** Count phrase occurrences at the currently aligned doc. */
   private def phraseFreq(): Int = {
@@ -343,7 +347,7 @@ final class PhraseScorer(
     var i = 0
     while (i < slots.length) { slotPos(i) = slots(i).positions; i += 1 }
     if (slop > 0) IndexSearcher.countSloppy(slotPos, slop)
-    else IndexSearcher.countExact(slotPos)
+    else IndexSearcher.countExactOffsets(slotPos, offsets)
   }
 
   /** Advance to the next doc >= target where all terms align AND the
@@ -544,6 +548,7 @@ final class IntervalDocScorer(
   import DocScorer.NoMoreDocs
   private var cur: Long = -1L
   private var curFreq = 0.0
+  private var curIvs: Array[Long] = null // of the last doc evaluated
 
   private val all: Array[TermScorer] = byTerm.values.toArray
   private val optional: Array[TermScorer] = all.filterNot(required.contains)
@@ -556,6 +561,11 @@ final class IntervalDocScorer(
 
   def docId: Long = cur
 
+  /** The minimal intervals of the current doc ([[Intervals.startOf]] /
+    * [[Intervals.endOf]] decode each).
+    */
+  def intervals: Array[Long] = curIvs
+
   private val emptyPos = Array.emptyIntArray
 
   private def freqAt(d: Long): Double = {
@@ -564,6 +574,7 @@ final class IntervalDocScorer(
       case _ => emptyPos
     }
     val ivs = Intervals.eval(src, posOf)
+    curIvs = ivs
     var f = 0.0
     var i = 0
     while (i < ivs.length) {

@@ -166,7 +166,7 @@ object Streaming {
         val slotPos = pq.phraseTerms.map(p(_)).toArray
         val f =
           if (pq.slop > 0) IndexSearcher.countSloppy(slotPos, pq.slop)
-          else IndexSearcher.countExact(slotPos)
+          else IndexSearcher.countExactOffsets(slotPos, slotPos.indices.toArray)
         f > 0
       }
     case iq: graft.search.IntervalQuery =>

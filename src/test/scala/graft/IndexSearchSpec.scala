@@ -666,37 +666,35 @@ class IndexSearchSpec extends SparkTestBase {
     }
   }
 
-  test("phrase: two-phase match == brute-force positional scan") {
+  /** The corpus again, built with positions (phrase matching reads
+    * indexed positions only).
+    */
+  private lazy val posSearcher: IndexSearcher = {
     import spark.implicits._
-    val pagesDs = spark.createDataset(pagesLocal.map(p => (p.url, p.text)))
-      .toDF("url", "text")
-    val txt = searcher.docsTable.select($"docId", $"url")
-      .join(pagesDs, "url").select($"docId", $"text").as[(Long, String)]
-    val phrase = Seq("the", "of")
-    val got = searcher.phraseFreqs(phrase, txt).collect().toMap
+    val dir = tmpDir("posseg")
+    IndexBuilder.buildSegment(spark.createDataset(pagesLocal.map(p => (p.url, p.text))), dir,
+      cfg.copy(storePositions = true))
+    new IndexSearcher(spark, Seq(Manifest.read(dir).get))
+  }
 
-    val idOf = pagesLocal.map(_.url).sorted.zipWithIndex
-      .map { case (u, i) => u -> i.toLong }.toMap
-    val an = StandardAnalyzer.Default
-    val expected = pagesLocal.flatMap { p =>
-      val toks = an.tokens(p.text)
-      var f = 0
-      var i = 0
-      while (i < toks.size - 1) {
-        if (toks(i).term == phrase(0) && toks(i + 1).term == phrase(1) &&
-            toks(i + 1).position == toks(i).position + 1) f += 1
-        i += 1
-      }
-      if (f > 0) Some(idOf(p.url) -> f) else None
-    }.toMap
+  private def byUrl[V](se: IndexSearcher, hits: Array[(Long, V)]): Map[String, V] = {
+    import spark.implicits._
+    val urlOf = se.docsTable.select($"docId", $"url").as[(Long, String)].collect().toMap
+    hits.map { case (d, v) => urlOf(d) -> v }.toMap
+  }
+
+  test("phrase: positional match == brute-force positional scan") {
+    val phrase = Seq("the", "of")
+    val got = byUrl(posSearcher, posSearcher.phraseFreqs(phrase).collect())
+    val expected = phraseByUrl(phrase)
     assert(expected.nonEmpty, "test phrase never occurs — pick another")
     assert(got == expected)
 
     // scored variant: ranked by (score desc, docId asc), docs ⊆ match set
-    val top = searcher.phraseTopK(phrase, txt, 10).collect()
+    val top = posSearcher.topK(PhraseQuery(phrase), 10).collect()
     assert(top.nonEmpty)
     assert(top.sortBy(s => (-s.score, s.docId)).toSeq == top.toSeq)
-    assert(top.forall(s => expected.contains(s.docId)))
+    assert(byUrl(posSearcher, top.map(s => s.docId -> s.score)).keySet.subsetOf(expected.keySet))
   }
 
   /** Brute-force phrase frequencies keyed by url (docId-layout independent). */
@@ -723,53 +721,48 @@ class IndexSearchSpec extends SparkTestBase {
     }.toMap
   }
 
-  test("positional index: indexed phrase == stored-text phrase == brute force") {
-    import spark.implicits._
-    val dir = tmpDir("posseg")
-    val ds = spark.createDataset(pagesLocal.map(p => (p.url, p.text)))
-    IndexBuilder.buildSegment(ds, dir, cfg.copy(storePositions = true))
-    val se = new IndexSearcher(spark, Seq(Manifest.read(dir).get))
+  /** Brute-force sloppy-phrase frequencies keyed by url: every ordered
+    * window of analyzer tokens, term i at position p_i with
+    * p_0 < … < p_{n-1} and p_{n-1} - p_0 <= (n-1) + slop, enumerated
+    * token by token.
+    */
+  private def sloppyByUrl(phrase: Seq[String], slop: Int): Map[String, Int] = {
+    val maxSpan = phrase.length - 1 + slop
+    pagesLocal.flatMap { p =>
+      val toks = StandardAnalyzer.Default.tokens(p.text).map(t => (t.position, t.term))
+      def windows(i: Int, p0: Int, prev: Int): Int =
+        if (i == phrase.length) 1
+        else toks.collect {
+          case (pos, t) if t == phrase(i) && pos > prev && pos - p0 <= maxSpan =>
+            windows(i + 1, p0, pos)
+        }.sum
+      val f = toks.collect { case (p0, t) if t == phrase.head => windows(1, p0, p0) }.sum
+      if (f > 0) Some(p.url -> f) else None
+    }.toMap
+  }
+
+  test("positional index: phrase counts == brute force, exact and sloppy") {
+    val se = posSearcher
     assert(se.segments.head.hasPositions)
-
-    val pagesDs = spark.createDataset(pagesLocal.map(p => (p.url, p.text)))
-      .toDF("url", "text")
-    val txt = se.docsTable.select($"docId", $"url")
-      .join(pagesDs, "url").select($"docId", $"text").as[(Long, String)]
-    val urlOf = se.docsTable.select($"docId", $"url").as[(Long, String)]
-      .collect().toMap
-
-    for (phrase <- Seq(Seq("the", "of"), Seq("the", "of", "the"))) {
-      val indexed = se.phraseFreqsIndexed(phrase).collect()
-        .map { case (d, f) => urlOf(d) -> f }.toMap
-      val stored = se.phraseFreqsStored(phrase, txt).collect()
-        .map { case (d, f) => urlOf(d) -> f }.toMap
-      val brute = phraseByUrl(phrase)
-      assert(indexed == brute, s"indexed != brute for $phrase")
-      assert(stored == brute, s"stored != brute for $phrase")
-    }
+    for (phrase <- Seq(Seq("the", "of"), Seq("the", "of", "the")))
+      assert(byUrl(se, se.phraseFreqs(phrase).collect()) == phraseByUrl(phrase),
+        s"phrase != brute for $phrase")
     assert(phraseByUrl(Seq("the", "of")).nonEmpty)
 
-    // the dispatcher picks the positional path on positional segments, and
     // scoring on a positional segment stays rank-identical
     val q = Query.parse("court AND law")
     assert(se.topK(q, 10).collect().map(s => (s.docId, s.score)).toSeq ==
       oracle.topK(q, 10))
 
-    // sloppy phrase: indexed path == stored-text duel at every slop; slop=0
+    // sloppy phrase == ordered-window brute force at every slop; slop=0
     // degenerates to the exact phrase; counts grow monotonically with slop
     for (phrase <- Seq(Seq("the", "of"), Seq("court", "law"))) {
       var prevTotal = -1L
       for (slop <- 0 to 3) {
-        val indexed = se.phraseFreqsSloppy(phrase, slop).collect()
-          .map { case (d, f) => urlOf(d) -> f }.toMap
-        val stored = se.phraseFreqsSloppyStored(phrase, slop, txt).collect()
-          .map { case (d, f) => urlOf(d) -> f }.toMap
-        assert(indexed == stored, s"sloppy indexed != stored for $phrase slop=$slop")
-        if (slop == 0)
-          assert(indexed == se.phraseFreqsIndexed(phrase).collect()
-            .map { case (d, f) => urlOf(d) -> f }.toMap,
-            s"slop=0 != exact phrase for $phrase")
-        val total = indexed.values.map(_.toLong).sum
+        val got = byUrl(se, se.phraseFreqs(phrase, slop).collect())
+        assert(got == sloppyByUrl(phrase, slop), s"sloppy != brute for $phrase slop=$slop")
+        if (slop == 0) assert(got == phraseByUrl(phrase), s"slop=0 != exact phrase for $phrase")
+        val total = got.values.map(_.toLong).sum
         assert(total >= prevTotal, s"sloppy count not monotone in slop for $phrase")
         prevTotal = total
       }
@@ -800,7 +793,7 @@ class IndexSearchSpec extends SparkTestBase {
     // position-increment contract, end to end
     val urlOf = se.docsTable.select($"docId", $"url").as[(Long, String)]
       .collect().toMap
-    val got = se.phraseFreqsIndexed(Seq("court", "law")).collect()
+    val got = se.phraseFreqs(Seq("court", "law")).collect()
       .map { case (d, f) => urlOf(d) -> f }.toMap
     val brute = phraseByUrl(Seq("court", "law"), StandardAnalyzer.English)
     assert(got == brute)
@@ -830,7 +823,7 @@ class IndexSearchSpec extends SparkTestBase {
     val se = new IndexSearcher(spark, Seq(m))
     val urlOf = se.docsTable.select($"docId", $"url").as[(Long, String)]
       .collect().toMap
-    val got = se.phraseFreqsIndexed(Seq("the", "of")).collect()
+    val got = se.phraseFreqs(Seq("the", "of")).collect()
       .map { case (d, f) => urlOf(d) -> f }.toMap
     assert(got == phraseByUrl(Seq("the", "of")))
   }
@@ -1001,7 +994,7 @@ class IndexSearchSpec extends SparkTestBase {
     val se = new IndexSearcher(spark, Seq(Manifest.read(dir).get))
     val urlOf = se.docsTable.select($"docId", $"url").as[(Long, String)]
       .collect().toMap
-    val got = se.phraseFreqsIndexed(phrase).collect()
+    val got = se.phraseFreqs(phrase).collect()
       .map { case (d, f) => urlOf(d) -> f }.toMap
     assert(got == all -- victims, "phrase path must hide tombstoned docs")
 
@@ -1013,7 +1006,7 @@ class IndexSearchSpec extends SparkTestBase {
     val seM = new IndexSearcher(spark, Seq(m))
     val urlOfM = seM.docsTable.select($"docId", $"url").as[(Long, String)]
       .collect().toMap
-    val gotM = seM.phraseFreqsIndexed(phrase).collect()
+    val gotM = seM.phraseFreqs(phrase).collect()
       .map { case (d, f) => urlOfM(d) -> f }.toMap
     assert(gotM == all -- victims)
   }

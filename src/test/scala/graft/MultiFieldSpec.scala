@@ -140,7 +140,7 @@ class MultiFieldSpec extends SparkTestBase {
 
     val phrase = Seq("the", "of")
     val encoded = phrase.map(FieldKey.encode("body", _))
-    val got = se.phraseFreqsIndexed(encoded).collect().toMap
+    val got = se.phraseFreqs(encoded).collect().toMap
     // brute force: adjacency over the BODY field's analyzer positions only
     val sortedN = pagesLocal.take(n).sortBy(_.url).toVector
     val expected = sortedN.zipWithIndex.flatMap { case (p, d) =>
@@ -153,7 +153,7 @@ class MultiFieldSpec extends SparkTestBase {
     assert(got == expected)
     assert(expected.nonEmpty, "fixture should contain body phrases")
     // a title-scoped phrase never matches body adjacency spilling over
-    val titleGot = se.phraseFreqsIndexed(phrase.map(FieldKey.encode("title", _)))
+    val titleGot = se.phraseFreqs(phrase.map(FieldKey.encode("title", _)))
       .collect().toMap
     val titleExpected = sortedN.zipWithIndex.flatMap { case (p, d) =>
       val toks = an.tokens(fieldsOf(p.text).toMap.apply("title"))
@@ -180,7 +180,7 @@ class MultiFieldSpec extends SparkTestBase {
         storePositions = true, positionIncrementGap = 100))
     val se = new IndexSearcher(spark, Seq(Manifest.read(dir).get))
     def phraseDocs(terms: Seq[String]): Set[Long] =
-      se.phraseFreqsIndexed(terms.map(FieldKey.encode("tags", _)))
+      se.phraseFreqs(terms.map(FieldKey.encode("tags", _)))
         .collect().map(_._1).toSet
     // docIds are url rank: u0 -> 0, u1 -> 1, u2 -> 2
     assert(phraseDocs(Seq("w2", "w3")) == Set(1L),

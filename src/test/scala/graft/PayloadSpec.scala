@@ -61,8 +61,8 @@ class PayloadSpec extends SparkTestBase {
     val se = new IndexSearcher(spark, Seq(graft.index.Manifest.read(dir).get))
     // positions: court@0, law@2 (the stopword advanced position 1) —
     // exact phrase "court law" must NOT match, slop 1 must
-    assert(se.phraseFreqsIndexed(Seq("court", "law")).collect().isEmpty)
-    assert(se.phraseFreqsSloppy(Seq("court", "law"), slop = 1)
+    assert(se.phraseFreqs(Seq("court", "law")).collect().isEmpty)
+    assert(se.phraseFreqs(Seq("court", "law"), slop = 1)
       .collect().map(_._2).toSeq == Seq(1))
     // payloads survive next to the stopword gap
     assert(se.payloadScoreTopK("law", "sum", 10).collect()

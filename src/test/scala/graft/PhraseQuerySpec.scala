@@ -3,8 +3,8 @@ package graft
 import graft.index.{IndexBuilder, IndexConfig, Manifest}
 import graft.search._
 
-/** First-class PhraseQuery in the scorer tree: duels vs the dedicated phrase
-  * paths, boolean composition, parser syntax (quoted phrases, slop, ranges,
+/** First-class PhraseQuery in the scorer tree: duels vs brute force over
+  * analyzer tokens (double and float-exact), boolean composition, parser syntax (quoted phrases, slop, ranges,
   * wildcard, fuzzy), percolator phrase clauses, explain parity.
   */
 class PhraseQuerySpec extends SparkTestBase {
@@ -28,14 +28,53 @@ class PhraseQuerySpec extends SparkTestBase {
       precision = Precision.DoubleOracle)
   }
 
-  test("phrase node duels phraseTopK (same docs, same scores)") {
-    import spark.implicits._
-    val viaNode = searcher.topK(PhraseQuery(Seq("data", "query")), 10)
+  /** Brute force over the analyzer's tokens: (docId → phrase freq) of an
+    * exact phrase, and the BM25 inputs — per-term docFreq, doc lengths.
+    */
+  private lazy val toks = pages.map { case (_, t) =>
+    graft.analysis.StandardAnalyzer.Default.tokens(t).map(k => (k.position, k.term)) }
+  private def bruteFreqs(phrase: Seq[String]): Map[Long, Int] =
+    toks.zipWithIndex.flatMap { case (ts, d) =>
+      val at = ts.toMap
+      val f = ts.count { case (p, _) => phrase.indices.forall(i => at.get(p + i).contains(phrase(i))) }
+      if (f > 0) Some(d.toLong -> f) else None
+    }.toMap
+  private def docFreq(t: String): Long = toks.count(_.exists(_._2 == t)).toLong
+  private def normOf(d: Long): Int =
+    graft.codec.SmallFloat.intToByte4(toks(d.toInt).size) & 0xff
+
+  test("phrase node duels brute-force phrase scoring (same docs, same scores)") {
+    val phrase = Seq("data", "query")
+    val viaNode = searcher.topK(PhraseQuery(phrase), 10)
       .collect().map(s => s.docId -> s.score).toMap
-    val text = spark.createDataset(pages.zipWithIndex.map { case ((_, t), i) => (i.toLong, t) })
-    val viaPath = searcher.phraseTopK(Seq("data", "query"), text, 10)
-      .collect().map(s => s.docId -> s.score).toMap
-    assert(viaNode == viaPath)
+    val n = toks.size.toLong
+    val sim = new Bm25DoubleScorer(1.2, 0.75, phrase.map(t => Bm25.idfD(docFreq(t), n)).sum,
+      toks.map(_.size).sum / n.toDouble)
+    val brute = bruteFreqs(phrase).map { case (d, f) => d -> sim.score(f, normOf(d)) }
+    assert(brute.keySet == Set(0L, 4L))
+    assert(viaNode == brute)
+  }
+
+  test("float-exact boosted phrase: Σ idf narrows to float before the boost") {
+    // BM25Similarity#idfExplain(CollectionStatistics, TermStatistics[]) sums
+    // the float idfs in double and narrows; BM25Scorer then weighs boost *
+    // idf in float — not (boost * Σ idf) narrowed once
+    val fe = new IndexSearcher(spark, searcher.segments)
+    val (phrase, boost) = (Seq("data", "query"), 0.3)
+    val n = toks.size.toLong
+    val idfSum = phrase.map(t => Bm25.idf(docFreq(t), n).toDouble).sum
+    val avgdl = (toks.map(_.size).sum / n.toDouble).toFloat
+    def scores(weight: Float): Map[Long, Double] = {
+      val sim = new Bm25FloatScorer(1.2f, 0.75f, weight, avgdl)
+      bruteFreqs(phrase).map { case (d, f) => d -> sim.score(f, normOf(d)) }
+    }
+    val lucene = scores(boost.toFloat * idfSum.toFloat)
+    // the terms and boost are picked so the two narrowings disagree
+    assert(scores((boost * idfSum).toFloat) != lucene, "non-discriminating fixture")
+    val got = fe.topK(BoostQuery(PhraseQuery(phrase), boost), 10).collect()
+      .map(s => s.docId -> s.score).toMap
+    assert(got == lucene)
+    got.foreach { case (d, v) => assert(fe.explain(BoostQuery(PhraseQuery(phrase), boost), d).value == v) }
   }
 
   test("exact phrase matches adjacency only; sloppy widens, order matters") {
@@ -324,6 +363,31 @@ class PhraseQuerySpec extends SparkTestBase {
       IndexConfig(bucketShift = 9, numPostingPartitions = 2, numDocPartitions = 1))
     val s2 = new IndexSearcher(spark, Seq(Manifest.read(dir).get))
     intercept[IllegalArgumentException](s2.parseFull("\"a b\""))
+  }
+
+  test("a positions-free index fails every phrase path loudly, before any job") {
+    import spark.implicits._
+    import graft.search.Intervals.{Ordered, Term}
+    val dir = tmpDir("phq-nopos2")
+    IndexBuilder.buildSegment(
+      spark.createDataset(Seq("d0" -> "a b", "d1" -> "b a")), dir,
+      IndexConfig(bucketShift = 9, numPostingPartitions = 2, numDocPartitions = 1))
+    val s2 = new IndexSearcher(spark, Seq(Manifest.read(dir).get))
+    val phrase = PhraseQuery(Seq("a", "b"))
+    val (errors, log) = countJobs(Seq[() => Any](
+      () => s2.phraseFreqs(Seq("a", "b")),
+      () => s2.phraseFreqs(Seq("a", "b"), slop = 1),
+      () => s2.topK(phrase, 10),
+      () => s2.topK(BoolQuery(Seq(TermQuery("a") -> (Occur.Must: Occur),
+        phrase -> (Occur.Should: Occur))), 10),
+      () => s2.explain(phrase, 0L),
+      () => s2.matching(phrase),
+      () => s2.intervalHits(Ordered(Seq(Term("a"), Term("b"))))
+    ).map(f => intercept[IllegalArgumentException](f()).getMessage))
+    errors.foreach(m => assert(m.contains("need an index built with storePositions"), m))
+    assert(log.jobs == 0, s"a job ran before the check: ${log.executions}")
+    // term queries still run on the same index
+    assert(s2.topK(TermQuery("a"), 10).collect().length == 2)
   }
 
   test("complex phrase: wildcard/fuzzy atoms expand into MultiPhrase slots") {

@@ -126,14 +126,14 @@ class SegmentSliceSpec extends SparkTestBase {
       assert(got.nonEmpty, s"vacuous $label")
       assert(got == f(single).collect().toSet, label)
     }
-    same("exact phrase", _.phraseFreqsIndexed(Seq("of", "the")))
-    same("sloppy phrase", _.phraseFreqsSloppy(Seq("the", "of"), 2))
+    same("exact phrase", _.phraseFreqs(Seq("of", "the")))
+    same("sloppy phrase", _.phraseFreqs(Seq("the", "of"), slop = 2))
     import Intervals._
     same("ordered intervals", _.intervalHits(Ordered(Seq(Term("the"), Term("of")))))
     same("disjunctive intervals", _.intervalHits(Or(Seq(Term("court"), Term("law")))))
     same("bounded unordered intervals",
       _.intervalHits(MaxWidth(Unordered(Seq(Term("the"), Term("court"))), 6)))
-    assert(multi.phraseFreqsIndexed(Seq("of", "the")).collect().forall(h => !deleted(h._1)))
+    assert(multi.phraseFreqs(Seq("of", "the")).collect().forall(h => !deleted(h._1)))
   }
 
   test("a query term absent from some segments still scores one slice per segment") {
