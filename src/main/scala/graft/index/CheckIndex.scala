@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.codec.{BlockCodec, Positions}
@@ -8,7 +9,9 @@ import graft.index.Schema.PostingBlock
 
 /** Index integrity auditor — the re-expression of the reference's
   * `CheckIndex` tool (`/root/reference/lucene/core/src/java/org/apache/lucene/index/CheckIndex.java:114,2619-2660`:
-  * re-read every posting, verify term/doc order, freq/stats consistency).
+  * re-read every posting, verify term/doc order, freq/stats consistency):
+  * every block lies in its bucket, no (term, docId) posting occurs twice, and
+  * the manifest's counts and maxDocId equal the tables'.
   * Runs as distributed aggregations; returns a report of violations
   * (empty = index is sound).
   */
@@ -40,8 +43,8 @@ object CheckIndex {
       val idStats = docs.agg(min($"docId"), max($"docId"),
         count(lit(1)), countDistinct($"docId")).head()
       if (idStats.getLong(3) != docCount) v += "docIds are not unique"
-      if (idStats.getLong(1) > manifest.maxDocId)
-        v += s"max docId ${idStats.getLong(1)} exceeds manifest ${manifest.maxDocId}"
+      if (idStats.getLong(1) != manifest.maxDocId)
+        v += s"max docId ${idStats.getLong(1)} != manifest maxDocId ${manifest.maxDocId}"
     } else v += "segment has zero docs"
 
     val rawBlocks = spark.read.parquet(s"$dir/postings")
@@ -61,12 +64,15 @@ object CheckIndex {
 
     // per-block decode invariants (distributed pass over every posting)
     val mustHavePos = manifest.hasPositions
+    val shift = manifest.bucketShift
     val blockViolations = blocksDs.flatMap { b =>
       val errs = scala.collection.mutable.ArrayBuffer[String]()
       val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
       val fs = BlockCodec.pforDecode(b.freqsPacked)
       val ns = BlockCodec.forDecode(b.normsPacked)
       def key = s"(${b.term}, bucket ${b.bucket}, first ${b.firstDocId})"
+      if ((b.firstDocId >>> shift) != b.bucket || (b.lastDocId >>> shift) != b.bucket)
+        errs += s"$key: block lies outside its bucket"
       if (ids.length != b.numDocs || fs.length != b.numDocs || ns.length != b.numDocs)
         errs += s"$key: decoded lengths disagree with numDocs"
       else {
@@ -136,6 +142,15 @@ object CheckIndex {
       errs
     }.take(20).toSeq
     v ++= blockViolations
+
+    // no (term, docId) posting twice: within a block docIds ascend (above),
+    // so a term's blocks in firstDocId order must not overlap
+    val overlaps = blocksDs.select($"term", $"firstDocId", $"lastDocId")
+      .withColumn("prevLast", lag($"lastDocId", 1).over(
+        Window.partitionBy($"term").orderBy($"firstDocId", $"lastDocId")))
+      .where($"prevLast" >= $"firstDocId")
+      .count()
+    if (overlaps > 0) v += s"$overlaps blocks repeat a (term, docId) posting of an earlier block"
 
     // term dictionary consistency: per-term stats re-derived from blocks
     val terms = spark.read.parquet(s"$dir/terms")

@@ -1,10 +1,6 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.codec.{BlockCodec, Impacts}
-import graft.index.Schema.PostingBlock
 
 /** Static per-document ranking features carried inside the inverted index —
   * the re-expression of the reference's `FeatureField`
@@ -68,95 +64,31 @@ object FeatureIndexer {
     val m = Manifest.read(segDir).getOrElse(
       throw new IllegalStateException(s"no committed segment at $segDir"))
     val shift = m.bucketShift
-    val docs = spark.read.parquet(s"$segDir/docs").select($"docId", $"url")
+    val docs = new graft.search.SegmentReader(spark, m).docs.select($"docId", $"url")
 
+    // one-doc fragments (norm 1, no positions), cut into blocks as a build
+    // cuts its own; hash-partitioned by (term, bucket) like the appended
+    // files before, each file sorted by (term, bucket, firstDocId)
     val rows = features
       .select($"url", $"feature".cast("string"), $"value".cast("float"))
       .join(docs, "url")
       .select($"feature", $"docId", $"value")
       .as[(String, Long, Float)]
-      .map { case (f, docId, v) =>
-        (featureTerm(f), docId >>> shift, docId, encodeValue(v).toLong)
+      .rdd.map { case (f, docId, v) =>
+        ((featureTerm(f), docId), SegmentWriter.fragment(encodeValue(v).toLong))
       }
-      .toDF("term", "bucket", "docId", "freq")
-
-    val blocks = rows
-      .repartition(math.max(1, (m.blockCount / 1024).toInt).min(64), $"term", $"bucket")
-      .sortWithinPartitions($"term", $"bucket", $"docId")
-      .as[(String, Long, Long, Long)]
-      .mapPartitions(featureBlocks)
-
-    blocks.cache()
-    val stats = IndexBuilder.buildTermStats(blocks)
-    // appended files keep the (term, bucket, firstDocId) sort within each
-    // file, so Parquet row-group min/max pruning covers them like the
-    // original range layout
-    blocks.write.mode(SaveMode.Append).parquet(s"$segDir/postings")
-    stats.write.mode(SaveMode.Append).parquet(s"$segDir/terms")
+    val written = SegmentWriter.writePostings(spark, rows,
+      new SegmentWriter.TermPartitioner(Array.empty, shift,
+        hashed = math.max(1, (m.blockCount / 1024).toInt).min(64)),
+      s"$segDir/postings", SaveMode.Append)(
+      SegmentWriter.cut(_, shift, withPos = false, withOffs = false, withPays = false))
     // keep the reversed dictionary in sync with the appended terms
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$segDir/rterms")))
-      stats.select(reverse($"term").as("rterm"), $"term")
-        .write.mode(SaveMode.Append).parquet(s"$segDir/rterms")
-    val nTerms = stats.count()
-    val nBlocks = blocks.count()
-    blocks.unpersist()
-    val updated = m.copy(termCount = m.termCount + nTerms,
-      blockCount = m.blockCount + nBlocks)
+    SegmentWriter.writeDictionary(spark, segDir, written, 1, bloom = false, SaveMode.Append,
+      rterms = java.nio.file.Files.exists(java.nio.file.Paths.get(s"$segDir/rterms")))
+    val updated = m.copy(termCount = m.termCount + written.terms.length,
+      blockCount = m.blockCount + written.blocks)
     Manifest.commit(segDir, updated)
     markerPath.foreach(p => java.nio.file.Files.createFile(p): Unit)
     updated
-  }
-
-  /** 128-doc feature posting blocks over rows sorted by (term, bucket,
-    * docId); norm byte = 1 everywhere (features omit norms).
-    */
-  private def featureBlocks(
-      rows: Iterator[(String, Long, Long, Long)]): Iterator[PostingBlock] = {
-    val B = BlockCodec.BlockSize
-    new Iterator[PostingBlock] {
-      private var pending: (String, Long, Long, Long) =
-        if (rows.hasNext) rows.next() else null
-
-      def hasNext: Boolean = pending != null
-
-      def next(): PostingBlock = {
-        val (term, bucket, _, _) = pending
-        val ids = new Array[Long](B)
-        val fs = new Array[Long](B)
-        var n = 0
-        while (pending != null && pending._1 == term && pending._2 == bucket && n < B) {
-          ids(n) = pending._3
-          fs(n) = pending._4
-          n += 1
-          pending = if (rows.hasNext) rows.next() else null
-        }
-        val docIds = java.util.Arrays.copyOf(ids, n)
-        val freqs = java.util.Arrays.copyOf(fs, n)
-        val norms = Array.fill(n)(1)
-        var maxFreq = 0L
-        var freqSum = 0L
-        var i = 0
-        while (i < n) {
-          freqSum += freqs(i)
-          if (freqs(i) > maxFreq) maxFreq = freqs(i)
-          i += 1
-        }
-        PostingBlock(
-          term = term,
-          bucket = bucket,
-          firstDocId = docIds(0),
-          lastDocId = docIds(n - 1),
-          numDocs = n,
-          docsPacked = BlockCodec.forEncode(BlockCodec.deltaEncode(docIds, docIds(0))),
-          freqsPacked = BlockCodec.pforEncode(freqs),
-          normsPacked = BlockCodec.forEncode(norms.map(_.toLong)),
-          impacts = Impacts.encode(Impacts.skylineInts(freqs, norms, n)),
-          freqSum = freqSum,
-          maxFreq = maxFreq.toInt,
-          minNorm = 1,
-          posPacked = null
-        )
-      }
-    }
   }
 }

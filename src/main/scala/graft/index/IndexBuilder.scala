@@ -1,11 +1,13 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.StandardAnalyzer
-import graft.codec.{BlockCodec, Impacts, SmallFloat}
+import graft.codec.SmallFloat
 import graft.index.Schema._
 
 /** Index-build configuration.
@@ -94,21 +96,25 @@ final case class IndexConfig(
 
 /** Builds an inverted-index segment from a corpus of (docKey, text) rows.
   *
-  * Pipeline (one tokenize pass, one shuffle to posting order):
+  * Pipeline (one tokenize pass, one exchange to posting order):
   * {{{
-  * input --sort by url--> docId assignment (global url rank)
-  *       --mapPartitions (analyze once)--> DocTokens (terms/freqs arrays)
-  *       --posexplode (narrow)--> (term, docId, freq, norm)
-  *       --repartitionByRange(term, bucket) + sortWithinPartitions--> 128-doc
+  * input --repartitionByRange(url) + sort--> docId assignment (global url rank)
+  *       --mapPartitions (analyze once)--> cached DocTokens, one contiguous
+  *         docId range per partition
+  *       --write docs (the same tasks sample (term, bucket) range bounds)
+  *       --invert in the doc task--> one posting fragment per (term, bucket)
+  *       --ONE range exchange on (term, bucket), sorted by (term, firstDocId)-->
+  *         fragments concatenated in docId order, cut into 128-doc
   *         PostingBlocks (delta + FOR/PFor packed, competitive impacts)
-  *       --partial-agg groupBy(term) over blocks--> TermStats
+  *       --the writing tasks report their term stats--> terms, rterms
   * }}}
   *
   * This is the Spark re-expression of the reference indexing chain
   * (`index/IndexingChain.java:553-616` invert → `FreqProxTermsWriter.java:83-135`
-  * flush → `Lucene103PostingsWriter.java:256-530` block encode): the shuffle
-  * plays the role of the in-RAM `BytesRefHash` + flush sort, and partition
-  * parallelism replaces the DWPT thread pool.
+  * flush → `Lucene103PostingsWriter.java:256-530` block encode): each doc
+  * task inverts its docs in RAM like a DWPT, the exchange plays the role of
+  * the flush sort, and the commit tail ([[SegmentWriter]]) writes postings,
+  * terms and stats in one pass.
   */
 object IndexBuilder {
 
@@ -162,10 +168,6 @@ object IndexBuilder {
     val withPositions = cfg.storePositions
     val withOffsets = cfg.storeOffsets
     val withPayloads = cfg.storePayloads
-    require(!withOffsets || withPositions, "storeOffsets requires storePositions")
-    require(!withPayloads || withPositions, "storePayloads requires storePositions")
-    require(!(withPayloads && withOffsets),
-      "storePayloads is mutually exclusive with storeOffsets")
     val synRules = cfg.synonyms
     val docTokens = sortedRows.mapPartitionsWithIndex { (pid, it) =>
       val analyzer = new StandardAnalyzer(stop, maxLen,
@@ -455,239 +457,6 @@ object IndexBuilder {
     spark.createDataset(docTokens)
   }
 
-  /** Build posting blocks: the single wide shuffle of the index build. */
-  def buildPostings(
-      docTokens: Dataset[DocTokens],
-      cfg: IndexConfig
-  ): Dataset[PostingBlock] = {
-    val spark = docTokens.sparkSession
-    import spark.implicits._
-    val shift = cfg.bucketShift
-    // narrow explode: (term, bucket, docId, freq, norm[, pos][, offs|pays]),
-    // the column order `blockBuilder` reads by ordinal. A multi-field build
-    // zips the per-term field norms (FieldKey-encoded terms) instead of
-    // taking the doc's scalar norm, and keeps no offsets or payloads.
-    val zipped = Seq("terms", "freqs") ++
-      (if (cfg.multiField) Seq("termNorms") else Nil) ++
-      (if (cfg.storePositions) Seq("positions") else Nil) ++
-      (if (cfg.multiField || !cfg.storePositions) Nil
-       else if (cfg.storeOffsets) Seq("offsets")
-       else if (cfg.storePayloads) Seq("payloads")
-       else Nil)
-    val asName = Map("terms" -> "term", "freqs" -> "freq", "termNorms" -> "norm",
-      "positions" -> "pos", "offsets" -> "offs", "payloads" -> "pays")
-    def tf(c: String): Column = col(s"tf.$c").as(asName(c))
-    val (docCols, norm, rest) =
-      if (cfg.multiField) (Seq($"docId"), tf("termNorms"), zipped.drop(3))
-      else (Seq($"docId", $"norm"), $"norm", zipped.drop(2))
-    val tokens = docTokens
-      .select(docCols :+ explode(arrays_zip(zipped.map(col): _*)).as("tf"): _*)
-      .select(Seq(tf("terms"), shiftright($"docId", shift).as("bucket"), $"docId",
-        tf("freqs"), norm) ++ rest.map(tf): _*)
-    // HASH-shuffle the raw token stream: repartitionByRange would pay a full
-    // extra pass over all (term, doc) rows just to sample range boundaries
-    // (RangePartitioner reservoir-samples every partition). Hash placement
-    // is equivalent for block building — all rows of a (term, bucket) land
-    // in one partition, sorted locally. The dictionary's *range* layout is
-    // re-established afterwards at the block level (128x fewer rows), where
-    // the sampling pass is nearly free — see `rangeLayout`.
-    val sortedRows = tokens
-      .repartition(cfg.numPostingPartitions, $"term", $"bucket")
-      .sortWithinPartitions($"term", $"bucket", $"docId")
-      .queryExecution.toRdd
-    // InternalRow consumption: no per-row tuple/String allocation — the term
-    // string only materializes once per (term, bucket) run (GC matters: this
-    // iterator sees every (term, doc) pair in the corpus)
-    val withPos = cfg.storePositions
-    val withOffs = cfg.storeOffsets
-    val withPays = cfg.storePayloads
-    spark.createDataset(
-      sortedRows.mapPartitions(blockBuilder(_, withPos, withOffs, withPays)))
-  }
-
-  /** Final on-disk layout of a posting-block table: range-partitioned and
-    * sorted by (term, bucket, firstDocId), so Parquet file/row-group min-max
-    * on `term` gives the .tip-style dictionary pruning. Run on block rows
-    * (ideally cached) — the range sampling pass is cheap at block granularity.
-    */
-  def rangeLayout(blocks: Dataset[PostingBlock], cfg: IndexConfig): Dataset[PostingBlock] = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks
-      .repartitionByRange(cfg.numPostingPartitions, $"term", $"bucket", $"firstDocId")
-      .sortWithinPartitions($"term", $"bucket", $"firstDocId")
-  }
-
-  /** Streaming 128-doc block builder over InternalRows of
-    * (term, bucket, docId, freq, norm) sorted by (term, bucket, docId).
-    * O(blockSize) state.
-    */
-  private def blockBuilder(
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      withPos: Boolean = false,
-      withOffs: Boolean = false,
-      withPays: Boolean = false
-  ): Iterator[PostingBlock] = new Iterator[PostingBlock] {
-    private val B = BlockCodec.BlockSize
-    private val docIds = new Array[Long](B)
-    private val freqs = new Array[Long](B)
-    private val norms = new Array[Int](B)
-    private val poss: Array[Array[Int]] = if (withPos) new Array[Array[Int]](B) else null
-    private val offs: Array[Array[Int]] = if (withOffs) new Array[Array[Int]](B) else null
-    private val pays: Array[Array[Int]] = if (withPays) new Array[Array[Int]](B) else null
-    private var pPos: Array[Int] = null // pending row's positions
-    private var pOffs: Array[Int] = null // pending row's offset pairs
-    private var pPays: Array[Int] = null // pending row's payloads
-    private var n = 0
-    private var curTerm: String = null // term of the open block
-    private var curTermU8: org.apache.spark.unsafe.types.UTF8String = null
-    private var curBucket = 0L
-    // row stashed when a (term, bucket, fullness) boundary forces a flush;
-    // pTermU8 == null means no pending row
-    private var pTermU8: org.apache.spark.unsafe.types.UTF8String = null
-    private var pBucket = 0L
-    private var pDocId = 0L
-    private var pFreq = 0
-    private var pNorm = 0
-    private var nextBlock: PostingBlock = null
-
-    private def flushBlock(): PostingBlock = {
-      val ids = java.util.Arrays.copyOf(docIds, n)
-      val fs = java.util.Arrays.copyOf(freqs, n)
-      val first = ids(0)
-      val deltas = BlockCodec.deltaEncode(ids, first)
-      val normsL = new Array[Long](n)
-      var i = 0
-      var freqSum = 0L
-      var maxFreq = 0
-      var minNorm = Int.MaxValue
-      while (i < n) {
-        normsL(i) = norms(i).toLong
-        freqSum += fs(i)
-        if (fs(i) > maxFreq) maxFreq = fs(i).toInt
-        if (norms(i) < minNorm) minNorm = norms(i)
-        i += 1
-      }
-      val block = PostingBlock(
-        term = curTerm,
-        bucket = curBucket,
-        firstDocId = first,
-        lastDocId = ids(n - 1),
-        numDocs = n,
-        docsPacked = BlockCodec.forEncode(deltas),
-        freqsPacked = BlockCodec.pforEncode(fs),
-        normsPacked = BlockCodec.forEncode(normsL),
-        impacts = Impacts.encode(Impacts.skylineInts(fs, norms, n)),
-        freqSum = freqSum,
-        maxFreq = maxFreq,
-        minNorm = minNorm,
-        posPacked = if (withPos) graft.codec.Positions.encode(poss, n) else null,
-        // offsets reuse the positions codec: per doc the flattened
-        // (start, end) pairs are a nondecreasing sequence of 2*freq ints
-        offsPacked = if (withOffs) graft.codec.Positions.encode(offs, n) else null,
-        // payloads are arbitrary values -> raw VInt, not delta
-        paysPacked = if (withPays) graft.codec.Positions.encodeRaw(pays, n) else null
-      )
-      n = 0
-      block
-    }
-
-    /** Start a new block keyed (termU8, bucket). `termU8` must already be
-      * safe to retain (cloned).
-      */
-    private def open(
-        termU8: org.apache.spark.unsafe.types.UTF8String, bucket: Long
-    ): Unit = {
-      if (curTermU8 == null || !curTermU8.equals(termU8)) {
-        curTermU8 = termU8
-        curTerm = termU8.toString
-      }
-      curBucket = bucket
-    }
-
-    private def advance(): Unit = {
-      while (nextBlock == null && (pTermU8 != null || rows.hasNext)) {
-        if (pTermU8 != null) {
-          val t = pTermU8
-          pTermU8 = null
-          open(t, pBucket)
-          docIds(0) = pDocId; freqs(0) = pFreq.toLong; norms(0) = pNorm
-          if (withPos) poss(0) = pPos
-          if (withOffs) offs(0) = pOffs
-          if (withPays) pays(0) = pPays
-          n = 1
-        } else {
-          val row = rows.next()
-          val termU8 = row.getUTF8String(0)
-          val bucket = row.getLong(1)
-          if (n > 0 && n < B && curBucket == bucket && curTermU8.equals(termU8)) {
-            docIds(n) = row.getLong(2)
-            freqs(n) = row.getInt(3).toLong
-            norms(n) = row.getInt(4)
-            if (withPos) poss(n) = row.getArray(5).toIntArray()
-            if (withOffs) offs(n) = row.getArray(6).toIntArray()
-            if (withPays) pays(n) = row.getArray(6).toIntArray()
-            n += 1
-          } else if (n == 0) { // first row of the partition
-            open(termU8.clone(), bucket) // clone: sorter reuses row buffers
-            docIds(0) = row.getLong(2)
-            freqs(0) = row.getInt(3).toLong
-            norms(0) = row.getInt(4)
-            if (withPos) poss(0) = row.getArray(5).toIntArray()
-            if (withOffs) offs(0) = row.getArray(6).toIntArray()
-            if (withPays) pays(0) = row.getArray(6).toIntArray()
-            n = 1
-          } else { // boundary: stash the row, emit the finished block
-            pTermU8 = termU8.clone()
-            pBucket = bucket
-            pDocId = row.getLong(2)
-            pFreq = row.getInt(3)
-            pNorm = row.getInt(4)
-            if (withPos) pPos = row.getArray(5).toIntArray()
-            if (withOffs) pOffs = row.getArray(6).toIntArray()
-            if (withPays) pPays = row.getArray(6).toIntArray()
-            nextBlock = flushBlock()
-          }
-        }
-      }
-      if (nextBlock == null && n > 0) nextBlock = flushBlock()
-    }
-
-    override def hasNext: Boolean = { if (nextBlock == null) advance(); nextBlock != null }
-    override def next(): PostingBlock = {
-      if (!hasNext) throw new NoSuchElementException
-      val b = nextBlock; nextBlock = null; b
-    }
-  }
-
-  /** Term dictionary from block metadata (128× smaller than raw tokens;
-    * partial aggregation makes the head-term agg skew-safe).
-    */
-  def buildTermStats(blocks: Dataset[PostingBlock]): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks
-      .groupBy($"term")
-      .agg(sum($"numDocs").as("docFreq"), sum($"freqSum").as("totalTermFreq"))
-  }
-
-  /** Reversed-term dictionary: (rterm = reverse(term), term), range-sorted
-    * by `rterm`. No query path reads it any more — leading wildcards walk
-    * the resident term dictionary ([[graft.search.TermDict]]). It is still
-    * written because the traced build benchmark
-    * (`perfbench/src/perfbench/Layers.scala`) ends its term-stats phase at
-    * `rterms/_SUCCESS`; it goes once that marker moves to `terms/_SUCCESS`.
-    */
-  def writeReversedTerms(spark: SparkSession, dir: String, parts: Int): Unit = {
-    import spark.implicits._
-    spark.read.parquet(s"$dir/terms")
-      .select(reverse($"term").as("rterm"), $"term")
-      .distinct()
-      .repartitionByRange(math.max(1, parts), $"rterm")
-      .sortWithinPartitions($"rterm")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/rterms")
-  }
-
   /** End-to-end: build and atomically commit one segment at `dir`. Resumable:
     * if the segment manifest already exists the build is skipped (the
     * re-expression of the reference's two-phase `segments_N` commit,
@@ -698,11 +467,9 @@ object IndexBuilder {
       dir: String,
       cfg: IndexConfig = IndexConfig()
   ): SegmentManifest =
-    Manifest.read(dir) match {
-      case Some(m) => m // resume: segment already committed
-      case None =>
-        require(!cfg.multiField, "use buildSegmentFields for multiField configs")
-        commitSegment(assignAndTokenize(pages, cfg), dir, cfg)
+    Manifest.read(dir).getOrElse {
+      require(!cfg.multiField, "use buildSegmentFields for multiField configs")
+      commitSegment(pages.sparkSession, dir, cfg)(assignAndTokenize(pages, _))
     }
 
   /** Multi-field segment build: docs are `(url, Seq((field, text)))`; the
@@ -714,111 +481,114 @@ object IndexBuilder {
       dir: String,
       cfg: IndexConfig
   ): SegmentManifest =
-    Manifest.read(dir) match {
-      case Some(m) => m
-      case None =>
-        require(cfg.synonyms.isEmpty,
-          "index-time synonyms are single-field only (documented subset)")
-        commitSegment(assignAndTokenizeFields(pages, cfg.copy(multiField = true)),
-          dir, cfg.copy(multiField = true))
+    Manifest.read(dir).getOrElse {
+      commitSegment(pages.sparkSession, dir, cfg.copy(multiField = true))(
+        assignAndTokenizeFields(pages, _))
     }
 
-  private def commitSegment(
-      docTokens0: Dataset[DocTokens],
-      dir: String,
-      cfg: IndexConfig
-  ): SegmentManifest = {
-        val spark = docTokens0.sparkSession
-        import spark.implicits._
-        val t0 = System.nanoTime()
-        val docTokens = docTokens0
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val docsOut = docTokens
-            .select($"docId", $"url", $"length", $"norm").as[DocEntry]
-          docsOut.write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
+  /** The configs a build refuses, checked before any Spark job. */
+  private def validate(cfg: IndexConfig): Unit = {
+    require(!cfg.storeOffsets || cfg.storePositions, "storeOffsets requires storePositions")
+    require(!cfg.storePayloads || cfg.storePositions, "storePayloads requires storePositions")
+    require(!(cfg.storePayloads && cfg.storeOffsets),
+      "storePayloads is mutually exclusive with storeOffsets")
+    if (cfg.multiField) {
+      require(cfg.synonyms.isEmpty,
+        "index-time synonyms are single-field only (documented subset)")
+      require(!cfg.storeOffsets && !cfg.storePayloads,
+        "storeOffsets and storePayloads are single-field only")
+    }
+  }
 
-          // term vectors ride the same docId-sorted layout as the row
-          // store — one extra column projection of the cached tokenize
-          // pass, no extra shuffle
-          if (cfg.storeTermVectors)
-            docTokens.select($"docId", $"terms", $"freqs")
-              .write.mode(SaveMode.Overwrite).parquet(s"$dir/tvec")
+  /** What one docs-writing task saw: its rows, tokens (every field's) and
+    * largest docId, per field (docs with a token, tokens), its postings and
+    * a uniform sample of their (term, bucket) keys.
+    */
+  private final case class DocsPart(pid: Int, rows: Long, tokens: Long, maxId: Long,
+      fields: Map[String, (Long, Long)], postings: Long, samples: Array[(String, Long)])
 
-          val blocks = buildPostings(docTokens, cfg)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          // re-establish the dictionary's range layout at block granularity
-          // (cheap sampling over the cached blocks), then write — Parquet
-          // file/row-group min/max on `term` gives dictionary pruning
-          rangeLayout(blocks, cfg)
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/postings")
-
-          buildTermStats(blocks)
-            .repartitionByRange(math.max(1, cfg.numPostingPartitions / 4), $"term")
-            .sortWithinPartitions($"term")
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/terms")
-          writeReversedTerms(spark, dir, cfg.numPostingPartitions / 4)
-          if (cfg.bloomTerms) TermBloom.write(spark, dir)
-
-          // ONE pass over the cached docTokens yields the per-partition
-          // lineage + metrics (north rule: resumable builds with lineage)
-          // AND the collection stats (docCount, sumTotalTermFreq, maxDocId).
-          // multiField: token totals span ALL fields (blocks' freqSum does),
-          // so the lineage token column sums the per-field lengths.
-          val tokensCol =
-            if (cfg.multiField)
-              expr("aggregate(fieldLengths, 0L, (a, x) -> a + CAST(x AS BIGINT))")
-            else $"length".cast("long")
-          val lineage = docTokens
-            .groupBy(spark_partition_id().as("partition"))
-            .agg(count(lit(1)).as("rows"), sum(tokensCol).as("tokens"),
-              max($"docId").as("maxId"))
-            .as[(Int, Long, Long, Long)]
-            .collect()
-            .sortBy(_._1)
-          val docCount = lineage.map(_._2).sum
-          // sumTotalTermFreq from what was actually written (Σ block
-          // freqSums, the merger's and CheckIndex's definition): with
-          // index-time synonyms the injected overlap tokens count here —
-          // like the reference's SumTotalTermFreq — while norms/lengths
-          // (and the lineage token metric) exclude them (discountOverlaps)
-          val sumTtf = {
-            val r = blocks.agg(sum($"freqSum")).head()
-            if (r.isNullAt(0)) 0L else r.getLong(0)
+  private def commitSegment(spark: SparkSession, dir: String, cfg: IndexConfig)(
+      tokenize: IndexConfig => Dataset[DocTokens]): SegmentManifest = {
+    import spark.implicits._
+    validate(cfg)
+    val t0 = System.nanoTime()
+    val docTokens = tokenize(cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // docs: the tasks that write them count them, and sample the
+      // (term, bucket) keys of their postings for the exchange's bounds
+      val acc = spark.sparkContext.collectionAccumulator[DocsPart]("docs written")
+      val shift = cfg.bucketShift
+      val perPart = 20 * cfg.numPostingPartitions
+      spark.createDataset(docTokens
+        .select($"docId", $"url", $"length", $"norm", $"terms", $"fieldNames", $"fieldLengths")
+        .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          var rows, tokens, postings = 0L
+          var maxId = -1L
+          val fields = scala.collection.mutable.HashMap[String, (Long, Long)]()
+          val samples = new Array[(String, Long)](perPart)
+          val rnd = new java.util.Random(pid)
+          it.map { r =>
+            val docId = r.getLong(0)
+            rows += 1
+            maxId = docId
+            if (r.isNullAt(5)) tokens += r.getInt(2)
+            else (0 until r.getArray(5).numElements()).foreach { f =>
+              val name = r.getArray(5).getUTF8String(f).toString
+              val len = r.getArray(6).getInt(f).toLong
+              val (dc, sttf) = fields.getOrElse(name, (0L, 0L))
+              fields(name) = (dc + (if (len > 0) 1 else 0), sttf + len)
+              tokens += len
+            }
+            val terms = r.getArray(4)
+            var i = 0
+            while (i < terms.numElements()) { // reservoir sample of the postings
+              val j = if (postings < perPart) postings else rnd.nextLong(postings + 1)
+              if (j < perPart) samples(j.toInt) = (terms.getUTF8String(i).toString, docId >>> shift)
+              postings += 1
+              i += 1
+            }
+            DocEntry(docId, if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
+              r.getInt(2), r.getInt(3))
+          } ++ {
+            acc.add(DocsPart(pid, rows, tokens, maxId, fields.toMap, postings,
+              samples.take(math.min(postings, perPart.toLong).toInt)))
+            Iterator.empty
           }
-          val maxDocId = if (lineage.isEmpty) -1L else lineage.map(_._4).max
-          val blockCount = blocks.count()
-          val termCount = spark.read.parquet(s"$dir/terms").count()
-          // per-field BM25 stats (multiField only): docCount counts docs
-          // with >=1 token in the field (ref Terms#getDocCount semantics)
-          val fieldStats: Seq[FieldStat] =
-            if (!cfg.multiField) Seq.empty
-            else docTokens
-              .select(explode(arrays_zip($"fieldNames", $"fieldLengths")).as("f"))
-              .select($"f.fieldNames".as("field"), $"f.fieldLengths".as("len"))
-              .groupBy($"field")
-              .agg(sum(when($"len" > 0, 1L).otherwise(0L)).as("docCount"),
-                sum($"len".cast("long")).as("sumTotalTermFreq"))
-              .as[FieldStat].collect().toSeq.sortBy(_.field)
-          blocks.unpersist()
-          val manifest = SegmentManifest(
-            segmentId = java.util.UUID.nameUUIDFromBytes(dir.getBytes).toString,
-            dir = dir,
-            docCount = docCount,
-            maxDocId = maxDocId,
-            sumTotalTermFreq = sumTtf,
-            termCount = termCount,
-            blockCount = blockCount,
-            bucketShift = cfg.bucketShift,
-            buildWallSec = (System.nanoTime() - t0) / 1e9,
-            lineage = lineage.map { case (p, r, t, _) => PartitionLineage(p, r, t) }.toSeq,
-            hasPositions = cfg.storePositions,
-            fieldStats = fieldStats,
-            hasOffsets = cfg.storeOffsets,
-            hasPayloads = cfg.storePayloads
-          )
-          Manifest.commit(dir, manifest)
-          manifest
-        } finally docTokens.unpersist()
+        }).write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
+      val docs = acc.value.asScala.toSeq.filter(_.rows > 0).sortBy(_.pid)
+
+      // term vectors ride the same docId-sorted layout as the row store —
+      // one extra column projection of the cached tokenize pass
+      if (cfg.storeTermVectors)
+        docTokens.select($"docId", $"terms", $"freqs")
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/tvec")
+
+      val bounds = SegmentWriter.rangeBounds(docs.flatMap(p =>
+        p.samples.toSeq.map(_ -> p.postings.toDouble / p.samples.length)), cfg.numPostingPartitions)
+      val (withPos, withOffs, withPays) = (cfg.storePositions, cfg.storeOffsets, cfg.storePayloads)
+      val written = SegmentWriter.writePostings(spark,
+        docTokens.select($"docId", $"terms", $"freqs", $"norm", $"termNorms", $"positions",
+          $"offsets", $"payloads").queryExecution.toRdd
+          .mapPartitions(SegmentWriter.invert(_, shift, withPos, withOffs, withPays)),
+        new SegmentWriter.TermPartitioner(bounds, shift), s"$dir/postings")(
+        SegmentWriter.cut(_, shift, withPos, withOffs, withPays))
+      SegmentWriter.writeDictionary(spark, dir, written, cfg.numPostingPartitions / 4,
+        cfg.bloomTerms)
+
+      // per-field BM25 stats (multiField only): docCount counts docs with
+      // >=1 token in the field (ref Terms#getDocCount semantics). The
+      // manifest's sumTotalTermFreq is Σ block freqSums, the merger's and
+      // CheckIndex's definition: with index-time synonyms the injected
+      // overlap tokens count there — like the reference's
+      // SumTotalTermFreq — while norms, lengths and the lineage token
+      // metric exclude them (discountOverlaps).
+      val fieldStats = docs.flatMap(_.fields).groupBy(_._1).toSeq.map { case (f, xs) =>
+        FieldStat(f, xs.map(_._2._1).sum, xs.map(_._2._2).sum)
+      }.sortBy(_.field)
+      SegmentWriter.commit(dir, t0, docs.map(_.rows).sum,
+        if (docs.isEmpty) -1L else docs.map(_.maxId).max, written, cfg.bucketShift,
+        docs.map(p => PartitionLineage(p.pid, p.rows, p.tokens)), cfg.storePositions,
+        cfg.storeOffsets, cfg.storePayloads, fieldStats)
+    } finally docTokens.unpersist()
   }
 }

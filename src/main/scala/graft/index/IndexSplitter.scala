@@ -1,9 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.index.Schema._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** Segment splitting by docID range — the re-expression of the reference's
   * `misc/index/MultiPassIndexSplitter.java:36-60` (split an index into N
@@ -18,8 +16,9 @@ import graft.index.Schema._
   * within-block deltas are relative to the block's own `firstDocId`, so the
   * packed payloads (docs, freqs, norms, positions, offsets, payloads,
   * impacts) move as **opaque bytes**. The only per-part work is three
-  * column-arithmetic scans (docs, term vectors, blocks) plus the
-  * metadata-sized term-stats rebuild; nothing decodes.
+  * column-arithmetic scans (docs, term vectors, blocks), one exchange of
+  * the part's blocks to the source's term ranges, and the dictionary
+  * written from the stats the writing tasks report; nothing decodes.
   *
   * Tombstones are carried (filtered + rebased) into each part, and
   * doc-values patch generations are baked into the part's row store via
@@ -56,49 +55,35 @@ object IndexSplitter {
     val cuts = (0 to n).map(i => (i * nBuckets / n) * span)
     val dead = Deletes.readSorted(spark, segDir)
 
+    val bounds = SegmentWriter.footerBounds(spark, Seq(segDir), cfg.numPostingPartitions)
+    val source = new graft.search.SegmentReader(spark, m)
+
     outDirs.zipWithIndex.map { case (out, i) =>
       Manifest.read(out).getOrElse {
         val t0 = System.nanoTime()
         val lo = cuts(i)
         val hi = cuts(i + 1)
+        def part(df: DataFrame): DataFrame =
+          df.where($"docId" >= lo && $"docId" < hi).withColumn("docId", $"docId" - lit(lo))
 
         // row store: DV patch generations baked in (merge-style compaction)
-        DocValues.readDocs(spark, segDir)
-          .where($"docId" >= lo && $"docId" < hi)
-          .withColumn("docId", $"docId" - lit(lo))
-          .repartitionByRange(cfg.numDocPartitions, $"docId")
-          .sortWithinPartitions($"docId")
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/docs")
-
+        val (docCount, maxDocId) =
+          SegmentWriter.writeDocs(part(DocValues.readDocs(spark, segDir)), s"$out/docs")
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(segDir, "tvec")))
-          spark.read.parquet(s"$segDir/tvec")
-            .where($"docId" >= lo && $"docId" < hi)
-            .withColumn("docId", $"docId" - lit(lo))
-            .repartitionByRange(cfg.numDocPartitions, $"docId")
-            .sortWithinPartitions($"docId")
-            .write.mode(SaveMode.Overwrite).parquet(s"$out/tvec")
+          SegmentWriter.writeDocs(part(source.tvec), s"$out/tvec")
 
-        // blocks: range filter + rebase — packed payloads untouched
-        spark.read.parquet(s"$segDir/postings")
-          .where($"firstDocId" >= lo && $"firstDocId" < hi)
-          .withColumn("firstDocId", $"firstDocId" - lit(lo))
-          .withColumn("lastDocId", $"lastDocId" - lit(lo))
-          .withColumn("bucket", shiftright($"firstDocId", cfg.bucketShift))
-          .repartitionByRange(cfg.numPostingPartitions, $"term", $"bucket")
-          .sortWithinPartitions($"term", $"bucket", $"firstDocId")
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/postings")
-
-        val blocks = spark.read.parquet(s"$out/postings").as[PostingBlock]
-        IndexBuilder.buildTermStats(blocks)
-          .repartitionByRange(math.max(1, cfg.numPostingPartitions / 4), $"term")
-          .sortWithinPartitions($"term")
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/terms")
-        IndexBuilder.writeReversedTerms(spark, out,
-          math.max(1, cfg.numPostingPartitions / 4))
+        // blocks: range filter + rebase — packed payloads untouched; the
+        // per-field stats (multi-field segments) are the part's blocks'
+        val blocks = SegmentWriter.shifted(
+          source.postings.where($"firstDocId" >= lo && $"firstDocId" < hi), -lo, cfg.bucketShift)
+        val written = SegmentWriter.writePostings(spark, blocks,
+          new SegmentWriter.TermPartitioner(bounds, cfg.bucketShift), s"$out/postings",
+          fieldDocs = m.fieldStats.nonEmpty)(_.map(_._2))
         // parts of a bloom-enabled segment keep the option on (each part's
         // filter rebuilds from its OWN term set — a copy of the source's
         // would be correct but oversized)
-        if (TermBloom.exists(segDir)) TermBloom.write(spark, out)
+        SegmentWriter.writeDictionary(spark, out, written, cfg.numPostingPartitions / 4,
+          TermBloom.exists(segDir))
 
         // carry the part's tombstones, rebased
         val partDead = dead.filter(d => d >= lo && d < hi).map(d => d - lo)
@@ -106,50 +91,8 @@ object IndexSplitter {
           Deletes.add(spark, out,
             spark.createDataset(partDead.toSeq.map(java.lang.Long.valueOf)))
 
-        val docCount = spark.read.parquet(s"$out/docs").count()
-        val maxDocRow = spark.read.parquet(s"$out/docs").agg(max($"docId")).head()
-        val sttf = {
-          val r = blocks.agg(sum($"freqSum")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
-        // per-field stats (multi-field segments): sttf re-aggregates from
-        // the part's blocks; docCount per field via the field-key decode —
-        // the same recompute shape as a purge-merge, here per part
-        val fieldStats =
-          if (m.fieldStats.isEmpty) Seq.empty[FieldStat]
-          else {
-            val s = blocks.map(b => (FieldKey.fieldOf(b.term), b.freqSum))
-              .toDF("field", "fs")
-              .groupBy($"field").agg(sum($"fs").as("sttf"))
-            val dc = blocks.flatMap { b =>
-              graft.codec.BlockCodec
-                .deltaDecode(graft.codec.BlockCodec.forDecode(b.docsPacked), b.firstDocId)
-                .toSeq.map(id => (FieldKey.fieldOf(b.term), id))
-            }.toDF("field", "docId").distinct()
-              .groupBy($"field").agg(count(lit(1)).as("dc"))
-            s.join(dc, "field")
-              .select($"field", $"dc".cast("long").as("docCount"),
-                $"sttf".cast("long").as("sumTotalTermFreq"))
-              .as[FieldStat].collect().toSeq.sortBy(_.field)
-          }
-
-        val manifest = SegmentManifest(
-          segmentId = java.util.UUID.nameUUIDFromBytes(out.getBytes).toString,
-          dir = out,
-          docCount = docCount,
-          maxDocId = if (maxDocRow.isNullAt(0)) 0L else maxDocRow.getLong(0),
-          sumTotalTermFreq = sttf,
-          termCount = spark.read.parquet(s"$out/terms").count(),
-          blockCount = blocks.count(),
-          bucketShift = cfg.bucketShift,
-          buildWallSec = (System.nanoTime() - t0) / 1e9,
-          lineage = m.lineage,
-          hasPositions = m.hasPositions,
-          hasOffsets = m.hasOffsets,
-          hasPayloads = m.hasPayloads,
-          fieldStats = fieldStats)
-        Manifest.commit(out, manifest)
-        manifest
+        SegmentWriter.commit(out, t0, docCount, maxDocId, written, cfg.bucketShift,
+          m.lineage, m.hasPositions, m.hasOffsets, m.hasPayloads, written.fieldStats)
       }
     }
   }

@@ -53,8 +53,8 @@ object Schema {
   final case class DocEntry(docId: Long, url: String, length: Int, norm: Int)
 
   /** Intermediate: one doc's analyzed term-frequency vector, computed in a
-    * single tokenize pass and exploded into posting rows — terms/freqs are
-    * parallel arrays.
+    * single tokenize pass and inverted into posting fragments by the task
+    * that holds it — terms/freqs are parallel arrays.
     */
   final case class DocTokens(
       docId: Long,

@@ -1,10 +1,11 @@
 package graft.index
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{lit, udf}
 
-import graft.codec.{BlockCodec, Impacts}
+import graft.codec.BlockCodec
 import graft.index.Schema._
+import graft.search.SegmentReader
 
 /** Hierarchical segment merge (the re-expression of
   * `/root/reference/lucene/core/src/java/org/apache/lucene/index/SegmentMerger.java:113-226`
@@ -57,139 +58,67 @@ object SegmentMerger {
         val deadGlobal: Array[Long] = manifests.zip(bases).flatMap { case (m, base) =>
           Deletes.readSorted(spark, m.dir).map(_ + base)
         }.sorted.toArray
-
-        // docs: union + remap (+ tombstone purge) + rewrite sorted by docId;
-        // DocValues.readDocs bakes any doc-values update generations into
-        // the merged row store (the reference's DV-generation compaction)
-        val docsAll = manifests.zip(bases).map { case (m, base) =>
-          DocValues.readDocs(spark, m.dir).withColumn("docId", $"docId" + lit(base))
-        }.reduce(_ unionByName _)
-        val docsLive =
-          if (deadGlobal.isEmpty) docsAll
-          else docsAll.join(
-            spark.createDataset(deadGlobal.toSeq).toDF("docId"),
-            Seq("docId"), "left_anti")
-        docsLive
-          .repartitionByRange(cfg.numDocPartitions, $"docId")
-          .sortWithinPartitions($"docId")
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-
-        // term vectors: same remap + purge + docId-sorted rewrite as the
-        // row store, carried through iff EVERY input stores them (mixed
-        // inputs would leave holes a reader can't distinguish from "no
-        // vector" — the reference requires a consistent field config too)
-        if (manifests.forall(m =>
-            java.nio.file.Files.exists(java.nio.file.Paths.get(m.dir, "tvec")))) {
-          val tvAll = manifests.zip(bases).map { case (m, base) =>
-            spark.read.parquet(s"${m.dir}/tvec")
-              .withColumn("docId", $"docId" + lit(base))
+        val live = udf((id: Long) => java.util.Arrays.binarySearch(deadGlobal, id) < 0)
+        def remapped(read: SegmentManifest => DataFrame): DataFrame = {
+          val all = manifests.zip(bases).map { case (m, base) =>
+            read(m).withColumn("docId", $"docId" + lit(base))
           }.reduce(_ unionByName _)
-          val tvLive =
-            if (deadGlobal.isEmpty) tvAll
-            else tvAll.join(
-              spark.createDataset(deadGlobal.toSeq).toDF("docId"),
-              Seq("docId"), "left_anti")
-          tvLive
-            .repartitionByRange(cfg.numDocPartitions, $"docId")
-            .sortWithinPartitions($"docId")
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/tvec")
+          if (deadGlobal.isEmpty) all else all.where(live($"docId"))
         }
 
+        // docs: union + remap (+ tombstone purge), in docBase order;
+        // DocValues.readDocs bakes any doc-values update generations into
+        // the merged row store (the reference's DV-generation compaction).
+        // maxDocId is the largest docId written, so a purged tail leaves no
+        // docId range past the last doc.
+        val (docCount, maxDocId) = SegmentWriter.writeDocs(
+          remapped(m => DocValues.readDocs(spark, m.dir)), s"$outDir/docs")
+
+        // term vectors: the same remap + purge as the row store, carried
+        // through iff EVERY input stores them (mixed inputs would leave holes
+        // a reader can't distinguish from "no vector" — the reference
+        // requires a consistent field config too)
+        if (manifests.forall(m =>
+            java.nio.file.Files.exists(java.nio.file.Paths.get(m.dir, "tvec"))))
+          SegmentWriter.writeDocs(remapped(m => new SegmentReader(spark, m).tvec),
+            s"$outDir/tvec")
+
         // postings: remap columns, re-bucket (exact because bases are
-        // bucket-aligned), then compact fragmented tails per (term, bucket)
+        // bucket-aligned); the writing tasks purge tombstoned docs and
+        // compact fragmented tails per (term, bucket). The inputs' postings
+        // files are term ranges already: their footers give the bounds.
         val shift = cfg.bucketShift
-        // the reader's explicit schema reads a column an older layout
-        // lacks (posPacked, offsPacked, paysPacked) as null
         val blocks = manifests.zip(bases).map { case (m, base) =>
-          new graft.search.SegmentReader(spark, m).postings
-            .withColumn("firstDocId", $"firstDocId" + lit(base))
-            .withColumn("lastDocId", $"lastDocId" + lit(base))
-            .withColumn("bucket", shiftright($"firstDocId", shift))
-        }.reduce(_ unionByName _)
-
-        val typed = blocks
-          .select($"term", $"bucket", $"firstDocId", $"lastDocId", $"numDocs",
-            $"docsPacked", $"freqsPacked", $"normsPacked", $"impacts",
-            $"freqSum", $"maxFreq", $"minNorm", $"posPacked", $"offsPacked",
-            $"paysPacked")
-          .as[PostingBlock]
-        val purged =
-          if (deadGlobal.isEmpty) typed
-          else typed.mapPartitions(purge(_, deadGlobal))
-        val merged = purged
-          .repartitionByRange(cfg.numPostingPartitions, $"term", $"bucket")
-          .sortWithinPartitions($"term", $"bucket", $"firstDocId")
-          .as[PostingBlock]
-          .mapPartitions(compact(_))
-
-        merged.write.mode(SaveMode.Overwrite).parquet(s"$outDir/postings")
-
-        val mergedBlocks = spark.read.parquet(s"$outDir/postings").as[PostingBlock]
-        IndexBuilder.buildTermStats(mergedBlocks)
-          .repartitionByRange(math.max(1, cfg.numPostingPartitions / 4), $"term")
-          .sortWithinPartitions($"term")
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
-        IndexBuilder.writeReversedTerms(spark, outDir, cfg.numPostingPartitions / 4)
+          SegmentWriter.shifted(new SegmentReader(spark, m).postings, base, shift)
+        }.reduce(_ union _)
+        val purgeFields = deadGlobal.nonEmpty && manifests.exists(_.fieldStats.nonEmpty)
+        val written = SegmentWriter.writePostings(spark, blocks,
+          new SegmentWriter.TermPartitioner(
+            SegmentWriter.footerBounds(spark, segDirs, cfg.numPostingPartitions), shift),
+          s"$outDir/postings", fieldDocs = purgeFields) { it =>
+          val bs = it.map(_._2)
+          compact(if (deadGlobal.isEmpty) bs else purge(bs, deadGlobal))
+        }
         // bloom sidecar survives merging only if every input carried one
         // (mixed inputs mean the option was off for part of the corpus —
         // a filter missing real terms would create false negatives)
-        if (segDirs.forall(TermBloom.exists)) TermBloom.write(spark, outDir)
+        SegmentWriter.writeDictionary(spark, outDir, written, cfg.numPostingPartitions / 4,
+          segDirs.forall(TermBloom.exists))
 
-        // stats recomputed from what was actually written — exact again
-        // after a purge (the reference's post-merge behavior)
-        val mergedDocCount = spark.read.parquet(s"$outDir/docs").count()
-        val mergedSttf = {
-          val r = mergedBlocks.agg(sum($"freqSum")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
-        val manifest = SegmentManifest(
-          segmentId = java.util.UUID.nameUUIDFromBytes(outDir.getBytes).toString,
-          dir = outDir,
-          docCount = mergedDocCount,
-          maxDocId = bases.last + manifests.last.maxDocId,
-          sumTotalTermFreq = mergedSttf,
-          termCount = spark.read.parquet(s"$outDir/terms").count(),
-          blockCount = mergedBlocks.count(),
-          bucketShift = cfg.bucketShift,
-          buildWallSec = (System.nanoTime() - t0) / 1e9,
-          lineage = manifests.flatMap(_.lineage),
-          hasPositions = manifests.forall(_.hasPositions),
-          hasOffsets = manifests.forall(_.hasOffsets),
-          hasPayloads = manifests.forall(_.hasPayloads),
-          fieldStats = {
-            // no purge: summing inputs is exact (disjoint docId spaces)
-            val summed = manifests.flatMap(_.fieldStats)
-              .groupBy(_.field).map { case (f, ss) =>
-                Schema.FieldStat(f, ss.map(_.docCount).sum, ss.map(_.sumTotalTermFreq).sum)
-              }.toSeq.sortBy(_.field)
-            if (summed.isEmpty || deadGlobal.isEmpty) summed
-            else {
-              // purge happened: recompute per-field stats from the merged
-              // postings (the reference's merges write exact stats of the
-              // SURVIVING docs — summing inputs would keep purged docs
-              // counted, so CombinedFieldQuery/BM25F idf would diverge
-              // from a fresh build of the same live set)
-              val sttf = mergedBlocks
-                .map(b => (FieldKey.fieldOf(b.term), b.freqSum))
-                .toDF("field", "fs")
-                .groupBy($"field").agg(sum($"fs").as("sttf"))
-              val dc = mergedBlocks
-                .flatMap { b =>
-                  BlockCodec
-                    .deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
-                    .toSeq.map(id => (FieldKey.fieldOf(b.term), id))
-                }
-                .toDF("field", "docId").distinct()
-                .groupBy($"field").agg(count(lit(1)).as("dc"))
-              sttf.join(dc, "field")
-                .select($"field", $"dc".cast("long").as("docCount"),
-                  $"sttf".cast("long").as("sumTotalTermFreq"))
-                .as[FieldStat].collect().toSeq.sortBy(_.field)
-            }
-          }
-        )
-        Manifest.commit(outDir, manifest)
-        manifest
+        // per-field stats: summing the inputs' is exact without a purge
+        // (disjoint docId spaces); after one, they are the written blocks'
+        // (the reference's merges write exact stats of the SURVIVING docs
+        // — summing inputs would keep purged docs counted, so
+        // CombinedFieldQuery/BM25F idf would diverge from a fresh build of
+        // the same live set)
+        val fieldStats =
+          if (purgeFields) written.fieldStats
+          else manifests.flatMap(_.fieldStats).groupBy(_.field).map { case (f, ss) =>
+            FieldStat(f, ss.map(_.docCount).sum, ss.map(_.sumTotalTermFreq).sum)
+          }.toSeq.sortBy(_.field)
+        SegmentWriter.commit(outDir, t0, docCount, maxDocId, written, cfg.bucketShift,
+          manifests.flatMap(_.lineage), manifests.forall(_.hasPositions),
+          manifests.forall(_.hasOffsets), manifests.forall(_.hasPayloads), fieldStats)
     }
   }
 
@@ -203,167 +132,56 @@ object SegmentMerger {
     it.flatMap { b =>
       var lo = java.util.Arrays.binarySearch(dead, b.firstDocId)
       if (lo < 0) lo = -lo - 1
-      val overlaps = lo < dead.length && dead(lo) <= b.lastDocId
-      if (!overlaps) Some(b)
+      if (lo >= dead.length || dead(lo) > b.lastDocId) Some(b)
       else {
-        val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
-        val fs = BlockCodec.pforDecode(b.freqsPacked)
-        val ns = BlockCodec.forDecode(b.normsPacked)
-        val pos =
-          if (b.posPacked != null) graft.codec.Positions.decode(b.posPacked, fs, b.numDocs)
-          else null
-        val off = // offsets decode with 2*freq values per doc
-          if (b.offsPacked != null)
-            graft.codec.Positions.decode(b.offsPacked, fs.map(_ * 2), b.numDocs)
-          else null
-        val pay = // payloads: raw codec, freq values per doc
-          if (b.paysPacked != null)
-            graft.codec.Positions.decodeRaw(b.paysPacked, fs, b.numDocs)
-          else null
-        val keep = ids.indices.filter(i =>
-          java.util.Arrays.binarySearch(dead, ids(i)) < 0)
+        val (ids, fs, ns, pos, off, pay) = SegmentWriter.decode(b)
+        val keep = ids.indices.filter(i => java.util.Arrays.binarySearch(dead, ids(i)) < 0)
+        def kept[T: scala.reflect.ClassTag](xs: Array[T]): Array[T] =
+          if (xs == null) null else keep.map(xs).toArray
         if (keep.isEmpty) None
         else if (keep.size == b.numDocs) Some(b)
-        else {
-          val ki = keep.map(ids).toArray
-          val kf = keep.map(fs).toArray
-          val kn = keep.map(ns).toArray
-          Some(PostingBlock(
-            term = b.term,
-            bucket = b.bucket,
-            firstDocId = ki.head,
-            lastDocId = ki.last,
-            numDocs = ki.length,
-            docsPacked = BlockCodec.forEncode(BlockCodec.deltaEncode(ki, ki.head)),
-            freqsPacked = BlockCodec.pforEncode(kf),
-            normsPacked = BlockCodec.forEncode(kn),
-            impacts = Impacts.encode(
-              Impacts.skylineInts(kf, kn.map(_.toInt), ki.length)),
-            freqSum = kf.sum,
-            maxFreq = kf.max.toInt,
-            minNorm = kn.min.toInt,
-            posPacked =
-              if (pos != null)
-                graft.codec.Positions.encode(keep.map(pos).toArray, ki.length)
-              else null,
-            offsPacked =
-              if (off != null)
-                graft.codec.Positions.encode(keep.map(off).toArray, ki.length)
-              else null,
-            paysPacked =
-              if (pay != null)
-                graft.codec.Positions.encodeRaw(keep.map(pay).toArray, ki.length)
-              else null))
-        }
+        else Some(SegmentWriter.encodeBlock(b.term, b.bucket, kept(ids), kept(fs), kept(ns),
+          keep.size, kept(pos), kept(off), kept(pay)))
       }
     }
 
   /** Stream blocks sorted by (term, bucket, firstDocId); adjacent partial
     * blocks (numDocs < 128) of the same (term, bucket) are decoded, fused and
-    * re-encoded; full blocks pass through untouched.
+    * re-cut; full blocks, and a partial block with no partial neighbour,
+    * pass through untouched.
     */
-  private def compact(it: Iterator[PostingBlock]): Iterator[PostingBlock] =
-    new Iterator[PostingBlock] {
-      private val B = BlockCodec.BlockSize
-      private var pending: PostingBlock = null
-      private var out: PostingBlock = null
-      private val buf = scala.collection.mutable.ArrayBuffer[PostingBlock]()
-
-      private def fuse(parts: Seq[PostingBlock]): Iterator[PostingBlock] = {
-        if (parts.size == 1) return parts.iterator
-        val ids = scala.collection.mutable.ArrayBuffer[Long]()
-        val fs = scala.collection.mutable.ArrayBuffer[Long]()
-        val ns = scala.collection.mutable.ArrayBuffer[Long]()
-        val hasPos = parts.forall(_.posPacked != null)
-        val hasOff = parts.forall(_.offsPacked != null)
-        val hasPay = parts.forall(_.paysPacked != null)
-        val pos = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-        val off = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-        val pay = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-        parts.foreach { p =>
-          val pFreqs = BlockCodec.pforDecode(p.freqsPacked)
-          ids ++= BlockCodec.deltaDecode(BlockCodec.forDecode(p.docsPacked), p.firstDocId)
-          fs ++= pFreqs
-          ns ++= BlockCodec.forDecode(p.normsPacked)
-          if (hasPos)
-            pos ++= graft.codec.Positions.decode(p.posPacked, pFreqs, p.numDocs)
-          if (hasOff)
-            off ++= graft.codec.Positions.decode(p.offsPacked, pFreqs.map(_ * 2), p.numDocs)
-          if (hasPay)
-            pay ++= graft.codec.Positions.decodeRaw(p.paysPacked, pFreqs, p.numDocs)
-        }
-        val posArr = pos.toArray
-        val offArr = off.toArray
-        val payArr = pay.toArray
-        var off2 = 0
-        ids.toArray.grouped(B).zip(fs.toArray.grouped(B).zip(ns.toArray.grouped(B))).map {
-          case (gi, (gf, gn)) =>
-            val pairs = gi.indices.map(i => (gf(i).toInt, gn(i).toInt))
-            val gPos = if (hasPos) posArr.slice(off2, off2 + gi.length) else null
-            val gOff = if (hasOff) offArr.slice(off2, off2 + gi.length) else null
-            val gPay = if (hasPay) payArr.slice(off2, off2 + gi.length) else null
-            off2 += gi.length
-            PostingBlock(
-              term = parts.head.term,
-              bucket = parts.head.bucket,
-              firstDocId = gi.head,
-              lastDocId = gi.last,
-              numDocs = gi.length,
-              docsPacked = BlockCodec.forEncode(BlockCodec.deltaEncode(gi, gi.head)),
-              freqsPacked = BlockCodec.pforEncode(gf),
-              normsPacked = BlockCodec.forEncode(gn),
-              impacts = Impacts.encode(Impacts.skyline(pairs)),
-              freqSum = gf.sum,
-              maxFreq = gf.max.toInt,
-              minNorm = gn.min.toInt,
-              posPacked =
-                if (hasPos) graft.codec.Positions.encode(gPos, gi.length) else null,
-              offsPacked =
-                if (hasOff) graft.codec.Positions.encode(gOff, gi.length) else null,
-              paysPacked =
-                if (hasPay) graft.codec.Positions.encodeRaw(gPay, gi.length) else null
-            )
-        }
-      }
-
-      private def drainBuf(): Iterator[PostingBlock] = {
-        if (buf.isEmpty) Iterator.empty
-        else {
-          // fuse runs of partial blocks, pass through full ones
-          val result = scala.collection.mutable.ArrayBuffer[PostingBlock]()
-          val run = scala.collection.mutable.ArrayBuffer[PostingBlock]()
-          buf.foreach { b =>
-            if (b.numDocs >= B) {
-              if (run.nonEmpty) { result ++= fuse(run.toSeq); run.clear() }
-              result += b
-            } else run += b
+  private def compact(blocks: Iterator[PostingBlock]): Iterator[PostingBlock] = {
+    val it = blocks.buffered
+    def fuse(run: Seq[PostingBlock]): Seq[PostingBlock] =
+      if (run.size <= 1) run
+      else {
+        val c = new SegmentWriter.Cutter(run.forall(_.posPacked != null),
+          run.forall(_.offsPacked != null), run.forall(_.paysPacked != null))
+        c.key(run.head.term, run.head.bucket)
+        run.foreach { b =>
+          val (ids, fs, ns, pos, off, pay) = SegmentWriter.decode(b)
+          ids.indices.foreach { i =>
+            c.add(ids(i), fs(i), ns(i), if (pos == null) null else pos(i),
+              if (off == null) null else off(i), if (pay == null) null else pay(i))
           }
-          if (run.nonEmpty) result ++= fuse(run.toSeq)
-          buf.clear()
-          result.iterator
         }
+        c.flush()
+        c.drain().toSeq
       }
-
-      private var drained: Iterator[PostingBlock] = Iterator.empty
-
-      override def hasNext: Boolean = {
-        while (!drained.hasNext && (pending != null || it.hasNext)) {
-          val b = if (pending != null) { val p = pending; pending = null; p } else it.next()
-          if (buf.nonEmpty &&
-              (buf.head.term != b.term || buf.head.bucket != b.bucket)) {
-            pending = b
-            drained = drainBuf()
-          } else buf += b
-        }
-        if (!drained.hasNext && buf.nonEmpty) drained = drainBuf()
-        drained.hasNext
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+      // one (term, bucket): fuse each run of partial blocks
+      val head = it.head
+      val out = scala.collection.mutable.ArrayBuffer[PostingBlock]()
+      var run = List.empty[PostingBlock]
+      while (it.hasNext && it.head.term == head.term && it.head.bucket == head.bucket) {
+        val b = it.next()
+        if (b.numDocs >= BlockCodec.BlockSize) { out ++= fuse(run.reverse); run = Nil; out += b }
+        else run ::= b
       }
-
-      override def next(): PostingBlock = {
-        if (!hasNext) throw new NoSuchElementException
-        drained.next()
-      }
+      out ++= fuse(run.reverse)
+      out
     }
+  }
 }
 
 /** Driver-side tiered merge planning over the segment manifest — the policy

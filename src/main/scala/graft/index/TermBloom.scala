@@ -1,7 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Per-segment Bloom filter over the term dictionary — the re-expression of
   * the reference's bloom postings layer
@@ -50,7 +49,8 @@ object TermBloom {
   }
 
   /** The two 32-bit hash seeds of a term: leading 8 + next 8 hex chars of
-    * md5 (matches [[bitsCol]] exactly — spec-asserted).
+    * md5, so a SQL replica (`conv(substring(md5(term), 1, 8), 16, 10)`)
+    * computes the same bits.
     */
   private[index] def seeds(term: String): (Long, Long) = {
     val d = java.security.MessageDigest.getInstance("MD5")
@@ -70,34 +70,17 @@ object TermBloom {
     Array.tabulate(K)(i => (h1 + i * step) & (m - 1L))
   }
 
-  /** The same K probe positions as a SQL array column (codegen'd md5 +
-    * integer arithmetic — no UDF), bit-identical to [[bitPositions]].
+  /** Write `dir/bloom/` for the segment's term set `terms`: the bits are
+    * set on the driver, from the dictionary the commit already holds, and
+    * written dense — all `m/64` words, zeros included, in one file — so `m`
+    * round-trips through the row count.
     */
-  def bitsCol(term: Column, m: Int): Column = {
-    val h1 = conv(substring(md5(term), 1, 8), 16, 10).cast("bigint")
-    val h2 = conv(substring(md5(term), 9, 8), 16, 10).cast("bigint")
-    val step = h2.bitwiseOR(lit(1L))
-    array((0 until K).map(i => (h1 + lit(i.toLong) * step).bitwiseAND(lit(m - 1L))): _*)
-  }
-
-  /** Build `dir/bloom/` from the committed `dir/terms` dictionary — one
-    * narrow explode + one `bit_or` aggregation to ≤ m/64 rows (the
-    * Tombstones dense-bitmap shape), densified against a range so zero
-    * words are materialized and `m` round-trips through the row count.
-    */
-  def write(spark: SparkSession, dir: String): Unit = {
+  def write(spark: SparkSession, dir: String, terms: Array[String]): Unit = {
     import spark.implicits._
-    val terms = spark.read.parquet(s"$dir/terms").select($"term")
-    val termCount = terms.count()
-    val m = sizeFor(termCount)
-    val words = m / 64
-    val setBits = terms
-      .select(explode(bitsCol($"term", m)).as("bit"))
-      .groupBy((col("bit") / 64).cast("long").as("wordIdx"))
-      .agg(bit_or(expr("shiftleft(1L, cast(bit % 64 as int))")).as("word"))
-    spark.range(words).select($"id".as("wordIdx"))
-      .join(setBits, Seq("wordIdx"), "left")
-      .select($"wordIdx", coalesce($"word", lit(0L)).as("word"))
+    val m = sizeFor(terms.length.toLong)
+    val words = new Array[Long](m / 64)
+    terms.foreach(t => bitPositions(t, m).foreach(b => words((b >>> 6).toInt) |= 1L << (b & 63)))
+    words.indices.map(i => (i.toLong, words(i))).toDF("wordIdx", "word")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/bloom")
   }
