@@ -1,12 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Damerau–Levenshtein edit distance with a threshold — the distance the
   * reference's fuzzy machinery uses by default (ref
   * `/root/reference/lucene/core/src/java/org/apache/lucene/search/FuzzyQuery.java`
@@ -24,9 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object EditDistance {
 
   /** Distance if <= k, else -1 (mirrors Spark's 3-arg `levenshtein`). */
-  def damerauWithin(a: UTF8String, b: UTF8String, k: Int): Int =
-    damerauWithin(a.toString, b.toString, k)
-
   def damerauWithin(a: String, b: String, k: Int): Int = {
     val n = a.length; val m = b.length
     if (math.abs(n - m) > k) return -1
@@ -68,41 +58,4 @@ object EditDistance {
     val res = d(n + 1)(m + 1)
     if (res <= k) res else -1
   }
-
-  /** Column form: distance if <= k else -1; participates in whole-stage
-    * codegen via a single static call (the generated loop body stays one
-    * Java method call — no interpreted closure per row).
-    */
-  def damerauLe(a: Column, b: Column, k: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      DamerauLe(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b), k))
-}
-
-/** `damerau_le(a, b)` -> Damerau–Levenshtein distance if <= k else -1. */
-case class DamerauLe(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"damerau_le requires two string inputs, got $l and $r")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "damerau_le"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    EditDistance.damerauWithin(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.EditDistance.damerauWithin($a, $b, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DamerauLe =
-    copy(left = newLeft, right = newRight)
 }

@@ -183,12 +183,13 @@ object IndexBuilder {
         if (withPayloads) {
           // DelimitedPayload chain (ref analysis/payloads/
           // DelimitedPayloadTokenFilter.java): whitespace pre-split —
-          // the tokenizer the reference pairs payloads with — trailing
-          // `|<int>` extracted (default 1), the remainder through the
-          // standard lowercase/stop/filter chain. One position per chunk
+          // the tokenizer the reference pairs payloads with, which splits
+          // on runs of any `Character.isWhitespace` — trailing `|<int>`
+          // extracted (default 1), the remainder through the standard
+          // lowercase/stop/filter chain. One position per chunk
           // (whitespace semantics); sub-tokens stack at it with the
           // chunk's payload.
-          val chunks = text.split(' ')
+          val chunks = text.split("\\p{javaWhitespace}+").filter(_.nonEmpty)
           val byTerm = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]()
           var docLen = 0
           var ci = 0

@@ -231,9 +231,10 @@ final case class QBlock(
   *     the dictionary names the slices that hold each term.
   *  3. one RDD job over those slices (`SparkContext.runJob`, no SQL plan,
   *     no Parquet scan): each task seeks the query's terms in its slice,
-  *     copies out their blocks, and scores them with block-max WAND
-  *     ([[Wand]]) bucket by bucket, in docId order, into ONE collector; it
-  *     returns the slice's top-k.
+  *     copies out their blocks, and scores the slice as one doc range:
+  *     ONE scorer tree, driven by block-max WAND ([[Wand]]) in docId order
+  *     into ONE collector, as a Lucene leaf is scored by one `BulkScorer`;
+  *     it returns the slice's top-k.
   *  4. the driver merges the per-slice top-k with the reference tie-break
   *     (score desc, docId asc) into a local Dataset.
   *
@@ -852,22 +853,22 @@ final class IndexSearcher(
 
   /** Runs `slice` once per resident slice that may hold the query's blocks
     * (see [[querySlices]]), with the slice's segment docBase, its
-    * tombstones and its buckets in ascending docId order, each as key →
-    * blocks sorted by firstDocId (a complete multi-term node's blocks are
-    * keyed under its sentinel namespace, see [[MultiTermDictQuery.key]]).
-    * No block leaves its slice's task: the pass needs no exchange.
+    * tombstones and its blocks as key → blocks sorted by firstDocId (a
+    * complete multi-term node's blocks are keyed under its sentinel
+    * namespace, see [[MultiTermDictQuery.key]]). The slice is one doc
+    * range, scored by one scorer tree. No block leaves its slice's task:
+    * the pass needs no exchange.
     */
   private def perSlice[T: ClassTag](rows: Seq[SegTermRow], dictQs: Seq[MultiTermDictQuery] = Nil)(
-      slice: (Long, Tombstones, Iterator[Map[String, Array[BlockView]]]) => Iterator[T]): Slice.Pass[T] = {
+      slice: (Long, Tombstones, Map[String, Array[BlockView]]) => Iterator[T]): Slice.Pass[T] = {
     val (rdd, segOf) = querySlices(rows, dictQs)
     val terms = rows.map(_.term).distinct.toArray
     val specs = dictQs.distinct.map(dq => (dq.key + "\u0001", dq.spec)).toArray
-    val shifts = segments.map(_.bucketShift).toArray
     val basesL = bases
     val tombs = tombstones
     new Slice.Pass(rdd, (p, s) => {
       val seg = segOf(p)
-      slice(basesL(seg), tombs.value(seg), s.buckets(s.keys(terms, specs), shifts(seg)).map(_._2))
+      slice(basesL(seg), tombs.value(seg), s.blocks(s.keys(terms, specs)))
     })
   }
 
@@ -882,11 +883,9 @@ final class IndexSearcher(
     val shifts = segments.map(_.bucketShift).toArray
     val blocks = new Slice.Pass(rdd, (p, s) => {
       val seg = segOf(p)
-      s.buckets(s.keys(keys, Array.empty), shifts(seg)).flatMap { case (bucket, byTerm) =>
-        byTerm.iterator.flatMap { case (t, bs) =>
-          bs.iterator.map(b => QBlock(t, seg, bucket, b.firstDocId, b.lastDocId, b.numDocs,
-            b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
-        }
+      s.blocks(s.keys(keys, Array.empty)).iterator.flatMap { case (t, bs) =>
+        bs.iterator.map(b => QBlock(t, seg, b.firstDocId >>> shifts(seg), b.firstDocId,
+          b.lastDocId, b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
       }
     }).collectParts().flatten
     spark.createDataset(blocks.toSeq)(IndexSearcher.QBlockEncoder)
@@ -897,12 +896,12 @@ final class IndexSearcher(
   /** Each slice's top-k of `query`: one RDD job, one task per slice. */
   private def sliceTopK(query: Query, rows: Seq[SegTermRow], scorers: Map[String, SimScorer],
       k: Int, pruning: Boolean): Array[Array[ScoredDoc]] = {
-    val slices = perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
-      // one collector per slice: buckets arrive in docId order, so a tie
-      // in a later bucket loses to an earlier doc, as within one bucket;
-      // liveDocs: tombstoned docs never take a top-k slot
+    val slices = perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, blocks) =>
+      // one scorer tree and one collector per slice, in docId order, so a
+      // tie loses to an earlier doc; liveDocs: tombstoned docs never take a
+      // top-k slot
       val collector = new TopKCollector(k, dead)
-      buckets.foreach(Executor.search(query, _, scorers, collector, pruning))
+      Executor.search(query, blocks, scorers, collector, pruning)
       collector.results.iterator.map { case (d, s) => ScoredDoc(d + base, s) }
     }
     slices.collectParts()
@@ -926,8 +925,8 @@ final class IndexSearcher(
     val query = positional(Query.rewrite(query0))
     val rows = segTermRows(query.terms.toSeq.sorted)
     val scorers = scorerMap(query, aggStats(rows))
-    spark.createDataset(perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
-      buckets.flatMap(Executor.build(query, _, scorers)).flatMap { sc =>
+    spark.createDataset(perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, blocks) =>
+      Executor.build(query, blocks, scorers).iterator.flatMap { sc =>
         IndexSearcher.live(sc, dead).map(d => ScoredDoc(d + base, sc.score))
       }
     })(IndexSearcher.ScoredDocEncoder)
@@ -1199,8 +1198,8 @@ final class IndexSearcher(
   def matching(query0: Query): Dataset[Long] = {
     val query = positional(Query.rewrite(query0))
     val rows = segTermRows(query.terms.toSeq.sorted)
-    perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, buckets) =>
-      buckets.flatMap(Executor.matchIds(query, _)).filter(d => !dead.contains(d)).map(_ + base)
+    perSlice(rows, IndexSearcher.dictSpecs(query)) { (base, dead, blocks) =>
+      Executor.matchIds(query, blocks).filter(d => !dead.contains(d)).map(_ + base)
     }.toDS().toDF("docId").as[Long]
   }
 
@@ -1214,8 +1213,8 @@ final class IndexSearcher(
     requirePositions()
     val pq = PhraseQuery(terms, slop)
     val one = new ConstScorer(1.0)
-    perSlice(segTermRows(pq.phraseTerms.distinct)) { (base, dead, buckets) =>
-      buckets.flatMap(Executor.phraseScorer(pq, _, one)).flatMap { sc =>
+    perSlice(segTermRows(pq.phraseTerms.distinct)) { (base, dead, blocks) =>
+      Executor.phraseScorer(pq, blocks, one).iterator.flatMap { sc =>
         IndexSearcher.live(sc, dead).map(d => (d + base, sc.freq))
       }
     }.toDS()
@@ -1236,8 +1235,8 @@ final class IndexSearcher(
   def intervalHits(src: Intervals.Source): Dataset[(Long, Int, Int)] = {
     requirePositions()
     val iq = IntervalQuery(src)
-    perSlice(segTermRows(src.terms.distinct)) { (base, dead, buckets) =>
-      buckets.flatMap(Executor.intervalScorer(iq, _, 1.0)).flatMap { sc =>
+    perSlice(segTermRows(src.terms.distinct)) { (base, dead, blocks) =>
+      Executor.intervalScorer(iq, blocks, 1.0).iterator.flatMap { sc =>
         IndexSearcher.live(sc, dead).map { d =>
           val ivs = sc.intervals
           (d + base, ivs.length,
@@ -1260,18 +1259,16 @@ final class IndexSearcher(
   // ------------------------------------------------------------ explain
 
   /** (freq, norm) of each term at one (segment, local docId) — a point
-    * lookup on the postings table (term IN + bucket + block-range pushdown
-    * prunes to the ≤1 block per term actually containing the doc).
+    * lookup on the postings table (term IN + block-range pushdown prunes
+    * to the ≤1 block per term actually containing the doc).
     */
   private def freqNormAt(
       terms: Seq[String], seg: Int, local: Long
   ): Map[String, (Int, Int)] = {
     import graft.codec.BlockCodec
     if (terms.isEmpty) return Map.empty
-    val b = local >>> segments(seg).bucketShift
     readers(seg).postings
-      .where($"term".isin(terms: _*) && $"bucket" === b &&
-        $"firstDocId" <= local && $"lastDocId" >= local)
+      .where($"term".isin(terms: _*) && $"firstDocId" <= local && $"lastDocId" >= local)
       .select($"term", $"firstDocId", $"docsPacked", $"freqsPacked", $"normsPacked")
       .collect()
       .flatMap { r =>
@@ -1297,9 +1294,8 @@ final class IndexSearcher(
   ): Map[String, Array[Int]] = {
     import graft.codec.BlockCodec
     if (terms.isEmpty) return Map.empty
-    val b = local >>> segments(seg).bucketShift
-    readers(seg).postings.where($"term".isin(terms: _*) && $"bucket" === b &&
-        $"firstDocId" <= local && $"lastDocId" >= local)
+    readers(seg).postings
+      .where($"term".isin(terms: _*) && $"firstDocId" <= local && $"lastDocId" >= local)
       .select($"term", $"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked", $"posPacked")
       .collect()
       .flatMap { r =>
@@ -1324,7 +1320,7 @@ final class IndexSearcher(
     * (ref `index/IndexOptions.java` ..._AND_OFFSETS postings consumed by
     * `uhighlight/UnifiedHighlighter.java` OffsetSource.POSTINGS): ONE
     * pushed postings scan per segment over the term's blocks in the docs'
-    * buckets, decoding only those blocks — never a re-tokenize of stored
+    * range, decoding only those blocks — never a re-tokenize of stored
     * text. Docs whose segment lacks offsets are absent from the result.
     */
   def offsetsForDocs(term: String, docIds: Seq[Long]): Map[Long, Array[Int]] = {
@@ -1336,10 +1332,8 @@ final class IndexSearcher(
         .map(_ - base).sorted.toArray
       if (locals.isEmpty || !m.hasOffsets) Seq.empty
       else {
-        val buckets = locals.map(_ >>> m.bucketShift).distinct.toSeq
         readers(seg).postings
-          .where($"term" === term && $"bucket".isin(buckets: _*) &&
-            $"firstDocId" <= locals.max && $"lastDocId" >= locals.min)
+          .where($"term" === term && $"firstDocId" <= locals.max && $"lastDocId" >= locals.min)
           .select($"firstDocId", $"numDocs", $"docsPacked", $"freqsPacked", $"offsPacked")
           .collect()
           .flatMap { r =>
@@ -1480,26 +1474,17 @@ final class IndexSearcher(
     * surface.
     */
   def spanRangeFreqs(term: String, start: Int, end: Int): Dataset[(Long, Int)] = {
-    import graft.codec.BlockCodec
     requirePositions()
-    perSlice(segTermRows(Seq(term))) { (base, dead, buckets) =>
-      buckets.flatMap(_.getOrElse(term, Array.empty[BlockView])).flatMap { b =>
-        if (b.posPacked == null) Iterator.empty
-        else {
-          val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
-          val fs = BlockCodec.pforDecode(b.freqsPacked)
-          val poss = graft.codec.Positions.decode(b.posPacked, fs, b.numDocs)
-          Iterator.range(0, b.numDocs).flatMap { i =>
-            if (dead.contains(ids(i))) None
-            else {
-              val ps = poss(i)
-              var lo = 0
-              while (lo < ps.length && ps(lo) < start) lo += 1
-              var c = lo
-              while (c < ps.length && ps(c) + 1 <= end) c += 1
-              if (c > lo) Some((ids(i) + base, c - lo)) else None
-            }
-          }
+    perSlice(segTermRows(Seq(term))) { (base, dead, blocks) =>
+      blocks.get(term).iterator.flatMap { bs =>
+        val ts = new TermScorer(bs, new ConstScorer(1.0))
+        IndexSearcher.live(ts, dead).flatMap { d =>
+          val ps = ts.positions
+          var lo = 0
+          while (lo < ps.length && ps(lo) < start) lo += 1
+          var c = lo
+          while (c < ps.length && ps(c) + 1 <= end) c += 1
+          if (c > lo) Some((d + base, c - lo)) else None
         }
       }
     }.toDS()
@@ -2229,8 +2214,8 @@ final class SearcherManager(
   }
 }
 
-/** Builds the scorer tree for a query over one bucket of a segment and
-  * runs the matching strategy — the analogue of
+/** Builds the scorer tree for a query over one resident slice (one doc
+  * range of a segment) and runs the matching strategy — the analogue of
   * `search/BooleanScorerSupplier.java:187-247` picking WAND vs conjunction by
   * clause shape.
   */
@@ -2350,7 +2335,7 @@ object Executor {
       }
   }
 
-  /** The phrase matcher over one bucket; None when a phrase term has no
+  /** The phrase matcher over one slice; None when a phrase term has no
     * block there. [[IndexSearcher.phraseFreqs]] reads its `freq`.
     */
   def phraseScorer(
@@ -2365,7 +2350,7 @@ object Executor {
     }
   }
 
-  /** The interval matcher over one bucket; None when a required term has
+  /** The interval matcher over one slice; None when a required term has
     * no block there, or no term has. [[IndexSearcher.intervalHits]] reads
     * its `intervals`.
     */
@@ -2389,8 +2374,10 @@ object Executor {
       case cs     => Some(new DisjunctionSumScorer(cs.toArray))
     }
 
-  /** Pure top-level disjunction (optionally with MUST_NOT) → WAND; anything
-    * with required clauses → conjunction-driven drain.
+  /** The query's top hits over one slice into `collector`, in one of three
+    * shapes: a pure top-level disjunction (optionally with MUST_NOT) → WAND
+    * over its SHOULD clauses; required clauses → [[blockMaxConjunction]];
+    * anything else → WAND over the one scorer [[build]] gives.
     */
   def search(
       query: Query,
@@ -2399,28 +2386,6 @@ object Executor {
       collector: TopKCollector,
       pruning: Boolean
   ): Unit = query match {
-    case TermQuery(t) =>
-      blocks.get(t).foreach { bs =>
-        Wand.run(Array(new TermScorer(bs, scorers(t))), None, collector, pruning)
-      }
-    case sq: SynonymQuery =>
-      build(sq, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case cf: CombinedFieldQuery =>
-      build(cf, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case fq: FeatureQuery =>
-      build(fq, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case pq: PhraseQuery =>
-      build(pq, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case mq: MultiPhraseQuery =>
-      build(mq, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case iq: IntervalQuery =>
-      build(iq, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case bqst: BoostQuery =>
-      build(bqst, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case dm: DisMaxQuery =>
-      build(dm, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
-    case cs: ConstScoreQuery =>
-      build(cs, blocks, scorers).foreach(s => Wand.run(Array(s), None, collector, pruning))
     case bq: BoolQuery
         if bq.must.isEmpty && bq.filter.isEmpty && bq.minimumShouldMatch <= 1 =>
       val should = bq.should.flatMap(build(_, blocks, scorers))
@@ -2441,11 +2406,12 @@ object Executor {
       blockMaxConjunction(musts.flatten.toArray, filters.flatten.toArray,
         optional.toArray, excl, collector, pruning)
     case _ =>
-      // remaining shapes (msm trees, nested booleans, exclusion wrappers):
-      // single-scorer WAND — every composite carries sound per-block bounds
-      // (advanceShallow/blockMaxScore), so whole blocks whose bound cannot
-      // beat the k-th score skip without decoding; pruning=false degrades
-      // to the exhaustive drain (duels enforce rank identity)
+      // every other shape (a single clause, msm trees, nested booleans,
+      // exclusion wrappers): single-scorer WAND — every scorer carries
+      // sound per-block bounds (advanceShallow/blockMaxScore), so whole
+      // blocks whose bound cannot beat the k-th score skip without
+      // decoding; pruning=false degrades to the exhaustive drain (duels
+      // enforce rank identity)
       build(query, blocks, scorers).foreach(s =>
         Wand.run(Array(s), None, collector, pruning))
   }

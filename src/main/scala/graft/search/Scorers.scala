@@ -2,7 +2,7 @@ package graft.search
 
 import graft.codec.{BlockCodec, Impacts}
 
-/** A scorer over one bucket of a segment: a pull-based doc-at-a-time
+/** A scorer over one resident slice of a segment: a pull-based doc-at-a-time
   * iterator with score + block-max upper-bound surface — the re-expression of
   * the reference's `Scorer`/`DocIdSetIterator`/`ImpactsEnum` contract
   * (`/root/reference/lucene/core/src/java/org/apache/lucene/search/DocIdSetIterator.java`,
@@ -39,7 +39,7 @@ object DocScorer {
 }
 
 /** One posting block's stored form handed to the executor (already filtered
-  * to the query's terms and this bucket).
+  * to the query's terms and this slice).
   */
 final case class BlockView(
     firstDocId: Long,

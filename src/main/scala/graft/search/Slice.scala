@@ -75,25 +75,14 @@ final class Slice private (
     out.toArray
   }
 
-  /** The blocks of `keys` bucket by bucket, in ascending bucket (= docId)
-    * order, each bucket as key → its blocks by firstDocId. A bucket's
-    * blocks are copied out only when the iterator reaches it.
+  /** Each of `keys` with its blocks in this slice, by firstDocId — the
+    * order the slice stores them in. The slice is one doc range, so these
+    * are every block a scorer tree over it reads.
     */
-  def buckets(keys: Array[(String, Int)], bucketShift: Int): Iterator[(Long, Map[String, Array[BlockView]])] = {
-    val byBucket = new java.util.TreeMap[java.lang.Long, mutable.LinkedHashMap[String, mutable.ArrayBuilder.ofInt]]()
-    keys.foreach { case (key, t) =>
-      var b = termStart(t)
-      while (b < termStart(t + 1)) {
-        byBucket.computeIfAbsent(firstDocId(b) >>> bucketShift, _ => mutable.LinkedHashMap.empty)
-          .getOrElseUpdate(key, new mutable.ArrayBuilder.ofInt) += b
-        b += 1
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    byBucket.entrySet.iterator.asScala.map { e =>
-      e.getKey.longValue -> e.getValue.iterator.map { case (k, bs) => k -> bs.result().map(view) }.toMap
-    }
-  }
+  def blocks(keys: Array[(String, Int)]): Map[String, Array[BlockView]] =
+    keys.iterator.map { case (key, t) =>
+      key -> Array.range(termStart(t), termStart(t + 1)).map(view)
+    }.toMap
 
   /** Per term, its docFreq and totalTermFreq in this slice: the block
     * numDocs and freqSum summed.

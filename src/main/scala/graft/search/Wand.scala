@@ -185,82 +185,3 @@ object Wand {
     }
   }
 }
-
-/** MAXSCORE bulk scorer over a top-level disjunction — the alternative
-  * dynamic-pruning strategy (semantics of
-  * `/root/reference/lucene/core/src/java/org/apache/lucene/search/MaxScoreBulkScorer.java`):
-  * clauses sorted by score upper bound split into *non-essential* (their
-  * summed bounds cannot alone reach the k-th score) and *essential*; only
-  * essential clauses drive iteration, and non-essential clauses are probed
-  * per candidate with running-bound early abort. Results are identical to
-  * WAND and to exhaustive scoring (duels in `ScorerSpec` enforce it); WAND
-  * stays the engine default (the north rule names it).
-  */
-object MaxScore {
-
-  import DocScorer.NoMoreDocs
-
-  def run(
-      scorers: Array[DocScorer],
-      collector: TopKCollector,
-      pruning: Boolean = true
-  ): Unit = {
-    val q = scorers.length
-    if (q == 0) return
-    // ascending static score upper bounds; the non-essential prefix grows
-    // as the collector's threshold rises
-    val sorted = scorers.sortBy(_.maxScore)
-    val maxs = sorted.map(_.maxScore)
-    val prefix = maxs.scanLeft(0.0)(_ + _) // prefix(i) = sum of maxs[0..i)
-    sorted.foreach(_.nextDoc())
-    var done = false
-    while (!done) {
-      val threshold =
-        if (pruning) collector.minCompetitiveScore else Double.NegativeInfinity
-      // largest k with prefix(k) <= threshold → clauses [0, k) non-essential
-      var k = 0
-      while (k < q && prefix(k + 1) <= threshold) k += 1
-      if (k == q) done = true // even all clauses together cannot compete
-      else {
-        // next candidate = min current docId among essential clauses
-        var cand = NoMoreDocs
-        var i = k
-        while (i < q) {
-          if (sorted(i).docId < cand) cand = sorted(i).docId
-          i += 1
-        }
-        if (cand == NoMoreDocs) done = true
-        else {
-          // essential contributions
-          var score = 0.0
-          i = k
-          while (i < q) {
-            if (sorted(i).docId == cand) score += sorted(i).score
-            i += 1
-          }
-          // probe non-essential in descending bound order with early abort:
-          // score + prefix(j) is an upper bound on the final score once
-          // clauses [j, k) have been resolved
-          var j = k - 1
-          var aborted = false
-          while (j >= 0 && !aborted) {
-            if (pruning && score + prefix(j + 1) <= threshold) aborted = true
-            else {
-              val s = sorted(j)
-              val d = if (s.docId < cand) s.advance(cand) else s.docId
-              if (d == cand) score += s.score
-              j -= 1
-            }
-          }
-          if (!aborted) collector.collect(cand, score)
-          // advance essential clauses past the candidate
-          i = k
-          while (i < q) {
-            if (sorted(i).docId == cand) sorted(i).nextDoc()
-            i += 1
-          }
-        }
-      }
-    }
-  }
-}

@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.search.{BoolQuery, BoostQuery, ConstScoreQuery, DisMaxQuery, IndexSearcher, MultiPhraseQuery, Occur, PhraseQuery, Query, SynonymQuery, TermQuery}
+import graft.search.{BoolQuery, BoostQuery, ConstScoreQuery, DisMaxQuery, IndexSearcher, MultiPhraseQuery, PhraseQuery, Query, SynonymQuery, TermQuery}
 
 /** Streaming surfaces of the engine (SURVEY.md §2.4):
   *
   *  - **Percolation** (the reference's monitor module,
   *    `/root/reference/lucene/monitor/src/java/org/apache/lucene/monitor/Monitor.java`):
   *    a *document stream* matched against a *stored query set* — expressed as
-  *    Structured Streaming with the query set broadcast into a codegen'd
-  *    boolean-match predicate per query.
+  *    Structured Streaming with the query set broadcast, indexed by trigger
+  *    terms, and evaluated per candidate query.
   *  - **Windowed event aggregation** with event-time + watermark: the
   *    standard Structured Streaming shape for NRT metrics over the segment
   *    stream.
@@ -22,123 +22,10 @@ import graft.search.{BoolQuery, BoostQuery, ConstScoreQuery, DisMaxQuery, IndexS
   */
 object Streaming {
 
-  /** Compile a stored query to a codegen'd boolean Column over a token-array
-    * column (broadcast-free: the query tree folds into the plan).
-    */
-  def matchExpr(q: Query, toks: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    q match {
-      case TermQuery(t) => array_contains(toks, t)
-      case graft.search.MatchNoneQuery => lit(false)
-      case BoostQuery(q2, _) => matchExpr(q2, toks) // boost is score-only
-      case dm: DisMaxQuery =>
-        dm.disjuncts.map(matchExpr(_, toks)).reduce(_ || _)
-      case cs: ConstScoreQuery => matchExpr(cs.query, toks)
-      case sq: SynonymQuery =>
-        sq.synonyms.map(t => array_contains(toks, t)).reduce(_ || _)
-      case cf: graft.search.CombinedFieldQuery =>
-        // a percolated doc has no fields: the combined-field union IS the
-        // doc's token stream, so the match condition is term presence
-        array_contains(toks, cf.term)
-      case fq: graft.search.FeatureQuery =>
-        // percolated docs carry no feature postings; matches only if the
-        // doc literally contains the feature term (normally never)
-        array_contains(toks, fq.term)
-      case pq: PhraseQuery =>
-        // exact phrase over whitespace tokens == substring on the
-        // space-joined stream (the percolate paths split on single spaces,
-        // so join is the inverse); sloppy phrases dispatch to the broadcast
-        // evaluator instead (see percolate)
-        require(pq.slop == 0,
-          "sloppy phrases are not foldable — percolate dispatches them to the broadcast path")
-        concat(lit(" "), array_join(toks, " "), lit(" "))
-          .contains(" " + pq.phraseTerms.mkString(" ") + " ")
-      case _: MultiPhraseQuery =>
-        throw new IllegalArgumentException(
-          "multiphrase is not foldable — percolate dispatches it to the broadcast path")
-      case _: graft.search.IntervalQuery =>
-        throw new IllegalArgumentException(
-          "interval queries are not foldable — percolate dispatches them to the broadcast path")
-      case dq: graft.search.MultiTermDictQuery =>
-        exists(toks, t => specCol(dq.spec, t))
-      case bq: BoolQuery =>
-        val must = bq.must.map(matchExpr(_, toks)) ++ bq.filter.map(matchExpr(_, toks))
-        val should = bq.should.map(matchExpr(_, toks))
-        val not = bq.mustNot.map(matchExpr(_, toks))
-        val mustOk = must.reduceOption(_ && _).getOrElse(lit(true))
-        val shouldOk =
-          if (bq.should.isEmpty) lit(true)
-          else if (bq.minimumShouldMatch > 1)
-            should.map(c => when(c, 1).otherwise(0)).reduce(_ + _) >=
-              bq.minimumShouldMatch
-          else should.reduce(_ || _)
-        val notOk = not.map(!_).reduceOption(_ && _).getOrElse(lit(true))
-        mustOk && shouldOk && notOk
-    }
-
-  /** Percolate a (static or streaming) document frame against stored
-    * queries: emits (query_id, doc id) for every match. One narrow pass per
-    * doc batch — the query set is folded into a single generated predicate
-    * stage, no shuffle. Plan size grows with the query set; beyond
-    * [[FoldedPlanLimit]] queries this dispatches to [[percolateBroadcast]]
-    * (O(1) plan, term-indexed candidate pruning).
-    */
-  def percolate(
-      docs: DataFrame, idCol: String, textCol: String,
-      queries: Seq[(String, Query)]
-  ): DataFrame = {
-    if (queries.length > FoldedPlanLimit ||
-        queries.exists { case (_, q) => hasSloppyPhrase(q) })
-      return percolateBroadcast(docs, idCol, textCol, queries)
-    val toks = split(col(textCol), " ")
-    val matchStructs = queries.map { case (qid, q) =>
-      when(matchExpr(q, toks), lit(qid)).otherwise(lit(null))
-    }
-    docs.select(col(idCol).as("doc"),
-        array_compact(array(matchStructs: _*)).as("qids"))
-      .select(explode(col("qids")).as("query_id"), col("doc"))
-  }
-
-  /** Codegen'd-plan percolation stays pleasant up to this many stored
-    * queries; larger sets broadcast instead.
-    */
-  val FoldedPlanLimit = 64
-
-  /** Column-level evaluation of a multi-term spec against one token (the
-    * folded-plan analogue of [[graft.search.MultiTerm.matches]]).
-    */
-  private def specCol(spec: graft.search.MultiTerm,
-      t: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import graft.search.MultiTerm
-    spec match {
-      case MultiTerm.Prefix(p) => t.startsWith(p)
-      case MultiTerm.Range(lo, hi, il, ih) =>
-        (if (il) t >= lo else t > lo) && (if (ih) t <= hi else t < hi)
-      case MultiTerm.Wildcard(pat) =>
-        t.rlike(graft.search.IndexSearcher.wildcardParts(pat)._1)
-      case MultiTerm.Fuzzy(q, e) =>
-        graft.functions.EditDistance
-          .damerauLe(lit(q), t, math.min(math.max(e, 0), 2)) >= 0
-    }
-  }
-
-  /** Any clause that cannot fold into a codegen'd Column predicate (sloppy
-    * phrases, multiphrase)? The broadcast evaluator handles those.
-    */
-  private[streaming] def hasSloppyPhrase(q: Query): Boolean = q match {
-    case pq: PhraseQuery      => pq.slop > 0
-    case _: MultiPhraseQuery  => true
-    case _: graft.search.IntervalQuery => true
-    case BoostQuery(q2, _)    => hasSloppyPhrase(q2)
-    case cs: ConstScoreQuery  => hasSloppyPhrase(cs.query)
-    case dm: DisMaxQuery      => dm.disjuncts.exists(hasSloppyPhrase)
-    case bq: BoolQuery        => bq.clauses.exists(c => hasSloppyPhrase(c._1))
-    case _                    => false
-  }
-
   /** Driver-side boolean evaluation of a query against a doc's token set —
-    * the same semantics `matchExpr` folds into the plan (spec
-    * cross-checked). Phrase clauses need positions: use the `pos` thunk
-    * overload (the set-only form rejects them).
+    * the semantics [[percolate]] evaluates per candidate. Phrase clauses
+    * need positions: use the `pos` thunk overload (the set-only form
+    * rejects them).
     */
   def evalQuery(q: Query, toks: Set[String]): Boolean =
     evalQuery(q, toks, () =>
@@ -283,24 +170,16 @@ object Streaming {
     }
   }
 
-  /** Exact-only view of [[triggers]] (legacy shape; None when the cover
-    * needs ranges or doesn't exist).
+  /** Percolate a (static or streaming) document frame against stored
+    * queries: emits (query_id, doc id) for every match, in one narrow pass
+    * per doc batch, no shuffle. The query set ships once per executor as a
+    * broadcast (plan size O(1) regardless of count), with a trigger-term
+    * index so each doc only evaluates queries whose trigger it contains
+    * (queries without a cover — e.g. pure negations — are always checked).
+    * Cost per doc ≈ |tokens| map probes + |candidates| evaluations of
+    * [[evalQuery]]. `evalCounter`, when given, counts those evaluations.
     */
-  private[streaming] def triggerTerms(q: Query): Option[Seq[String]] =
-    triggers(q).flatMap { ts =>
-      if (ts.forall(_.isInstanceOf[TExact]))
-        Some(ts.collect { case TExact(t) => t })
-      else None
-    }
-
-  /** Large-query-set percolation: the compiled query set ships once per
-    * executor as a broadcast (plan size O(1) regardless of count), with a
-    * required-term index so each doc only evaluates queries whose required
-    * term it actually contains (queries without one — pure disjunctions,
-    * negations — are always checked). Cost per doc ≈ |tokens| map probes +
-    * |candidates| boolean evaluations.
-    */
-  def percolateBroadcast(
+  def percolate(
       docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(String, Query)],
       evalCounter: Option[org.apache.spark.util.LongAccumulator] = None

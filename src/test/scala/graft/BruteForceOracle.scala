@@ -101,15 +101,57 @@ final class BruteForceOracle(
   private def synScorer(sq: SynonymQuery, boost: Double): SimScorer =
     mkScorer(sq.synonyms.map(docFreq).max, sq.synonyms.map(totalTermFreq).sum, boost)
 
+  /** An exact phrase's scorer: BM25 over the summed idf of its terms, as
+    * the reference's `PhraseWeight` weighs it (BM25 only).
+    */
+  private def phraseScorer(pq: PhraseQuery, boost: Double): SimScorer = {
+    require(similarity == Similarity.Bm25, "the oracle scores phrases under BM25 only")
+    new Bm25FloatScorer(1.2f, 0.75f,
+      boost.toFloat * pq.phraseTerms.map(t => Bm25.idf(docFreq(t), docCount).toDouble).sum.toFloat,
+      avgdl)
+  }
+
+  /** Each term's positions in each doc, from the analyzer's tokens. */
+  private lazy val docPos: Vector[Map[String, Array[Int]]] = sorted.map { p =>
+    analyzer.tokens(p.text).groupBy(_.term).map { case (t, ts) => t -> ts.map(_.position).toArray }
+  }
+
+  /** The scorers `q` reads in the engine, keyed as [[Executor.scorerKeys]]
+    * keys them: terms, synonyms and exact phrases.
+    */
+  def simScorers(q: Query, boost: Double = 1.0): Map[String, SimScorer] = q match {
+    case TermQuery(t) => Map(Executor.skey(t, boost) -> scorer(t, boost))
+    case BoostQuery(q2, b2) => simScorers(q2, boost * b2)
+    case sq: SynonymQuery => Map(Executor.skey(sq.key, boost) -> synScorer(sq, boost))
+    case pq: PhraseQuery => Map(Executor.skey(pq.key, boost) -> phraseScorer(pq, boost))
+    case dm: DisMaxQuery => dm.disjuncts.flatMap(simScorers(_, boost)).toMap
+    case cs: ConstScoreQuery => simScorers(cs.query, boost)
+    case bq: BoolQuery => bq.clauses.flatMap(c => simScorers(c._1, boost)).toMap
+    case _: IntervalQuery => Map.empty
+  }
+
   /** None = no match; Some(score). */
   def eval(q: Query, doc: Int): Option[Double] = {
     val (tf, len) = docTf(doc)
     val norm = java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(len))
+    def pos(t: String): Array[Int] = docPos(doc).getOrElse(t, Array.emptyIntArray)
     def go(q: Query, boost: Double): Option[Double] = q match {
       case TermQuery(t) =>
         if (tf.containsKey(t) && docFreq(t) > 0)
           Some(scorer(t, boost).score(tf.get(t), norm))
         else None
+      case pq: PhraseQuery if pq.slop == 0 =>
+        val starts = pos(pq.phraseTerms.head)
+        val f = starts.count(p => pq.phraseTerms.indices.forall(i => pos(pq.phraseTerms(i)).contains(p + i)))
+        if (f == 0) None else Some(phraseScorer(pq, boost).score(f, norm))
+      case iq: IntervalQuery =>
+        // the minimal intervals of the doc's positions, saturated as the
+        // reference's IntervalScorer saturates them
+        val ivs = Intervals.eval(iq.source, pos)
+        val minExtent = Intervals.minExtent(iq.source)
+        val f = ivs.iterator.map(iv =>
+          1.0 / math.max(Intervals.endOf(iv) - Intervals.startOf(iv) + 1 - minExtent + 1, 1)).sum
+        if (ivs.isEmpty) None else Some(boost * f / (f + iq.pivot))
       case BoostQuery(q2, b2) => go(q2, boost * b2)
       case sq: SynonymQuery =>
         val f = sq.synonyms.map(t => tf.getOrDefault(t, 0)).sum

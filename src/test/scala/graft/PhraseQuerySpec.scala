@@ -313,7 +313,7 @@ class PhraseQuerySpec extends SparkTestBase {
       "q_exact" -> Query.parse("\"data query\""),
       "q_slop" -> Query.parse("\"data query\"~1"),
       "q_mix" -> Query.parse("table AND \"data query\""))
-    // sloppy phrase present -> dispatches to the broadcast path
+    // sloppy and exact phrases in one stored set
     val got = graft.streaming.Streaming
       .percolate(docs, "doc_id", "text", stored)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -321,13 +321,13 @@ class PhraseQuerySpec extends SparkTestBase {
       ("q_exact", 0L), ("q_exact", 4L),
       ("q_slop", 0L), ("q_slop", 1L), ("q_slop", 4L),
       ("q_mix", 4L)))
-    // folded path (exact phrases only) agrees
-    val folded = graft.streaming.Streaming
+    // a set of exact phrases only agrees
+    val exactOnly = graft.streaming.Streaming
       .percolate(docs, "doc_id", "text",
         Seq("q_exact" -> Query.parse("\"data query\""),
           "q_mix" -> Query.parse("table AND \"data query\"")))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(folded == Set(("q_exact", 0L), ("q_exact", 4L), ("q_mix", 4L)))
+    assert(exactOnly == Set(("q_exact", 0L), ("q_exact", 4L), ("q_mix", 4L)))
   }
 
   test("field-scoped phrase: per-field positions, no cross-field match") {

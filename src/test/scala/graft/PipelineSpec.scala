@@ -567,11 +567,11 @@ class PipelineSpec extends SparkTestBase {
         shouldOk && !bq.mustNot.exists(evalQ(_, toks))
   }
 
-  test("broadcast percolation == folded-plan percolation on a large query set") {
+  test("percolation == per-doc evalQuery on a large query set") {
     import graft.search.{BoolQuery, BoostQuery, Occur, SynonymQuery, TermQuery}
     val words = Seq("spark", "data", "query", "court", "law", "state", "vector",
       "merge", "batch", "customer", "stream", "table", "web", "time")
-    // 90 queries of varied shape (> FoldedPlanLimit forces the dispatch too)
+    // 90 queries of varied shape
     val stored: Seq[(String, Query)] = (0 until 90).map { i =>
       val a = words(i % words.length); val b = words((i + 3) % words.length)
       val c = words((i + 7) % words.length)
@@ -587,18 +587,15 @@ class PipelineSpec extends SparkTestBase {
       }
       s"q$i" -> q
     }
-    val viaBroadcast = Streaming.percolateBroadcast(docs, "doc_id", "text", stored)
+    val got = Streaming.percolate(docs, "doc_id", "text", stored)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val viaPlan = stored.grouped(30).map { chunk => // folded plan per chunk
-      Streaming.percolate(docs, "doc_id", "text", chunk)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    }.reduce(_ ++ _)
-    assert(viaBroadcast == viaPlan)
-    assert(viaBroadcast.nonEmpty)
-    // the public percolate() dispatches to broadcast above the plan limit
-    val dispatched = Streaming.percolate(docs, "doc_id", "text", stored)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(dispatched == viaPlan)
+    val expected = (for {
+      r <- docs.select("doc_id", "text").collect()
+      (qid, q) <- stored
+      if Streaming.evalQuery(q, r.getString(1).split(" ").toSet)
+    } yield (qid, r.getLong(0))).toSet
+    assert(got == expected)
+    assert(got.nonEmpty)
   }
 
   test("taxonomy rollup counts every prefix of ragged-depth paths") {
@@ -623,7 +620,7 @@ class PipelineSpec extends SparkTestBase {
       s"q$i" -> q
     }
     val counter = spark.sparkContext.longAccumulator("percolator-evals")
-    val got = Streaming.percolateBroadcast(docs, "doc_id", "text", stored, Some(counter))
+    val got = Streaming.percolate(docs, "doc_id", "text", stored, Some(counter))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val nDocs = docs.count()
     // correctness: equals per-doc brute evaluation
@@ -663,7 +660,7 @@ class PipelineSpec extends SparkTestBase {
       s"q$i" -> q
     }
     val counter = spark.sparkContext.longAccumulator("percolator-mtd-evals")
-    val got = Streaming.percolateBroadcast(docs, "doc_id", "text", stored, Some(counter))
+    val got = Streaming.percolate(docs, "doc_id", "text", stored, Some(counter))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val toksByDoc = docs.collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").toSet)

@@ -33,6 +33,15 @@ class ScorerSpec extends AnyFunSuite with PropHelpers {
     }.toArray
   }
 
+  /** Build BlockViews from positional postings (docId, positions, norm):
+    * freq is the positions' count.
+    */
+  private def posBlocks(postings: Seq[(Long, Array[Int], Int)], blockSize: Int): Array[BlockView] =
+    blocks(postings.map(p => (p._1, p._2.length, p._3)), blockSize).map { b =>
+      val inBlock = postings.filter(p => p._1 >= b.firstDocId && p._1 <= b.lastDocId).sortBy(_._1)
+      b.copy(posPacked = graft.codec.Positions.encode(inBlock.map(_._2).toArray, b.numDocs))
+    }
+
   private def term(postings: Seq[(Long, Int, Int)], score: Double, blockSize: Int = 128) =
     new TermScorer(blocks(postings, blockSize), new ConstScorer(score))
 
@@ -145,61 +154,6 @@ class ScorerSpec extends AnyFunSuite with PropHelpers {
     }
   }
 
-  test("MAXSCORE fixture: same results as WAND on the golden corpus") {
-    for (bs <- Seq(1, 2, 128); k <- Seq(2, 10)) {
-      val ps = fixtureScorers(bs)
-      def mk() = Array[DocScorer](
-        term(ps("A"), 2.0, bs), term(ps("B"), 1.0, bs), term(ps("C"), 3.0, bs))
-      val viaMax = new TopKCollector(k)
-      MaxScore.run(mk(), viaMax)
-      val viaWand = new TopKCollector(k)
-      Wand.run(mk(), None, viaWand)
-      assert(viaMax.results.toSeq == viaWand.results.toSeq, s"bs=$bs k=$k")
-    }
-  }
-
-  test("randomized duel: MAXSCORE == WAND == exhaustive") {
-    val genCorpus = for {
-      nDocs <- Gen.choose(20, 400)
-      nTerms <- Gen.choose(2, 5)
-      density <- Gen.choose(2, 10)
-    } yield (nDocs, nTerms, density)
-
-    forAll(genCorpus, n = 40) { case (nDocs, nTerms, density) =>
-      val rnd = new scala.util.Random(nDocs * 31 + nTerms * 7 + density)
-      val termPostings = (0 until nTerms).map { t =>
-        val ps = (0 until nDocs).flatMap { d =>
-          if (rnd.nextInt(density) == 0)
-            Some((d.toLong, 1 + rnd.nextInt(5), 1 + rnd.nextInt(200)))
-          else None
-        }
-        t.toString -> ps
-      }.filter(_._2.nonEmpty)
-      if (termPostings.nonEmpty) {
-        val sims: Map[String, SimScorer] = termPostings.map { case (t, _) =>
-          t -> (new Bm25FloatScorer(1.2f, 0.75f,
-            (0.5f + rnd.nextInt(10)), 120.0f): SimScorer)
-        }.toMap
-        val bs = 1 + rnd.nextInt(16)
-        def mk() = termPostings.map { case (t, ps) =>
-          new TermScorer(blocks(ps, bs), sims(t)): DocScorer
-        }.toArray
-        for (k <- Seq(1, 3, 10)) {
-          val viaMax = new TopKCollector(k)
-          MaxScore.run(mk(), viaMax, pruning = true)
-          val exact = new TopKCollector(k)
-          MaxScore.run(mk(), exact, pruning = false)
-          val viaWand = new TopKCollector(k)
-          Wand.run(mk(), None, viaWand, pruning = true)
-          assert(viaMax.results.toSeq == exact.results.toSeq,
-            s"MAXSCORE pruning changed results k=$k bs=$bs")
-          assert(viaMax.results.toSeq == viaWand.results.toSeq,
-            s"MAXSCORE != WAND k=$k bs=$bs")
-        }
-      }
-    }
-  }
-
   test("randomized duel: block-max conjunction == exhaustive") {
     val genCorpus = for {
       nDocs <- Gen.choose(20, 400)
@@ -234,6 +188,60 @@ class ScorerSpec extends AnyFunSuite with PropHelpers {
           Executor.search(q, blocksMap, sims, exact, pruning = false)
           assert(pruned.results.toSeq == exact.results.toSeq,
             s"conjunction pruning changed results k=$k blockSize=$bs")
+        }
+      }
+    }
+  }
+
+  test("single-scorer shapes: Executor.search == build + WAND == exhaustive drain") {
+    import graft.index.FeatureIndexer
+    val feature = FeatureIndexer.featureTerm("rank")
+    val cf = CombinedFieldQuery("a", Seq("title" -> 2.0, "body" -> 1.0))
+    val shapes: Seq[Query] = Seq(
+      TermQuery("a"),
+      SynonymQuery(Seq("a", "b")),
+      cf,
+      FeatureQuery("rank", FeatureFunction.Saturation(3.0)),
+      PhraseQuery(Seq("a", "b")),
+      MultiPhraseQuery(Seq(0 -> Seq("a", "c"), 1 -> Seq("b"))),
+      IntervalQuery(Intervals.Ordered(Seq(Intervals.Term("a"), Intervals.Term("c")))),
+      BoostQuery(TermQuery("b"), 2.5),
+      DisMaxQuery(Seq(TermQuery("a"), TermQuery("c")), 0.3),
+      ConstScoreQuery(TermQuery("c"), 2.0))
+    forAll(Gen.choose(20, 300), n = 20) { nDocs =>
+      val rnd = new scala.util.Random(nDocs)
+      val bs = 1 + rnd.nextInt(16)
+      // each doc: a run of 3-12 tokens over a 4-word vocabulary
+      val docs = (0 until nDocs).map { d =>
+        d.toLong -> Array.fill(3 + rnd.nextInt(10))("abcd"(rnd.nextInt(4)).toString)
+      }
+      val text = Seq("a", "b", "c", "d").map { t =>
+        t -> posBlocks(docs.flatMap { case (d, toks) =>
+          val ps = toks.indices.filter(toks(_) == t).toArray
+          if (ps.isEmpty) None else Some((d, ps, toks.length))
+        }, bs)
+      }
+      def sparse(f: Int => Int) = blocks(docs.flatMap { case (d, _) =>
+        if (rnd.nextInt(3) == 0) Some((d, f(rnd.nextInt(20)), 1 + rnd.nextInt(200))) else None
+      }, bs)
+      val blocksMap = (text ++ cf.fieldTerms.map { case (t, _) => t -> sparse(1 + _) } :+
+        (feature -> sparse(v => FeatureIndexer.encodeValue(1f + v)))).toMap
+      for (q <- shapes) {
+        val sims: Map[String, SimScorer] = Executor.scorerKeys(q).iterator.map { k =>
+          k -> (if (k.startsWith("feat:"))
+            new FeatureSimScorer(FeatureFunction.Saturation(3.0), 1.0, floatExact = true)
+          else new Bm25FloatScorer(1.2f, 0.75f, 0.5f + rnd.nextInt(10), 120.0f): SimScorer)
+        }.toMap
+        for (k <- Seq(1, 3, 10)) {
+          val viaSearch = new TopKCollector(k)
+          Executor.search(q, blocksMap, sims, viaSearch, pruning = true)
+          val viaWand = new TopKCollector(k)
+          Executor.build(q, blocksMap, sims).foreach(s => Wand.run(Array(s), None, viaWand))
+          val exact = new TopKCollector(k)
+          Executor.build(q, blocksMap, sims).foreach(Wand.drain(_, exact))
+          assert(exact.results.nonEmpty, s"$q matched nothing")
+          assert(viaSearch.results.toSeq == viaWand.results.toSeq, s"$q k=$k bs=$bs")
+          assert(viaSearch.results.toSeq == exact.results.toSeq, s"$q k=$k bs=$bs")
         }
       }
     }

@@ -63,6 +63,20 @@ class SegmentCommitSpec extends SparkTestBase {
     Corpus.pages(spark, n).map(p => (p.url, p.text))
   }
 
+  /** `pages(n)` with a `|payload` on every third word. `messy` separates
+    * the words by tabs, newlines and runs of whitespace, and puts
+    * whitespace at both edges of the text, instead of single spaces.
+    */
+  private def payloadPages(n: Int, messy: Boolean): Dataset[(String, String)] = {
+    import spark.implicits._
+    val seps = Array(" ", "\t", "\n", "  ", " \t\r\n ")
+    pages(n).map { case (u, t) =>
+      val ws = t.split("\\s+").zipWithIndex.map { case (w, i) => if (i % 3 == 0) s"$w|${i % 7}" else w }
+      (u, if (messy) "\n " + ws.indices.map(i => ws(i) + seps(i % seps.length)).mkString
+          else ws.mkString(" "))
+    }
+  }
+
   /** `all` split in two by url hash, as the build benchmark splits it. */
   private def halves(all: Dataset[(String, String)]): Seq[Dataset[(String, String)]] = {
     import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
@@ -113,17 +127,15 @@ class SegmentCommitSpec extends SparkTestBase {
           IndexBuilder.buildSegmentFields(fieldPages(n), dir, cfg)
           IndexBuilder.assignAndTokenizeFields(fieldPages(n), cfg).collect().toSeq
         } else {
-          val corpus = if (cfg.storePayloads) {
-            import spark.implicits._
-            pages(n).map { case (u, t) =>
-              (u, t.split("\\s+").zipWithIndex.map { case (w, i) => if (i % 3 == 0) s"$w|${i % 7}" else w }
-                .mkString(" "))
-            }
-          } else pages(n)
+          val corpus = if (cfg.storePayloads) payloadPages(n, messy = true) else pages(n)
           IndexBuilder.buildSegment(corpus, dir, cfg)
           IndexBuilder.assignAndTokenize(corpus, cfg).collect().toSeq
         }
       val want = inverted(docs, cfg)
+      if (cfg.storePayloads) { // a whitespace run is one break, as a single space is
+        val spaced = IndexBuilder.assignAndTokenize(payloadPages(n, messy = false), cfg)
+        assert(inverted(spaced.collect().toSeq, cfg) == want)
+      }
       if (cfg.bucketShift == 9) assert(want.exists(_._3.size == BlockCodec.BlockSize))
       val got = decoded(dir)
       assert(got.size == want.size)

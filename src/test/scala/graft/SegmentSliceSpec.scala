@@ -3,16 +3,17 @@ package graft
 import graft.analysis.StandardAnalyzer
 import graft.corpus.{Corpus, Page}
 import graft.index.{Deletes, IndexBuilder, IndexConfig, SegmentManifest}
-import graft.search.{IndexSearcher, Intervals, PhraseQuery, Query}
+import graft.search._
 
 /** A resident slice is the unit of query parallelism: each segment loads as
   * several bucket-range slices (a session with a small
-  * `spark.sql.files.maxPartitionBytes`), and each slice scores bucket by
-  * bucket, in docId order, into one collector. With several slices per
-  * segment and tombstones in one segment, the pruned top-10 equals the
-  * exhaustive one, the brute-force oracle and a one-segment, one-slice
-  * index of the same docs; match sets, scored matches, phrase counts and
-  * interval hits equal the one-slice index's.
+  * `spark.sql.files.maxPartitionBytes`), and each slice is scored as one
+  * doc range, by one scorer tree into one collector. With several slices
+  * per segment and tombstones in one segment, the pruned top-10 equals the
+  * exhaustive one, the brute-force oracle, a one-segment, one-slice index
+  * of the same docs, and the same blocks scored bucket by bucket; match
+  * sets, scored matches, phrase counts and interval hits equal the
+  * one-slice index's.
   */
 class SegmentSliceSpec extends SparkTestBase {
   import spark.implicits._
@@ -134,6 +135,61 @@ class SegmentSliceSpec extends SparkTestBase {
     same("bounded unordered intervals",
       _.intervalHits(MaxWidth(Unordered(Seq(Term("the"), Term("court"))), 6)))
     assert(multi.phraseFreqs(Seq("of", "the")).collect().forall(h => !deleted(h._1)))
+  }
+
+  /** `q`'s top-k scored the way a per-bucket executor scores it: `se`'s
+    * blocks grouped by (segment, bucket), each group by its own scorer tree
+    * into its own collector, the groups' hits merged by (score desc, docId
+    * asc).
+    */
+  private def perBucketTopK(se: IndexSearcher, q: Query, k: Int): Seq[(Long, Double)] = {
+    val sims = oracle.simScorers(q)
+    val tombs = se.segments.map(m => Deletes.readTombstones(spark, m.dir, m.maxDocId))
+    se.blocksFor(q.terms.toSeq).collect().groupBy(b => (b.seg, b.bucket)).toSeq.flatMap {
+      case ((seg, _), bs) =>
+        val byTerm = bs.groupBy(_.term).map { case (t, arr) =>
+          t -> arr.sortBy(_.firstDocId).map(b => BlockView(b.firstDocId, b.lastDocId,
+            b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
+        }
+        val c = new TopKCollector(k, tombs(seg))
+        Executor.search(q, byTerm, sims, c, pruning = true)
+        c.results.map { case (d, sc) => (d + se.bases(seg), sc) }
+    }.sortBy(h => (-h._2, h._1)).take(k)
+  }
+
+  test("a slice is one doc range: topK == per-bucket scoring == oracle") {
+    def t(s: String) = TermQuery(s)
+    import Occur._
+    val court = ConstScoreQuery(t("court"))
+    val queries: Seq[Query] = Seq(
+      t("court"),
+      BoolQuery(Seq(t("court") -> Must, t("law") -> Must)),
+      BoolQuery(Seq(t("court") -> Should, t("law") -> Should)),
+      BoolQuery(Seq(BoolQuery(Seq(t("court") -> Should, t("law") -> Should)) -> Must,
+        t("state") -> Should)),
+      BoolQuery(Seq(t("court") -> Should, t("law") -> Should, t("state") -> Should,
+        t("of") -> Should), minimumShouldMatch = 2),
+      BoolQuery(Seq(t("the") -> Should, t("of") -> Should, t("court") -> MustNot)),
+      BoolQuery(Seq(t("court") -> Should, t("law") -> Should, t("the") -> Filter)),
+      BoostQuery(t("court"), 2.5),
+      SynonymQuery(Seq("court", "law")),
+      DisMaxQuery(Seq(t("court"), t("law")), 0.2),
+      PhraseQuery(Seq("of", "the")),
+      IntervalQuery(Intervals.Ordered(Seq(Intervals.Term("the"), Intervals.Term("of")))),
+      court)
+    // every match of `court` ties, so its top-10 is its 10 lowest live
+    // docIds: they must cross a bucket boundary for the tie check to bite
+    val tied = oracle.topK(court, 10 + deleted.size).filterNot(h => deleted(h._1)).take(10)
+    assert(tied.size == 10 && tied.map(_._1 >>> cfg.bucketShift).distinct.size >= 2,
+      s"tied hits in one bucket: ${tied.map(_._1)}")
+    assert(oracle.matching(court).count(d => !deleted(d)) > 10, "no tie cut at k")
+    for (se <- Seq(single, multi); q <- queries) {
+      val got = hits(se.topK(q, 10))
+      assert(got.nonEmpty, s"vacuous check for $q")
+      assert(got == perBucketTopK(se, q, 10), s"slice != buckets for $q")
+      assert(got == oracle.topK(q, 10 + deleted.size).filterNot(h => deleted(h._1)).take(10),
+        s"engine != oracle for $q")
+    }
   }
 
   test("a query term absent from some segments still scores one slice per segment") {
