@@ -38,7 +38,8 @@ object Plans {
       ("Posting point scan (explain)",
         "The per-doc reads that stay on Parquet — explain's freq/norm and " +
           "position lookups — read only the query's terms' blocks; the sorted " +
-          "`term` column prunes row groups, `bucket` carries the head-term salt.",
+          "`term` column prunes row groups, and `firstDocId` picks the one block " +
+          "per term that can hold a doc.",
         fmt(spark.read.parquet(s"$segDir/postings")
           .where($"term".isin("data", "query"))
           .select($"term", $"bucket", $"firstDocId", $"numDocs"))),

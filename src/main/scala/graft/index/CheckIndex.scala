@@ -10,8 +10,9 @@ import graft.index.Schema.PostingBlock
 /** Index integrity auditor — the re-expression of the reference's
   * `CheckIndex` tool (`/root/reference/lucene/core/src/java/org/apache/lucene/index/CheckIndex.java:114,2619-2660`:
   * re-read every posting, verify term/doc order, freq/stats consistency):
-  * every block lies in its bucket, no (term, docId) posting occurs twice, and
-  * the manifest's counts and maxDocId equal the tables'.
+  * every block holds at most 128 docs and is tagged with its first doc's
+  * bucket, a term's blocks ascend without overlapping, and the manifest's
+  * counts and maxDocId equal the tables'.
   * Runs as distributed aggregations; returns a report of violations
   * (empty = index is sound).
   */
@@ -71,8 +72,8 @@ object CheckIndex {
       val fs = BlockCodec.pforDecode(b.freqsPacked)
       val ns = BlockCodec.forDecode(b.normsPacked)
       def key = s"(${b.term}, bucket ${b.bucket}, first ${b.firstDocId})"
-      if ((b.firstDocId >>> shift) != b.bucket || (b.lastDocId >>> shift) != b.bucket)
-        errs += s"$key: block lies outside its bucket"
+      if (b.numDocs > BlockCodec.BlockSize) errs += s"$key: more than ${BlockCodec.BlockSize} docs"
+      if ((b.firstDocId >>> shift) != b.bucket) errs += s"$key: bucket is not its first doc's"
       if (ids.length != b.numDocs || fs.length != b.numDocs || ns.length != b.numDocs)
         errs += s"$key: decoded lengths disagree with numDocs"
       else {
@@ -143,14 +144,15 @@ object CheckIndex {
     }.take(20).toSeq
     v ++= blockViolations
 
-    // no (term, docId) posting twice: within a block docIds ascend (above),
-    // so a term's blocks in firstDocId order must not overlap
+    // a term's blocks in firstDocId order: each starts after the last doc
+    // of the one before, so no (term, docId) posting occurs twice (within a
+    // block docIds ascend, above)
     val overlaps = blocksDs.select($"term", $"firstDocId", $"lastDocId")
       .withColumn("prevLast", lag($"lastDocId", 1).over(
         Window.partitionBy($"term").orderBy($"firstDocId", $"lastDocId")))
       .where($"prevLast" >= $"firstDocId")
       .count()
-    if (overlaps > 0) v += s"$overlaps blocks repeat a (term, docId) posting of an earlier block"
+    if (overlaps > 0) v += s"$overlaps blocks overlap the block before them in their term"
 
     // term dictionary consistency: per-term stats re-derived from blocks
     val terms = spark.read.parquet(s"$dir/terms")

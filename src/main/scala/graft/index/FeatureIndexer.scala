@@ -67,8 +67,8 @@ object FeatureIndexer {
     val docs = new graft.search.SegmentReader(spark, m).docs.select($"docId", $"url")
 
     // one-doc fragments (norm 1, no positions), cut into blocks as a build
-    // cuts its own; hash-partitioned by (term, bucket) like the appended
-    // files before, each file sorted by (term, bucket, firstDocId)
+    // cuts its own; hash-partitioned by term, each appended file sorted by
+    // (term, firstDocId)
     val rows = features
       .select($"url", $"feature".cast("string"), $"value".cast("float"))
       .join(docs, "url")
@@ -78,7 +78,7 @@ object FeatureIndexer {
         ((featureTerm(f), docId), SegmentWriter.fragment(encodeValue(v).toLong))
       }
     val written = SegmentWriter.writePostings(spark, rows,
-      new SegmentWriter.TermPartitioner(Array.empty, shift,
+      new SegmentWriter.TermPartitioner(Array.empty,
         hashed = math.max(1, (m.blockCount / 1024).toInt).min(64)),
       s"$segDir/postings", SaveMode.Append)(
       SegmentWriter.cut(_, shift, withPos = false, withOffs = false, withPays = false))

@@ -16,8 +16,8 @@ import graft.index.Schema._
   *                     At 10^12 docs the default (2^20-doc buckets) yields
   *                     ~10^6 scoring partitions; local tests use smaller
   *                     shifts. Head-term skew is bounded by bucket span.
-  * @param numPostingPartitions  range partitions for (term, bucket) — the
-  *                     term-dictionary layout.
+  * @param numPostingPartitions  term-range partitions of the postings
+  *                     writer — how many files the postings are written in.
   * @param stopwords    analyzer stopword set (reference default: empty).
   */
 final case class IndexConfig(
@@ -101,11 +101,12 @@ final case class IndexConfig(
   * input --repartitionByRange(url) + sort--> docId assignment (global url rank)
   *       --mapPartitions (analyze once)--> cached DocTokens, one contiguous
   *         docId range per partition
-  *       --write docs (the same tasks sample (term, bucket) range bounds)
-  *       --invert in the doc task--> one posting fragment per (term, bucket)
-  *       --ONE range exchange on (term, bucket), sorted by (term, firstDocId)-->
-  *         fragments concatenated in docId order, cut into 128-doc
-  *         PostingBlocks (delta + FOR/PFor packed, competitive impacts)
+  *       --write docs (the same tasks sample term range bounds)
+  *       --invert in the doc task--> one posting fragment per term
+  *       --ONE range exchange on term, sorted by (term, firstDocId)-->
+  *         a term's fragments concatenated in docId order, cut every 128
+  *         docs into PostingBlocks (delta + FOR/PFor packed, competitive
+  *         impacts), as Lucene's postings writer cuts a term's postings
   *       --the writing tasks report their term stats--> terms, rterms
   * }}}
   *
@@ -461,14 +462,15 @@ object IndexBuilder {
   /** End-to-end: build and atomically commit one segment at `dir`. Resumable:
     * if the segment manifest already exists the build is skipped (the
     * re-expression of the reference's two-phase `segments_N` commit,
-    * `index/SegmentInfos.java`).
+    * `index/SegmentInfos.java`) — unless that segment was built under
+    * another layout, which fails the call.
     */
   def buildSegment(
       pages: Dataset[(String, String)],
       dir: String,
       cfg: IndexConfig = IndexConfig()
   ): SegmentManifest =
-    Manifest.read(dir).getOrElse {
+    resumed(dir, cfg).getOrElse {
       require(!cfg.multiField, "use buildSegmentFields for multiField configs")
       commitSegment(pages.sparkSession, dir, cfg)(assignAndTokenize(pages, _))
     }
@@ -482,9 +484,26 @@ object IndexBuilder {
       dir: String,
       cfg: IndexConfig
   ): SegmentManifest =
-    Manifest.read(dir).getOrElse {
+    resumed(dir, cfg.copy(multiField = true)).getOrElse {
       commitSegment(pages.sparkSession, dir, cfg.copy(multiField = true))(
         assignAndTokenizeFields(pages, _))
+    }
+
+  /** The committed segment at `dir`, if any. A build resumes it only when
+    * it has the layout `cfg` asks for — bucketShift, positions, offsets,
+    * payloads and multi-field terms — and refuses it otherwise, before any
+    * Spark job.
+    */
+  private def resumed(dir: String, cfg: IndexConfig): Option[SegmentManifest] =
+    Manifest.read(dir).map { m =>
+      def same[T](what: String, have: T, want: T): Unit =
+        require(have == want, s"segment at $dir was built with $what = $have, the build asks for $want")
+      same("bucketShift", m.bucketShift, cfg.bucketShift)
+      same("storePositions", m.hasPositions, cfg.storePositions)
+      same("storeOffsets", m.hasOffsets, cfg.storeOffsets)
+      same("storePayloads", m.hasPayloads, cfg.storePayloads)
+      same("multiField", m.fieldStats.nonEmpty, cfg.multiField)
+      m
     }
 
   /** The configs a build refuses, checked before any Spark job. */
@@ -503,10 +522,10 @@ object IndexBuilder {
 
   /** What one docs-writing task saw: its rows, tokens (every field's) and
     * largest docId, per field (docs with a token, tokens), its postings and
-    * a uniform sample of their (term, bucket) keys.
+    * a uniform sample of their terms.
     */
   private final case class DocsPart(pid: Int, rows: Long, tokens: Long, maxId: Long,
-      fields: Map[String, (Long, Long)], postings: Long, samples: Array[(String, Long)])
+      fields: Map[String, (Long, Long)], postings: Long, samples: Array[String])
 
   private def commitSegment(spark: SparkSession, dir: String, cfg: IndexConfig)(
       tokenize: IndexConfig => Dataset[DocTokens]): SegmentManifest = {
@@ -516,9 +535,8 @@ object IndexBuilder {
     val docTokens = tokenize(cfg).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // docs: the tasks that write them count them, and sample the
-      // (term, bucket) keys of their postings for the exchange's bounds
+      // terms of their postings for the exchange's bounds
       val acc = spark.sparkContext.collectionAccumulator[DocsPart]("docs written")
-      val shift = cfg.bucketShift
       val perPart = 20 * cfg.numPostingPartitions
       spark.createDataset(docTokens
         .select($"docId", $"url", $"length", $"norm", $"terms", $"fieldNames", $"fieldLengths")
@@ -526,7 +544,7 @@ object IndexBuilder {
           var rows, tokens, postings = 0L
           var maxId = -1L
           val fields = scala.collection.mutable.HashMap[String, (Long, Long)]()
-          val samples = new Array[(String, Long)](perPart)
+          val samples = new Array[String](perPart)
           val rnd = new java.util.Random(pid)
           it.map { r =>
             val docId = r.getLong(0)
@@ -544,7 +562,7 @@ object IndexBuilder {
             var i = 0
             while (i < terms.numElements()) { // reservoir sample of the postings
               val j = if (postings < perPart) postings else rnd.nextLong(postings + 1)
-              if (j < perPart) samples(j.toInt) = (terms.getUTF8String(i).toString, docId >>> shift)
+              if (j < perPart) samples(j.toInt) = terms.getUTF8String(i).toString
               postings += 1
               i += 1
             }
@@ -570,9 +588,9 @@ object IndexBuilder {
       val written = SegmentWriter.writePostings(spark,
         docTokens.select($"docId", $"terms", $"freqs", $"norm", $"termNorms", $"positions",
           $"offsets", $"payloads").queryExecution.toRdd
-          .mapPartitions(SegmentWriter.invert(_, shift, withPos, withOffs, withPays)),
-        new SegmentWriter.TermPartitioner(bounds, shift), s"$dir/postings")(
-        SegmentWriter.cut(_, shift, withPos, withOffs, withPays))
+          .mapPartitions(SegmentWriter.invert(_, withPos, withOffs, withPays)),
+        new SegmentWriter.TermPartitioner(bounds), s"$dir/postings")(
+        SegmentWriter.cut(_, cfg.bucketShift, withPos, withOffs, withPays))
       SegmentWriter.writeDictionary(spark, dir, written, cfg.numPostingPartitions / 4,
         cfg.bloomTerms)
 

@@ -3,22 +3,26 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
+import graft.index.Schema.PostingBlock
+
 /** Segment splitting by docID range — the re-expression of the reference's
   * `misc/index/MultiPassIndexSplitter.java:36-60` (split an index into N
   * parts by partitioning the docID space, each part a self-contained index)
   * without its N full passes: the inverse of [[SegmentMerger]]'s
   * bucket-aligned docBase trick.
   *
-  * Cut points are **bucket-aligned** (multiples of `1 << bucketShift`). A
-  * posting block never straddles a bucket (the build keys blocks by
-  * `(term, bucket)`), so every block falls wholly inside one part, and
-  * rebasing a part to docID 0 subtracts a bucket-aligned constant — the
-  * within-block deltas are relative to the block's own `firstDocId`, so the
-  * packed payloads (docs, freqs, norms, positions, offsets, payloads,
-  * impacts) move as **opaque bytes**. The only per-part work is three
-  * column-arithmetic scans (docs, term vectors, blocks), one exchange of
-  * the part's blocks to the source's term ranges, and the dictionary
-  * written from the stats the writing tasks report; nothing decodes.
+  * Cut points are **bucket-aligned** (multiples of `1 << bucketShift`), and
+  * rebasing a part to docID 0 subtracts that constant — the within-block
+  * deltas are relative to the block's own `firstDocId`, so the packed
+  * payloads (docs, freqs, norms, positions, offsets, payloads, impacts) of
+  * a block inside the part move as **opaque bytes**. A term's 128-doc
+  * blocks run across buckets, so at most one block per term straddles a
+  * cut: it is decoded and re-encoded as two, one per side
+  * ([[SegmentWriter.clip]]), and a part holds exactly its doc range. The
+  * rest of the per-part work is three column-arithmetic scans (docs, term
+  * vectors, blocks), one exchange of the part's blocks to the source's
+  * term ranges, and the dictionary written from the stats the writing
+  * tasks report.
   *
   * Tombstones are carried (filtered + rebased) into each part, and
   * doc-values patch generations are baked into the part's row store via
@@ -72,12 +76,15 @@ object IndexSplitter {
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(segDir, "tvec")))
           SegmentWriter.writeDocs(part(source.tvec), s"$out/tvec")
 
-        // blocks: range filter + rebase — packed payloads untouched; the
-        // per-field stats (multi-field segments) are the part's blocks'
+        // blocks: range filter, a block straddling a cut clipped to the
+        // part, rebase — other packed payloads untouched; the per-field
+        // stats (multi-field segments) are the part's blocks'
+        val shift = cfg.bucketShift
         val blocks = SegmentWriter.shifted(
-          source.postings.where($"firstDocId" >= lo && $"firstDocId" < hi), -lo, cfg.bucketShift)
+          source.postings.where($"lastDocId" >= lo && $"firstDocId" < hi).as[PostingBlock].rdd
+            .flatMap(SegmentWriter.clip(_, lo, hi, shift)), -lo, shift)
         val written = SegmentWriter.writePostings(spark, blocks,
-          new SegmentWriter.TermPartitioner(bounds, cfg.bucketShift), s"$out/postings",
+          new SegmentWriter.TermPartitioner(bounds), s"$out/postings",
           fieldDocs = m.fieldStats.nonEmpty)(_.map(_._2))
         // parts of a bloom-enabled segment keep the option on (each part's
         // filter rebuilds from its OWN term set — a copy of the source's

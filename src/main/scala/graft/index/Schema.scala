@@ -78,12 +78,11 @@ object Schema {
       payloads: Array[Array[Int]] = null
   )
 
-  /** One 128-doc posting block for (term, bucket).
-    *
-    * `bucket = docId >>> bucketShift` is the explicit skew salt: a head
-    * term's postings split across buckets, so range partitioning by
-    * (term, bucket) spreads them over the cluster (north-rule "explicit
-    * salting of head-term skew"). Blocks never span buckets.
+  /** One block of up to 128 docs of a term's postings: a term's postings
+    * over the whole segment are cut every 128 docs, as the reference's
+    * postings writer cuts them, so a block may span buckets.
+    * `bucket = firstDocId >>> bucketShift` (segments written before this
+    * layout cut at every bucket too; they read and merge the same).
     *
     * Within-block docIDs are delta-encoded against `firstDocId` and
     * FOR-packed; freqs are PFor-packed (semantics of

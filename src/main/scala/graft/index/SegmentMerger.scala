@@ -12,13 +12,13 @@ import graft.search.SegmentReader
   * + `DocIDMerger.java:32-95`).
   *
   * DocID remap is *column arithmetic only*: each input segment's docIDs shift
-  * by a docBase that is **aligned to the bucket span**, so existing posting
-  * blocks never straddle a bucket boundary after the shift and their packed
-  * payloads stay valid byte-for-byte (within-block deltas are relative to
-  * `firstDocId`). The only per-byte work is compacting fragmented tail blocks
-  * (several < 128-doc blocks of one (term, bucket)) — full blocks pass
-  * through undecoded. At 100 TB this is the difference between shuffling
-  * metadata and re-encoding the whole index.
+  * by a docBase (aligned to the bucket span, so buckets stay whole) and the
+  * packed payloads of its blocks stay valid byte-for-byte (within-block
+  * deltas are relative to `firstDocId`). The only per-byte work is purging
+  * tombstones and fusing runs of partial blocks of one term — an input's
+  * last block of a term meets the next input's first — into 128-doc
+  * blocks; full blocks pass through undecoded. At 100 TB this is the
+  * difference between shuffling metadata and re-encoding the whole index.
   */
 object SegmentMerger {
 
@@ -83,21 +83,21 @@ object SegmentMerger {
           SegmentWriter.writeDocs(remapped(m => new SegmentReader(spark, m).tvec),
             s"$outDir/tvec")
 
-        // postings: remap columns, re-bucket (exact because bases are
-        // bucket-aligned); the writing tasks purge tombstoned docs and
-        // compact fragmented tails per (term, bucket). The inputs' postings
-        // files are term ranges already: their footers give the bounds.
+        // postings: remap columns, re-bucket; the writing tasks purge
+        // tombstoned docs and fuse each term's runs of partial blocks. The
+        // inputs' postings files are term ranges already: their footers
+        // give the bounds.
         val shift = cfg.bucketShift
         val blocks = manifests.zip(bases).map { case (m, base) =>
-          SegmentWriter.shifted(new SegmentReader(spark, m).postings, base, shift)
+          SegmentWriter.shifted(new SegmentReader(spark, m).postings.as[PostingBlock].rdd, base, shift)
         }.reduce(_ union _)
         val purgeFields = deadGlobal.nonEmpty && manifests.exists(_.fieldStats.nonEmpty)
         val written = SegmentWriter.writePostings(spark, blocks,
           new SegmentWriter.TermPartitioner(
-            SegmentWriter.footerBounds(spark, segDirs, cfg.numPostingPartitions), shift),
+            SegmentWriter.footerBounds(spark, segDirs, cfg.numPostingPartitions)),
           s"$outDir/postings", fieldDocs = purgeFields) { it =>
           val bs = it.map(_._2)
-          compact(if (deadGlobal.isEmpty) bs else purge(bs, deadGlobal))
+          compact(if (deadGlobal.isEmpty) bs else purge(bs, deadGlobal, shift), shift)
         }
         // bloom sidecar survives merging only if every input carried one
         // (mixed inputs mean the option was off for part of the corpus —
@@ -126,38 +126,27 @@ object SegmentMerger {
     * opaque bytes; overlapping blocks decode, filter and re-encode (impacts
     * and positions recomputed); fully-dead blocks vanish.
     */
-  private def purge(
-      it: Iterator[PostingBlock], dead: Array[Long]
-  ): Iterator[PostingBlock] =
+  private def purge(it: Iterator[PostingBlock], dead: Array[Long], shift: Int): Iterator[PostingBlock] =
     it.flatMap { b =>
       var lo = java.util.Arrays.binarySearch(dead, b.firstDocId)
       if (lo < 0) lo = -lo - 1
       if (lo >= dead.length || dead(lo) > b.lastDocId) Some(b)
-      else {
-        val (ids, fs, ns, pos, off, pay) = SegmentWriter.decode(b)
-        val keep = ids.indices.filter(i => java.util.Arrays.binarySearch(dead, ids(i)) < 0)
-        def kept[T: scala.reflect.ClassTag](xs: Array[T]): Array[T] =
-          if (xs == null) null else keep.map(xs).toArray
-        if (keep.isEmpty) None
-        else if (keep.size == b.numDocs) Some(b)
-        else Some(SegmentWriter.encodeBlock(b.term, b.bucket, kept(ids), kept(fs), kept(ns),
-          keep.size, kept(pos), kept(off), kept(pay)))
-      }
+      else SegmentWriter.keep(b, shift)(id => java.util.Arrays.binarySearch(dead, id) < 0)
     }
 
-  /** Stream blocks sorted by (term, bucket, firstDocId); adjacent partial
-    * blocks (numDocs < 128) of the same (term, bucket) are decoded, fused and
-    * re-cut; full blocks, and a partial block with no partial neighbour,
-    * pass through untouched.
+  /** Stream blocks sorted by (term, firstDocId); each run of adjacent
+    * partial blocks (numDocs < 128) of one term is decoded, fused and
+    * re-cut every 128 docs; full blocks, and a partial block with no
+    * partial neighbour, pass through untouched.
     */
-  private def compact(blocks: Iterator[PostingBlock]): Iterator[PostingBlock] = {
+  private def compact(blocks: Iterator[PostingBlock], shift: Int): Iterator[PostingBlock] = {
     val it = blocks.buffered
     def fuse(run: Seq[PostingBlock]): Seq[PostingBlock] =
       if (run.size <= 1) run
       else {
-        val c = new SegmentWriter.Cutter(run.forall(_.posPacked != null),
+        val c = new SegmentWriter.Cutter(shift, run.forall(_.posPacked != null),
           run.forall(_.offsPacked != null), run.forall(_.paysPacked != null))
-        c.key(run.head.term, run.head.bucket)
+        c.key(run.head.term)
         run.foreach { b =>
           val (ids, fs, ns, pos, off, pay) = SegmentWriter.decode(b)
           ids.indices.foreach { i =>
@@ -169,11 +158,11 @@ object SegmentMerger {
         c.drain().toSeq
       }
     Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
-      // one (term, bucket): fuse each run of partial blocks
-      val head = it.head
+      // one term: fuse each run of partial blocks
+      val term = it.head.term
       val out = scala.collection.mutable.ArrayBuffer[PostingBlock]()
       var run = List.empty[PostingBlock]
-      while (it.hasNext && it.head.term == head.term && it.head.bucket == head.bucket) {
+      while (it.hasNext && it.head.term == term) {
         val b = it.next()
         if (b.numDocs >= BlockCodec.BlockSize) { out ++= fuse(run.reverse); run = Nil; out += b }
         else run ::= b

@@ -26,18 +26,19 @@ import graft.index.Schema._
   * ([[IndexSplitter]]) and the feature append ([[FeatureIndexer]]).
   *
   * Postings reach the writer through ONE exchange keyed
-  * `(term, firstDocId)`, partitioned by `(term, bucket)` and sorted by key
-  * on the reduce side. The writing task cuts or compacts its blocks, writes
-  * them, and reports what it wrote — block count, Σ freqSum and the term
-  * stats of its term range — through a result-stage accumulator, which
-  * Spark applies once per partition. So the dictionary (`terms`, `rterms`,
+  * `(term, firstDocId)`, partitioned by term and sorted by key on the
+  * reduce side, so a term's postings all meet in one task, in docId order.
+  * The writing task cuts or compacts its blocks, writes them, and reports
+  * what it wrote — block count, Σ freqSum and the term stats of its term
+  * range — through a result-stage accumulator, which Spark applies once
+  * per partition. So the dictionary (`terms`, `rterms`,
   * the Bloom sidecar) is written from stats already in hand, and no
   * manifest count re-reads a table the commit has just written.
   */
 object SegmentWriter {
 
-  /** Postings an inverting task buffers before it flushes its fragments,
-    * whatever its bucket: bounds a task's memory and a fragment's size.
+  /** Postings an inverting task buffers before it flushes its fragments:
+    * bounds a task's memory and a fragment's size.
     */
   val FlushPostings: Int = 1 << 18
 
@@ -56,9 +57,7 @@ object SegmentWriter {
     }
   }
 
-  /** Order of exchange keys: `(term, firstDocId)`, or `(term, bucket)` in
-    * range bounds. Bucket order is firstDocId order, so both sort alike.
-    */
+  /** Order of exchange keys: `(term, firstDocId)`. */
   val KeyOrder: Ordering[(String, Long)] = new Ordering[(String, Long)] {
     def compare(x: (String, Long), y: (String, Long)): Int = {
       val c = Utf8Order.compare(x._1, y._1)
@@ -66,44 +65,43 @@ object SegmentWriter {
     }
   }
 
-  /** Places a key `(term, firstDocId)` by its `(term, bucket)`: every
-    * fragment or block of one (term, bucket) meets in one task. With
-    * `hashed > 0` partitions hash `(term, bucket)`; otherwise partition `i`
-    * holds the keys above `bounds(i - 1)` up to `bounds(i)` — term ranges.
+  /** Places a key `(term, firstDocId)` by its term alone: every fragment or
+    * block of a term meets in one task, whatever its docIds. With
+    * `hashed > 0` partitions hash the term; otherwise partition `i` holds
+    * the terms above `bounds(i - 1)` up to `bounds(i)` — term ranges.
     */
-  private[index] final class TermPartitioner(
-      bounds: Array[(String, Long)], shift: Int, hashed: Int = 0) extends Partitioner {
+  private[index] final class TermPartitioner(bounds: Array[String], hashed: Int = 0)
+      extends Partitioner {
     def numPartitions: Int = if (hashed > 0) hashed else bounds.length + 1
     def getPartition(key: Any): Int = {
-      val (t, first) = key.asInstanceOf[(String, Long)]
-      val k = (t, first >>> shift)
-      if (hashed > 0) Math.floorMod(k.hashCode, hashed)
+      val t = key.asInstanceOf[(String, Long)]._1
+      if (hashed > 0) Math.floorMod(t.hashCode, hashed)
       else {
         var lo = 0
         var hi = bounds.length
         while (lo < hi) {
           val mid = (lo + hi) >>> 1
-          if (KeyOrder.gt(k, bounds(mid))) lo = mid + 1 else hi = mid
+          if (Utf8Order.gt(t, bounds(mid))) lo = mid + 1 else hi = mid
         }
         lo
       }
     }
   }
 
-  /** Up to `parts - 1` range bounds from weighted candidate keys: a bound
+  /** Up to `parts - 1` range bounds from weighted candidate terms: a bound
     * wherever the cumulative weight crosses another `1/parts` of the total
     * (the cut `RangePartitioner` makes from its samples).
     */
-  private[index] def rangeBounds(cands: Seq[((String, Long), Double)], parts: Int): Array[(String, Long)] = {
-    val ordered = cands.sortBy(_._1)(KeyOrder)
+  private[index] def rangeBounds(cands: Seq[(String, Double)], parts: Int): Array[String] = {
+    val ordered = cands.sortBy(_._1)(Utf8Order)
     val step = ordered.map(_._2).sum / math.max(1, parts)
-    val out = mutable.ArrayBuffer[(String, Long)]()
+    val out = mutable.ArrayBuffer[String]()
     var cum = 0.0
     var target = step
-    ordered.foreach { case (k, w) =>
+    ordered.foreach { case (t, w) =>
       cum += w
-      if (cum >= target && out.size < parts - 1 && out.lastOption.forall(KeyOrder.gt(k, _))) {
-        out += k
+      if (cum >= target && out.size < parts - 1 && out.lastOption.forall(Utf8Order.gt(t, _))) {
+        out += t
         target += step
       }
     }
@@ -114,7 +112,7 @@ object SegmentWriter {
     * already term ranges: each row group's smallest term, weighted by its
     * rows, read from the Parquet footers on the driver — no sampling job.
     */
-  private[index] def footerBounds(spark: SparkSession, dirs: Seq[String], parts: Int): Array[(String, Long)] = {
+  private[index] def footerBounds(spark: SparkSession, dirs: Seq[String], parts: Int): Array[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val cands = dirs.flatMap { d =>
       val dir = new Path(s"$d/postings")
@@ -126,7 +124,7 @@ object SegmentWriter {
             rg.getColumns.asScala
               .find(_.getPath.toDotString == "term").map(_.getStatistics)
               .filter(s => s != null && s.hasNonNullValue)
-              .map(s => (new String(s.getMinBytes, java.nio.charset.StandardCharsets.UTF_8), -1L) ->
+              .map(s => new String(s.getMinBytes, java.nio.charset.StandardCharsets.UTF_8) ->
                 rg.getRowCount.toDouble)
           } finally r.close()
         }
@@ -137,9 +135,10 @@ object SegmentWriter {
   // ------------------------------------------------------------- blocks
 
   /** One posting block from the first `n` docs of the given arrays (copied;
-    * the caller may reuse them). Every block writer encodes through here.
+    * the caller may reuse them), tagged with its first doc's bucket. Every
+    * block writer encodes through here.
     */
-  private[index] def encodeBlock(term: String, bucket: Long, ids: Array[Long],
+  private[graft] def encodeBlock(term: String, shift: Int, ids: Array[Long],
       fs: Array[Long], ns: Array[Long], n: Int, pos: Array[Array[Int]],
       offs: Array[Array[Int]], pays: Array[Array[Int]]): PostingBlock = {
     val docIds = java.util.Arrays.copyOf(ids, n)
@@ -157,7 +156,7 @@ object SegmentWriter {
       if (norms(i) < minNorm) minNorm = norms(i)
       i += 1
     }
-    PostingBlock(term, bucket, docIds(0), docIds(n - 1), n,
+    PostingBlock(term, docIds(0) >>> shift, docIds(0), docIds(n - 1), n,
       docsPacked = BlockCodec.forEncode(BlockCodec.deltaEncode(docIds, docIds(0))),
       freqsPacked = BlockCodec.pforEncode(freqs),
       normsPacked = BlockCodec.forEncode(norms),
@@ -184,21 +183,44 @@ object SegmentWriter {
       if (b.paysPacked == null) null else Positions.decodeRaw(b.paysPacked, fs, b.numDocs))
   }
 
-  /** Cuts the postings of one (term, bucket) after another into 128-doc
-    * blocks: postings arrive in docId order, [[key]] starts the next
-    * (term, bucket), and [[drain]] hands over the blocks cut so far.
+  /** `b` with only the docs that pass `keep`: `b` itself when all pass,
+    * None when none does, else the kept docs decoded and re-encoded (stats,
+    * impacts and positions recomputed, the bucket that of the first kept
+    * doc). A purge drops tombstones through here, and a split or a slice
+    * cuts a block that straddles its doc-range boundary.
     */
-  private[index] final class Cutter(withPos: Boolean, withOffs: Boolean, withPays: Boolean) {
+  private[graft] def keep(b: PostingBlock, shift: Int)(p: Long => Boolean): Option[PostingBlock] = {
+    val (ids, fs, ns, pos, off, pay) = decode(b)
+    val kept = ids.indices.filter(i => p(ids(i)))
+    def sub[T: ClassTag](xs: Array[T]): Array[T] = if (xs == null) null else kept.map(xs).toArray
+    if (kept.isEmpty) None
+    else if (kept.size == b.numDocs) Some(b)
+    else Some(encodeBlock(b.term, shift, sub(ids), sub(fs), sub(ns), kept.size, sub(pos),
+      sub(off), sub(pay)))
+  }
+
+  /** `b`'s docs in `[lo, hi)`; `b` itself when it lies wholly inside. */
+  private[graft] def clip(b: PostingBlock, lo: Long, hi: Long, shift: Int): Option[PostingBlock] =
+    if (b.firstDocId >= lo && b.lastDocId < hi) Some(b)
+    else if (b.lastDocId < lo || b.firstDocId >= hi) None
+    else keep(b, shift)(id => id >= lo && id < hi)
+
+  /** Cuts each term's postings into 128-doc blocks, as Lucene's postings
+    * writer does over a whole segment: postings arrive in (term, docId)
+    * order, a block closes at 128 docs, at a term change ([[key]]) and at
+    * [[flush]], and [[drain]] hands over the blocks cut so far. A block may
+    * span buckets; it is tagged with its first doc's.
+    */
+  private[index] final class Cutter(shift: Int, withPos: Boolean, withOffs: Boolean,
+      withPays: Boolean) {
     private val B = BlockCodec.BlockSize
     private val ids, fs, ns = new Array[Long](B)
     private val pos, offs, pays = new Array[Array[Int]](B)
     private var n = 0
     private var term: String = null
-    private var bucket = 0L
     private val out = mutable.ArrayBuffer[PostingBlock]()
 
-    def key(t: String, b: Long): Unit =
-      if (t != term || b != bucket) { flush(); term = t; bucket = b }
+    def key(t: String): Unit = if (t != term) { flush(); term = t }
 
     def add(id: Long, f: Long, norm: Long, p: Array[Int], o: Array[Int], y: Array[Int]): Unit = {
       if (n == B) flush()
@@ -207,7 +229,7 @@ object SegmentWriter {
     }
 
     def flush(): Unit = if (n > 0) {
-      out += encodeBlock(term, bucket, ids, fs, ns, n, if (withPos) pos else null,
+      out += encodeBlock(term, shift, ids, fs, ns, n, if (withPos) pos else null,
         if (withOffs) offs else null, if (withPays) pays else null)
       n = 0
     }
@@ -215,23 +237,21 @@ object SegmentWriter {
     def drain(): Iterator[PostingBlock] = { val r = out.toArray; out.clear(); r.iterator }
   }
 
-  /** A segment's blocks with every docId moved by the bucket-aligned
-    * `delta`, keyed for [[writePostings]]; the packed streams move as
-    * opaque bytes (their deltas are relative to `firstDocId`).
+  /** Blocks with every docId moved by `delta`, keyed for [[writePostings]];
+    * the packed streams move as opaque bytes (their deltas are relative to
+    * `firstDocId`) and each block's bucket is recomputed.
     */
-  private[index] def shifted(postings: DataFrame, delta: Long, shift: Int): RDD[((String, Long), PostingBlock)] = {
-    import postings.sparkSession.implicits._
-    postings.as[PostingBlock].rdd.map { b =>
+  private[index] def shifted(blocks: RDD[PostingBlock], delta: Long, shift: Int): RDD[((String, Long), PostingBlock)] =
+    blocks.map { b =>
       val first = b.firstDocId + delta
       ((b.term, first),
         b.copy(bucket = first >>> shift, firstDocId = first, lastDocId = b.lastDocId + delta))
     }
-  }
 
   // --------------------------------------------------------- fragments
 
-  /** A posting fragment: one (term, bucket)'s postings from one task, in
-    * docId order, packed as VInts — per doc the docId delta (the first
+  /** A posting fragment: one term's postings from one task, in docId
+    * order, packed as VInts — per doc the docId delta (the first
     * against the key's firstDocId), freq, norm, then the positions (delta),
     * offset pairs (delta) and payloads (raw) the config stores.
     */
@@ -260,16 +280,15 @@ object SegmentWriter {
   }
 
   /** Inverts a partition of docs in docId order into posting fragments keyed
-    * `(term, firstDocId)`, one per (term, bucket) the docs touch; fragments
-    * flush at each bucket boundary and every [[FlushPostings]] postings.
-    * Rows are `(docId, terms, freqs, norm, termNorms, positions, offsets,
-    * payloads)` of the cached [[DocTokens]]: a term string materializes once
-    * per fragment, not once per posting.
+    * `(term, firstDocId)`, one per term the docs touch; fragments flush
+    * every [[FlushPostings]] postings. Rows are `(docId, terms, freqs,
+    * norm, termNorms, positions, offsets, payloads)` of the cached
+    * [[DocTokens]]: a term string materializes once per fragment, not once
+    * per posting.
     */
-  private[index] def invert(docs: Iterator[InternalRow], shift: Int, withPos: Boolean,
+  private[index] def invert(docs: Iterator[InternalRow], withPos: Boolean,
       withOffs: Boolean, withPays: Boolean): Iterator[((String, Long), Array[Byte])] = {
     val open = new java.util.HashMap[UTF8String, Fragment]()
-    var bucket = -1L
     var buffered = 0
     def drain(): Iterator[((String, Long), Array[Byte])] = {
       val out = open.asScala.iterator.map { case (t, f) => ((t.toString, f.first), f.w.result()) }.toArray
@@ -279,9 +298,7 @@ object SegmentWriter {
     }
     docs.flatMap { r =>
       val docId = r.getLong(0)
-      val b = docId >>> shift
-      val out = if (b != bucket || buffered >= FlushPostings) drain() else Iterator.empty
-      bucket = b
+      val out = if (buffered >= FlushPostings) drain() else Iterator.empty
       val terms = r.getArray(1)
       val freqs = r.getArray(2)
       val termNorms = if (r.isNullAt(4)) null else r.getArray(4)
@@ -317,14 +334,14 @@ object SegmentWriter {
     w.result()
   }
 
-  /** Concatenates a task's fragments, sorted by key, per (term, bucket) in
-    * docId order and cuts them into 128-doc blocks.
+  /** Concatenates a task's fragments, sorted by key, per term in docId
+    * order and cuts them into 128-doc blocks.
     */
   private[index] def cut(frags: Iterator[((String, Long), Array[Byte])], shift: Int,
       withPos: Boolean, withOffs: Boolean, withPays: Boolean): Iterator[PostingBlock] = {
-    val c = new Cutter(withPos, withOffs, withPays)
+    val c = new Cutter(shift, withPos, withOffs, withPays)
     frags.flatMap { case ((t, first), bytes) =>
-      c.key(t, first >>> shift)
+      c.key(t)
       val r = new BlockCodec.ByteReader(bytes)
       var id = first
       while (r.remaining > 0) {
@@ -399,24 +416,17 @@ object SegmentWriter {
     spark.createDataset(blocks)(org.apache.spark.sql.Encoders.product[PostingBlock])
       .write.mode(mode).parquet(path)
     val parts = acc.value.asScala.toSeq.sortBy(_.pid)
-    // a term's buckets may straddle two range partitions (or hash to
-    // several): sort the runs by term and sum a term's stats over them
+    // a term is written by one task: the dictionary is every task's terms,
+    // sorted (hashed partitions are not term ranges)
     val rows = parts.iterator.flatMap(p => p.terms.indices.iterator.map(i => (p.terms(i), p.df(i), p.ttf(i))))
       .toArray.sortBy(_._1)(Utf8Order)
-    val merged = mutable.ArrayBuffer[(String, Long, Long)]()
-    rows.foreach { r =>
-      if (merged.nonEmpty && merged.last._1 == r._1) {
-        val p = merged.last
-        merged(merged.length - 1) = (r._1, p._2 + r._2, p._3 + r._3)
-      } else merged += r
-    }
     val fieldStats = parts.flatMap(_.fields).groupBy(_._1).toSeq.map { case (f, xs) =>
       val docs = new Roaring64Bitmap
       xs.foreach(x => docs.or(x._2._2))
       FieldStat(f, docs.getLongCardinality, xs.map(_._2._1).sum)
     }.sortBy(_.field)
-    Written(parts.map(_.blocks).sum, parts.map(_.sumTtf).sum, merged.map(_._1).toArray,
-      merged.map(_._2).toArray, merged.map(_._3).toArray, fieldStats)
+    Written(parts.map(_.blocks).sum, parts.map(_.sumTtf).sum, rows.map(_._1), rows.map(_._2),
+      rows.map(_._3), fieldStats)
   }
 
   /** The dictionary of written postings: `terms` sorted by term, then

@@ -874,17 +874,22 @@ final class IndexSearcher(
 
   /** The posting blocks of `terms` in every segment, read from the resident
     * slices in one RDD job and returned as a local Dataset, each tagged with
-    * its segment and bucket.
+    * its segment and the first bucket of its slice: the blocks of one
+    * `(seg, bucket)` tag are one slice's, one doc range.
     */
   def blocksFor(terms: Seq[String]): Dataset[QBlock] = {
     require(terms.nonEmpty, "no terms")
     val (rdd, segOf) = querySlices(segTermRows(terms), Nil)
     val keys = terms.distinct.toArray
     val shifts = segments.map(_.bucketShift).toArray
+    val buckets = segments.map(Slice.numBuckets).toArray
+    val nSlices = segOf.distinct.map(seg => seg -> readers(seg).slices.getNumPartitions).toMap
     val blocks = new Slice.Pass(rdd, (p, s) => {
       val seg = segOf(p)
+      val (n, nb) = (nSlices(seg), buckets(seg))
       s.blocks(s.keys(keys, Array.empty)).iterator.flatMap { case (t, bs) =>
-        bs.iterator.map(b => QBlock(t, seg, b.firstDocId >>> shifts(seg), b.firstDocId,
+        bs.iterator.map(b => QBlock(t, seg,
+          Slice.firstBucket(((b.firstDocId >>> shifts(seg)) * n / nb).toInt, n, nb), b.firstDocId,
           b.lastDocId, b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
       }
     }).collectParts().flatten
@@ -907,10 +912,20 @@ final class IndexSearcher(
     slices.collectParts()
   }
 
+  /** `k` as a collector size, checked before any job: it must be positive,
+    * and is capped at the doc count — the reference's `numHits must be > 0`
+    * and `min(numHits, maxDoc)` (`search/TopScoreDocCollectorManager.java`).
+    */
+  private def numHits(k: Int): Int = {
+    require(k > 0, s"numHits must be > 0, got $k")
+    math.min(k.toLong, math.max(1L, stats.docCount)).toInt
+  }
+
   /** Top-k by BM25, rank-identical tie-break (score desc, docId asc). The
     * scoring runs when this is called; the result is a local Dataset.
     */
-  def topK(query0: Query, k: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
+  def topK(query0: Query, k0: Int, pruning: Boolean = true): Dataset[ScoredDoc] = {
+    val k = numHits(k0)
     val query = positional(Query.rewrite(query0)) // BooleanQuery#rewrite normalizations
     val rows = segTermRows(query.terms.toSeq.sorted)
     val scorers = scorerMap(query, aggStats(rows))
@@ -1591,7 +1606,8 @@ final class IndexSearcher(
     * merge of the per-slice top-k. Counts ride along so timings stay
     * interpretable.
     */
-  def profile(query0: Query, k: Int = 10, pruning: Boolean = true): Seq[ProfileRow] = {
+  def profile(query0: Query, k0: Int = 10, pruning: Boolean = true): Seq[ProfileRow] = {
+    val k = numHits(k0)
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }

@@ -9,7 +9,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.index.SegmentManifest
+import graft.index.{SegmentManifest, SegmentWriter}
+import graft.index.Schema.PostingBlock
 
 /** One bucket range of a segment's postings, resident on an executor — the
   * in-memory form of an opened segment, which the reference maps once
@@ -190,13 +191,25 @@ object Slice {
     }
   }
 
+  /** The number of buckets of segment `m`. */
+  private[search] def numBuckets(m: SegmentManifest): Long =
+    math.max(1L, (m.maxDocId >> m.bucketShift) + 1)
+
+  /** The first bucket of slice `s` of `nSlices` over `numBuckets` buckets,
+    * `s = nSlices` giving the end: bucket `b` is in slice `b·nSlices / numBuckets`.
+    */
+  private[search] def firstBucket(s: Int, nSlices: Int, numBuckets: Long): Long =
+    (s * numBuckets + nSlices - 1) / nSlices
+
   /** Load a segment's postings as resident slices, in ONE Spark job.
     *
     * The segment has `S = ceil(postings bytes / spark.sql.files.maxPartitionBytes)`
     * slices (at most one per bucket), and bucket `b` goes to slice
     * `b·S / numBuckets` — Spark's own bound on the bytes one task reads, so
     * a slice's byte array stays far below 2 GB and a large segment loads
-    * and scores in several tasks. One task per Parquet file partition
+    * and scores in several tasks. A block whose docs run into the next
+    * slice is cut at the boundary ([[SegmentWriter.clip]]), so each slice
+    * holds exactly its doc range. One task per Parquet file partition
     * builds a partial slice per slice id; one shuffle keyed by slice id
     * brings the partials together, and one task per slice merges them by
     * (term, firstDocId) — term ranges of the partials overlap when Spark
@@ -212,19 +225,28 @@ object Slice {
     val dir = new org.apache.hadoop.fs.Path(s"${m.dir}/postings")
     val bytes = dir.getFileSystem(sc.hadoopConfiguration).getContentSummary(dir).getLength
     val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val numBuckets = math.max(1L, (m.maxDocId >> m.bucketShift) + 1)
-    val nSlices = math.min(numBuckets, math.max(1L, (bytes + maxBytes - 1) / maxBytes)).toInt
+    val buckets = numBuckets(m)
+    val nSlices = math.min(buckets, math.max(1L, (bytes + maxBytes - 1) / maxBytes)).toInt
     val shift = m.bucketShift
     val partials = postings.select("term", "firstDocId", "lastDocId", "numDocs", "freqSum",
         "docsPacked", "freqsPacked", "normsPacked", "impacts", "posPacked").queryExecution.toRdd
       .mapPartitions { rows =>
         val bs = new Array[Builder](nSlices)
-        rows.foreach { r =>
-          val s = ((r.getLong(1) >>> shift) * nSlices / numBuckets).toInt
+        def slice(docId: Long): Int = ((docId >>> shift) * nSlices / buckets).toInt
+        def add(s: Int, b: PostingBlock): Unit = {
           if (bs(s) == null) bs(s) = new Builder
-          bs(s).add(r.getUTF8String(0).toString, r.getLong(1), r.getLong(2), r.getInt(3),
-            r.getLong(4), r.getBinary(5), r.getBinary(6), r.getBinary(7), r.getBinary(8),
-            if (r.isNullAt(9)) null else r.getBinary(9))
+          bs(s).add(b.term, b.firstDocId, b.lastDocId, b.numDocs, b.freqSum, b.docsPacked,
+            b.freqsPacked, b.normsPacked, b.impacts, b.posPacked)
+        }
+        rows.foreach { r =>
+          val (first, last) = (r.getLong(1), r.getLong(2))
+          val b = PostingBlock(r.getUTF8String(0).toString, first >>> shift, first, last,
+            r.getInt(3), r.getBinary(5), r.getBinary(6), r.getBinary(7), r.getBinary(8),
+            r.getLong(4), 0, 0, if (r.isNullAt(9)) null else r.getBinary(9), null, null)
+          (slice(first) to slice(last)).foreach { s =>
+            SegmentWriter.clip(b, firstBucket(s, nSlices, buckets) << shift,
+              firstBucket(s + 1, nSlices, buckets) << shift, shift).foreach(add(s, _))
+          }
         }
         bs.iterator.zipWithIndex.collect { case (b, s) if b != null => s -> b.result() }
       }

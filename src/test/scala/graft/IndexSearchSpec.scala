@@ -98,6 +98,19 @@ class IndexSearchSpec extends SparkTestBase {
     }
   }
 
+  test("topK refuses k <= 0 before any Spark job and caps k at the doc count") {
+    val se = new IndexSearcher(spark, Seq(Manifest.read(segDir).get))
+    val q = Query.parse("court OR law")
+    for (k <- Seq(0, -1, Int.MinValue)) {
+      val (err, log) = countJobs(intercept[IllegalArgumentException](se.topK(q, k)))
+      assert(log.jobs == 0, s"k = $k ran ${log.jobs} jobs")
+      assert(err.getMessage.contains(s"numHits must be > 0, got $k"), err.getMessage)
+    }
+    val all = se.topK(q, se.stats.docCount.toInt).collect().toSeq
+    assert(all.size == oracle.matching(q).size && all.size > 10)
+    assert(se.topK(q, Int.MaxValue).collect().toSeq == all)
+  }
+
   test("duel: mixed required+optional (block-max req-opt) == exhaustive == oracle") {
     import Occur._
     val shapes: Seq[BoolQuery] = Seq(
@@ -964,9 +977,9 @@ class IndexSearchSpec extends SparkTestBase {
 
   test("head-term salting: a Zipf-head term's postings span multiple buckets") {
     import spark.implicits._
-    // the north rule's skew evidence: 'the' (corpus head) must not collapse
-    // into one reducer key — its blocks split across docID-range buckets,
-    // so the (term, bucket) shuffle spreads them over the cluster
+    // 'the' (corpus head) is cut every 128 docs over the whole segment:
+    // its blocks start in several docID-range buckets, so they spread over
+    // the bucket-range slices a query scores in parallel
     val blocks = spark.read.parquet(s"$segDir/postings")
       .where($"term" === "the")
       .select($"bucket").distinct().as[Long].collect()
@@ -1014,12 +1027,13 @@ class IndexSearchSpec extends SparkTestBase {
   test("CheckIndex invariants: block order, doc order, stats consistency") {
     import spark.implicits._
     val blocks = spark.read.parquet(s"$segDir/postings").as[PostingBlock].collect()
-    // per (term, bucket): blocks sorted, disjoint, within-bucket; docs ascending
-    blocks.groupBy(b => (b.term, b.bucket)).foreach { case ((t, bkt), bs) =>
+    // per term: blocks sorted, disjoint, at most 128 docs, tagged with
+    // their first doc's bucket; docs ascending
+    blocks.groupBy(_.term).foreach { case (t, bs) =>
       val sortedB = bs.sortBy(_.firstDocId)
       sortedB.foreach { b =>
-        assert(b.firstDocId >>> cfg.bucketShift == bkt, s"block outside bucket: $t")
-        assert(b.lastDocId >>> cfg.bucketShift == bkt, s"block spans bucket: $t")
+        assert(b.firstDocId >>> cfg.bucketShift == b.bucket, s"bucket is not the first doc's: $t")
+        assert(b.numDocs <= BlockCodec.BlockSize, s"block over 128 docs: $t")
         val ids = BlockCodec.deltaDecode(BlockCodec.forDecode(b.docsPacked), b.firstDocId)
         assert(ids.length == b.numDocs)
         assert(ids.head == b.firstDocId && ids.last == b.lastDocId)

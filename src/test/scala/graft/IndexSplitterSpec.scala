@@ -1,13 +1,17 @@
 package graft
 
 import graft.corpus.Corpus
-import graft.index.{Deletes, IndexBuilder, IndexConfig, IndexSplitter, LiveSet, Manifest}
+import org.apache.spark.sql.DataFrame
+
+import graft.index.{Deletes, IndexBuilder, IndexConfig, IndexSplitter, LiveSet, Manifest, SegmentWriter}
+import graft.index.Schema.PostingBlock
 import graft.search.{IndexSearcher, Query}
 
 /** Segment splitting (ref misc/index/MultiPassIndexSplitter): bucket-aligned
-  * cuts move posting blocks as opaque bytes, tombstones carry into their
-  * part, the parts opened together are rank-identical to the unsplit
-  * segment, and each part is independently openable.
+  * cuts move the posting blocks inside a part as opaque bytes and cut a
+  * block that straddles a cut at the cut, tombstones carry into their part,
+  * the parts opened together are rank-identical to the unsplit segment, and
+  * each part is independently openable.
   */
 class IndexSplitterSpec extends SparkTestBase {
 
@@ -26,10 +30,9 @@ class IndexSplitterSpec extends SparkTestBase {
   }
 
   /** (term, numDocs, payload-bytes) multiset — the opaque-bytes probe. */
-  private def blockBytes(postingsDirs: Seq[String]): Seq[String] = {
+  private def blockBytes(postings: Seq[DataFrame]): Seq[String] = {
     import org.apache.spark.sql.functions._
-    postingsDirs.map(spark.read.parquet(_))
-      .reduce(_ unionByName _)
+    postings.reduce(_ unionByName _)
       .select(concat_ws("|", col("term"), col("numDocs"),
         md5(col("docsPacked")), md5(col("freqsPacked")),
         md5(col("normsPacked"))).as("sig"))
@@ -55,12 +58,20 @@ class IndexSplitterSpec extends SparkTestBase {
     assert(ms.forall(_.docCount > 0))
     val orig = Manifest.read(s"$root1/seg0").get
     assert(ms.map(_.sumTotalTermFreq).sum == orig.sumTotalTermFreq)
-    assert(ms.map(_.blockCount).sum == orig.blockCount)
 
-    // packed payloads moved as opaque bytes: identical multiset of block
-    // payload signatures (rebase only shifts firstDocId/lastDocId/bucket)
-    assert(blockBytes(parts.map(p => s"$p/postings")) ==
-      blockBytes(Seq(s"$root1/seg0/postings")))
+    // the parts hold the source's blocks clipped to their doc ranges: a
+    // block inside a part moves as opaque bytes (rebase only shifts
+    // firstDocId/lastDocId/bucket), one straddling a cut is cut there
+    val span = 1L << cfg.bucketShift
+    val nBuckets = orig.maxDocId / span + 1
+    val cuts = (0 to 3).map(i => (i * nBuckets / 3) * span)
+    val src = spark.read.parquet(s"$root1/seg0/postings").as[PostingBlock].collect()
+    val clipped = for (b <- src.toSeq; i <- 0 until 3;
+      c <- SegmentWriter.clip(b, cuts(i), cuts(i + 1), cfg.bucketShift)) yield c
+    assert(clipped.size > src.length, "no block straddles a cut: the clip check is vacuous")
+    assert(ms.map(_.blockCount).sum == clipped.size)
+    assert(blockBytes(parts.map(p => spark.read.parquet(s"$p/postings"))) ==
+      blockBytes(Seq(spark.createDataset(clipped).toDF())))
 
     // opened together: rank-identical to the unsplit index (global
     // collection stats across segments), tombstones honored on both sides
