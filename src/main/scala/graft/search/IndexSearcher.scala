@@ -889,7 +889,7 @@ final class IndexSearcher(
       val (n, nb) = (nSlices(seg), buckets(seg))
       s.blocks(s.keys(keys, Array.empty)).iterator.flatMap { case (t, bs) =>
         bs.iterator.map(b => QBlock(t, seg,
-          Slice.firstBucket(((b.firstDocId >>> shifts(seg)) * n / nb).toInt, n, nb), b.firstDocId,
+          Slice.firstBucket(Slice.sliceOf(b.firstDocId >>> shifts(seg), n, nb), n, nb), b.firstDocId,
           b.lastDocId, b.numDocs, b.docsPacked, b.freqsPacked, b.normsPacked, b.impacts, b.posPacked))
       }
     }).collectParts().flatten

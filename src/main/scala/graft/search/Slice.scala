@@ -195,8 +195,12 @@ object Slice {
   private[search] def numBuckets(m: SegmentManifest): Long =
     math.max(1L, (m.maxDocId >> m.bucketShift) + 1)
 
-  /** The first bucket of slice `s` of `nSlices` over `numBuckets` buckets,
-    * `s = nSlices` giving the end: bucket `b` is in slice `b·nSlices / numBuckets`.
+  /** The slice, of `nSlices` over `numBuckets` buckets, that holds bucket `b`. */
+  private[search] def sliceOf(b: Long, nSlices: Int, numBuckets: Long): Int =
+    (b * nSlices / numBuckets).toInt
+
+  /** The first bucket of slice `s` of `nSlices` over `numBuckets` buckets
+    * (see [[sliceOf]]), `s = nSlices` giving the end.
     */
   private[search] def firstBucket(s: Int, nSlices: Int, numBuckets: Long): Long =
     (s * numBuckets + nSlices - 1) / nSlices
@@ -232,7 +236,7 @@ object Slice {
         "docsPacked", "freqsPacked", "normsPacked", "impacts", "posPacked").queryExecution.toRdd
       .mapPartitions { rows =>
         val bs = new Array[Builder](nSlices)
-        def slice(docId: Long): Int = ((docId >>> shift) * nSlices / buckets).toInt
+        def slice(docId: Long): Int = sliceOf(docId >>> shift, nSlices, buckets)
         def add(s: Int, b: PostingBlock): Unit = {
           if (bs(s) == null) bs(s) = new Builder
           bs(s).add(b.term, b.firstDocId, b.lastDocId, b.numDocs, b.freqSum, b.docsPacked,
