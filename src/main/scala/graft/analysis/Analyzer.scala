@@ -52,10 +52,19 @@ final class StandardAnalyzer(
 
   import StandardAnalyzer._
 
-  /** Full token stream with positions + offsets. */
-  def tokens(text: String): Vector[Token] = {
-    val out = Vector.newBuilder[Token]
+  /** The one tokenizer loop: hands each emitted token's term, position and
+    * character offsets to `sink`, in stream order, allocating no [[Token]].
+    * [[tokens]], [[foreachTerm]], [[termFreqs]] and the index build's
+    * inverter all read this stream.
+    */
+  def analyze(text: String)(sink: TokenSink): Unit = {
     var position = -1
+    // every emitted span takes a position; a stopword leaves its gap
+    def emit(s: Int, e: Int): Unit = {
+      position += 1
+      val term = lower(text.substring(s, e))
+      if (!stopwords.contains(term)) sink(if (noFilter) term else filter(term), position, s, e)
+    }
     var i = 0
     val n = text.length
     while (i < n) {
@@ -63,17 +72,23 @@ final class StandardAnalyzer(
       val cc = Character.charCount(cp)
       if (cjkBigrams && isCjkScript(cp)) {
         // maximal CJK run (scripts may mix inside one run, like the
-        // reference filter's shared buffer) -> overlapping bigrams
+        // reference filter's shared buffer) -> overlapping bigrams at
+        // consecutive positions; a 1-codepoint run emits its unigram
         var j = i
         while (j < n && isCjkScript(text.codePointAt(j)))
           j += Character.charCount(text.codePointAt(j))
-        position = emitCjkRun(text, i, j, out, position)
+        var a = i
+        var b = i + cc
+        if (b >= j) emit(a, b)
+        while (b < j) {
+          val c = b + Character.charCount(text.codePointAt(b))
+          emit(a, c)
+          a = b
+          b = c
+        }
         i = j
       } else if (isIdeographic(cp)) {
-        position += 1
-        val term = lowerCp(cp)
-        if (!stopwords.contains(term))
-          out += Token(if (noFilter) term else filter(term), position, i, i + cc)
+        emit(i, i + cc)
         i += cc
       } else if (isWordStart(cp)) {
         // scan a word run
@@ -104,177 +119,57 @@ final class StandardAnalyzer(
           if (isAlnum(text.codePointAt(k))) hasAlnum = true
           k += Character.charCount(text.codePointAt(k))
         }
-        if (hasAlnum) {
-          // emit the run, chopped at maxTokenLength codepoints
-          position = emitRun(text, start, j, out, position)
+        // emit the run, chopped at maxTokenLength codepoints
+        var s = start
+        while (hasAlnum && s < j) {
+          var cpCount = 0
+          var e = s
+          while (e < j && cpCount < maxTokenLength) {
+            e += Character.charCount(text.codePointAt(e))
+            cpCount += 1
+          }
+          emit(s, e)
+          s = e
         }
         i = j
       } else {
         i += cc
       }
     }
+  }
+
+  /** Full token stream with positions + offsets. */
+  def tokens(text: String): Vector[Token] = {
+    val out = Vector.newBuilder[Token]
+    analyze(text)((term, position, start, end) => out += Token(term, position, start, end): Unit)
     out.result()
   }
 
-  /** Emits a CJK run as overlapping bigrams at consecutive positions (a
-    * 1-codepoint run emits its unigram) — the `CJKBigramFilter` stream
-    * shape; returns the updated position counter.
-    */
-  private def emitCjkRun(
-      text: String,
-      start: Int,
-      end: Int,
-      out: scala.collection.mutable.Builder[Token, Vector[Token]],
-      position0: Int
-  ): Int = {
-    var position = position0
-    // codepoint boundaries of the run
-    var a = start
-    var b = start + Character.charCount(text.codePointAt(start))
-    if (b >= end) { // lone CJK codepoint -> unigram
-      position += 1
-      val term = lower(text.substring(a, b))
-      if (!stopwords.contains(term))
-        out += Token(if (noFilter) term else filter(term), position, a, b)
-      position
-    } else {
-      while (b < end) {
-        val c = b + Character.charCount(text.codePointAt(b))
-        position += 1
-        val term = lower(text.substring(a, c))
-        if (!stopwords.contains(term))
-          out += Token(if (noFilter) term else filter(term), position, a, c)
-        a = b
-        b = c
-      }
-      position
-    }
-  }
+  /** `f(term)` per emitted token, in stream order. */
+  def foreachTerm(text: String)(f: String => Unit): Unit =
+    analyze(text)((term, _, _, _) => f(term))
 
-  /** [[emitCjkRun]] without Token allocation (the index hot path). */
-  private def foreachCjkRun(text: String, start: Int, end: Int)(f: String => Unit): Unit = {
-    var a = start
-    var b = start + Character.charCount(text.codePointAt(start))
-    if (b >= end) {
-      val term = lower(text.substring(a, b))
-      if (!stopwords.contains(term)) f(if (noFilter) term else filter(term))
-    } else {
-      while (b < end) {
-        val c = b + Character.charCount(text.codePointAt(b))
-        val term = lower(text.substring(a, c))
-        if (!stopwords.contains(term)) f(if (noFilter) term else filter(term))
-        a = b
-        b = c
-      }
-    }
-  }
-
-  /** Emits the run chopped at [[maxTokenLength]] codepoints; returns the
-    * updated position counter.
-    */
-  private def emitRun(
-      text: String,
-      start: Int,
-      end: Int,
-      out: scala.collection.mutable.Builder[Token, Vector[Token]],
-      position0: Int
-  ): Int = {
-    var position = position0
-    var s = start
-    while (s < end) {
-      var cpCount = 0
-      var e = s
-      while (e < end && cpCount < maxTokenLength) {
-        e += Character.charCount(text.codePointAt(e))
-        cpCount += 1
-      }
-      val term = lower(text.substring(s, e))
-      position += 1
-      if (!stopwords.contains(term))
-        out += Token(if (noFilter) term else filter(term), position, s, e)
-      s = e
-    }
-    position
-  }
-
-  /** Streaming tokenizer for the index hot path: invokes `f(term)` per
-    * emitted token with no Token/Vector allocation. Same token stream as
-    * [[tokens]] (equivalence pinned by AnalysisSpec).
-    */
-  def foreachTerm(text: String)(f: String => Unit): Unit = {
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      val cc = Character.charCount(cp)
-      if (cjkBigrams && isCjkScript(cp)) {
-        var j = i
-        while (j < n && isCjkScript(text.codePointAt(j)))
-          j += Character.charCount(text.codePointAt(j))
-        foreachCjkRun(text, i, j)(f)
-        i = j
-      } else if (isIdeographic(cp)) {
-        val term = lowerCp(cp)
-        if (!stopwords.contains(term)) f(if (noFilter) term else filter(term))
-        i += cc
-      } else if (isWordStart(cp)) {
-        val start = i
-        var j = i
-        while (j < n && {
-          val c = text.codePointAt(j)
-          if (isAlnum(c) || isExtend(c)) true
-          else if (isMedial(c) && j > start) {
-            val prev = text.codePointBefore(j)
-            val nxt = j + Character.charCount(c)
-            if (nxt < n) {
-              val nc = text.codePointAt(nxt)
-              (Character.isLetter(prev) && Character.isLetter(nc) &&
-                (isMidLetter(c) || isMidNumLet(c))) ||
-              (Character.isDigit(prev) && Character.isDigit(nc) &&
-                (isMidNum(c) || isMidNumLet(c)))
-            } else false
-          } else false
-        }) j += Character.charCount(text.codePointAt(j))
-        var hasAlnum = false
-        var k = start
-        while (k < j && !hasAlnum) {
-          if (isAlnum(text.codePointAt(k))) hasAlnum = true
-          k += Character.charCount(text.codePointAt(k))
-        }
-        if (hasAlnum) {
-          var s = start
-          while (s < j) {
-            var cpCount = 0
-            var e = s
-            while (e < j && cpCount < maxTokenLength) {
-              e += Character.charCount(text.codePointAt(e))
-              cpCount += 1
-            }
-            val term = lower(text.substring(s, e))
-            if (!stopwords.contains(term)) f(if (noFilter) term else filter(term))
-            s = e
-          }
-        }
-        i = j
-      } else {
-        i += cc
-      }
-    }
-  }
-
-  /** Per-doc aggregation used by the index build: term -> freq, plus the
-    * norm length (token count after stop filtering — the reference counts one
-    * per emitted token, `index/IndexingChain.java:1275-1281`).
+  /** Per-doc aggregation: term -> freq, plus the norm length (token count
+    * after stop filtering — the reference counts one per emitted token,
+    * `index/IndexingChain.java:1275-1281`).
     */
   def termFreqs(text: String): (java.util.HashMap[String, Int], Int) = {
     val m = new java.util.HashMap[String, Int]()
     var length = 0
-    foreachTerm(text) { term =>
+    analyze(text) { (term, _, _, _) =>
       length += 1
       m.merge(term, 1, (a, b) => a + b)
     }
     (m, length)
   }
+}
+
+/** Receives one analyzed token: its term, position and character offsets.
+  * A trait rather than a `Function4`, whose Int arguments would be boxed
+  * per token.
+  */
+trait TokenSink {
+  def apply(term: String, position: Int, startOffset: Int, endOffset: Int): Unit
 }
 
 object StandardAnalyzer {
@@ -332,9 +227,6 @@ object StandardAnalyzer {
     b == Character.UnicodeBlock.HANGUL_JAMO ||
     b == Character.UnicodeBlock.HANGUL_COMPATIBILITY_JAMO
   }
-
-  private[analysis] def lowerCp(cp: Int): String =
-    new String(Character.toChars(Character.toLowerCase(cp)))
 
   /** Codepoint-wise lowercase (the reference's `CharacterUtils.java:53-60`). */
   def lower(s: String): String = {

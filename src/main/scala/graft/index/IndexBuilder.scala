@@ -1,21 +1,26 @@
 package graft.index
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.storage.StorageLevel
 
-import graft.analysis.StandardAnalyzer
+import graft.analysis.{StandardAnalyzer, SynonymInjector, SynonymRule, TermFilter, TokenSink}
 import graft.codec.SmallFloat
 import graft.index.Schema._
 
 /** Index-build configuration.
   *
-  * @param bucketShift  docID-space salt granularity: bucket = docId >>> shift.
-  *                     At 10^12 docs the default (2^20-doc buckets) yields
-  *                     ~10^6 scoring partitions; local tests use smaller
-  *                     shifts. Head-term skew is bounded by bucket span.
+  * @param bucketShift  docID bucket size: bucket = docId >>> shift. It sets
+  *                     each posting block's `bucket` tag (its first doc's
+  *                     bucket), the grain at which `Slice.load` cuts a
+  *                     segment into resident slices, and the alignment of
+  *                     the docID bases a merge gives its inputs and of the
+  *                     cut points a split makes. It does not partition the
+  *                     build: a term's postings go to one writer task.
   * @param numPostingPartitions  term-range partitions of the postings
   *                     writer — how many files the postings are written in.
   * @param stopwords    analyzer stopword set (reference default: empty).
@@ -40,7 +45,8 @@ final case class IndexConfig(
     // docID order: sort key SQL expression over (url, text) — ref
     // `index/IndexWriterConfig.java` setIndexSort. Default: global url
     // rank. docIDs are the global rank in (key, url) order either way,
-    // so assignment stays deterministic and resume-safe.
+    // so assignment stays deterministic and resume-safe. Multi-field
+    // builds (no text column) take url only.
     indexSortExpr: String = "url",
     // tail-of-chain term filter (ref `analysis/TokenFilter.java` pipelines):
     // none | minimal (Harman S-stemmer) | porter | fold (accent folding).
@@ -87,20 +93,19 @@ final case class IndexConfig(
     bloomTerms: Boolean = false
 ) {
   def analyzer: StandardAnalyzer =
-    new StandardAnalyzer(stopwords, maxTokenLength,
-      graft.analysis.TermFilter.byName(termFilter), cjkBigrams)
+    new StandardAnalyzer(stopwords, maxTokenLength, TermFilter.byName(termFilter), cjkBigrams)
 
-  def synonymRules: Seq[graft.analysis.SynonymRule] =
-    synonyms.map { case (v, o) => graft.analysis.SynonymRule(v, o) }
+  def synonymRules: Seq[SynonymRule] = synonyms.map { case (v, o) => SynonymRule(v, o) }
 }
 
 /** Builds an inverted-index segment from a corpus of (docKey, text) rows.
   *
-  * Pipeline (one tokenize pass, one exchange to posting order):
+  * Pipeline (one analysis pass, one exchange to posting order):
   * {{{
-  * input --repartitionByRange(url) + sort--> docId assignment (global url rank)
-  *       --mapPartitions (analyze once)--> cached DocTokens, one contiguous
-  *         docId range per partition
+  * input --repartitionByRange(indexSortExpr, url) + sort--> docId
+  *         assignment (global rank in sort order, one count job)
+  *       --mapPartitions: one Inverter per task analyzes each field value
+  *         once--> cached DocTokens, one contiguous docId range per partition
   *       --write docs (the same tasks sample term range bounds)
   *       --invert in the doc task--> one posting fragment per term
   *       --ONE range exchange on term, sorted by (term, firstDocId)-->
@@ -115,49 +120,72 @@ final case class IndexConfig(
   * flush → `Lucene103PostingsWriter.java:256-530` block encode): each doc
   * task inverts its docs in RAM like a DWPT, the exchange plays the role of
   * the flush sort, and the commit tail ([[SegmentWriter]]) writes postings,
-  * terms and stats in one pass.
+  * terms and stats in one pass. Single-field and multi-field builds share
+  * the docId assignment and the [[Inverter]]: a single-field doc is a doc
+  * with one [[FieldKey.DefaultField]] value.
   */
 object IndexBuilder {
 
-  /** Assign dense deterministic docIDs (global rank of `url` in sorted order)
-    * and tokenize, in ONE pass over the sorted shuffle output.
-    *
-    * Two jobs share one shuffle stage (same RDD lineage → Spark reuses the
-    * shuffle map output): a count job that sizes each range partition without
-    * materializing any strings, then the real pass that assigns
-    * `docId = partitionOffset + rowRank` and analyzes each doc. This is the
-    * only safe, re-runnable assignment at 10^12 docs
-    * (`monotonically_increasing_id` is partitioning-dependent; a global
-    * window would single-partition). docIDs are independent of the sampled
-    * range boundaries — rank in url order is global.
+  /** Assign dense deterministic docIDs and tokenize, in ONE pass over the
+    * sorted shuffle output (see [[assigned]]).
     */
   def assignAndTokenize(
       pages: Dataset[(String, String)], // (url, text)
       cfg: IndexConfig
-  ): Dataset[DocTokens] = {
-    val spark = pages.sparkSession
+  ): Dataset[DocTokens] =
+    assigned(pages.toDF("url", "text"), cfg) { (inv, docId, row) =>
+      inv.doc(docId, row.getString(0), Seq(FieldKey.DefaultField -> row.getString(1)))
+    }
+
+  /** Multi-field variant of [[assignAndTokenize]]: each doc is
+    * `(url, Seq((fieldName, fieldText)))`, docIds follow url order. Every
+    * field inverts on its own (its own length → its own norm byte, ref
+    * per-field `FieldInvertState`); the values of one field are one token
+    * stream with `positionIncrementGap` between them. Term keys are
+    * [[FieldKey]]-encoded so all fields share one sorted posting space, and
+    * the per-TERM norm array carries each key's field norm into the posting
+    * rows.
+    */
+  def assignAndTokenizeFields(
+      pages: Dataset[(String, Seq[(String, String)])],
+      cfg: IndexConfig
+  ): Dataset[DocTokens] =
+    assigned(pages.toDF("url", "fields"), cfg) { (inv, docId, row) =>
+      val fields = row.getArray(1)
+      inv.doc(docId, row.getString(0), (0 until fields.numElements()).map { f =>
+        val st = fields.getStruct(f, 2)
+        st.getUTF8String(0).toString -> st.getUTF8String(1).toString
+      })
+    }
+
+  /** Sorts `docs` (columns `url` and one more) on `cfg.indexSortExpr`, url
+    * as tiebreak (ref `index/IndexWriterConfig.java` setIndexSort: a
+    * sorted index lets field-sorted top-k stop after the first k matches in
+    * docID order), and inverts each row with `docId = partitionOffset +
+    * rowRank`, one [[Inverter]] per task.
+    *
+    * Two jobs share one shuffle stage (same RDD lineage → Spark reuses the
+    * shuffle map output): a count job over the sorted InternalRows sizes
+    * each range partition without materializing any strings, then the
+    * inverting pass. This is the only safe, re-runnable assignment at
+    * 10^12 docs (`monotonically_increasing_id` is partitioning-dependent; a
+    * global window would single-partition). docIDs are independent of the
+    * sampled range boundaries — rank in sort order is global.
+    */
+  private def assigned(docs: DataFrame, cfg: IndexConfig)(
+      invert: (Inverter, Long, InternalRow) => DocTokens): Dataset[DocTokens] = {
+    val spark = docs.sparkSession
     import spark.implicits._
     val parts = cfg.numDocPartitions
-    val stop = cfg.stopwords
-    val maxLen = cfg.maxTokenLength
-    val filterName = cfg.termFilter
-    val cjk = cfg.cjkBigrams
-    // InternalRow RDD of the sorted plan: no per-row object allocation in
-    // the count job, and one shared shuffle stage across both jobs.
-    // Index sorting (ref `index/IndexWriterConfig.java` setIndexSort):
-    // docID order follows cfg.indexSortExpr (any SQL expression over
-    // url/text), url as tiebreak — a sorted index lets field-sorted top-k
-    // terminate after the first k matches in docID order.
     val sortedRows = {
-      val df = pages.toDF("url", "text")
       val sorted =
         if (cfg.indexSortExpr == "url")
-          df.repartitionByRange(parts, $"url").sortWithinPartitions($"url")
+          docs.repartitionByRange(parts, $"url").sortWithinPartitions($"url")
         else
-          df.withColumn("_k", expr(cfg.indexSortExpr))
+          docs.withColumn("_k", expr(cfg.indexSortExpr))
             .repartitionByRange(parts, $"_k", $"url")
             .sortWithinPartitions($"_k", $"url")
-            .select($"url", $"text") // projection preserves the sort
+            .select(docs.columns.map(col).toIndexedSeq: _*) // projection preserves the sort
       sorted.queryExecution.toRdd
     }
     val counts = sortedRows
@@ -166,297 +194,11 @@ object IndexBuilder {
       }
       .collect().sortBy(_._1).map(_._2)
     val offsets = counts.scanLeft(0L)(_ + _)
-    val withPositions = cfg.storePositions
-    val withOffsets = cfg.storeOffsets
-    val withPayloads = cfg.storePayloads
-    val synRules = cfg.synonyms
-    val docTokens = sortedRows.mapPartitionsWithIndex { (pid, it) =>
-      val analyzer = new StandardAnalyzer(stop, maxLen,
-        graft.analysis.TermFilter.byName(filterName), cjk)
-      val injector = new graft.analysis.SynonymInjector(
-        synRules.map { case (v, o) => graft.analysis.SynonymRule(v, o) })
-      var id = offsets(pid)
-      it.map { row =>
-        val url = row.getString(0)
-        val text = row.getString(1)
-        val docId = id
-        id += 1
-        if (withPayloads) {
-          // DelimitedPayload chain (ref analysis/payloads/
-          // DelimitedPayloadTokenFilter.java): whitespace pre-split —
-          // the tokenizer the reference pairs payloads with, which splits
-          // on runs of any `Character.isWhitespace` — trailing `|<int>`
-          // extracted (default 1), the remainder through the standard
-          // lowercase/stop/filter chain. One position per chunk
-          // (whitespace semantics); sub-tokens stack at it with the
-          // chunk's payload.
-          val chunks = text.split("\\p{javaWhitespace}+").filter(_.nonEmpty)
-          val byTerm = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]()
-          var docLen = 0
-          var ci = 0
-          while (ci < chunks.length) {
-            val raw = chunks(ci)
-            val bar = raw.lastIndexOf('|')
-            var pay = 1
-            var body = raw
-            if (bar > 0 && bar < raw.length - 1) {
-              val suf = raw.substring(bar + 1)
-              if (suf.forall(c => c >= '0' && c <= '9')) {
-                pay = suf.toInt; body = raw.substring(0, bar)
-              }
-            }
-            val subs = analyzer.tokens(body)
-            docLen += subs.size
-            subs.foreach { t =>
-              var b = byTerm.get(t.term)
-              if (b == null) {
-                b = new scala.collection.mutable.ArrayBuffer[(Int, Int)](2)
-                byTerm.put(t.term, b)
-              }
-              b += ((ci, pay))
-            }
-            ci += 1
-          }
-          val n = byTerm.size
-          val terms = new Array[String](n)
-          val freqs = new Array[Int](n)
-          val positions = new Array[Array[Int]](n)
-          val payloads = new Array[Array[Int]](n)
-          var i = 0
-          val iter = byTerm.entrySet().iterator()
-          while (iter.hasNext) {
-            val e = iter.next()
-            terms(i) = e.getKey
-            val entries = e.getValue
-            freqs(i) = entries.size
-            positions(i) = entries.map(_._1).toArray
-            payloads(i) = entries.map(_._2).toArray
-            i += 1
-          }
-          DocTokens(docId, url, docLen,
-            java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(docLen)),
-            terms, freqs, positions, payloads = payloads)
-        } else if (withPositions) {
-          val toks = analyzer.tokens(text)
-          // injected synonym tokens stack at their match position and add
-          // postings, but doc length / norm counts ONLY the analyzer's own
-          // tokens (discountOverlaps)
-          val all = if (injector.isEmpty) toks else toks ++ injector.injected(toks)
-          // per term: (position, startOffset, endOffset) triples
-          val byTerm = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]]()
-          all.foreach { t =>
-            var b = byTerm.get(t.term)
-            if (b == null) { b = new scala.collection.mutable.ArrayBuffer[(Int, Int, Int)](2); byTerm.put(t.term, b) }
-            b += ((t.position, t.startOffset, t.endOffset))
-          }
-          val n = byTerm.size
-          val terms = new Array[String](n)
-          val freqs = new Array[Int](n)
-          val positions = new Array[Array[Int]](n)
-          val offsets = if (withOffsets) new Array[Array[Int]](n) else null
-          var i = 0
-          val iter = byTerm.entrySet().iterator()
-          while (iter.hasNext) {
-            val e = iter.next()
-            terms(i) = e.getKey
-            freqs(i) = e.getValue.size
-            // appended overlap tokens can land before a literal occurrence
-            // of the same term — re-sort that term's entries by position
-            // (offsets stay aligned: they ride in the same triple)
-            val entries =
-              if (injector.isEmpty) e.getValue.toArray else e.getValue.toArray.sortBy(_._1)
-            positions(i) = entries.map(_._1)
-            if (withOffsets)
-              offsets(i) = entries.flatMap(t3 => Array(t3._2, t3._3))
-            i += 1
-          }
-          val length = toks.size
-          DocTokens(docId, url, length,
-            java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(length)),
-            terms, freqs, positions, offsets = offsets)
-        } else if (!injector.isEmpty) {
-          // synonym matching needs the ordered stream — aggregate from
-          // tokens() instead of the allocation-free termFreqs path
-          val toks = analyzer.tokens(text)
-          val freqMap = new java.util.HashMap[String, Int]()
-          toks.foreach(t => freqMap.merge(t.term, 1, (a, b) => a + b): Unit)
-          injector.injected(toks).foreach(t => freqMap.merge(t.term, 1, (a, b) => a + b): Unit)
-          val length = toks.size
-          val n = freqMap.size
-          val terms = new Array[String](n)
-          val freqs = new Array[Int](n)
-          var i = 0
-          val iter = freqMap.entrySet().iterator()
-          while (iter.hasNext) {
-            val e = iter.next()
-            terms(i) = e.getKey
-            freqs(i) = e.getValue
-            i += 1
-          }
-          DocTokens(docId, url, length,
-            java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(length)), terms, freqs)
-        } else {
-          val (freqMap, length) = analyzer.termFreqs(text)
-          val n = freqMap.size
-          val terms = new Array[String](n)
-          val freqs = new Array[Int](n)
-          var i = 0
-          val iter = freqMap.entrySet().iterator()
-          while (iter.hasNext) {
-            val e = iter.next()
-            terms(i) = e.getKey
-            freqs(i) = e.getValue
-            i += 1
-          }
-          DocTokens(docId, url, length,
-            java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(length)), terms, freqs)
-        }
-      }
-    }
-    spark.createDataset(docTokens)
-  }
-
-
-  /** Multi-field variant of [[assignAndTokenize]]: each doc is
-    * `(url, Seq((fieldName, fieldText)))`. Every field analyzes
-    * independently (its own length → its own norm byte, ref per-field
-    * `FieldInvertState`); term keys are [[FieldKey]]-encoded so all fields
-    * share one sorted posting space, and the per-TERM norm array carries
-    * each key's field norm into the posting rows. Same one-pass, two-job
-    * docID assignment as the single-field path.
-    */
-  def assignAndTokenizeFields(
-      pages: Dataset[(String, Seq[(String, String)])],
-      cfg: IndexConfig
-  ): Dataset[DocTokens] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val parts = cfg.numDocPartitions
-    val stop = cfg.stopwords
-    val maxLen = cfg.maxTokenLength
-    val filterName = cfg.termFilter
-    val cjk = cfg.cjkBigrams
-    val sortedRows = pages
-      .toDF("_1", "_2")
-      .repartitionByRange(parts, $"_1")
-      .sortWithinPartitions($"_1")
-      .queryExecution.toRdd
-    val counts = sortedRows
-      .mapPartitionsWithIndex { (pid, it) =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator((pid, n))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val withPositions = cfg.storePositions
-    val posGap = cfg.positionIncrementGap
-    val docTokens = sortedRows.mapPartitionsWithIndex { (pid, it) =>
-      val analyzer = new StandardAnalyzer(stop, maxLen,
-        graft.analysis.TermFilter.byName(filterName), cjk)
-      var id = offsets(pid)
-      it.map { row =>
-        val url = row.getString(0)
-        val fields = row.getArray(1)
-        val docId = id
-        id += 1
-        val nf = fields.numElements()
-        // group same-name entries in first-appearance order: multiple
-        // values of one field are ONE logical field — a concatenated token
-        // stream with `positionIncrementGap` between values (ref
-        // `analysis/Analyzer.java` getPositionIncrementGap: phrase matches
-        // must not cross value boundaries), one combined length/norm, and
-        // per-term freqs summed (never duplicate (term, docId) postings)
-        val order = scala.collection.mutable.ArrayBuffer[String]()
-        val valuesOf = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-        var f = 0
-        while (f < nf) {
-          val st = fields.getStruct(f, 2)
-          val fname = st.getUTF8String(0).toString
-          val ftext = st.getUTF8String(1).toString
-          var vs = valuesOf.get(fname)
-          if (vs == null) {
-            vs = scala.collection.mutable.ArrayBuffer[String]()
-            valuesOf.put(fname, vs)
-            order += fname
-          }
-          vs += ftext
-          f += 1
-        }
-        val termsB = scala.collection.mutable.ArrayBuffer[String]()
-        val freqsB = scala.collection.mutable.ArrayBuffer[Int]()
-        val normsB = scala.collection.mutable.ArrayBuffer[Int]()
-        val posB =
-          if (withPositions) scala.collection.mutable.ArrayBuffer[Array[Int]]()
-          else null
-        val fNames = new Array[String](order.size)
-        val fLens = new Array[Int](order.size)
-        var defLen = 0
-        var g = 0
-        while (g < order.size) {
-          val fname = order(g)
-          val vs = valuesOf.get(fname)
-          var flen = 0
-          if (withPositions) {
-            // per-field analyzer positions (positions restart per FIELD,
-            // the reference's per-field FieldInvertState; values within a
-            // field continue with the gap)
-            val byTerm = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-            var offset = 0
-            vs.foreach { ftext =>
-              val toks = analyzer.tokens(ftext)
-              var maxPos = -1
-              toks.foreach { t =>
-                var b = byTerm.get(t.term)
-                if (b == null) { b = new scala.collection.mutable.ArrayBuffer[Int](2); byTerm.put(t.term, b) }
-                b += offset + t.position
-                if (t.position > maxPos) maxPos = t.position
-              }
-              flen += toks.size
-              if (maxPos >= 0) offset += maxPos + 1 + posGap
-            }
-            val fnorm = java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(flen))
-            val iter = byTerm.entrySet().iterator()
-            while (iter.hasNext) {
-              val e = iter.next()
-              termsB += FieldKey.encode(fname, e.getKey)
-              freqsB += e.getValue.size
-              normsB += fnorm
-              posB += e.getValue.toArray
-            }
-          } else {
-            val combined = new java.util.LinkedHashMap[String, Integer]()
-            vs.foreach { ftext =>
-              val (freqMap, vlen) = analyzer.termFreqs(ftext)
-              flen += vlen
-              val iter = freqMap.entrySet().iterator()
-              while (iter.hasNext) {
-                val e = iter.next()
-                val prev = combined.get(e.getKey)
-                combined.put(e.getKey,
-                  if (prev == null) e.getValue else prev + e.getValue)
-              }
-            }
-            val fnorm = java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(flen))
-            val iter = combined.entrySet().iterator()
-            while (iter.hasNext) {
-              val e = iter.next()
-              termsB += FieldKey.encode(fname, e.getKey)
-              freqsB += e.getValue
-              normsB += fnorm
-            }
-          }
-          if (fname == FieldKey.DefaultField) defLen = flen
-          fNames(g) = fname
-          fLens(g) = flen
-          g += 1
-        }
-        DocTokens(docId, url, defLen,
-          java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(defLen)),
-          termsB.toArray, freqsB.toArray,
-          if (withPositions) posB.toArray else null,
-          normsB.toArray, fNames, fLens)
-      }
-    }
-    spark.createDataset(docTokens)
+    spark.createDataset(sortedRows.mapPartitionsWithIndex { (pid, it) =>
+      val inv = new Inverter(cfg)
+      var id = offsets(pid) - 1
+      it.map { row => id += 1; invert(inv, id, row) }
+    })
   }
 
   /** End-to-end: build and atomically commit one segment at `dir`. Resumable:
@@ -517,6 +259,8 @@ object IndexBuilder {
         "index-time synonyms are single-field only (documented subset)")
       require(!cfg.storeOffsets && !cfg.storePayloads,
         "storeOffsets and storePayloads are single-field only")
+      require(cfg.indexSortExpr == "url",
+        "indexSortExpr is SQL over (url, text); multi-field docs sort by url only")
     }
   }
 
@@ -609,5 +353,146 @@ object IndexBuilder {
         docs.map(p => PartitionLineage(p.pid, p.rows, p.tokens)), cfg.storePositions,
         cfg.storeOffsets, cfg.storePayloads, fieldStats)
     } finally docTokens.unpersist()
+  }
+}
+
+/** The one per-doc inverter of the build (the reference's
+  * `IndexingChain.invertTokenStream`, one per doc task): analyzes each field
+  * value once through `cfg.analyzer` and groups its tokens by term into
+  * freq, positions, offsets and payloads as the config stores them.
+  *
+  *  - The values of one field are one token stream: a value's positions
+  *    follow the last token of the value before by `positionIncrementGap`
+  *    (ref `analysis/Analyzer.java` getPositionIncrementGap), so phrases
+  *    cannot cross values, and the field has one length and one norm.
+  *  - Index-time synonyms ([[SynonymInjector]]) stack overlap tokens onto
+  *    the analyzed stream; they add postings but not length
+  *    (discountOverlaps).
+  *  - With payloads, the text is first cut at whitespace runs (ref
+  *    `analysis/payloads/DelimitedPayloadTokenFilter.java`, paired with a
+  *    whitespace tokenizer, since UAX#29 would break at `|`): each chunk's
+  *    trailing `|<digits>` is its payload (1 when absent), and every token
+  *    the analyzer makes of the rest stacks at the chunk's position.
+  */
+private[index] final class Inverter(cfg: IndexConfig) {
+  import Inverter._
+
+  private val analyzer = cfg.analyzer
+  private val injector = new SynonymInjector(cfg.synonymRules)
+  private val (withPos, withOffs, withPays) = (cfg.storePositions, cfg.storeOffsets, cfg.storePayloads)
+
+  // the field being inverted: its terms in first-appearance order, its
+  // length (analyzer tokens), the position its next value starts at, and
+  // the position its last token took
+  private val byTerm = new java.util.HashMap[String, Acc]()
+  private val order = mutable.ArrayBuffer[Acc]()
+  private var length, base, lastPos = 0
+
+  private def add(term: String, position: Int, start: Int, end: Int, payload: Int): Unit = {
+    var a = byTerm.get(term)
+    if (a == null) {
+      a = new Acc(term, withPos, withOffs, withPays)
+      byTerm.put(term, a)
+      order += a
+    }
+    a.freq += 1
+    if (withPos) a.pos += position
+    if (withOffs) { a.offs += start; a.offs += end }
+    if (withPays) a.pays += payload
+  }
+
+  private val literal: TokenSink = (term, position, start, end) => {
+    length += 1
+    lastPos = base + position
+    add(term, lastPos, start, end, 1)
+  }
+
+  private def value(text: String): Unit = {
+    lastPos = -1
+    if (withPays) {
+      // strip() trims what the pattern matches, so no chunk is empty
+      // unless the whole value is
+      val chunks = Whitespace.split(text.strip())
+      chunks.indices.foreach { ci =>
+        val raw = chunks(ci)
+        val bar = raw.lastIndexOf('|')
+        val digits = bar > 0 && bar < raw.length - 1 &&
+          (bar + 1 until raw.length).forall(k => raw.charAt(k) >= '0' && raw.charAt(k) <= '9')
+        val pay = if (digits) raw.substring(bar + 1).toInt else 1
+        val position = base + ci
+        analyzer.analyze(if (digits) raw.substring(0, bar) else raw) { (term, _, _, _) =>
+          length += 1
+          lastPos = position
+          add(term, position, 0, 0, pay)
+        }
+      }
+    } else if (injector.isEmpty) analyzer.analyze(text)(literal)
+    else {
+      val toks = analyzer.tokens(text)
+      toks.foreach(t => literal(t.term, t.position, t.startOffset, t.endOffset))
+      injector.injected(toks).foreach(t => add(t.term, base + t.position, t.startOffset, t.endOffset, 1))
+    }
+    if (lastPos >= 0) base = lastPos + 1 + cfg.positionIncrementGap
+  }
+
+  /** One doc's [[DocTokens]]. Its `length`/`norm` are its
+    * [[FieldKey.DefaultField]]'s; a multi-field config adds field-keyed
+    * terms, per-term field norms and per-field lengths.
+    */
+  def doc(docId: Long, url: String, fields: Seq[(String, String)]): DocTokens = {
+    val names = fields.map(_._1).distinct.toArray
+    val accs = mutable.ArrayBuffer[Acc]()
+    val termNorms = new mutable.ArrayBuilder.ofInt
+    val lengths = new Array[Int](names.size)
+    names.indices.foreach { f =>
+      byTerm.clear(); order.clear()
+      length = 0; base = 0
+      fields.foreach { case (name, text) => if (name == names(f)) value(text) }
+      lengths(f) = length
+      val fieldNorm = norm(length)
+      order.foreach { a =>
+        a.key = FieldKey.encode(names(f), a.key)
+        termNorms += fieldNorm
+      }
+      accs ++= order
+    }
+    val defLength = names.indexOf(FieldKey.DefaultField) match { case -1 => 0; case f => lengths(f) }
+    val arrays = if (withPos || withOffs || withPays) accs.map(_.result()) else null
+    def per(on: Boolean, i: Int): Array[Array[Int]] = if (on) arrays.map(_(i)).toArray else null
+    DocTokens(docId, url, defLength, norm(defLength), accs.map(_.key).toArray,
+      accs.map(_.freq).toArray, per(withPos, 0),
+      if (cfg.multiField) termNorms.result() else null,
+      if (cfg.multiField) names else null,
+      if (cfg.multiField) lengths else null,
+      per(withOffs, 1), per(withPays, 2))
+  }
+}
+
+private object Inverter {
+
+  private val Whitespace = java.util.regex.Pattern.compile("\\p{javaWhitespace}+")
+
+  private def norm(length: Int): Int = java.lang.Byte.toUnsignedInt(SmallFloat.intToByte4(length))
+
+  /** One term's occurrences in one field. */
+  private final class Acc(var key: String, withPos: Boolean, withOffs: Boolean, withPays: Boolean) {
+    var freq = 0
+    val pos = if (withPos) new mutable.ArrayBuilder.ofInt else null
+    val offs = if (withOffs) new mutable.ArrayBuilder.ofInt else null
+    val pays = if (withPays) new mutable.ArrayBuilder.ofInt else null
+
+    /** (positions, offsets, payloads) in position order: a stable sort, as
+      * injected synonyms were added after the analyzer's own tokens.
+      */
+    def result(): Array[Array[Int]] = {
+      val p = if (pos == null) null else pos.result()
+      val (o, y) = (if (offs == null) null else offs.result(), if (pays == null) null else pays.result())
+      if (p == null || (1 until p.length).forall(i => p(i - 1) <= p(i))) Array(p, o, y)
+      else {
+        val at = p.indices.sortBy(p(_))
+        Array(at.map(p).toArray, if (o == null) null else at.flatMap(i => Seq(o(2 * i), o(2 * i + 1))).toArray,
+          if (y == null) null else at.map(y).toArray)
+      }
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.codec.{BlockCodec, Positions}
 import graft.corpus.Corpus
@@ -86,24 +86,10 @@ class SegmentCommitSpec extends SparkTestBase {
         col(_._5, cfg.storePositions), col(_._6, cfg.storeOffsets), col(_._7, cfg.storePayloads))
     }.toSet
 
-  private def pages(n: Int): Dataset[(String, String)] = {
-    import spark.implicits._
-    Corpus.pages(spark, n).map(p => (p.url, p.text))
-  }
+  private def pages(n: Int): Dataset[(String, String)] = SegmentCommitSpec.pages(spark, n)
 
-  /** `pages(n)` with a `|payload` on every third word. `messy` separates
-    * the words by tabs, newlines and runs of whitespace, and puts
-    * whitespace at both edges of the text, instead of single spaces.
-    */
-  private def payloadPages(n: Int, messy: Boolean): Dataset[(String, String)] = {
-    import spark.implicits._
-    val seps = Array(" ", "\t", "\n", "  ", " \t\r\n ")
-    pages(n).map { case (u, t) =>
-      val ws = t.split("\\s+").zipWithIndex.map { case (w, i) => if (i % 3 == 0) s"$w|${i % 7}" else w }
-      (u, if (messy) "\n " + ws.indices.map(i => ws(i) + seps(i % seps.length)).mkString
-          else ws.mkString(" "))
-    }
-  }
+  private def payloadPages(n: Int, messy: Boolean): Dataset[(String, String)] =
+    SegmentCommitSpec.payloadPages(spark, n, messy)
 
   /** `all` split in two by url hash, as the build benchmark splits it. */
   private def halves(all: Dataset[(String, String)]): Seq[Dataset[(String, String)]] = {
@@ -112,14 +98,8 @@ class SegmentCommitSpec extends SparkTestBase {
     Seq(0, 1).map(r => all.where(pmod(xxhash64($"_1"), lit(2)) === r).as[(String, String)])
   }
 
-  private def fieldPages(n: Int): Dataset[(String, Seq[(String, String)])] = {
-    import spark.implicits._
-    Corpus.pages(spark, n).map { p =>
-      val words = p.text.split(' ')
-      (p.url, Seq("title" -> words.take(4).mkString(" "), "text" -> p.text,
-        "title" -> words.slice(4, 7).mkString(" ")))
-    }
-  }
+  private def fieldPages(n: Int): Dataset[(String, Seq[(String, String)])] =
+    SegmentCommitSpec.fieldPages(spark, n)
 
   private def assertSound(dir: String): CheckIndex.Report = {
     val r = CheckIndex.check(spark, dir)
@@ -129,24 +109,9 @@ class SegmentCommitSpec extends SparkTestBase {
     r
   }
 
-  // 7 doc partitions over 16-doc buckets: buckets straddle doc partitions
-  private val small = IndexConfig(bucketShift = 4, numPostingPartitions = 5,
-    numDocPartitions = 7)
+  private val small = SegmentCommitSpec.small
 
-  private val configs: Seq[(String, IndexConfig)] = Seq(
-    "plain" -> small,
-    "positions" -> small.copy(storePositions = true),
-    "positions+offsets" -> small.copy(storePositions = true, storeOffsets = true),
-    "positions+payloads" -> small.copy(storePositions = true, storePayloads = true),
-    "multi-field with positions" -> small.copy(storePositions = true, multiField = true),
-    "synonyms" -> small.copy(storePositions = true,
-      synonyms = Seq((List("court"), "tribunal"), (List("state", "law"), "statute"))),
-    "term vectors" -> small.copy(storeTermVectors = true),
-    // 512-doc buckets over 7 doc partitions: common terms fill 128-doc
-    // blocks from fragments of several tasks
-    "positions, 128-doc cuts" -> small.copy(bucketShift = 9, storePositions = true))
-
-  configs.foreach { case (name, cfg) =>
+  SegmentCommitSpec.configs.foreach { case (name, cfg) =>
     test(s"inverter duel: $name postings == an inversion of the analyzer's output") {
       val dir = s"${tmpDir("commit-duel")}/seg"
       val n = if (cfg.bucketShift == 9) 700 else 300
@@ -293,16 +258,18 @@ class SegmentCommitSpec extends SparkTestBase {
   test("refused configs fail before any Spark job") {
     val base = IndexConfig(bucketShift = 4, numPostingPartitions = 2, numDocPartitions = 2)
     val refusedFields = Seq(
-      base.copy(storeOffsets = true),
-      base.copy(storePayloads = true),
-      base.copy(storePositions = true, storeOffsets = true, storePayloads = true),
-      base.copy(storePositions = true, storeOffsets = true),
-      base.copy(storePositions = true, storePayloads = true))
-    refusedFields.foreach { cfg =>
+      base.copy(storeOffsets = true) -> "store",
+      base.copy(storePayloads = true) -> "store",
+      base.copy(storePositions = true, storeOffsets = true, storePayloads = true) -> "store",
+      base.copy(storePositions = true, storeOffsets = true) -> "store",
+      base.copy(storePositions = true, storePayloads = true) -> "store",
+      // the sort expression is SQL over (url, text): a multi-field row has no text
+      base.copy(indexSortExpr = "length(url)") -> "indexSortExpr")
+    refusedFields.foreach { case (cfg, what) =>
       val (err, log) = countJobs(intercept[IllegalArgumentException](
         IndexBuilder.buildSegmentFields(fieldPages(20), s"${tmpDir("refuse")}/seg", cfg)))
       assert(log.jobs == 0, s"$cfg ran ${log.jobs} jobs")
-      assert(err.getMessage.contains("store"), err.getMessage)
+      assert(err.getMessage.contains(what), err.getMessage)
     }
     Seq(
       base.copy(storeOffsets = true) -> "storeOffsets requires storePositions",
@@ -393,5 +360,56 @@ class SegmentCommitSpec extends SparkTestBase {
     val v4 = violations(d4)
     assert(v4.contains("1 blocks overlap the block before them"), v4)
     assert(!v4.contains("stats disagreeing"), v4)
+  }
+}
+
+/** The build configs and corpora the commit duel and the inverter pin
+  * ([[DocInversionSpec]]) share.
+  */
+object SegmentCommitSpec {
+
+  // 7 doc partitions over 16-doc buckets: buckets straddle doc partitions
+  val small = IndexConfig(bucketShift = 4, numPostingPartitions = 5, numDocPartitions = 7)
+
+  val configs: Seq[(String, IndexConfig)] = Seq(
+    "plain" -> small,
+    "positions" -> small.copy(storePositions = true),
+    "positions+offsets" -> small.copy(storePositions = true, storeOffsets = true),
+    "positions+payloads" -> small.copy(storePositions = true, storePayloads = true),
+    "multi-field with positions" -> small.copy(storePositions = true, multiField = true),
+    "synonyms" -> small.copy(storePositions = true,
+      synonyms = Seq((List("court"), "tribunal"), (List("state", "law"), "statute"))),
+    "term vectors" -> small.copy(storeTermVectors = true),
+    // 512-doc buckets over 7 doc partitions: common terms fill 128-doc
+    // blocks from fragments of several tasks
+    "positions, 128-doc cuts" -> small.copy(bucketShift = 9, storePositions = true))
+
+  def pages(spark: SparkSession, n: Int): Dataset[(String, String)] = {
+    import spark.implicits._
+    Corpus.pages(spark, n).map(p => (p.url, p.text))
+  }
+
+  /** `pages(n)` with a `|payload` on every third word. `messy` separates
+    * the words by tabs, newlines and runs of whitespace, and puts
+    * whitespace at both edges of the text, instead of single spaces.
+    */
+  def payloadPages(spark: SparkSession, n: Int, messy: Boolean): Dataset[(String, String)] = {
+    import spark.implicits._
+    val seps = Array(" ", "\t", "\n", "  ", " \t\r\n ")
+    pages(spark, n).map { case (u, t) =>
+      val ws = t.split("\\s+").zipWithIndex.map { case (w, i) => if (i % 3 == 0) s"$w|${i % 7}" else w }
+      (u, if (messy) "\n " + ws.indices.map(i => ws(i) + seps(i % seps.length)).mkString
+          else ws.mkString(" "))
+    }
+  }
+
+  /** Docs of a `title`, the `text` and a second `title` value. */
+  def fieldPages(spark: SparkSession, n: Int): Dataset[(String, Seq[(String, String)])] = {
+    import spark.implicits._
+    Corpus.pages(spark, n).map { p =>
+      val words = p.text.split(' ')
+      (p.url, Seq("title" -> words.take(4).mkString(" "), "text" -> p.text,
+        "title" -> words.slice(4, 7).mkString(" ")))
+    }
   }
 }
