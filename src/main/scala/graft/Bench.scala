@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: timed index build over the sf documents table +
-  * timed headline queries (engine fulltext, dedup, ANN, text pipeline).
-  * Prints ONE JSON line; the driver archives it as BENCH_r{N}.json.
+  * timed bench-tagged entries (engine fulltext, dedup, ANN, text pipeline).
+  * Prints ONE short JSON line last, straight to stdout (each round's line
+  * is kept as BENCH_r{N}.json). Each entry's time goes to [[EntriesFile]].
   * The scaling-efficiency evidence (same job at local[8] vs local[32]) lives
   * in [[ScalingBench]] → BENCH/BASELINE.md.
   */
@@ -14,6 +15,27 @@ object Bench {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Where each run writes every timed entry's seconds (-1 = failed). */
+  val EntriesFile = "target/bench-entries.json"
+
+  private def sec(v: Double): String = f"$v%.3f"
+
+  private def json(results: Iterable[(String, Double)]): String =
+    results.map { case (k, v) => "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
+
+  /** The result line: the total over every timed step, the build, the BM25
+    * top-10 p50 and the number of failed entries — its length does not
+    * grow with the entry count; [[EntriesFile]] has the per-entry times.
+    */
+  def resultLine(results: Iterable[(String, Double)], sfDir: String): String = {
+    val t = results.toMap
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.count(_._2 < 0)
+    s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
+      s""""ft_build":${sec(t("ft_build"))},"ft_or_p50":${sec(t("ft_or_p50"))},""" +
+      s""""failed":$failed,"entries":"$EntriesFile","sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -50,74 +72,33 @@ object Bench {
     val (_, buildSec) = timed(SparkEntry.searcherFor(spark, sfDir))
     results += "ft_build" -> buildSec
 
-    // 2. headline query entries (steady-state: one warm-up, then timed)
-    val headline = Seq(
-      "ft_term_topk", "ft_and_topk", "ft_or_topk", "ft_nested_topk",
-      "ft_phrase_topk", "ft_phrase_slop", "ft_near_topk", "ft_group_top2",
-      "ft_field_topk", "ft_combined_topk", "ft_feature_rank", "ft_feature_sort", "ft_lm_topk", "ft_lmjm_topk",
-      "ft_near_prefix", "ft_wordbreak", "ft_child_join",
-      "ft_msm_topk", "ft_boost_topk", "ft_dismax_topk",
-      "ft_facet_range", "ft_highlight_best", "ft_fuzzy_match", "ft_spell",
-      "ft_suggest_infix", "ft_stem_topk", "ft_nb_classify", "text_shingles",
-      "ft_spell_jaro",
-      "ft_classic_parse", "ft_multiphrase_topk", "ft_interval_topk",
-      "ft_field_phrase", "text_repetition",
-      "ft_dfr_topk", "ft_ib_topk", "ft_dfi_topk", "ft_axiomatic_topk", "ft_perfield_topk", "ft_multisim_topk",
-      "ft_synonym_index",
-      "ft_highlight_offsets", "mm_decode",
-      "ft_wildcard_lead", "ft_suggest_weighted", "ft_parent_join_avg",
-      "ft_payload_topk", "ft_span_first",
-      "ft_sweetspot_topk", "ft_complex_phrase", "ft_surround",
-      "ft_suggest_context", "ft_cjk_topk", "ft_mlt_like",
-      "web_domain_psl", "dedup_substring_keep",
-      "web_anchor_texts", "web_pagerank", "web_hits", "web_recrawl_diff",
-      "web_noindex", "web_canonical_fold", "web_anchor_search",
-      "web_redirect_fold", "web_robots",
-      "ft_diversified_topk", "ft_dv_stats", "ft_fuzzy_like", "ft_facet_dynrange",
-      "ft_multirange", "ft_automaton_topk", "ft_hybrid_rrf", "ft_bloom_topk",
-      "pipe_dsir", "dedup_semantic", "text_gopher", "text_gopher_rep",
-      "text_langid_ngram", "text_bpe_merges",
-      "dedup_jaccard", "dedup_minhash_lsh", "dedup_simhash", "dedup_embed",
-      "dedup_clusters", "dedup_lines", "dedup_substring", "pipe_split", "pipe_token_budget", "pipe_pack",
-      "pipe_decontaminate", "pipe_mix", "pipe_url_dedup", "stream_dedup",
-      "ann_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_sq_rescore", "ann_hnsw_topk",
-      "ann_bq_rescore", "stream_join",
-      "geo_knn", "geo_polygon", "geo_ft_distance", "ft_termvectors",
-      "text_quality", "text_termstats", "text_pii_scrub", "text_unigram_xent",
-      "mm_meta", "rel_agg", "rel_window_top2", "rel_json"
-    )
+    // 2. the bench-tagged entries (steady-state: one warm-up, then timed)
     // SPARK_GRAFT_BENCH_SKIP: comma-separated entries to exclude — used by
     // the off-driver sf1.0 sweep to keep the Ω(n²)-candidate Jaccard
     // entries (tiny-vocab data-shape artifact; measured separately) from
     // dominating the wall time
     val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
       .map(_.split(",").toSet).getOrElse(Set.empty)
-    val qs = SparkEntry.queries
-    headline.filterNot(skip.contains).foreach { name =>
-      val fn = qs(name)
+    SparkEntry.entries.filter(e => e.bench && !skip.contains(e.name)).foreach { e =>
       try {
-        fn(spark, sfDir).count() // warm-up (plans + code gen + caches)
-        val (_, sec) = timed(fn(spark, sfDir).count())
-        results += name -> sec
+        e.run(spark, sfDir).count() // warm-up (plans + code gen + caches)
+        results += e.name -> timed(e.run(spark, sfDir).count())._2
       } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          results += name -> -1.0
+        case t: Throwable =>
+          System.err.println(s"[bench] ${e.name} failed: ${t.getMessage}")
+          results += e.name -> -1.0
       }
     }
 
     // 3. repeated-query p50 (the BM25 top-10 latency metric)
-    val lat = (1 to 11).map { _ =>
-      val (_, sec) = timed(qs("ft_or_topk")(spark, sfDir).count())
-      sec
-    }.sorted
+    val orTopK = SparkEntry.queries("ft_or_topk")
+    val lat = (1 to 11).map(_ => timed(orTopK(spark, sfDir).count())._2).sorted
     results += "ft_or_p50" -> lat(lat.length / 2)
 
-    val qJson = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    println(
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qJson,"sf":"$sfDir"}""")
+    val file = java.nio.file.Paths.get(EntriesFile)
+    java.nio.file.Files.createDirectories(file.getParent)
+    java.nio.file.Files.writeString(file, json(results))
+    println(resultLine(results, sfDir))
     spark.stop()
   }
 }

@@ -60,7 +60,7 @@ final case class IndexConfig(
     // count toward sumTotalTermFreq, but NOT toward document length /
     // norms (the reference's discountOverlaps default). Plain string data,
     // so configs keep serializing into executor closures. Single-field
-    // builds only.
+    // builds without payloads only.
     synonyms: Seq[(List[String], String)] = Seq.empty,
     // per-position payloads (ref analysis/payloads/DelimitedPayloadToken
     // Filter.java + queries/payloads/PayloadScoreQuery.java): tokens carry
@@ -71,7 +71,7 @@ final case class IndexConfig(
     // sub-tokens of a chunk stack at the chunk's position with its
     // payload. Requires storePositions; mutually exclusive with
     // storeOffsets (source offsets shift when the `|N` suffix is
-    // stripped).
+    // stripped) and with synonyms (the payload chain injects none).
     storePayloads: Boolean = false,
     // CJK bigram analysis (ref analysis/cjk/CJKBigramFilter.java): maximal
     // Han/Hiragana/Katakana/Hangul runs index as overlapping character
@@ -254,6 +254,8 @@ object IndexBuilder {
     require(!cfg.storePayloads || cfg.storePositions, "storePayloads requires storePositions")
     require(!(cfg.storePayloads && cfg.storeOffsets),
       "storePayloads is mutually exclusive with storeOffsets")
+    require(!(cfg.storePayloads && cfg.synonyms.nonEmpty),
+      "storePayloads is mutually exclusive with index-time synonyms")
     if (cfg.multiField) {
       require(cfg.synonyms.isEmpty,
         "index-time synonyms are single-field only (documented subset)")

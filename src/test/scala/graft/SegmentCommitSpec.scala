@@ -275,7 +275,11 @@ class SegmentCommitSpec extends SparkTestBase {
       base.copy(storeOffsets = true) -> "storeOffsets requires storePositions",
       base.copy(storePayloads = true) -> "storePayloads requires storePositions",
       base.copy(storePositions = true, storeOffsets = true, storePayloads = true) ->
-        "storePayloads is mutually exclusive with storeOffsets"
+        "storePayloads is mutually exclusive with storeOffsets",
+      // the payload chain injects no synonym: the pair would drop them silently
+      base.copy(storePositions = true, storePayloads = true,
+        synonyms = Seq((List("court"), "tribunal"))) ->
+        "storePayloads is mutually exclusive with index-time synonyms"
     ).foreach { case (cfg, msg) =>
       val (err, log) = countJobs(intercept[IllegalArgumentException](
         IndexBuilder.buildSegment(pages(20), s"${tmpDir("refuse")}/seg", cfg)))
